@@ -11,12 +11,14 @@ module is a thin adapter.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, not whichever copy another path entry names
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_etl_automation_spark.plans import ORACLES, QUERIES  # noqa: E402
 

@@ -333,12 +333,22 @@ def _remove_empty_batch_dir(batch_dir: str, stop_at: str) -> None:
     """Remove the rowless bronze dir a zero-record batch wrote (T4: an
     empty batch must leave no bronze file), pruning parents it emptied —
     up to but NOT including ``stop_at`` (bronze_base may legitimately
-    remain as an empty dir)."""
+    remain as an empty dir). Both paths may be ``file:`` URIs (the only
+    scheme ``_is_local_path`` admits besides plain paths); ``shutil`` and
+    ``os`` need the URI's path, or the removal silently does nothing.
+    Plain paths are used as given: parsing them as URIs would cut them at
+    a ``#`` or ``?``."""
     import shutil
+    from urllib.parse import urlparse
 
+    def fs_path(p: str) -> str:
+        parsed = urlparse(p)
+        return parsed.path if parsed.scheme == "file" else p
+
+    batch_dir = fs_path(batch_dir)
     shutil.rmtree(batch_dir, ignore_errors=True)
     cur = os.path.dirname(batch_dir)
-    stop = os.path.abspath(stop_at)
+    stop = os.path.abspath(fs_path(stop_at))
     while os.path.abspath(cur) != stop:
         try:
             os.rmdir(cur)  # fails (and stops the walk) unless empty

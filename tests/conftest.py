@@ -8,11 +8,12 @@ own session with no factory confs; round 1 failed exactly that way
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMALL = "/root/testdata/sf0.001"
 

@@ -4,12 +4,16 @@ driver harness. Full board: tools/check_correctness.py at sf0.01."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 
 from tests.conftest import SF_SMALL
+
+_TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 FAST_SUBSET = [
     "flagship_dim_customer",
@@ -103,7 +107,7 @@ def test_engine_hash_digest_matches_python_reference(spark, duck, name):
     engine-hash sweep at 100x equivalent to a full value verification."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, _TOOLS)
     import check_correctness as cc
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
@@ -142,7 +146,7 @@ def test_engine_hash_digest_decimal_branch(spark, duck):
 
     import pandas as pd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, _TOOLS)
     import check_correctness as cc
 
     from kafka_etl_automation_spark.catalog import load_tables

@@ -23,23 +23,55 @@ def test_shingles_short_doc_empty(spark):
     assert by_id[2] == ["one two three", "two three four"]
 
 
-def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch):
+def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp_path):
     """_fanout_rebalance's JVM-side partition probe is a private API
     (df._jdf); the portable fallback must produce the identical decision
-    when the private path breaks (VERDICT r03 #8)."""
-    df = docs_df(spark, [(i, f"doc {i}") for i in range(10)]).coalesce(1)
-    primary = dedup._fanout_rebalance(df)
+    when the private path breaks (VERDICT r03 #8). Adaptive (AQE-wrapped)
+    inputs included: the plan walk answers only where no shuffle lies on
+    the output path (a broadcast join over a file scan, read without a
+    job); a shuffle-topped input keeps the executing probe, whose count
+    after coalescing decides the fan-out."""
+    from pyspark.sql.functions import broadcast
+
+    spark.range(40).selectExpr("id AS doc_id", "concat('doc ', id) AS text").repartition(
+        3
+    ).write.parquet(str(tmp_path / "docs"))
+    scan = spark.read.parquet(str(tmp_path / "docs"))
+    keep = spark.createDataFrame([(i,) for i in range(0, 40, 2)], "doc_id long")
+    cases = {
+        "local": docs_df(spark, [(i, f"doc {i}") for i in range(10)]).coalesce(1),
+        # tiny shuffle: AQE coalesces it below defaultParallelism
+        "shuffle_topped": scan.groupBy("doc_id").agg(F.max("text").alias("text")),
+        "broadcast_over_scan": scan.join(broadcast(keep), "doc_id", "semi"),
+    }
+    jsc = spark.sparkContext._jsc.sc()
+    walked = {}
+    for name in ("shuffle_topped", "broadcast_over_scan"):
+        plan = cases[name]._jdf.queryExecution().executedPlan()
+        assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec", name
+        before = int(jsc.dagScheduler().numTotalJobs())
+        walked[name] = dedup._plan_num_partitions(plan)
+        assert int(jsc.dagScheduler().numTotalJobs()) == before, name
+    assert walked["shuffle_topped"] is None
+    assert walked["broadcast_over_scan"] == scan.rdd.getNumPartitions()
+
+    primary = {k: dedup._fanout_rebalance(df) for k, df in cases.items()}
 
     def broken(_df):
         raise AttributeError("simulated private-API drift")
 
     monkeypatch.setattr(dedup, "_jvm_num_partitions", broken)
-    fallback = dedup._fanout_rebalance(df)
-    assert (
-        fallback.rdd.getNumPartitions() == primary.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
-    assert sorted(r.doc_id for r in fallback.collect()) == list(range(10))
+    for name, df in cases.items():
+        fallback = dedup._fanout_rebalance(df)
+        assert (
+            fallback.rdd.getNumPartitions() == primary[name].rdd.getNumPartitions()
+        ), name
+        assert sorted(fallback.collect()) == sorted(df.collect()), name
+    # every input here has fewer partitions than cores, so both fanned out
+    # (the shuffle-topped one only after AQE coalesced it)
+    assert {d.rdd.getNumPartitions() for d in primary.values()} == {
+        spark.sparkContext.defaultParallelism
+    }
 
 
 def test_exact_dedup_groups(spark):

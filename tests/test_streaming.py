@@ -77,6 +77,38 @@ def test_empty_batch_suppression(spark, tmp_root):
     assert all(r.file_processing_status == 0 and r.file_name == "" for r in rows)
 
 
+def test_empty_batch_suppression_file_uri_bronze(spark, tmp_root):
+    """T4 holds for a ``file:///`` bronze base too: the rowless dir a
+    zero-record batch writes must be removed through the URI's path."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    src = os.path.join(tmp_root, "src")
+    _write_batch_file(spark, src, 0, 20, "a")
+    spark.range(0).select(
+        F.col("id").alias("event_id"), F.lit(0.0).alias("value")
+    ).coalesce(1).write.mode("append").parquet(src)
+    bronze = os.path.join(tmp_root, "bronze")
+    res = ingest.run_file_ingest(
+        spark,
+        source_dir=src,
+        schema=_parse_datatype_string("event_id long, value double"),
+        bronze_base="file://" + bronze,
+        audit_path=os.path.join(tmp_root, "audit"),
+        checkpoint_dir=os.path.join(tmp_root, "ckpt"),
+        topic="t",
+        run_id=1,
+    )
+    assert res.n_records == 20
+    assert len(res.bronze_dirs) == 1
+    # only the non-empty batch's dir is left under the run dir
+    (run,) = os.listdir(bronze)
+    assert os.listdir(os.path.join(bronze, run)) == [
+        os.path.basename(res.bronze_dirs[0])
+    ]
+    audit = ingest.read_audit(spark, os.path.join(tmp_root, "audit")).collect()
+    assert sorted(r.file_processing_status for r in audit) == [0, 1]
+
+
 def test_audit_dedupes_replayed_batches(spark, tmp_root):
     """A crash-replayed foreachBatch appends a second audit row for the
     same batch; read_audit must collapse it so T2/T3 stay exact."""
@@ -535,6 +567,23 @@ def test_remove_empty_batch_dir_prunes_parents(tmp_root):
     os.makedirs(bronze, exist_ok=True)
     ingest._remove_empty_batch_dir(solo, bronze)
     assert os.path.exists(bronze) and os.listdir(bronze) == []
+
+
+def test_remove_empty_batch_dir_uri_and_plain_paths(tmp_root):
+    """``file:`` URIs are removed through their path; a plain path is used
+    as given, so a ``#`` in it cannot cut it short."""
+    for base in ("uri", "a#b"):
+        bronze = os.path.join(tmp_root, base, "bronze")
+        batch_dir = os.path.join(bronze, "t_0_1", "batch_id=3")
+        keep = os.path.join(bronze, "t_0_2", "batch_id=0")
+        os.makedirs(batch_dir)
+        os.makedirs(keep)
+        if base == "uri":
+            ingest._remove_empty_batch_dir("file://" + batch_dir, "file://" + bronze)
+        else:
+            ingest._remove_empty_batch_dir(batch_dir, bronze)
+        assert not os.path.exists(os.path.dirname(batch_dir))
+        assert os.path.isdir(keep)
 
 
 def test_observation_or_none_bounds_the_wait(monkeypatch):

@@ -25,10 +25,11 @@ Usage: python tools/audit_plans.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries where a flagged pattern is the documented, intended design.
 ALLOW = {

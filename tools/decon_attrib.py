@@ -20,10 +20,11 @@ Usage: python tools/decon_attrib.py [SF_DIR] (default /root/testdata/sf0.1)
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -31,10 +31,11 @@ Usage: python tools/dedup_ladder.py DIR [DIR...] [--queries a,b]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

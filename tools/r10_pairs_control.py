@@ -12,10 +12,11 @@ Usage: python tools/r10_pairs_control.py DIR QUERY [--runs 2]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

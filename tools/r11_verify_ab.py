@@ -27,10 +27,11 @@ control; ``--max-bucket 1000`` reproduces the r11 pinned contract counts
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

@@ -30,7 +30,7 @@ import tempfile
 import time
 from datetime import timedelta
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def write_time_chunks(df, ts_col: str, path: str, k: int) -> int:
