@@ -408,36 +408,20 @@ def decontaminate_canonical_lsh(
     num_hashes: int = 64,
     bands: int = 32,
     max_bucket: int | str | None = "auto",
-    verify: str | None = None,
-    verify_contam: str | None = None,
-    once_reduction: str = "packed",
 ) -> DataFrame:
     """The deployable decontaminate-against-deduped-corpus shape, with ONE
     shared signature build feeding both LSH passes (VERDICT r07 #2).
 
-    ``verify_contam`` overrides the verify mode for pass 2 (the bipartite
-    cross-split banding) only, leaving pass 1's keep-list on ``verify`` /
-    its contract-aware default — the per-pass A/B knob
-    (tools/r11_verify_ab.py) so e.g. the r10 per-band-recompute control
-    ("grouped_perband") can be measured against the r11 once-per-pair
-    "grouped" without also flipping the star pass off its own default.
-    ``once_reduction`` passes through to both LSH passes (VERDICT r11 #2's
-    A/B knob: the hash-aggregable "packed" once-per-pair reduction vs the
-    r11 "struct" SortAggregate control — see minhash_lsh_pairs).
-
-    ``verify`` defaults to None = contract-aware per pass (the r10
+    Each pass verifies the way its contract does by default (the r10
     measured shape): pass 1's STAR keep-list verifies per-pair (its
     distinct candidate volume is linear, and grouped's per-membership
-    shipping + per-band re-verification measured 2x slower at the
-    octaves), while pass 2's BIPARTITE banding verifies per-BUCKET
-    grouped (VERDICT r09 #1): the r09 2700x probe measured 1.3e9
-    surviving pass-2 candidates x ~750B of signature sets ≈ 1 TB of
-    per-pair verify shuffle (ENOSPC); grouped verification ships each
-    bucket's c sets once — linear in banded rows — and enumerates pairs
-    post-shuffle inside the bucket row. Pass an explicit "pairs"/"grouped"
-    to force BOTH passes (the A/B knob). Value-identical either way
-    (pinned in minhash_lsh_pairs' equality test); see BENCH_SCALE.md
-    round 10 for the measured octaves and the crossover.
+    shipping measured 2x slower at the octaves), while pass 2's
+    BIPARTITE banding verifies per-BUCKET grouped (VERDICT r09 #1): the
+    r09 2700x probe measured 1.3e9 surviving pass-2 candidates x ~750B
+    of signature sets ≈ 1 TB of per-pair verify shuffle (ENOSPC); grouped
+    verification ships each bucket's c sets once — linear in banded rows
+    — and enumerates pairs post-shuffle inside the bucket row. See
+    BENCH_SCALE.md round 10 for the measured octaves and the crossover.
 
     Semantics are identical to ``decontaminate_canonical`` with star-scope
     minhash as keep_pair_source and bipartite minhash as
@@ -476,8 +460,7 @@ def decontaminate_canonical_lsh(
     # r12): at the 2700x octave the default 32 local partitions OOM the
     # pass-2 corpus-signature materialization at the default heap; the
     # floor derives partitions from the source scan size (~2 MiB/partition,
-    # anchored to r11's measured 512p@1.2GB working point) so the octave
-    # ladders need no SPARK_GRAFT_SHUFFLE_PARTITIONS folklore. No-op at
+    # anchored to r11's measured 512p@1.2GB working point). No-op at
     # gate/bench SFs (they sit under the floor).
     dedup.scale_partition_floor(documents)
     split = text.hash_split(text_col, train_pct)
@@ -523,8 +506,6 @@ def decontaminate_canonical_lsh(
         collapse_exact=False,
         candidate_scope="star",
         sig_source=train_sig,
-        verify=verify,
-        once_reduction=once_reduction,
     )
     comp = dedup.connected_components(
         keep_pairs, train_sig.select(F.col("id").alias(id_col)), id_col=id_col
@@ -556,8 +537,6 @@ def decontaminate_canonical_lsh(
         collapse_exact=False,
         sig_source=corpus_sig,
         bipartite_col="_lbl",
-        verify=verify_contam if verify_contam is not None else verify,
-        once_reduction=once_reduction,
         # hash_split labels are binary by construction -> grouped verify
         # skips its within-rest-block branch at plan time
         max_labels=2,

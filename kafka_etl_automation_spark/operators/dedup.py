@@ -22,8 +22,9 @@ from __future__ import annotations
 import logging
 import os
 import threading
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger(__name__)
@@ -409,36 +410,6 @@ def _shingle_hash_rows(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """MinHash signature per document: sig_j = min over shingles of
-    hash_j(shingle). Seeded literals -> reproducible. One explode + one
-    groupBy; the k mins aggregate map-side, so the shuffle carries one row
-    per document.
-
-    Shingle strings are never materialized here: _shingle_hash_rows hashes
-    the n token columns directly (one fixed-width hash per shingle), and
-    the k per-seed hashes derive from that 64-bit value — the same
-    independence structure (seeded re-hash of a uniform 64-bit input) at a
-    fraction of the string-building cost. The whole pipeline stays in
-    scalar whole-stage codegen (see _shingle_hash_rows for why the
-    higher-order-function formulation was abandoned); the k mins aggregate
-    map-side, so the one shuffle carries per-doc combine output, not the
-    token stream. Documents with no shingle (< n tokens) are dropped."""
-    rows = _shingle_hash_rows(df, text_col, id_col, n)
-    return rows.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("sh"))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
-    )
-
-
 def signature_sets(
     df: DataFrame,
     text_col: str = "text",
@@ -623,8 +594,8 @@ def _flood_escalation(
             "ride the grouped verify shuffle — past the single-disk lz4 "
             f"ENOSPC ceiling (~{_FLOOD_NARROW_ROWS:,}, measured "
             "BENCH_SCALE.md r11). Restart the session with "
-            "SPARK_GRAFT_IO_CODEC=zstd (halves shuffle bytes; "
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS is then raised automatically), "
+            "SPARK_GRAFT_IO_CODEC=zstd (halves shuffle bytes; the shuffle "
+            "partitions are then raised automatically), "
             "or cap the flood (max_bucket=<int>) if these buckets are "
             "boilerplate",
         )
@@ -728,11 +699,10 @@ def scale_partition_floor(df: DataFrame) -> int | None:
     """Raise ``spark.sql.shuffle.partitions`` to a floor derived from
     ``df``'s file-source scan size, session-sticky, never lowering.
 
-    Replaces the SPARK_GRAFT_SHUFFLE_PARTITIONS env folklore for the
-    octave ladders: every corpus-scale pipeline entry calls this BEFORE
-    its first wide stage, so per-task state (signature-cache unroll, join
-    builds, sort runs) shrinks with corpus growth automatically instead
-    of requiring the operator to know the magic number. Input size comes
+    Every corpus-scale pipeline entry calls this BEFORE its first wide
+    stage, so per-task state (signature-cache unroll, join builds, sort
+    runs) shrinks with corpus growth automatically instead of requiring
+    the operator to know the magic number. Input size comes
     from the driver-side file listing (``df.inputFiles`` + stat for
     ``file:`` URIs — zero Spark jobs). Frames with no stat-able local file
     source (in-memory relations, RDD-backed plans, remote schemes) are
@@ -745,9 +715,8 @@ def scale_partition_floor(df: DataFrame) -> int | None:
     threshold (a floor above one partition) also pins cached partitioning
     (``canChangeCachedPlanOutputPartitioning=false``, see
     ``_CACHED_PARTITIONING``), whether or not the conf had to be raised: a
-    session already at or above the floor (a high
-    SPARK_GRAFT_SHUFFLE_PARTITIONS, many cores) needs its caches held at
-    that count just as much, since the floor exists for the caches'
+    session already at or above the floor (many cores) needs its caches
+    held at that count just as much, since the floor exists for the caches'
     per-task state and AQE's coalescing inside cached plans would shrink
     them back to a few partitions. ``restore_shuffle_partitions`` undoes
     both. Returns the new floor, or None when the conf was not raised.
@@ -872,8 +841,6 @@ def minhash_lsh_pairs(
     members: DataFrame | None = None,
     verify: str | None = None,
     max_labels: int | None = None,
-    auto_work_per_row: float | None = None,
-    once_reduction: str = "packed",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified with exact
     Jaccard over the 64-bit shingle-hash sets so the output has no false
@@ -911,7 +878,7 @@ def minhash_lsh_pairs(
     ``verify`` (default ``None`` = CONTRACT-AWARE: ``"pairs"`` for
     ``candidate_scope="star"``, ``"grouped"`` otherwise — the r10 octave
     ladder measured the crossover, BENCH_SCALE.md round 10):
-      - ``"pairs"`` (the r09 shape; the star default): distinct candidate
+      - ``"pairs"`` (the r09 shape; star's only shape): distinct candidate
         pairs re-join both signature sets — each surviving candidate
         ships TWO ~|sh|-sized array copies through the verify joins, so
         verify shuffle bytes are quadratic in bucket occupancy (the
@@ -920,11 +887,13 @@ def minhash_lsh_pairs(
         volume is LINEAR by construction (few distinct pairs per doc
         after the cross-band distinct), so shipping two sets per
         DISTINCT pair beats grouped's one-copy-per-surviving-membership
-        (~bands per doc) plus its per-band re-verification — tight dup
+        (~bands per doc) plus r10's per-band re-verification — tight dup
         families at the dedup threshold co-occur in most of the 16
-        r=4 bands, so grouped re-intersects each star edge up to 16x:
+        r=4 bands, so grouped re-intersected each star edge up to 16x:
         measured 16.5s vs 31.8s at 30x and 46.3s vs 112.7s at 300x on
-        the keep-list pipeline.
+        the keep-list pipeline; once-per-pair grouped still lost 2.3x at
+        900x (BENCH_SCALE.md round 11). Star with ``"grouped"`` raises
+        ValueError.
       - ``"grouped"`` (per-BUCKET grouped verification with ONCE-PER-PAIR
         Jaccard — VERDICT r10 #1; the default for the all-pairs and
         bipartite contracts): surviving bucket members (bucket size in
@@ -934,8 +903,8 @@ def minhash_lsh_pairs(
         and verification SPLIT: the bucket rows first emit NARROW
         (id_a, id_b, location) candidates — ids and array indices only,
         the sh arrays stay in the bucket row — a groupBy reduces each
-        pair to its MINIMUM co-occurring band (min over a
-        (band, bkey, i, j) struct), and a narrow join back to the bucket
+        pair to its MINIMUM co-occurring band (min over a bit-packed
+        (band, w, i, j) long), and a narrow join back to the bucket
         rows on (band, bkey) — partition-aligned with the aggregation,
         so only the pair side shuffles — runs exact Jaccard EXACTLY ONCE
         per distinct pair via element_at on the min band's array. The
@@ -943,32 +912,11 @@ def minhash_lsh_pairs(
         (tight families co-occur in most of 16 bands — the bulk of the
         compute-super-linear 2700x wall); the min-band reduction trades
         that for one narrow shuffle, linear in candidate emissions.
+        Packing keeps the reduction a HashAggregate (VERDICT r11 #2);
+        past its bounds (bands > 256, or a kept bucket of 2^27 docs) a
+        min over a struct selects the same row.
         Value-identical to "pairs" by construction — pinned by
         tests/test_operators.py::test_grouped_verify_matches_pairs.
-      - ``"grouped_perband"`` (the r10 per-band-recompute shape, kept as
-        the A/B control): identical membership shipping and bucket-row
-        aggregation, but each bucket enumerates AND Jaccard-verifies its
-        own pairs inline, so a pair co-occurring in k bands is
-        re-intersected k times before the final distinct() collapses the
-        identical rows. Measured r10: gate-SF A/B minhash all-pairs
-        3.90->3.81s, canonical decon 9.25->8.14s vs pairs; 2700x decon
-        1447.7s on ~25 GB scratch where pairs ENOSPC'd ~1 TB.
-
-    ``once_reduction`` (``"packed"`` default / ``"struct"``): how the
-    once-per-pair shape reduces each pair to its minimum co-occurring
-    band. ``"packed"`` bit-packs (band, w, i, j) into one long and pairs
-    ``min(packed)`` with ``min_by(bkey, packed)`` — both buffers
-    primitive, so the reduction compiles to HashAggregate with map-side
-    partial combine instead of the struct-min's SortAggregate over the
-    full narrow candidate stream (VERDICT r11 #2; the sort was the
-    dominant remaining flood-octave cost). ``"struct"`` is the r11 A/B
-    control; both are value-identical (same row selected — see the
-    in-line proof) and pinned equal by test_grouped_verify_matches_pairs.
-    Packed requires bands <= 256 and max kept bucket < 2^27 (checked
-    against the audit histogram at plan time; falls back to struct).
-
-    ``auto_work_per_row``: override the ``max_bucket="auto"`` budget
-    (default ``_AUTO_WORK_PER_ROW`` = 64 emissions per banded row).
 
     ``max_labels``: optional caller attestation that the bipartite label
     column takes at most this many distinct values; with 2 (the
@@ -987,7 +935,7 @@ def minhash_lsh_pairs(
 
       - ``"auto"`` (default): the always-on bucket-size audit measures
         the uncapped candidate-emission volume BEFORE enumeration; if it
-        is at most ``auto_work_per_row`` (default 64) emissions per
+        is at most ``_AUTO_WORK_PER_ROW`` (64) emissions per
         banded row — i.e. the work is corpus-LINEAR up to a constant —
         the run is uncapped and no family is ever dropped. Only when
         in-bucket quadratic growth pushes past that scale-free budget
@@ -1038,23 +986,22 @@ def minhash_lsh_pairs(
 
     Shuffles: the window sort (reused by the aggregation), bucket sizing,
     the self-join, distinct, and the two verification joins.
-    """
-    from pyspark import StorageLevel
 
+    The body runs five stages in order: the signed source, banding plus
+    the cap audit, candidates, verification, and member expansion.
+    """
     if candidate_scope not in ("all", "star"):
         raise ValueError(
             f"candidate_scope must be 'all' or 'star', got {candidate_scope!r}"
         )
     if verify is None:
         verify = "pairs" if candidate_scope == "star" else "grouped"
-    if verify not in ("pairs", "grouped", "grouped_perband"):
+    if verify not in ("pairs", "grouped"):
+        raise ValueError(f"verify must be 'pairs' or 'grouped', got {verify!r}")
+    if candidate_scope == "star" and verify == "grouped":
         raise ValueError(
-            "verify must be 'pairs', 'grouped', or 'grouped_perband', "
-            f"got {verify!r}"
-        )
-    if once_reduction not in ("packed", "struct"):
-        raise ValueError(
-            f"once_reduction must be 'packed' or 'struct', got {once_reduction!r}"
+            "candidate_scope='star' and verify='grouped' are mutually "
+            "exclusive: star verifies its distinct edges by pairs"
         )
     if isinstance(max_bucket, str):
         if max_bucket != "auto":
@@ -1122,6 +1069,57 @@ def minhash_lsh_pairs(
             "row-identity labels"
         )
 
+    src, band_src, band_cols, members = _lsh_signed_source(
+        df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
+        sig_source, bipartite_col, members,
+    )
+    banded = _lsh_bands(band_src, band_cols, bands, num_hashes // bands)
+    audit = _lsh_cap_audit(
+        banded, band_cols, candidate_scope, max_bucket, stats is not None
+    )
+    sized, cand = _lsh_candidates(
+        banded, band_cols, candidate_scope, audit.effective_max_bucket
+    )
+    if stats is not None:
+        # Probe instrumentation (tools/dedup_probe.py): the audit's numbers
+        # come from the job that materialized the caches; only
+        # candidates_distinct costs a probe-only pass.
+        stats.update(audit._asdict(), candidates_distinct=cand.count())
+    if verify == "grouped":
+        verified = _lsh_verify_grouped(
+            sized, band_src, band_cols, audit, bands, threshold, max_labels
+        )
+    else:
+        verified = _lsh_verify_pairs(cand, src, threshold)
+    # Construction done: any async collapse count launched above has had
+    # the audit/count job to overlap with — block here so the caller's
+    # first action plans against fully-measured caches.
+    _settle_async_counts()
+    if members is None:
+        return verified
+    # jaccard(S, S) = n/n, exactly 1.0 in IEEE — same value the
+    # uncollapsed verify computes for an identical-text pair
+    return _expand_member_pairs(
+        verified,
+        members,
+        sized.select("id").distinct(),
+        "jaccard",
+        F.lit(1.0),
+        include_within=not band_cols,
+    )
+
+
+def _lsh_signed_source(
+    df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
+    sig_source, bipartite_col, members,
+) -> tuple[DataFrame, DataFrame, list[str], DataFrame | None]:
+    """Stage 1 of minhash_lsh_pairs: ``(src, band_src, band_cols,
+    members)`` — the signed frame (id, sh, mh0..), the frame banding
+    reads (``src`` plus the cross-label contract's label as ``_lbl``),
+    the label columns banding carries, and the member map (from the
+    exact collapse, or the caller's in shared-signature mode)."""
+    from pyspark import StorageLevel
+
     if sig_source is None:
         # Size the shuffle floor from the source scan BEFORE the first
         # wide stage — the exact-collapse groupBy and the eager member
@@ -1143,14 +1141,11 @@ def minhash_lsh_pairs(
         else None
     )
 
-    rows = num_hashes // bands
     # One pass builds BOTH the verification hash set and the signature;
-    # it feeds band generation and both verification sides, the banded
-    # frame feeds bucket sizing and both self-join sides. Persist both —
-    # each is compact (one row per doc / 16 narrow rows per doc), a
-    # sliver of corpus size at any scale. In shared mode the caller owns
-    # sig_source's persistence (it is typically a filter over one
-    # persisted signed frame feeding several passes).
+    # it feeds band generation and both verification sides. Persisted —
+    # one row per doc, a sliver of corpus size at any scale. In shared
+    # mode the caller owns sig_source's persistence (it is typically a
+    # filter over one persisted signed frame feeding several passes).
     if sig_source is not None:
         # Fail fast on a mis-built shared frame (ADVICE r08): a sig_source
         # carrying MORE mh columns than num_hashes would silently band
@@ -1174,8 +1169,30 @@ def minhash_lsh_pairs(
         src = signature_sets(df, text_col, id_col, n, num_hashes).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        # (src is materialized transitively by banded's eager count below
-        # — banded derives from src, so one job measures both caches)
+        # (src is materialized transitively by banded's eager count in
+        # the cap audit — banded derives from src, so one job measures
+        # both caches)
+
+    if lbl is not None:
+        return src, src.join(lbl, "id"), ["_lbl"], members
+    if bipartite_col is not None:
+        # label already rides the signed frame — no join, no extra scan
+        band_src = (
+            src
+            if bipartite_col == "_lbl"
+            else src.withColumnRenamed(bipartite_col, "_lbl")
+        )
+        return src, band_src, ["_lbl"], members
+    return src, src, [], members
+
+
+def _lsh_bands(
+    band_src: DataFrame, band_cols: list[str], bands: int, rows: int
+) -> DataFrame:
+    """Stage 2a: one persisted (id[, _lbl], band, bkey) row per document
+    and band; bkey hashes the band's ``rows`` signature mins. It feeds
+    bucket sizing and both self-join sides — 16 narrow rows per doc."""
+    from pyspark import StorageLevel
 
     band_structs = [
         F.struct(
@@ -1186,19 +1203,7 @@ def minhash_lsh_pairs(
         )
         for bid in range(bands)
     ]
-    if lbl is not None:
-        band_src, band_cols = src.join(lbl, "id"), ["_lbl"]
-    elif bipartite_col is not None:
-        # label already rides the signed frame — no join, no extra scan
-        band_src = (
-            src
-            if bipartite_col == "_lbl"
-            else src.withColumnRenamed(bipartite_col, "_lbl")
-        )
-        band_cols = ["_lbl"]
-    else:
-        band_src, band_cols = src, []
-    banded = (
+    return (
         band_src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
         .select(
             "id",
@@ -1208,52 +1213,53 @@ def minhash_lsh_pairs(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Eager count: the bucket self-join and the verify joins below put
-    # cached projections on join sides; MATERIALIZED InMemoryRelations
-    # report MEASURED sizes, so static broadcast decisions over them are
+
+
+class _CapAudit(NamedTuple):
+    """What the cap audit measured and decided, named as the ``stats``
+    probe reports it. bucket_join_work is the exact number of kept
+    candidate emissions: sum C(bucket,2) for the all-pairs self-join, sum
+    (bucket-1) for star's window-min edges, and for the bipartite
+    block-split the CROSS-label pair count (r12; same-label pairs never
+    leave the candidate join). On the explicit-cap fast path it and
+    max_bucket_size are upper bounds and the dropped counts read 0."""
+
+    bucket_join_work: int
+    max_bucket_size: int
+    dropped_buckets: int
+    dropped_emissions: int
+    effective_max_bucket: int | None
+    banded_rows: int
+
+
+def _lsh_cap_audit(
+    banded: DataFrame,
+    band_cols: list[str],
+    candidate_scope: str,
+    max_bucket: int | str | None,
+    probed: bool,
+) -> _CapAudit:
+    """Stage 2b: the always-on bucket-size audit. Resolves
+    ``max_bucket="auto"``, WARNs when a cap drops buckets, and bounds the
+    flood policy and the packed reduction's indices (see
+    minhash_lsh_pairs). ``probed``: a ``stats`` dict was passed, which
+    always takes the full audit."""
+    # Eager: the bucket self-join and the verify joins put cached
+    # projections on join sides; MATERIALIZED InMemoryRelations report
+    # MEASURED sizes, so static broadcast decisions over them are
     # size-sound at every SF instead of riding a Generate-collapsed
     # estimate (the r09 BroadcastOverGenerate class). One job
     # materializes banded AND src (its parent cache) — and since that job
     # has to scan every banded row anyway, it doubles as the ALWAYS-ON
-    # cap audit (VERDICT r10 #3), now a bucket-size HISTOGRAM (r12): one
+    # cap audit (VERDICT r10 #3), a bucket-size HISTOGRAM (r12): one
     # row per DISTINCT bucket size reaches the driver (bounded — a corpus
     # has far fewer distinct bucket sizes than buckets), which is enough
     # to (a) resolve max_bucket="auto" BEFORE enumeration, (b) compute
     # exactly what any cap discards, so a production caller (stats=None —
     # every boarded query and canonical pipeline) gets a WARN the moment
     # a cap bites instead of silent recall loss, and (c) bound the array
-    # indices for the packed once-per-pair reduction below.
-    # Per-bucket emission work, CONTRACT-exact (r12): star emits c-1 edges,
-    # all-pairs C(c,2), and the bipartite block-split only CROSS-label
-    # pairs — C(c,2) minus the per-label within sums. Counting same-label
-    # pairs that never leave the candidate join would both mis-budget
-    # "auto" and overfire the flood guard (r11 ran the 900x bipartite
-    # decon fine under the default env; its C(c,2) overcount would not
-    # have). Work is carried DOUBLED (c*(c-1) is always even) so the
-    # histogram stays integer; halved driver-side.
-    if candidate_scope == "star":
-        _per_bucket = banded.groupBy("band", "bkey").agg(
-            F.count(F.lit(1)).alias("count"),
-            (2 * (F.count(F.lit(1)) - 1)).alias("w2"),
-        )
-    elif band_cols:
-        _c = F.sum("lc")
-        _per_bucket = (
-            banded.groupBy("band", "bkey", "_lbl")
-            .agg(F.count(F.lit(1)).alias("lc"))
-            .groupBy("band", "bkey")
-            .agg(
-                _c.alias("count"),
-                (_c * (_c - 1) - F.sum(F.col("lc") * (F.col("lc") - 1))).alias(
-                    "w2"
-                ),
-            )
-        )
-    else:
-        _c = F.count(F.lit(1))
-        _per_bucket = banded.groupBy("band", "bkey").agg(
-            _c.alias("count"), (_c * (_c - 1)).alias("w2")
-        )
+    # indices for the packed once-per-pair reduction.
+    #
     # Fast path (VERDICT r12 #1): an EXPLICIT-int cap needs the histogram
     # only for (a) the cap-bite WARN, (b) the flood policy's kept-emission
     # count, (c) the packed reduction's index bound. When the worst-case
@@ -1267,33 +1273,52 @@ def minhash_lsh_pairs(
     # every corpus where a cap has ever measurably bitten (the 900x/2700x
     # octaves) exceeds the worst-case bound and takes the full audit.
     # "auto" resolution and stats= probes always take the full audit.
-    _fast = isinstance(max_bucket, int) and stats is None
-    if _fast:
+    if isinstance(max_bucket, int) and not probed:
         banded_rows = banded.count()
-        _worst_kept = banded_rows * (max_bucket - 1) // 2
-        _fast = _worst_kept <= _AUDIT_SKIP_MAX_WORST
-    if _fast:
-        eff_cap = max_bucket
-        kept_work = _worst_kept  # upper bound, <= the flood ceiling
-        max_kept = max_bucket  # upper bound; packed guard needs < 2^27
-        total_work = _worst_kept
-        dropped_buckets = 0  # unknown on this path (no WARN possible)
-        dropped_emissions = 0
+        worst_kept = banded_rows * (max_bucket - 1) // 2
+        if worst_kept <= _AUDIT_SKIP_MAX_WORST:
+            return _CapAudit(worst_kept, max_bucket, 0, 0, max_bucket, banded_rows)
+    # Per-bucket emission work, CONTRACT-exact (r12): star emits c-1 edges,
+    # all-pairs C(c,2), and the bipartite block-split only CROSS-label
+    # pairs — C(c,2) minus the per-label within sums. Counting same-label
+    # pairs that never leave the candidate join would both mis-budget
+    # "auto" and overfire the flood guard (r11 ran the 900x bipartite
+    # decon fine under the default env; its C(c,2) overcount would not
+    # have). Work is carried DOUBLED (c*(c-1) is always even) so the
+    # histogram stays integer; halved driver-side.
+    if candidate_scope == "star":
+        per_bucket = banded.groupBy("band", "bkey").agg(
+            F.count(F.lit(1)).alias("count"),
+            (2 * (F.count(F.lit(1)) - 1)).alias("w2"),
+        )
+    elif band_cols:
+        _c = F.sum("lc")
+        per_bucket = (
+            banded.groupBy("band", "bkey", "_lbl")
+            .agg(F.count(F.lit(1)).alias("lc"))
+            .groupBy("band", "bkey")
+            .agg(
+                _c.alias("count"),
+                (_c * (_c - 1) - F.sum(F.col("lc") * (F.col("lc") - 1))).alias(
+                    "w2"
+                ),
+            )
+        )
     else:
-        _hist = (
-            _per_bucket.groupBy("count")
-            .agg(F.count(F.lit(1)).alias("nb"), F.sum("w2").alias("w2"))
-            .collect()
+        _c = F.count(F.lit(1))
+        per_bucket = banded.groupBy("band", "bkey").agg(
+            _c.alias("count"), (_c * (_c - 1)).alias("w2")
         )
-        _sizes = sorted(
-            (int(r["count"]), int(r["nb"]), int(r["w2"])) for r in _hist
-        )
-        banded_rows = sum(c * nb for c, nb, _ in _sizes)
-        total_work = sum(w2 for _, _, w2 in _sizes) // 2
-    if _fast:
-        pass
-    elif max_bucket == "auto":
-        # Scale-free budget: allow up to auto_work_per_row candidate
+    hist = (
+        per_bucket.groupBy("count")
+        .agg(F.count(F.lit(1)).alias("nb"), F.sum("w2").alias("w2"))
+        .collect()
+    )
+    sizes = sorted((int(r["count"]), int(r["nb"]), int(r["w2"])) for r in hist)
+    banded_rows = sum(c * nb for c, nb, _ in sizes)
+    total_work = sum(w2 for _, _, w2 in sizes) // 2
+    if max_bucket == "auto":
+        # Scale-free budget: allow up to _AUTO_WORK_PER_ROW candidate
         # emissions per banded row. Linear-in-corpus work (duplicate
         # families included — their members grow the denominator) stays
         # UNCAPPED, so the r11 2700x failure mode (fixed cap < family
@@ -1301,14 +1326,14 @@ def minhash_lsh_pairs(
         # defaults; only in-bucket quadratic growth past the budget —
         # boilerplate floods of mutually-DISSIMILAR docs — engages the
         # guard, at the largest cap whose kept volume fits the budget.
-        _budget = (auto_work_per_row or _AUTO_WORK_PER_ROW) * banded_rows
-        if total_work <= _budget:
+        budget = _AUTO_WORK_PER_ROW * banded_rows
+        if total_work <= budget:
             eff_cap = None
         else:
-            acc, eff_cap = 0, _sizes[0][0] if _sizes else 2
-            for c, _nb, w2 in _sizes:
+            acc, eff_cap = 0, sizes[0][0] if sizes else 2
+            for c, _nb, w2 in sizes:
                 acc += w2 // 2
-                if acc > _budget:
+                if acc > budget:
                     break
                 eff_cap = c
             _LOG.warning(
@@ -1322,26 +1347,16 @@ def minhash_lsh_pairs(
                 eff_cap,
                 total_work,
                 total_work / max(banded_rows, 1),
-                auto_work_per_row or _AUTO_WORK_PER_ROW,
+                _AUTO_WORK_PER_ROW,
                 banded_rows,
             )
     else:
         eff_cap = max_bucket  # int (hard cap) or None (uncapped)
-    if not _fast:
-        kept_work = (
-            sum(w2 for c, _, w2 in _sizes if eff_cap is None or c <= eff_cap)
-            // 2
-        )
-        max_kept = max(
-            (c for c, _, _ in _sizes if eff_cap is None or c <= eff_cap),
-            default=0,
-        )
-        dropped_buckets = (
-            0
-            if eff_cap is None
-            else sum(nb for c, nb, _ in _sizes if c > eff_cap)
-        )
-        dropped_emissions = total_work - kept_work
+    kept = [s for s in sizes if eff_cap is None or s[0] <= eff_cap]
+    kept_work = sum(w2 for _, _, w2 in kept) // 2
+    dropped_buckets = sum(
+        nb for c, nb, _ in sizes if eff_cap is not None and c > eff_cap
+    )
     if dropped_buckets > 0 and not isinstance(max_bucket, str):
         _LOG.warning(
             "minhash_lsh_pairs: max_bucket=%d dropped %d flooded bucket(s) "
@@ -1355,9 +1370,28 @@ def minhash_lsh_pairs(
             "this corpus needs those pairs",
             eff_cap,
             dropped_buckets,
-            dropped_emissions,
+            total_work - kept_work,
         )
+    return _CapAudit(
+        kept_work,
+        max((c for c, _, _ in kept), default=0),
+        dropped_buckets,
+        total_work - kept_work,
+        eff_cap,
+        banded_rows,
+    )
 
+
+def _lsh_candidates(
+    banded: DataFrame,
+    band_cols: list[str],
+    candidate_scope: str,
+    eff_cap: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Stage 3: ``(sized, cand)`` — the banded rows that survive the skew
+    filter, with their bucket size ``bsz`` (star adds the bucket min
+    ``bmin``), and the distinct candidate pairs (id_a < id_b) of the
+    star / all-pairs / cross-label contract."""
     # Skew guard: drop degenerate buckets (e.g. identical boilerplate
     # signatures) that would go quadratic; at 100 TB this is the
     # difference between a bounded self-join and a runaway stage.
@@ -1366,8 +1400,6 @@ def minhash_lsh_pairs(
     # needs, so the filter is map-side relative to it — the agg+join
     # formulation re-scanned the banded frame twice and added a join
     # (measured 3x slower end-to-end at sf0.1).
-    from pyspark.sql import Window
-
     wb = Window.partitionBy("band", "bkey")
     if candidate_scope == "star":
         # Star edges: (bucket-min, member), n-1 per bucket, candidate
@@ -1379,517 +1411,413 @@ def minhash_lsh_pairs(
         )
         if eff_cap is not None:
             sized = sized.filter(F.col("bsz") <= eff_cap)
-        banded_ok = sized.select("id", "band", "bkey")
         cand = (
             sized.filter(F.col("id") != F.col("bmin"))
             .select(F.col("bmin").alias("id_a"), F.col("id").alias("id_b"))
             .distinct()
         )
-    else:
-        sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
-        if eff_cap is not None:
-            sized = sized.filter(F.col("bsz") <= eff_cap)
-        banded_ok = sized.select("id", *band_cols, "band", "bkey")
-        x, y = banded_ok.alias("x"), banded_ok.alias("y")
-        join_cond = (
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.id") < F.col("y.id"))
+        return sized, cand
+    sized = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
+    if eff_cap is not None:
+        sized = sized.filter(F.col("bsz") <= eff_cap)
+    banded_ok = sized.select("id", *band_cols, "band", "bkey")
+    x, y = banded_ok.alias("x"), banded_ok.alias("y")
+    join_cond = (
+        (F.col("x.band") == F.col("y.band"))
+        & (F.col("x.bkey") == F.col("y.bkey"))
+        & (F.col("x.id") < F.col("y.id"))
+    )
+    if band_cols:
+        # Cross-label-only contract: same-label pairs never leave the
+        # join, removing the within-label (e.g. train-train) share —
+        # the quadratic bulk — before distinct.
+        join_cond = join_cond & (F.col("x._lbl") != F.col("y._lbl"))
+    cand = (
+        x.join(y, join_cond)
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+        .distinct()
+    )
+    return sized, cand
+
+
+def _lsh_verify_pairs(
+    cand: DataFrame, src: DataFrame, threshold: float
+) -> DataFrame:
+    """Stage 4, ``verify="pairs"``: exact verification on candidates only —
+    each pair re-joins the two hash SETS and intersects them worker-side;
+    no inverted index, no per-shingle rows."""
+    pa = src.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    pb = src.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    return (
+        cand.join(pa, "id_a")
+        .join(pb, "id_b")
+        .withColumn("n_inter", n_inter)
+        .withColumn(
+            "jaccard",
+            F.col("n_inter")
+            / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
         )
-        if band_cols:
-            # Cross-label-only contract: same-label pairs never leave the
-            # join, removing the within-label (e.g. train-train) share —
-            # the quadratic bulk — before distinct.
-            join_cond = join_cond & (F.col("x._lbl") != F.col("y._lbl"))
-        cand = (
-            x.join(y, join_cond)
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-            .distinct()
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _lsh_verify_grouped(
+    sized: DataFrame,
+    band_src: DataFrame,
+    band_cols: list[str],
+    audit: _CapAudit,
+    bands: int,
+    threshold: float,
+    max_labels: int | None,
+) -> DataFrame:
+    """Stage 4, ``verify="grouped"``: per-BUCKET verification with
+    once-per-pair Jaccard (see minhash_lsh_pairs), after the plan-time
+    flood policy.
+
+    Per-BUCKET grouped verification (VERDICT r09 #1) ships each bucket's
+    c signature sets ONCE, not c² pair copies: members of buckets that
+    can emit (2 <= bsz <= max_bucket) join their hash set by id — <=
+    bands copies per doc, linear in corpus size — then ONE (band, bkey)
+    aggregation materializes each bucket as a single row of id-sorted
+    (id[, _lbl], sh) structs. Pair enumeration runs AFTER that shuffle,
+    inside the bucket row: explode(sequence) + element_at keep the struct
+    array a codegen variable (indexed, never copied — the r09 shingle
+    pattern). Enumeration emits only NARROW (id_a, id_b, location) rows;
+    a groupBy(id_a, id_b) reduces each pair to its MINIMUM co-occurring
+    band, and a join back to the bucket rows on (band, bkey) — the
+    aggregation's own partitioning, so only the narrow pair side
+    shuffles — runs the exact Jaccard EXACTLY ONCE per distinct pair
+    (VERDICT r10 #1)."""
+    # Flood fail-fast (VERDICT r11 #5): the audit's kept emission count
+    # IS the narrow candidate row count (upper bound for the bipartite
+    # block-split, exact otherwise), known at PLAN time. On a
+    # single-disk local box past _FLOOD_NARROW_ROWS the default lz4
+    # shuffle codec ENOSPCs (r11: 2700x needed zstd to complete), and
+    # spark.io.compression.codec is immutable after session start — so
+    # abort NOW naming the exact knobs instead of dying 10 minutes in.
+    # Clusters (non-local masters) only get the partition escalation:
+    # shuffle partitions ARE runtime-settable, so size them to keep
+    # each reduction task's hash table / sort run in memory and let
+    # AQE coalesce everything smaller right back (gate/bench plans are
+    # untouched — their volumes sit orders of magnitude below this).
+    spark = sized.sparkSession
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    action = _flood_escalation(
+        audit.bucket_join_work,
+        spark.sparkContext.master,
+        spark.conf.get("spark.io.compression.codec", "lz4"),
+        cur,
+    )
+    if action is not None:
+        kind, payload = action
+        if kind == "abort":
+            raise RuntimeError(payload)
+        _raise_shuffle_partitions(spark, cur, payload)
+        _LOG.warning(
+            "minhash_lsh_pairs: raising spark.sql.shuffle.partitions "
+            "-> %d for a ~%d-row narrow verify shuffle (sticky for "
+            "this session; AQE coalesces small partitions back)",
+            payload,
+            audit.bucket_join_work,
         )
-        banded_ok = banded_ok.select("id", "band", "bkey")
+    # The packed location needs band in bits 55..62 (bands <= 256) and
+    # i, j in 27 bits each (max kept bucket < 2^27, known from the audit
+    # histogram); outside that envelope the reduction takes the struct
+    # min (see _min_location).
+    packed = bands <= 256 and audit.max_bucket_size < (1 << 27)
+    pool = sized.filter(F.col("bsz") >= 2)
+    if band_cols:
+        binary = max_labels is not None and max_labels <= 2
+        return _grouped_cross_label(pool, band_src, binary, packed, threshold)
+    return _grouped_label_free(pool, band_src, packed, threshold)
 
-    if stats is not None:
-        # Probe instrumentation (tools/dedup_probe.py): attribute the
-        # candidate stage's cost. join_work = the exact number of candidate
-        # emissions: sum C(bucket,2) for the all-pairs self-join, sum
-        # (bucket-1) for star's window-min edges, and for the bipartite
-        # block-split the exact CROSS-label pair count (C(bucket,2) minus
-        # the per-label within sums — r12; same-label pairs never leave
-        # the candidate join, so counting them overstated the bipartite
-        # bulk). The bucket-size numbers come from the always-on cap audit
-        # above (the same aggregate that materialized the caches — no
-        # extra job); only candidates_distinct costs a probe-only pass.
-        stats["bucket_join_work"] = kept_work
-        stats["max_bucket_size"] = max_kept
-        stats["dropped_buckets"] = dropped_buckets
-        stats["dropped_emissions"] = dropped_emissions
-        stats["effective_max_bucket"] = eff_cap
-        stats["banded_rows"] = banded_rows
-        stats["candidates_distinct"] = cand.count()
 
-    if verify in ("grouped", "grouped_perband"):
-        # Per-BUCKET grouped verification (VERDICT r09 #1): ship each
-        # bucket's c signature sets ONCE, not c² pair copies. Members of
-        # buckets that can emit (2 <= bsz <= max_bucket) join their hash
-        # set by id — <= bands copies per doc, linear in corpus size —
-        # then ONE (band, bkey) aggregation materializes each bucket as a
-        # single row of id-sorted (id[, _lbl], sh) structs. Pair
-        # enumeration runs AFTER that shuffle, inside the bucket row:
-        # explode(sequence) + element_at keep the struct array a codegen
-        # variable (indexed, never copied — the r09 shingle pattern).
-        # The label-free contracts sort structs by leading field = id, so
-        # i < j gives id_a < id_b exactly like the self-join's
-        # x.id < y.id; the cross-label contract block-splits each bucket
-        # by label instead (see below) and orders ids with
-        # least/greatest.
-        #
-        # "grouped" (VERDICT r10 #1, once-per-pair): enumeration emits
-        # only NARROW (id_a, id_b, loc) rows — ids plus the bucket
-        # location (band, bkey) and array indices (i, j); the sh arrays
-        # never leave the bucket row. A groupBy(id_a, id_b) reduces each
-        # pair to its MINIMUM co-occurring band (struct min, band-first),
-        # and a join back to the bucket rows on (band, bkey) — the
-        # aggregation's own partitioning, so only the narrow pair side
-        # shuffles — runs the exact Jaccard EXACTLY ONCE per distinct
-        # pair. Tight dup families co-occur in most of the 16 bands, so
-        # this cuts up to a #co-bands-fold of intersect compute (the bulk
-        # of the r10 2700x super-linearity) for one narrow shuffle.
-        #
-        # "grouped_perband" (the r10 control): Jaccard runs inline per
-        # bucket, so a pair co-occurring in k bands is re-intersected k
-        # times before the final distinct() collapses the identical rows.
-        once = verify == "grouped"
-        # Flood fail-fast (VERDICT r11 #5): the audit's kept emission count
-        # IS the narrow candidate row count (upper bound for the bipartite
-        # block-split, exact otherwise), known at PLAN time. On a
-        # single-disk local box past _FLOOD_NARROW_ROWS the default lz4
-        # shuffle codec ENOSPCs (r11: 2700x needed zstd to complete), and
-        # spark.io.compression.codec is immutable after session start — so
-        # abort NOW naming the exact knobs instead of dying 10 minutes in.
-        # Clusters (non-local masters) only get the partition escalation:
-        # shuffle partitions ARE runtime-settable, so size them to keep
-        # each reduction task's hash table / sort run in memory and let
-        # AQE coalesce everything smaller right back (gate/bench plans are
-        # untouched — their volumes sit orders of magnitude below this).
-        _spark = banded.sparkSession
-        _action = _flood_escalation(
-            kept_work,
-            _spark.sparkContext.master,
-            _spark.conf.get("spark.io.compression.codec", "lz4"),
-            int(_spark.conf.get("spark.sql.shuffle.partitions")),
+def _jaccard(sh_a: Column, sh_b: Column) -> Column:
+    n_inter = F.size(F.array_intersect(sh_a, sh_b))
+    return n_inter / (F.size(sh_a) + F.size(sh_b) - n_inter)
+
+
+_IJ_MASK = (1 << 27) - 1
+
+
+def _pack_loc(w: int) -> Column:
+    """(band, w, i, j) bit-packed into one long: band in bits 55..62, w in
+    bit 54, i in bits 27..53, j in bits 0..26 — band-first, so the min
+    packed long is the min location."""
+    return (
+        F.shiftleft(F.col("band").cast("long"), 55)
+        .bitwiseOR(F.lit(w << 54).cast("long"))
+        .bitwiseOR(F.shiftleft(F.col("i").cast("long"), 27))
+        .bitwiseOR(F.col("j").cast("long"))
+    )
+
+
+def _narrow_candidates(
+    ex: DataFrame, ids: tuple[Column, Column], w: int, packed: bool
+) -> DataFrame:
+    """Narrow once-per-pair candidates from enumerated bucket rows: the
+    pair's ids plus its location — the sh arrays stay in the bucket row.
+    Location fields are band-first so the min location picks each pair's
+    minimum co-occurring band; w names the block the indices address
+    (0: i in da (or ds), j in db (or ds); 1: both in db) — within one
+    band a pair occupies exactly one bucket and one block, so the
+    location is unique per band."""
+    if packed:
+        return ex.select(*ids, _pack_loc(w).alias("p"), "bkey")
+    return ex.select(
+        *ids,
+        F.struct("band", F.lit(w).alias("w"), "bkey", "i", "j").alias("loc"),
+    )
+
+
+def _min_location(narrow: DataFrame, packed: bool) -> DataFrame:
+    """Each pair's minimum location, as (id_a, id_b, band, w, i, j, bkey).
+
+    Packed (VERDICT r11 #2): min over a STRUCT compiles to SortAggregate
+    (struct buffers aren't hash-agg mutable), which sorts the full narrow
+    candidate stream — the dominant remaining cost at flood octaves
+    (~1.3e9 rows at 2700x). min(packed) with min_by(bkey, packed) keeps
+    BOTH aggregate buffers primitive, so the reduction compiles to
+    HashAggregate with map-side partial combine — no sort, and the
+    exchange carries ~distinct pairs per task instead of raw emissions.
+    Value-identical to the struct min: within one (band, w) a pair
+    occupies exactly one bucket and one (i, j), so bkey never tiebreaks
+    and min(packed) selects the same row the lexicographic struct min
+    does (pinned by test_once_per_pair_reduction_packed_is_hash_aggregable)."""
+    if not packed:
+        return (
+            narrow.groupBy("id_a", "id_b")
+            .agg(F.min("loc").alias("loc"))
+            .select(
+                "id_a",
+                "id_b",
+                *[
+                    F.col(f"loc.{f}").alias(f)
+                    for f in ("band", "w", "i", "j", "bkey")
+                ],
+            )
         )
-        if _action is not None:
-            kind, payload = _action
-            if kind == "abort":
-                raise RuntimeError(payload)
-            _raise_shuffle_partitions(
-                _spark, int(_spark.conf.get("spark.sql.shuffle.partitions")), payload
-            )
-            _LOG.warning(
-                "minhash_lsh_pairs: raising spark.sql.shuffle.partitions "
-                "-> %d for a ~%d-row narrow verify shuffle (sticky for "
-                "this session; AQE coalesces small partitions back)",
-                payload,
-                kept_work,
-            )
-        # Packed once-per-pair reduction (VERDICT r11 #2): min over a
-        # STRUCT compiles to SortAggregate (struct buffers aren't hash-agg
-        # mutable), which sorts the full narrow candidate stream — the
-        # dominant remaining cost at flood octaves (~1.3e9 rows at 2700x).
-        # Bit-packing (band, w, i, j) into one long and carrying bkey via
-        # min_by(bkey, packed) keeps BOTH aggregate buffers primitive, so
-        # the reduction compiles to HashAggregate with map-side partial
-        # combine — no sort, and the exchange carries ~distinct pairs per
-        # task instead of raw emissions. Value-identical to the struct
-        # min: within one (band, w) a pair occupies exactly one bucket and
-        # one (i, j), so bkey never tiebreaks and min(packed) selects the
-        # same row lexicographic struct-min did (pinned by
-        # test_grouped_verify_matches_pairs across all three shapes).
-        # Guards: band needs bits 55..62 (bands <= 256) and i/j bits fit
-        # 27 each (max kept bucket < 2^27, known from the audit
-        # histogram); outside that envelope fall back to the struct shape.
-        use_packed = (
-            once
-            and once_reduction == "packed"
-            and bands <= 256
-            and max_kept < (1 << 27)
+    return (
+        narrow.groupBy("id_a", "id_b")
+        .agg(F.min("p").alias("p"), F.min_by("bkey", "p").alias("bkey"))
+        .select(
+            "id_a",
+            "id_b",
+            F.shiftright("p", 55).cast("int").alias("band"),
+            F.shiftright("p", 54)
+            .bitwiseAND(F.lit(1).cast("long"))
+            .cast("int")
+            .alias("w"),
+            F.shiftright("p", 27)
+            .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
+            .cast("int")
+            .alias("i"),
+            F.col("p")
+            .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
+            .cast("int")
+            .alias("j"),
+            "bkey",
         )
-        _IJ_MASK = (1 << 27) - 1
+    )
 
-        def _pack_loc(w: int):
-            return (
-                F.shiftleft(F.col("band").cast("long"), 55)
-                .bitwiseOR(F.lit(w << 54).cast("long"))
-                .bitwiseOR(F.shiftleft(F.col("i").cast("long"), 27))
-                .bitwiseOR(F.col("j").cast("long"))
-            )
 
-        def _reduce_packed(narrow):
-            return (
-                narrow.groupBy("id_a", "id_b")
-                .agg(F.min("p").alias("p"), F.min_by("bkey", "p").alias("bkey"))
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.shiftright("p", 55).cast("int").alias("band"),
-                    F.shiftright("p", 54)
-                    .bitwiseAND(F.lit(1).cast("long"))
-                    .cast("int")
-                    .alias("w"),
-                    F.shiftright("p", 27)
-                    .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
-                    .cast("int")
-                    .alias("i"),
-                    F.col("p")
-                    .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
-                    .cast("int")
-                    .alias("j"),
-                    "bkey",
-                )
-            )
+def _grouped_label_free(
+    pool: DataFrame, src: DataFrame, packed: bool, threshold: float
+) -> DataFrame:
+    """Grouped verification of the all-pairs contract: each bucket row
+    holds its id-sorted (id, sh) structs in ``ds``, so i < j gives
+    id_a < id_b exactly like the self-join's x.id < y.id."""
+    grouped = (
+        pool.select("id", "band", "bkey")
+        .join(src.select("id", "sh"), "id")
+        .groupBy("band", "bkey")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct(F.col("id"), F.col("sh")))
+            ).alias("ds")
+        )
+    )
+    ex = grouped.select(
+        "ds", "band", "bkey",
+        F.explode(F.sequence(F.lit(1), F.size("ds") - 1)).alias("i"),
+    ).select(
+        "ds", "band", "bkey", "i",
+        F.explode(F.sequence(F.col("i") + 1, F.size("ds"))).alias("j"),
+    )
+    a = F.element_at("ds", F.col("i"))
+    b = F.element_at("ds", F.col("j"))
+    ids = (a.getField("id").alias("id_a"), b.getField("id").alias("id_b"))
+    best = _min_location(_narrow_candidates(ex, ids, 0, packed), packed).drop("w")
+    # unhinted for the same 32g-OOM reason as the cross-label join
+    # (AQE re-converts when safe)
+    joined = best.join(grouped, ["band", "bkey"])
+    return joined.select(
+        "id_a", "id_b", _jaccard(a.getField("sh"), b.getField("sh")).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
-        def _jac_sh(sh_a, sh_b):
-            n_inter = F.size(F.array_intersect(sh_a, sh_b))
-            return n_inter / (F.size(sh_a) + F.size(sh_b) - n_inter)
 
-        def _jac(a, b):
-            return _jac_sh(a.getField("sh"), b.getField("sh"))
-
-        pool = sized.filter(F.col("bsz") >= 2)
-        if band_cols:
-            # Cross-label contract, BLOCK-SPLIT formulation. Two taxes the
-            # naive enumerate-all-pairs-and-guard shape pays and pairs-mode
-            # never did (its join condition skips same-label pairs inside
-            # the join): (1) label-PURE buckets — the undeduped side's
-            # variant floods at the straddle octaves — ship their full
-            # signature sets for zero possible output; (2) MIXED buckets
-            # enumerate their same-label bulk (e.g. eval-eval pairs inside
-            # a family bucket) only to null-guard it. Both die here:
-            # the bucket's distinct-label count and MIN label ride the
-            # SAME (band, bkey) window exchange the size filter pays,
-            # pure buckets are pruned before the grouped shuffle, and the
-            # aggregation splits each bucket into the min-label block
-            # ``da`` vs the rest ``db`` (collect_list skips the
-            # when-nulls), so enumeration is the pure cross product
-            # da x db — every pair cross-label by construction, no guard.
-            # Buckets with >2 distinct labels (impossible under a
-            # max_labels=2 attestation; possible for arbitrary label
-            # columns) additionally enumerate within the rest block under
-            # the label guard — see the max_labels branch below.
-            pool = (
-                pool.withColumn("_nl", F.size(F.collect_set("_lbl").over(wb)))
-                .withColumn("_lbl0", F.min("_lbl").over(wb))
-                .filter(F.col("_nl") >= 2)
-                .select("id", "band", "bkey", "_nl", "_lbl0")
-            )
-            # _lbl rides src (sig_source mode) or joins on via lbl — in
-            # both cases band_src carries it alongside sh
-            sh_map = band_src.select("id", "_lbl", "sh")
-            # array_sort is LOAD-BEARING, not cosmetic: collect_list's
-            # element order over a shuffle is nondeterministic across
-            # (re-)executions, and the once-per-pair shape evaluates this
-            # aggregation TWICE — once for enumeration (which captures
-            # array indices) and once on the verify join's bucket side
-            # (which resolves them). Unsorted blocks let the two
-            # evaluations disagree under contended shuffle fetches, so
-            # element_at(da/db, i) dereferenced the WRONG doc's signature
-            # set (caught at the 2700x octave: 440,089 vs 431,985
-            # contaminated evals). Sorting by the unique leading id makes
-            # both evaluations bit-identical. The label-free branch below
-            # was always sorted (its star contract needs the min at
-            # ds[1]).
-            grouped = (
-                pool.join(sh_map, "id")
-                .groupBy("band", "bkey")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_lbl") == F.col("_lbl0"),
-                                F.struct(F.col("id"), F.col("sh")),
-                            )
-                        )
-                    ).alias("da"),
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_lbl") != F.col("_lbl0"),
-                                F.struct(
-                                    F.col("id"), F.col("_lbl"), F.col("sh")
-                                ),
-                            )
-                        )
-                    ).alias("db"),
-                    # INVARIANT (ADVICE r11): every aggregate in this agg
-                    # must be DETERMINISTIC under shuffle re-execution —
-                    # the once shape evaluates `grouped` TWICE (index
-                    # capture + index resolution on the verify join's
-                    # bucket side), so any order-dependent column here
-                    # silently re-introduces the wrong-signature
-                    # dereference that array_sort above fixes. first(_nl)
-                    # is safe ONLY because _nl is bucket-CONSTANT (a
-                    # window over the same (band, bkey) key); do not add
-                    # first/any_value over non-constant columns.
-                    F.first("_nl").alias("nl"),
-                )
-            )
-
-            def _ids(a, b):
-                # pairs-mode orders ids via x.id < y.id in the self-join;
-                # block membership doesn't follow id order, so order here
-                return (
-                    F.least(a.getField("id"), b.getField("id")).alias("id_a"),
-                    F.greatest(a.getField("id"), b.getField("id")).alias(
-                        "id_b"
-                    ),
-                )
-
-            # Attested-binary label (the train/eval contracts): every
-            # cross-label pair touches the min label, so the min x rest
-            # cross product is COMPLETE and the within-rest branch never
-            # builds. (An earlier shape re-aggregated that branch's own
-            # subset instead — for binary labels its probe side is empty,
-            # but the join still exchanged the full signed frame:
-            # 78 -> 157s at the 300x octave. Plan-time skip is the only
-            # formulation that pays literally nothing.) Unattested
-            # labels: >2-label buckets additionally enumerate within the
-            # rest block under the label guard, per-row gated by nl so
-            # 2-label buckets emit NOTHING (explode of an empty array).
-            # Rides the SAME aggregation — ReuseExchange shares the
-            # shuffle; the second final-agg scan is the price of not
-            # attesting.
-            binary = max_labels is not None and max_labels <= 2
-            exc = grouped.select(
-                "da", "db", "band", "bkey",
-                F.explode(F.sequence(F.lit(1), F.size("da"))).alias("i"),
-            ).select(
-                "da", "db", "band", "bkey", "i",
-                F.explode(F.sequence(F.lit(1), F.size("db"))).alias("j"),
-            )
-            a_c = F.element_at("da", F.col("i"))
-            b_c = F.element_at("db", F.col("j"))
-            if not binary:
-                exd = grouped.select(
-                    "db", "band", "bkey",
-                    F.explode(
-                        F.when(
-                            F.col("nl") > 2,
-                            F.sequence(F.lit(1), F.size("db") - 1),
-                        ).otherwise(F.array().cast("array<int>"))
-                    ).alias("i"),
-                ).select(
-                    "db", "band", "bkey", "i",
-                    F.explode(F.sequence(F.col("i") + 1, F.size("db"))).alias(
-                        "j"
-                    ),
-                )
-                a_d = F.element_at("db", F.col("i"))
-                b_d = F.element_at("db", F.col("j"))
-            if once:
-                # Narrow candidates: the sh arrays stay in the bucket row.
-                # loc fields are band-first so min(loc) picks each pair's
-                # minimum co-occurring band; w disambiguates which block
-                # the indices address (0: i in da, j in db; 1: both in
-                # db) — within one band a pair occupies exactly one
-                # bucket and one branch, so loc is unique per band.
-                if use_packed:
-                    nc = exc.select(
-                        *_ids(a_c, b_c), _pack_loc(0).alias("p"), "bkey"
+def _grouped_cross_label(
+    pool: DataFrame,
+    band_src: DataFrame,
+    binary: bool,
+    packed: bool,
+    threshold: float,
+) -> DataFrame:
+    """Grouped verification of the cross-label contract, BLOCK-SPLIT:
+    each bucket splits into its min-label block ``da`` and the rest
+    ``db``. ``binary``: the caller attested at most two labels."""
+    # Two taxes the naive enumerate-all-pairs-and-guard shape pays and
+    # pairs-mode never did (its join condition skips same-label pairs
+    # inside the join): (1) label-PURE buckets — the undeduped side's
+    # variant floods at the straddle octaves — ship their full
+    # signature sets for zero possible output; (2) MIXED buckets
+    # enumerate their same-label bulk (e.g. eval-eval pairs inside
+    # a family bucket) only to null-guard it. Both die here:
+    # the bucket's distinct-label count and MIN label ride the
+    # SAME (band, bkey) window exchange the size filter pays,
+    # pure buckets are pruned before the grouped shuffle, and the
+    # aggregation splits each bucket into the min-label block
+    # ``da`` vs the rest ``db`` (collect_list skips the
+    # when-nulls), so enumeration is the pure cross product
+    # da x db — every pair cross-label by construction, no guard.
+    # Buckets with >2 distinct labels (impossible under a
+    # max_labels=2 attestation; possible for arbitrary label
+    # columns) additionally enumerate within the rest block under
+    # the label guard — see the binary branch below.
+    wb = Window.partitionBy("band", "bkey")
+    pool = (
+        pool.withColumn("_nl", F.size(F.collect_set("_lbl").over(wb)))
+        .withColumn("_lbl0", F.min("_lbl").over(wb))
+        .filter(F.col("_nl") >= 2)
+        .select("id", "band", "bkey", "_nl", "_lbl0")
+    )
+    # _lbl rides src (sig_source mode) or joins on via lbl — in
+    # both cases band_src carries it alongside sh
+    sh_map = band_src.select("id", "_lbl", "sh")
+    # array_sort is LOAD-BEARING, not cosmetic: collect_list's
+    # element order over a shuffle is nondeterministic across
+    # (re-)executions, and the once-per-pair shape evaluates this
+    # aggregation TWICE — once for enumeration (which captures
+    # array indices) and once on the verify join's bucket side
+    # (which resolves them). Unsorted blocks let the two
+    # evaluations disagree under contended shuffle fetches, so
+    # element_at(da/db, i) dereferenced the WRONG doc's signature
+    # set (caught at the 2700x octave: 440,089 vs 431,985
+    # contaminated evals). Sorting by the unique leading id makes
+    # both evaluations bit-identical. The label-free branch
+    # was always sorted.
+    grouped = (
+        pool.join(sh_map, "id")
+        .groupBy("band", "bkey")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("_lbl") == F.col("_lbl0"),
+                        F.struct(F.col("id"), F.col("sh")),
                     )
-                else:
-                    nc = exc.select(
-                        *_ids(a_c, b_c),
+                )
+            ).alias("da"),
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        F.col("_lbl") != F.col("_lbl0"),
                         F.struct(
-                            "band", F.lit(0).alias("w"), "bkey", "i", "j"
-                        ).alias("loc"),
-                    )
-                if binary:
-                    narrow = nc
-                else:
-                    ndf = exd.filter(
-                        a_d.getField("_lbl") != b_d.getField("_lbl")
-                    )
-                    if use_packed:
-                        nd = ndf.select(
-                            *_ids(a_d, b_d), _pack_loc(1).alias("p"), "bkey"
-                        )
-                    else:
-                        nd = ndf.select(
-                            *_ids(a_d, b_d),
-                            F.struct(
-                                "band", F.lit(1).alias("w"), "bkey", "i", "j"
-                            ).alias("loc"),
-                        )
-                    narrow = nc.unionByName(nd)
-                if use_packed:
-                    best = _reduce_packed(narrow)
-                else:
-                    best = (
-                        narrow.groupBy("id_a", "id_b")
-                        .agg(F.min("loc").alias("loc"))
-                        .select(
-                            "id_a",
-                            "id_b",
-                            F.col("loc.band").alias("band"),
-                            F.col("loc.w").alias("w"),
-                            F.col("loc.bkey").alias("bkey"),
-                            F.col("loc.i").alias("i"),
-                            F.col("loc.j").alias("j"),
-                        )
-                    )
-                # (band, bkey) is the aggregation's own output
-                # partitioning — only the narrow pair side exchanges. NO
-                # static join hint: a forced shuffle_hash build of the
-                # narrow pair side OOM'd a 32g heap at the 2700x octave
-                # (~560 MB of hash map per task x 32 concurrent tasks —
-                # SHJ builds cannot spill). Unhinted, the planner's
-                # sort-merge is spillable at any scale, and AQE's
-                # maxShuffledHashJoinLocalMapThreshold (set in
-                # session.get_spark) converts back to the fast hash join
-                # exactly when the MEASURED per-partition build fits.
-                joined = best.join(grouped, ["band", "bkey"])
-                sh_b = F.element_at("db", F.col("j")).getField("sh")
-                if binary:
-                    sh_a = F.element_at("da", F.col("i")).getField("sh")
-                else:
-                    sh_a = F.when(
-                        F.col("w") == 0,
-                        F.element_at("da", F.col("i")).getField("sh"),
-                    ).otherwise(F.element_at("db", F.col("i")).getField("sh"))
-                verified = joined.select(
-                    "id_a", "id_b", _jac_sh(sh_a, sh_b).alias("jaccard")
-                ).filter(F.col("jaccard") >= threshold)
-            else:
-
-                def _emit(ex, a, b, jac):
-                    return ex.select(
-                        *_ids(a, b), jac.alias("jaccard")
-                    ).filter(F.col("jaccard") >= threshold)
-
-                v_cross = _emit(exc, a_c, b_c, _jac(a_c, b_c))
-                if binary:
-                    verified = v_cross.distinct()
-                else:
-                    v_db = _emit(
-                        exd, a_d, b_d,
-                        F.when(
-                            a_d.getField("_lbl") != b_d.getField("_lbl"),
-                            _jac(a_d, b_d),
+                            F.col("id"), F.col("_lbl"), F.col("sh")
                         ),
                     )
-                    verified = v_cross.unionByName(v_db).distinct()
-        else:
-            pool = pool.select("id", "band", "bkey")
-            sh_map = src.select("id", "sh")
-            grouped = (
-                pool.join(sh_map, "id")
-                .groupBy("band", "bkey")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("id"), F.col("sh")))
-                    ).alias("ds")
                 )
-            )
-            csz = F.size("ds")
-            if candidate_scope == "star":
-                # docs[1] is the bucket min (id-sorted structs); edges
-                # (docs[1], docs[j]) for j in 2..c — same star contract.
-                ex = grouped.select(
-                    "ds", "band", "bkey", F.lit(1).alias("i"),
-                    F.explode(F.sequence(F.lit(2), csz)).alias("j"),
-                )
-            else:
-                ex = grouped.select(
-                    "ds", "band", "bkey",
-                    F.explode(F.sequence(F.lit(1), csz - 1)).alias("i"),
-                ).select(
-                    "ds", "band", "bkey", "i",
-                    F.explode(F.sequence(F.col("i") + 1, F.size("ds"))).alias(
-                        "j"
-                    ),
-                )
-            a = F.element_at("ds", F.col("i"))
-            b = F.element_at("ds", F.col("j"))
-            if once:
-                # Narrow candidates (ids + location; ds stays put), min
-                # co-occurring band per pair, verify once in that bucket.
-                if use_packed:
-                    narrow = ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        _pack_loc(0).alias("p"),
-                        "bkey",
-                    )
-                    best = _reduce_packed(narrow).drop("w")
-                else:
-                    narrow = ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        F.struct("band", "bkey", "i", "j").alias("loc"),
-                    )
-                    best = (
-                        narrow.groupBy("id_a", "id_b")
-                        .agg(F.min("loc").alias("loc"))
-                        .select(
-                            "id_a",
-                            "id_b",
-                            F.col("loc.band").alias("band"),
-                            F.col("loc.bkey").alias("bkey"),
-                            F.col("loc.i").alias("i"),
-                            F.col("loc.j").alias("j"),
-                        )
-                    )
-                # unhinted for the same 32g-OOM reason as the
-                # cross-label branch above (AQE re-converts when safe)
-                joined = best.join(grouped, ["band", "bkey"])
-                verified = joined.select(
-                    "id_a", "id_b", _jac(a, b).alias("jaccard")
-                ).filter(F.col("jaccard") >= threshold)
-            else:
-                verified = (
-                    ex.select(
-                        a.getField("id").alias("id_a"),
-                        b.getField("id").alias("id_b"),
-                        _jac(a, b).alias("jaccard"),
-                    )
-                    .filter(F.col("jaccard") >= threshold)
-                    .distinct()
-                )
-    else:
-        # Exact verification on candidates only: each pair re-joins the two
-        # hash SETS and intersects them worker-side — no inverted index, no
-        # per-shingle rows.
-        pa = src.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-        pb = src.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-        n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        verified = (
-            cand.join(pa, "id_a")
-            .join(pb, "id_b")
-            .withColumn("n_inter", n_inter)
-            .withColumn(
-                "jaccard",
-                F.col("n_inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+            ).alias("db"),
+            # INVARIANT (ADVICE r11): every aggregate in this agg
+            # must be DETERMINISTIC under shuffle re-execution —
+            # the once shape evaluates `grouped` TWICE (index
+            # capture + index resolution on the verify join's
+            # bucket side), so any order-dependent column here
+            # silently re-introduces the wrong-signature
+            # dereference that array_sort above fixes. first(_nl)
+            # is safe ONLY because _nl is bucket-CONSTANT (a
+            # window over the same (band, bkey) key); do not add
+            # first/any_value over non-constant columns.
+            F.first("_nl").alias("nl"),
         )
-    # Construction done: any async collapse count launched above has had
-    # the audit/count job to overlap with — block here so the caller's
-    # first action plans against fully-measured caches.
-    _settle_async_counts()
-    if members is None:
-        return verified
-    # jaccard(S, S) = n/n, exactly 1.0 in IEEE — same value the
-    # uncollapsed verify computes for an identical-text pair
-    return _expand_member_pairs(
-        verified,
-        members,
-        banded_ok.select("id").distinct(),
-        "jaccard",
-        F.lit(1.0),
-        include_within=bipartite is None and bipartite_col is None,
     )
+
+    def _ids(a, b):
+        # pairs-mode orders ids via x.id < y.id in the self-join;
+        # block membership doesn't follow id order, so order here
+        return (
+            F.least(a.getField("id"), b.getField("id")).alias("id_a"),
+            F.greatest(a.getField("id"), b.getField("id")).alias("id_b"),
+        )
+
+    # Attested-binary label (the train/eval contracts): every
+    # cross-label pair touches the min label, so the min x rest
+    # cross product is COMPLETE and the within-rest branch never
+    # builds. (An earlier shape re-aggregated that branch's own
+    # subset instead — for binary labels its probe side is empty,
+    # but the join still exchanged the full signed frame:
+    # 78 -> 157s at the 300x octave. Plan-time skip is the only
+    # formulation that pays literally nothing.) Unattested
+    # labels: >2-label buckets additionally enumerate within the
+    # rest block under the label guard, per-row gated by nl so
+    # 2-label buckets emit NOTHING (explode of an empty array).
+    # Rides the SAME aggregation — ReuseExchange shares the
+    # shuffle; the second final-agg scan is the price of not
+    # attesting.
+    exc = grouped.select(
+        "da", "db", "band", "bkey",
+        F.explode(F.sequence(F.lit(1), F.size("da"))).alias("i"),
+    ).select(
+        "da", "db", "band", "bkey", "i",
+        F.explode(F.sequence(F.lit(1), F.size("db"))).alias("j"),
+    )
+    a_c = F.element_at("da", F.col("i"))
+    b_c = F.element_at("db", F.col("j"))
+    narrow = _narrow_candidates(exc, _ids(a_c, b_c), 0, packed)
+    if not binary:
+        exd = grouped.select(
+            "db", "band", "bkey",
+            F.explode(
+                F.when(
+                    F.col("nl") > 2,
+                    F.sequence(F.lit(1), F.size("db") - 1),
+                ).otherwise(F.array().cast("array<int>"))
+            ).alias("i"),
+        ).select(
+            "db", "band", "bkey", "i",
+            F.explode(F.sequence(F.col("i") + 1, F.size("db"))).alias("j"),
+        )
+        a_d = F.element_at("db", F.col("i"))
+        b_d = F.element_at("db", F.col("j"))
+        ndf = exd.filter(a_d.getField("_lbl") != b_d.getField("_lbl"))
+        narrow = narrow.unionByName(
+            _narrow_candidates(ndf, _ids(a_d, b_d), 1, packed)
+        )
+    best = _min_location(narrow, packed)
+    # (band, bkey) is the aggregation's own output
+    # partitioning — only the narrow pair side exchanges. NO
+    # static join hint: a forced shuffle_hash build of the
+    # narrow pair side OOM'd a 32g heap at the 2700x octave
+    # (~560 MB of hash map per task x 32 concurrent tasks —
+    # SHJ builds cannot spill). Unhinted, the planner's
+    # sort-merge is spillable at any scale, and AQE's
+    # maxShuffledHashJoinLocalMapThreshold (set in
+    # session.get_spark) converts back to the fast hash join
+    # exactly when the MEASURED per-partition build fits.
+    joined = best.join(grouped, ["band", "bkey"])
+    sh_b = F.element_at("db", F.col("j")).getField("sh")
+    if binary:
+        sh_a = F.element_at("da", F.col("i")).getField("sh")
+    else:
+        sh_a = F.when(
+            F.col("w") == 0,
+            F.element_at("da", F.col("i")).getField("sh"),
+        ).otherwise(F.element_at("db", F.col("i")).getField("sh"))
+    return joined.select(
+        "id_a", "id_b", _jaccard(sh_a, sh_b).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def _observed_changed(obs, ck: DataFrame) -> int:

@@ -2139,8 +2139,10 @@ def ext_approx_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/r13/ext_approx_cardinality_before.txt operator (2): Results
     [1642]). The explicit two-level aggregate below is value-identical —
     n_events = sum of per-user counts, n_users = exact count of the
-    pre-grouped (type, user) rows, and an HLL fed each distinct user once
-    has byte-identical registers (sketch inserts are idempotent) — while
+    pre-grouped (type, user) rows whose user is not NULL (the NULL user
+    forms a group of its own, which COUNT(DISTINCT) skips), and an HLL
+    fed each distinct user once has byte-identical registers (sketch
+    inserts are idempotent) — while
     the exchange carries one narrow row per (type, user) and the sketch
     buffer exists only at the few-rows event_type level."""
     t = load_tables(spark, sf_dir, names=("events",))
@@ -2149,7 +2151,7 @@ def ext_approx_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = per_user.groupBy("event_type").agg(
         F.sum("c").alias("n_events"),
-        F.count(F.lit(1)).alias("n_users"),
+        F.count("user_id").alias("n_users"),
         F.approx_count_distinct("user_id", rsd=0.01).alias("n_users_approx"),
     )
     return g.select(

@@ -16,25 +16,18 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "kafka-etl-automation-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
     Defaults follow the driver contract: ``local[$SPARK_GRAFT_CPUS]`` (32),
-    shuffle partitions sized to the core count — at 100 TB you would size
-    shuffle partitions to keep post-shuffle partitions ~128-256 MB and let
-    AQE coalesce, which is exactly what these settings do at any scale.
+    shuffle partitions ``max(cpus, 32)``, raised per input by the
+    corpus-scale pipelines (``dedup.scale_partition_floor``) — at 100 TB
+    you would size shuffle partitions to keep post-shuffle partitions
+    ~128-256 MB and let AQE coalesce, which is exactly what these settings
+    do at any scale.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS: octave-ladder override — at the top
-    # octaves a 32-partition sort-heavy shuffle spills GBs per task; more
-    # (smaller) partitions keep each task's sort in memory and AQE
-    # coalesces the small ones right back, so the gate/bench plans are
-    # unchanged at the default.
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or max(cpus, 32)
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -53,7 +46,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
     )
-    for k, v in {**sql_confs(shuffle_partitions), **(extra_conf or {})}.items():
+    for k, v in {**sql_confs(max(cpus, 32)), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -58,3 +58,18 @@ def test_cohort_retention_triangle(spark, tmp_path):
     # 2024-01-01 is a Monday: weeks truncate cleanly
     got = {(r.cohort_week.day, r.weeks_since): r.n_users for r in out}
     assert got == {(1, 0): 1, (1, 2): 1, (8, 0): 1}
+
+
+def test_approx_cardinality_null_user_is_not_a_user(spark, tmp_path):
+    """A NULL user_id counts as an event but not as a user: n_users must
+    equal the oracle's COUNT(DISTINCT user_id), which skips NULL."""
+    from kafka_etl_automation_spark.plans.registry import QUERIES
+
+    rows = [
+        (1, 1, "view", t(0)), (2, 2, "view", t(1)), (3, None, "view", t(2)),
+        (4, 1, "click", t(3)),
+    ]
+    _ev(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
+    out = QUERIES["ext_approx_cardinality"](spark, str(tmp_path)).collect()
+    got = {r.event_type: (r.n_events, r.n_users, r.sketch_within_5pct) for r in out}
+    assert got == {"view": (3, 2, True), "click": (1, 1, True)}

@@ -1545,10 +1545,11 @@ def test_exploded_shingles_matches_shingles(spark):
 def test_grouped_verify_matches_pairs(spark):
     """VERDICT r09 #1: per-BUCKET grouped verification (ship each bucket's
     c signature sets once instead of c² pair copies) must be VALUE-identical
-    to the per-pair verify-join shape on every contract — all-pairs with
-    exact collapse (member fan-out + within-group identity pairs included),
-    star scope, bipartite, and the shared-signature sig_source modes the
-    canonical decontamination pipeline uses."""
+    to the per-pair verify-join shape on every contract it serves —
+    all-pairs with exact collapse (member fan-out + within-group identity
+    pairs included), bipartite, and the shared-signature sig_source mode
+    the canonical decontamination pipeline uses. Star scope verifies by
+    pairs only, and the retired r10 per-band shape is rejected."""
     from pyspark import StorageLevel
 
     from kafka_etl_automation_spark.operators import dedup, text
@@ -1573,16 +1574,14 @@ def test_grouped_verify_matches_pairs(spark):
 
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.3)
     # all-pairs, collapse on (ext_minhash_lsh contract); r11: "grouped" is
-    # the once-per-pair min-band shape, "grouped_perband" the r10 control
+    # the once-per-pair min-band shape
     a_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
     a_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **kw))
     assert a_p == a_g and len(a_p) > 10
-    assert a_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **kw))
-    # star, no collapse (keep-list contract)
+    # star (keep-list contract) verifies by pairs only
     skw = dict(kw, collapse_exact=False, candidate_scope="star")
-    assert res(dedup.minhash_lsh_pairs(df, verify="pairs", **skw)) == res(
+    with pytest.raises(ValueError, match="star"):
         dedup.minhash_lsh_pairs(df, verify="grouped", **skw)
-    )
     # bipartite with content-keyed label (cross-split contract)
     bkw = dict(
         kw,
@@ -1594,7 +1593,6 @@ def test_grouped_verify_matches_pairs(spark):
     b_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
     b_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **bkw))
     assert b_p == b_g
-    assert b_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **bkw))
     # attested-binary label (hash_split): the plan-time branch skip must
     # be value-identical to the unattested plan
     b_a = res(dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw))
@@ -1614,7 +1612,6 @@ def test_grouped_verify_matches_pairs(spark):
     t_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **tkw3))
     t_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **tkw3))
     assert t_p == t_g and len(t_p) > 0
-    assert t_p == res(dedup.minhash_lsh_pairs(df, verify="grouped_perband", **tkw3))
     # sig_source modes (the decontaminate_canonical_lsh passes)
     reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
     sig = (
@@ -1636,17 +1633,12 @@ def test_grouped_verify_matches_pairs(spark):
     assert res(dedup.minhash_lsh_pairs(None, verify="pairs", **gkw)) == res(
         dedup.minhash_lsh_pairs(None, verify="grouped", **gkw)
     )
-    tr = sig.filter(F.col("_lbl") == "train")
-    tkw = dict(
-        n=3, num_hashes=64, bands=32, threshold=0.2,
-        collapse_exact=False, sig_source=tr, candidate_scope="star",
-    )
-    assert res(dedup.minhash_lsh_pairs(None, verify="pairs", **tkw)) == res(
-        dedup.minhash_lsh_pairs(None, verify="grouped", **tkw)
-    )
     sig.unpersist()
     with pytest.raises(ValueError, match="verify"):
         dedup.minhash_lsh_pairs(df, verify="bogus", **kw)
+    # the r10 per-band control shape is retired
+    with pytest.raises(ValueError, match="verify"):
+        dedup.minhash_lsh_pairs(df, verify="grouped_perband", **kw)
 
 
 def test_lsh_cap_stats_are_loud(spark):
@@ -1742,7 +1734,7 @@ def test_lsh_cap_warns_in_shipping_path(spark, caplog, monkeypatch):
     )
 
 
-def test_auto_max_bucket_resolution(spark, caplog):
+def test_auto_max_bucket_resolution(spark, caplog, monkeypatch):
     """VERDICT r11 #1: max_bucket='auto' (the r12 default) must keep
     duplicate-FAMILY corpora uncapped (the fixed-1000 default discarded 50%
     of true merges at 2700x, where the capped-out buckets WERE the dup
@@ -1789,12 +1781,11 @@ def test_auto_max_bucket_resolution(spark, caplog):
     # WARNs, and drops the flooded buckets
     logger = "kafka_etl_automation_spark.operators.dedup"
     st_guard: dict = {}
+    monkeypatch.setattr(dedup, "_AUTO_WORK_PER_ROW", 0.5)
     with caplog.at_level(logging.WARNING, logger=logger):
         guard_pairs = {
             (r.id_a, r.id_b)
-            for r in dedup.minhash_lsh_pairs(
-                df, stats=st_guard, auto_work_per_row=0.5, **kw
-            ).collect()
+            for r in dedup.minhash_lsh_pairs(df, stats=st_guard, **kw).collect()
         }
     assert st_guard["effective_max_bucket"] is not None
     assert st_guard["dropped_buckets"] > 0 and st_guard["dropped_emissions"] > 0
@@ -1814,16 +1805,17 @@ def test_auto_max_bucket_resolution(spark, caplog):
         dedup.minhash_lsh_pairs(df, max_bucket=1, **kw)
 
 
-def test_once_reduction_packed_is_hash_aggregable(spark):
+def test_once_per_pair_reduction_packed_is_hash_aggregable(spark):
     """VERDICT r11 #2: the once-per-pair reduction's min over a STRUCT
     compiled to SortAggregate — a full sort (+ spill) of the narrow
     candidate stream, the dominant remaining flood-octave cost. The packed
     formulation (bit-packed (band, w, i, j) long + min_by(bkey, packed))
     must (a) compile to HashAggregate with a map-side partial — NO
-    SortAggregate anywhere in the plan — and (b) stay value-identical to
-    the struct control on the all-pairs, star-grouped, and bipartite
-    contracts (same row selected: within one (band, w) a pair occupies
-    exactly one bucket and one (i, j), so bkey never tiebreaks)."""
+    SortAggregate anywhere in the plan — on the all-pairs and bipartite
+    contracts, and (b) past the packing bounds (bands > 256) fall back to
+    the struct min, which stays value-identical to per-pair verification
+    (same row selected: within one (band, w) a pair occupies exactly one
+    bucket and one (i, j), so bkey never tiebreaks)."""
     from kafka_etl_automation_spark.operators import dedup, text
 
     stem = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1839,22 +1831,11 @@ def test_once_reduction_packed_is_hash_aggregable(spark):
 
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.2)
     packed = dedup.minhash_lsh_pairs(df, verify="grouped", **kw)
-    struct = dedup.minhash_lsh_pairs(
-        df, verify="grouped", once_reduction="struct", **kw
-    )
     assert "SortAggregate" not in plan(packed)
     assert "partial_min_by" in plan(packed)  # map-side combine is real
-    assert "SortAggregate" in plan(struct)  # the r11 cost, kept as control
     r_packed = res(packed)
-    assert r_packed == res(struct) and len(r_packed) > 0
-
-    # star under grouped verify (non-default but supported)
-    skw = dict(kw, collapse_exact=False, candidate_scope="star")
-    sp = dedup.minhash_lsh_pairs(df, verify="grouped", **skw)
-    assert "SortAggregate" not in plan(sp)
-    assert res(sp) == res(
-        dedup.minhash_lsh_pairs(df, verify="grouped", once_reduction="struct", **skw)
-    )
+    assert r_packed == res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
+    assert len(r_packed) > 0
 
     # bipartite block-split contract (both the attested-binary and
     # unattested >=2-label plans)
@@ -1863,15 +1844,23 @@ def test_once_reduction_packed_is_hash_aggregable(spark):
     )
     bp = dedup.minhash_lsh_pairs(df, verify="grouped", **bkw)
     assert "SortAggregate" not in plan(bp)
-    assert res(bp) == res(
-        dedup.minhash_lsh_pairs(df, verify="grouped", once_reduction="struct", **bkw)
-    )
+    assert res(bp) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
     ba = dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw)
     assert "SortAggregate" not in plan(ba)
     assert res(ba) == res(bp)
 
-    with pytest.raises(ValueError, match="once_reduction"):
-        dedup.minhash_lsh_pairs(df, once_reduction="bogus", **kw)
+    # 257 bands overflow the packed band field (bits 55..62): the struct
+    # fallback, on the label-free and the unattested cross-label plans
+    wide = dict(kw, num_hashes=257, bands=257)
+    fb = dedup.minhash_lsh_pairs(df, verify="grouped", **wide)
+    assert "SortAggregate" in plan(fb)
+    r_fb = res(fb)
+    assert r_fb == res(dedup.minhash_lsh_pairs(df, verify="pairs", **wide))
+    assert len(r_fb) > 0
+    bwide = dict(bkw, num_hashes=257, bands=257)
+    bfb = dedup.minhash_lsh_pairs(df, verify="grouped", **bwide)
+    assert "SortAggregate" in plan(bfb)
+    assert res(bfb) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **bwide))
 
 
 def test_flood_escalation_policy():
@@ -1903,8 +1892,7 @@ def test_flood_escalation_policy():
 
 
 def test_scale_partition_floor(spark, monkeypatch):
-    """r12: the scale-adaptive shuffle floor replaces the
-    SPARK_GRAFT_SHUFFLE_PARTITIONS env folklore — partitions derive from
+    """r12: the scale-adaptive shuffle floor — partitions derive from
     the source scan size (~2 MiB/partition, anchored to r11's measured
     512p @ 1.2 GB 2700x working point), never lower, and stay a no-op at
     gate/bench SFs so boarded plans and walls are untouched."""
