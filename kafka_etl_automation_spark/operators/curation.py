@@ -28,6 +28,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.operators import text
 from kafka_etl_automation_spark.operators.dedup import normalized_text
 
@@ -390,7 +391,7 @@ def decontaminate_canonical(
     # minhash_lsh_pairs already persists. Same bounded-FIFO lifecycle as
     # dedup's collapse caches (ADVICE r05): evicted frames stay correct,
     # they just recompute on the next action.
-    corpus = _cache_persisted(kept.unionByName(evals))
+    corpus = runtime.persist("corpus", kept.unionByName(evals), eager=True)
     if contam_pair_source is None:
         pairs = dedup.ngram_jaccard_pairs(corpus, text_col, id_col, n, threshold)
     else:
@@ -398,6 +399,7 @@ def decontaminate_canonical(
     return cross_split_contamination(corpus, pairs, text_col, id_col, train_pct)
 
 
+@runtime.settle_on_exit()
 def decontaminate_canonical_lsh(
     documents: DataFrame,
     text_col: str = "text",
@@ -467,14 +469,14 @@ def decontaminate_canonical_lsh(
     reps, members = dedup._exact_text_collapse(documents, text_col, id_col)
     # One signed frame for everything downstream. The label join costs one
     # narrow (id, label) scan of reps — cheap next to the shingle pass the
-    # sharing removes. Same bounded-FIFO lifecycle as the corpus caches;
-    # _cache_persisted evicts before EACH append so the live set never
-    # exceeds the cap mid-call (ADVICE r08).
+    # sharing removes. All three caches below go to the runtime's corpus
+    # pool, which evicts before EACH append so the live set never exceeds
+    # the cap mid-call (ADVICE r08).
     # reps feeds the signature build AND the label projection — persisted,
     # or the collapse group-agg re-executes per reference (the same lesson
     # the r07 ladder taught for the corpus frame)
-    reps = _cache_persisted(reps, eager=False)  # pass 1's audit covers it
-    # eager=False (VERDICT r12 #1): pass 1's always-on cap audit is the
+    reps = runtime.persist("corpus", reps)  # pass 1's audit covers it
+    # Not eager (VERDICT r12 #1): pass 1's always-on cap audit is the
     # FIRST job after this frame exists and scans banded <- train_sig <-
     # sig, so it materializes sig (and reps transitively) in the same job
     # — the dedicated count here was a full extra signature pass at every
@@ -487,11 +489,11 @@ def decontaminate_canonical_lsh(
     # projection of reps, one full extra id-keyed shuffle of the signed
     # frame at any scale (guide §2.4: two operations keyed the same way
     # should share one pass).
-    sig = _cache_persisted(
+    sig = runtime.persist(
+        "corpus",
         dedup.signature_sets(
             reps, text_col, id_col, n, num_hashes, carry={"_lbl": split}
         ),
-        eager=False,
     )
 
     # Pass 1: star-scope keep-list over the train rows of the signed frame
@@ -517,15 +519,15 @@ def decontaminate_canonical_lsh(
     # sides — without it each reference re-runs the semi join + union over
     # the cached signed frame (3x the corpus-wide semi-join shuffle at
     # scale).
-    # eager=False: pass 2's cap audit scans banded <- corpus_sig first
+    # Not eager: pass 2's cap audit scans banded <- corpus_sig first
     # thing, materializing this cache in the same job (sig itself is
     # already materialized by pass 1, so the semi-join + union plan here
     # is over measured stats either way).
-    corpus_sig = _cache_persisted(
+    corpus_sig = runtime.persist(
+        "corpus",
         sig.join(kept_ids, "id", "semi").unionByName(
             sig.filter(F.col("_lbl") == "eval")
         ),
-        eager=False,
     )
     rep_pairs = dedup.minhash_lsh_pairs(
         None,
@@ -573,9 +575,6 @@ def decontaminate_canonical_lsh(
         "rep",
         "semi",
     )
-    # both LSH passes + CC were the overlap window for the collapse's
-    # async member count — settle before the member fan-out is handed back
-    dedup._settle_async_counts()
     return rep_report.join(
         eval_members, rep_report["eval_rep"] == eval_members["rep"]
     ).select(
@@ -584,98 +583,6 @@ def decontaminate_canonical_lsh(
         "max_jaccard",
         "n_train_matches",
     )
-
-
-_CORPUS_CACHES: list = []
-# decontaminate_canonical caches one frame per call, the _lsh shape three
-# (reps, the signed frame, the pass-2 corpus rows); cap 6 keeps the two
-# most recent calls warm
-_CORPUS_CACHE_CAP = 6
-
-
-def _spill_level(cached_mem_bytes: int, max_heap_bytes: int):
-    """Pick the storage level for the NEXT corpus-sized cache: once the
-    already-cached bytes crowd the unified storage pool (~30% of heap at
-    the default spark.memory.fraction), further corpus caches go straight
-    to DISK_ONLY instead of competing with 32 concurrent column builders
-    for storage memory (VERDICT r10 #5: at the 2700x octave the
-    corpus-signature cache build OOM'd a 32g local driver — local mode
-    concentrates every task's builder plus the whole storage pool in one
-    JVM; on a real cluster the same cache is partitioned across
-    executors, so this guard only ever bites in local mode or on a
-    genuinely undersized executor). Pure function for testability."""
-    from pyspark import StorageLevel
-
-    if cached_mem_bytes > 0.30 * max_heap_bytes:
-        return StorageLevel.DISK_ONLY
-    return StorageLevel.MEMORY_AND_DISK
-
-
-def _cache_persisted(frame: DataFrame, eager: bool = True) -> DataFrame:
-    """Persist ``frame`` (MEMORY_AND_DISK, or DISK_ONLY past the
-    _spill_level storage-pressure probe) into the bounded-FIFO corpus
-    cache, evicting oldest-first BEFORE appending so the live set never
-    exceeds _CORPUS_CACHE_CAP — evicting only once per call let the cache
-    transiently hold cap+2 frames while a multi-append caller ran (ADVICE
-    r08). Evicted frames stay correct; they just recompute on next action.
-    """
-    from pyspark import StorageLevel
-
-    while len(_CORPUS_CACHES) >= _CORPUS_CACHE_CAP:
-        try:
-            _CORPUS_CACHES.pop(0).unpersist(False)
-        except Exception:
-            pass
-    level = StorageLevel.MEMORY_AND_DISK
-    try:
-        sc = frame.sparkSession.sparkContext
-        # memSize + diskSize (ADVICE r11): memSize alone counts only blocks
-        # currently RESIDENT in memory, so once earlier caches spill the
-        # probe re-armed MEMORY_AND_DISK in exactly the saturated regime it
-        # targets. Disk-resident bytes overcount storage-POOL pressure, but
-        # the guard is local-mode-only and the conservative direction
-        # (going DISK_ONLY a frame early) costs a re-read, not an OOM.
-        cached = sum(
-            i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()
-        )
-        heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        level = _spill_level(cached, heap)
-        if level != StorageLevel.MEMORY_AND_DISK:
-            _LOG.warning(
-                "corpus cache: %.1f GiB already cached vs %.1f GiB heap — "
-                "persisting the next corpus frame DISK_ONLY to keep the "
-                "storage pool from evicting/OOMing mid-build",
-                cached / 2**30,
-                heap / 2**30,
-            )
-    except Exception:  # storage telemetry is best-effort, never fatal
-        pass
-    out = frame.persist(level)
-    # Eager (default): corpus-sized cached frames land on join sides
-    # downstream; a MATERIALIZED InMemoryRelation reports measured (not
-    # Generate-collapsed) stats, so static broadcast decisions over it
-    # are size-sound at every SF (the r09 BroadcastOverGenerate class).
-    # Pass eager=False when a downstream cache's count materializes this
-    # one transitively — one job, several measured caches.
-    if eager:
-        out.count()
-    _CORPUS_CACHES.append(out)
-    return out
-
-
-def _cache_release(frame: DataFrame) -> bool:
-    """Unpersist ``frame`` AND remove it from the bounded-FIFO corpus cache
-    (ADVICE r11: unpersisting a cached frame out-of-band left the dead
-    entry in _CORPUS_CACHES, shrinking the effective cap for the rest of
-    the session and double-unpersisting on eviction). Returns whether the
-    frame was tracked."""
-    tracked = any(c is frame for c in _CORPUS_CACHES)
-    _CORPUS_CACHES[:] = [c for c in _CORPUS_CACHES if c is not frame]
-    try:
-        frame.unpersist(False)
-    except Exception:
-        pass
-    return tracked
 
 
 def ngram_overlap_decontamination(

@@ -21,18 +21,18 @@ from __future__ import annotations
 
 import logging
 import os
-import threading
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_etl_automation_spark import runtime
+
 _LOG = logging.getLogger(__name__)
 
-# Async eager-count bookkeeping (guide §2.6 — overlap independent jobs):
-# each entry is (thread, holder) where holder carries any exception the
-# count raised, re-raised at settle time so failures are never swallowed.
-_PENDING_COUNTS: list = []
+# the async eager counts' old names, which perfbench's tests still call
+_eager_count = runtime.eager_count
+_settle_async_counts = runtime.settle
 
 # Source-size ceiling below which the collapse's cache-materialization
 # count may run CONCURRENTLY with the pipeline's next construction job
@@ -71,41 +71,6 @@ def _local_input_bytes(df: DataFrame) -> int | None:
     except Exception:
         return None
     return total if total > 0 else None
-
-
-def _eager_count(frame: DataFrame, overlap: bool) -> None:
-    """Materialize a persisted frame via ``count()`` — inline, or on a
-    daemon thread when ``overlap`` (the small-source regime above). Async
-    counts MUST be settled via :func:`_settle_async_counts` before the
-    constructed pipeline is returned to the caller, so downstream actions
-    always plan against fully-measured caches — the overlap window is the
-    pipeline's own construction-time jobs (audit collects, CC rounds)."""
-    if not overlap:
-        frame.count()
-        return
-    holder: dict = {}
-
-    def _run() -> None:
-        try:
-            frame.count()
-        except BaseException as exc:  # re-raised at settle
-            holder["exc"] = exc
-
-    t = threading.Thread(target=_run, name="graft-async-count", daemon=True)
-    t.start()
-    _PENDING_COUNTS.append((t, holder))
-
-
-def _settle_async_counts() -> None:
-    """Join every in-flight async count, re-raising the first failure."""
-    first_exc = None
-    while _PENDING_COUNTS:
-        t, holder = _PENDING_COUNTS.pop()
-        t.join()
-        if first_exc is None and "exc" in holder:
-            first_exc = holder["exc"]
-    if first_exc is not None:
-        raise first_exc
 
 
 def normalized_text(col: Column | str) -> Column:
@@ -482,26 +447,9 @@ def _exact_text_collapse(
     hot key of 16-byte rows, not of documents; no collect_list arrays
     anywhere. reps filters via an id-keyed semi-join (uniform keys).
     """
-    from pyspark import StorageLevel
-
-    # Bound cache accumulation across repeated calls in a long-lived
-    # session (ADVICE r05): keep the newest few frames, evict the rest
-    # FIFO. Evicted frames stay correct (they recompute on next action);
-    # the cap only exists so a session that never calls
+    # Both frames go to the runtime's collapse pool (bounded FIFO, evicted
+    # before each append): a session that never calls
     # release_collapse_caches() holds O(1) cached maps, not O(#calls).
-    # Eviction runs before EACH append (the r09 grp cache made this a
-    # two-append call, which with entry-only eviction held cap+1 live —
-    # the same transient-overflow class ADVICE r08 flagged in curation).
-    def _cache_collapse(frame: DataFrame) -> DataFrame:
-        while len(_COLLAPSE_CACHES) >= _COLLAPSE_CACHE_CAP:
-            try:
-                _COLLAPSE_CACHES.pop(0).unpersist(False)
-            except Exception:
-                pass
-        out = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        _COLLAPSE_CACHES.append(out)
-        return out
-
     kl, kh = F.length(F.col(text_col)), F.xxhash64(F.col(text_col))
     keyed = df.select(
         F.col(id_col).alias("member"), kl.alias("_kl"), kh.alias("_kh")
@@ -513,8 +461,8 @@ def _exact_text_collapse(
     # a MATERIALIZED InMemoryRelation reports its measured size, so the
     # planner broadcasts it exactly when it truly fits (small corpora)
     # and never when it doesn't.
-    grp = _cache_collapse(
-        keyed.groupBy("_kl", "_kh").agg(F.min("member").alias("rep"))
+    grp = runtime.persist(
+        "collapse", keyed.groupBy("_kl", "_kh").agg(F.min("member").alias("rep"))
     )
     # (no count here: members' eager count below materializes grp
     # transitively — one materialization job, two measured caches)
@@ -522,25 +470,25 @@ def _exact_text_collapse(
     # the within self-join (4 references) — persist or the whole collapse
     # pipeline (document scan included) re-executes per reference. Two
     # longs per doc: a sliver at any scale.
-    members = _cache_collapse(
-        keyed.join(grp, ["_kl", "_kh"]).select("rep", "member")
+    members = runtime.persist(
+        "collapse", keyed.join(grp, ["_kl", "_kh"]).select("rep", "member")
     )
     # Eager, same reason — but for a provably-small file-backed source the
     # count runs CONCURRENTLY with the pipeline's next construction job
     # (guide §2.6; see _SMALL_SOURCE_BYTES for why the stats race is safe
-    # there) and is settled before the constructed pipeline returns. At
+    # there) and is settled when the calling operator returns or raises
+    # (runtime.settle_on_exit). At
     # bench SF this removes one full sequential job per collapse-backed
     # query; at octave/cluster scale behavior is unchanged.
     size = _local_input_bytes(df)
-    _eager_count(members, overlap=size is not None and size <= _SMALL_SOURCE_BYTES)
+    runtime.eager_count(
+        members, overlap=size is not None and size <= _SMALL_SOURCE_BYTES
+    )
     reps = df.join(
         grp.select(F.col("rep").alias(id_col)), id_col, "semi"
     )
     return reps, members
 
-
-_COLLAPSE_CACHES: list = []
-_COLLAPSE_CACHE_CAP = 4
 
 # max_bucket="auto" budget: allowed candidate emissions per banded row
 # before the skew guard engages (see minhash_lsh_pairs docstring). 64 is
@@ -612,7 +560,7 @@ def _flood_escalation(
 # ran the canonical pipelines at 32 GB heap with 512 partitions (r11,
 # BENCH_SCALE.md) = 2.3 MiB/partition, while 32 partitions — the local
 # default — OOMs the pass-2 corpus materialization at that octave (r12,
-# measured on this host: Java heap space in _cache_persisted). Gate/bench
+# measured: Java heap space in the corpus pool's runtime.persist). Gate/bench
 # SFs sit far below the floor (sf0.1 documents ≈ 2 MB -> want 1), so
 # their plans and walls are untouched; AQE coalesces any over-partitioned
 # small stage right back. Caches are the exception: any input past the
@@ -630,8 +578,8 @@ def _partition_floor(input_bytes: int, cur_partitions: int) -> int | None:
     return int(want) if want > cur_partitions else None
 
 
-# First-raise snapshot of spark.sql.shuffle.partitions, keyed by Spark
-# application id: scale_partition_floor / the flood escalation raise the
+# The runtime keeps a first-raise snapshot of spark.sql.shuffle.partitions
+# per application: scale_partition_floor / the flood escalation raise the
 # conf session-sticky (the floored PIPELINE executes lazily, so the raise
 # must outlive the builder call), but a STREAMING query started later in
 # the same session must not inherit it — streaming gets no AQE coalescing,
@@ -641,7 +589,6 @@ def _partition_floor(input_bytes: int, cur_partitions: int) -> int | None:
 # their query; the next batch-pipeline entry re-derives its floor from its
 # own input size, so nothing is lost. The snapshot also holds the
 # cached-partitioning conf a raise pins.
-_PRE_RAISE_PARTITIONS: dict[str, dict[str, str | None]] = {}
 
 # Engine sessions let AQE coalesce inside cached plans (session.sql_confs);
 # every partition raise, and any scale_partition_floor input past the
@@ -653,8 +600,8 @@ _CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitionin
 def _pin_cached_partitioning(spark, cur: int) -> None:
     """Pin cached partitioning off, snapshotting it and the current shuffle
     partitions (``cur``) on the session's first pin or raise."""
-    _PRE_RAISE_PARTITIONS.setdefault(
-        spark.sparkContext.applicationId,
+    runtime.snapshot_confs(
+        spark,
         {
             "spark.sql.shuffle.partitions": str(cur),
             _CACHED_PARTITIONING: spark.conf.get(_CACHED_PARTITIONING, None),
@@ -675,24 +622,8 @@ def restore_shuffle_partitions(spark) -> int | None:
     conf to their values before the first scale_partition_floor /
     flood-escalation raise of this session. No-op when nothing was ever
     raised. Returns the restored partition count."""
-    prev = _PRE_RAISE_PARTITIONS.pop(spark.sparkContext.applicationId, None)
-    if prev is None:
-        return None
-    for key, value in prev.items():
-        if value is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, value)
-    _LOG.warning(
-        "restore_shuffle_partitions: restoring spark.sql.shuffle.partitions "
-        "to the pre-floor value %s (and %s to %s) before a streaming query "
-        "(streaming has no AQE coalescing; batch pipelines re-derive their "
-        "floor per call)",
-        prev["spark.sql.shuffle.partitions"],
-        _CACHED_PARTITIONING,
-        prev[_CACHED_PARTITIONING],
-    )
-    return int(prev["spark.sql.shuffle.partitions"])
+    prev = runtime.restore_confs(spark)
+    return None if prev is None else int(prev["spark.sql.shuffle.partitions"])
 
 
 def scale_partition_floor(df: DataFrame) -> int | None:
@@ -760,14 +691,7 @@ def release_collapse_caches() -> int:
     cap, so long-lived sessions stay bounded either way (ADVICE r05).
     Returns the number of frames released.
     """
-    n = 0
-    while _COLLAPSE_CACHES:
-        try:
-            _COLLAPSE_CACHES.pop().unpersist(False)
-            n += 1
-        except Exception:
-            pass
-    return n
+    return runtime.release("collapse")
 
 
 def _expand_member_pairs(
@@ -822,6 +746,7 @@ def _expand_member_pairs(
     return cross.unionByName(within) if include_within else cross
 
 
+@runtime.settle_on_exit()
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1081,9 +1006,9 @@ def minhash_lsh_pairs(
         banded, band_cols, candidate_scope, audit.effective_max_bucket
     )
     if stats is not None:
-        # Probe instrumentation (tools/dedup_probe.py): the audit's numbers
-        # come from the job that materialized the caches; only
-        # candidates_distinct costs a probe-only pass.
+        # Probe instrumentation: the audit's numbers come from the job
+        # that materialized the caches; only candidates_distinct costs a
+        # probe-only pass.
         stats.update(audit._asdict(), candidates_distinct=cand.count())
     if verify == "grouped":
         verified = _lsh_verify_grouped(
@@ -1091,10 +1016,6 @@ def minhash_lsh_pairs(
         )
     else:
         verified = _lsh_verify_pairs(cand, src, threshold)
-    # Construction done: any async collapse count launched above has had
-    # the audit/count job to overlap with — block here so the caller's
-    # first action plans against fully-measured caches.
-    _settle_async_counts()
     if members is None:
         return verified
     # jaccard(S, S) = n/n, exactly 1.0 in IEEE — same value the
@@ -1826,25 +1747,15 @@ def _observed_changed(obs, ck: DataFrame) -> int:
     localCheckpoint's materialization job, so the old per-round
     ``filter(_changed).limit(1).count()`` action disappears entirely
     (r13; one fewer scheduled job per round, verified to fire on
-    localCheckpoint in Spark 4.1). ``Observation.get`` blocks on listener
-    delivery, which is asynchronous — guard with a bounded wait and fall
-    back to the old count over the materialized leaf if the metric never
-    arrives (engine drift), so the worst case is the pre-r13 behavior,
-    never a hang. Returns nonzero iff any label changed."""
-    import queue
-
-    q: queue.Queue = queue.Queue()
-    t = threading.Thread(target=lambda: q.put(obs.get), daemon=True)
-    t.start()
-    try:
-        v = q.get(timeout=30)["chg"]
-        return int(v) if v is not None else 0  # max over zero rows -> null
-    except queue.Empty:
-        _LOG.warning(
-            "connected_components: observed convergence metric not "
-            "delivered in 30s — falling back to the limit(1) count"
-        )
+    localCheckpoint in Spark 4.1). When the metric does not arrive
+    (runtime.observed's bounded wait), fall back to that count over the
+    materialized leaf, so the worst case is the pre-r13 behavior, never a
+    hang. Returns nonzero iff any label changed."""
+    vals = runtime.observed(obs)
+    if vals is None:
         return ck.filter("_changed").limit(1).count()
+    v = vals["chg"]
+    return int(v) if v is not None else 0  # max over zero rows -> null
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -2029,6 +1940,7 @@ def connected_components(
     return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))
 
 
+@runtime.settle_on_exit()
 def canonical_keep_list(
     df: DataFrame,
     text_col: str = "text",
@@ -2065,9 +1977,6 @@ def canonical_keep_list(
     comp = connected_components(
         pairs, reps.select(F.col(id_col)), id_col=id_col, stats=stats
     )
-    # the pair-source audit + CC rounds were the overlap window for the
-    # collapse's async member count — settle before the final member join
-    _settle_async_counts()
     return (
         comp.join(members, comp[id_col] == members["rep"])
         .groupBy("cluster_id")
@@ -2104,6 +2013,7 @@ def simhash(
     return votes.select("id", fp.alias("simhash"))
 
 
+@runtime.settle_on_exit()
 def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -2146,8 +2056,6 @@ def simhash_near_pairs(
             f"(got max_hamming={max_hamming}, chunks={chunks}); "
             f"use chunks={max_hamming + 1} or more"
         )
-    from pyspark import StorageLevel
-
     members = None
     if collapse_exact:
         df, members = _exact_text_collapse(df, text_col, id_col)
@@ -2203,19 +2111,8 @@ def simhash_near_pairs(
     # recompute saved), and a MATERIALIZED InMemoryRelation gives the
     # static planner measured stats for the corpus x chunks frame — no
     # Generate-collapsed estimate can broadcast it (the r09
-    # BroadcastOverGenerate class). Same bounded-FIFO cache as collapse,
-    # same evict-before-append discipline.
-    while len(_COLLAPSE_CACHES) >= _COLLAPSE_CACHE_CAP:
-        try:
-            _COLLAPSE_CACHES.pop(0).unpersist(False)
-        except Exception:
-            pass
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    banded.count()
-    _COLLAPSE_CACHES.append(banded)
-    # the banded count above is the overlap window for the collapse's
-    # async member count (small-source regime) — settle before returning
-    _settle_async_counts()
+    # BroadcastOverGenerate class). Same pool as the collapse's caches.
+    banded = runtime.persist("collapse", banded, eager=True)
     x, y = banded.alias("x"), banded.alias("y")
     verified = (
         x.join(

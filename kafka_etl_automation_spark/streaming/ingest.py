@@ -76,6 +76,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.io import run_dir
 
 AUDIT_SCHEMA = T.StructType(
@@ -300,9 +301,6 @@ def parse_kafka_records(raw: DataFrame, value_schema) -> DataFrame:
     ).select("v.*")
 
 
-_OBS_WAIT_SECONDS = 30
-
-
 def _is_local_path(path: str) -> bool:
     """True for plain/`file:` paths — where removing a just-written dir is
     a cheap local fs op, enabling the one-job-per-batch observed-stats
@@ -310,23 +308,6 @@ def _is_local_path(path: str) -> bool:
     from urllib.parse import urlparse
 
     return urlparse(path).scheme in ("file", "")
-
-
-def _observation_or_none(obs) -> dict | None:
-    """``Observation.get`` for a just-finished batch action, bounded:
-    metric delivery rides the (asynchronous) QueryExecutionListener, so a
-    bounded guard keeps engine drift from ever hanging the ingest loop —
-    the caller falls back to a dedicated stats job, i.e. the pre-r13
-    shape. Same pattern as dedup._observed_changed."""
-    import queue
-    import threading
-
-    q: queue.Queue = queue.Queue()
-    threading.Thread(target=lambda: q.put(obs.get), daemon=True).start()
-    try:
-        return q.get(timeout=_OBS_WAIT_SECONDS)
-    except queue.Empty:
-        return None
 
 
 def _remove_empty_batch_dir(batch_dir: str, stop_at: str) -> None:
@@ -383,11 +364,7 @@ def run_file_ingest(
     # 2048-partition conf turns every stateful stage into 2048 tasks and
     # can overflow spark.driver.maxResultSize. No-op unless a floor was
     # raised earlier in this session.
-    from kafka_etl_automation_spark.operators.dedup import (
-        restore_shuffle_partitions,
-    )
-
-    restore_shuffle_partitions(spark)
+    runtime.restore_confs(spark)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -435,13 +412,13 @@ def run_file_ingest(
                 .format(fmt)
                 .save(batch_dir)
             )
-            vals = _observation_or_none(obs)
+            vals = runtime.observed(obs)
             if vals is not None:
                 n = int(vals["n"])
                 lo, hi = vals["lo"], vals["hi"]
         if n < 0:
-            # non-local bronze, or the observed metric never arrived
-            # (engine drift): the pre-r13 dedicated stats job. The write
+            # non-local bronze, or no observed metric (runtime.observed's
+            # bounded wait): the pre-r13 dedicated stats job. The write
             # above (if any) stays valid — the stats are over the same
             # immutable micro-batch.
             stats = batch_df.agg(

@@ -17,6 +17,7 @@ from contextlib import contextmanager
 
 import pytest
 
+from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.catalog import load_tables
 from kafka_etl_automation_spark.operators import dedup
 from kafka_etl_automation_spark.session import sql_confs
@@ -82,7 +83,7 @@ def _spark_work(spark, fn) -> dict:
 def _collapse_group_cache():
     """The exact-collapse's per-text group frame (grp): its cache sits
     behind a shuffle, so its partition count shows the cache policy."""
-    (grp,) = [c for c in dedup._COLLAPSE_CACHES if "_kl" in c.columns]
+    (grp,) = [c for c in runtime._POOLS["collapse"] if "_kl" in c.columns]
     return grp
 
 
@@ -133,7 +134,7 @@ def test_partition_floor_pins_cached_partitioning(
     engine = sql_confs(session_partitions)
     want = max(floor, session_partitions)
     app = spark.sparkContext.applicationId
-    dedup._PRE_RAISE_PARTITIONS.pop(app, None)
+    runtime._SNAPSHOTS.pop(app, None)
     try:
         with _scoped_confs(spark, engine):
             _keep_list(docs, str(tmp_path / "keep"))
@@ -148,6 +149,6 @@ def test_partition_floor_pins_cached_partitioning(
             )
             assert spark.conf.get(dedup._CACHED_PARTITIONING) == "true"
     finally:
-        dedup._PRE_RAISE_PARTITIONS.pop(app, None)
+        runtime._SNAPSHOTS.pop(app, None)
     # outside the scope the vanilla session is back at Spark's default
     assert spark.conf.get(dedup._CACHED_PARTITIONING, None) is None

@@ -1112,17 +1112,18 @@ def test_exact_sum_negative_boundary_and_nulls(spark):
 def test_collapse_cache_registry_bounded(spark):
     """ADVICE r05: repeated collapse-backed calls in one session must not
     accumulate persisted member maps without bound; release() empties."""
+    from kafka_etl_automation_spark import runtime
     from kafka_etl_automation_spark.operators import dedup
 
     df = spark.createDataFrame(
         [(i, f"text {i % 3}") for i in range(12)], "doc_id long, text string"
     )
-    for _ in range(dedup._COLLAPSE_CACHE_CAP + 3):
+    for _ in range(runtime.POOL_CAPS["collapse"] + 3):
         reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
         members.count()
-    assert len(dedup._COLLAPSE_CACHES) <= dedup._COLLAPSE_CACHE_CAP
+    assert len(runtime._POOLS["collapse"]) <= runtime.POOL_CAPS["collapse"]
     assert dedup.release_collapse_caches() >= 1
-    assert not dedup._COLLAPSE_CACHES
+    assert not runtime._POOLS["collapse"]
 
 
 def test_canonical_keep_list_invariants(spark):
@@ -1896,6 +1897,7 @@ def test_scale_partition_floor(spark, monkeypatch):
     the source scan size (~2 MiB/partition, anchored to r11's measured
     512p @ 1.2 GB 2700x working point), never lower, and stay a no-op at
     gate/bench SFs so boarded plans and walls are untouched."""
+    from kafka_etl_automation_spark import runtime
     from kafka_etl_automation_spark.catalog import load_tables
     from kafka_etl_automation_spark.operators import dedup
 
@@ -1950,7 +1952,7 @@ def test_scale_partition_floor(spark, monkeypatch):
         spark.conf.set("spark.sql.shuffle.partitions", restore)
         # drop the first-raise snapshot this test's synthetic raise left,
         # so a later streaming test's restore doesn't rewind to "4"
-        dedup._PRE_RAISE_PARTITIONS.pop(spark.sparkContext.applicationId, None)
+        runtime._SNAPSHOTS.pop(spark.sparkContext.applicationId, None)
 
 
 def test_streaming_restores_pre_floor_partitions(spark, tmp_path, monkeypatch):
@@ -1961,12 +1963,13 @@ def test_streaming_restores_pre_floor_partitions(spark, tmp_path, monkeypatch):
     2048 tasks (the r12 maxResultSize incident). The lifecycle stream
     builders pin their own scoped value; run_file_ingest (the remaining
     unpinned entry) restores the first-raise snapshot before starting."""
+    from kafka_etl_automation_spark import runtime
     from kafka_etl_automation_spark.operators import dedup
     from kafka_etl_automation_spark.streaming import ingest
 
     restore = spark.conf.get("spark.sql.shuffle.partitions")
     app = spark.sparkContext.applicationId
-    dedup._PRE_RAISE_PARTITIONS.pop(app, None)
+    runtime._SNAPSHOTS.pop(app, None)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         # simulate a floored batch pipeline: a real file-backed frame plus
@@ -2007,7 +2010,7 @@ def test_streaming_restores_pre_floor_partitions(spark, tmp_path, monkeypatch):
         assert dedup.restore_shuffle_partitions(spark) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", restore)
-        dedup._PRE_RAISE_PARTITIONS.pop(app, None)
+        runtime._SNAPSHOTS.pop(app, None)
 
 
 def test_ngram_overlap_bloom_generic_id_type(spark):
@@ -2045,23 +2048,24 @@ def test_spill_level_probe(spark):
     a live session so the guard isn't silently dead."""
     from pyspark import StorageLevel
 
-    from kafka_etl_automation_spark.operators import curation
+    from kafka_etl_automation_spark import runtime
 
     gib = 2**30
-    assert curation._spill_level(0, 32 * gib) == StorageLevel.MEMORY_AND_DISK
-    assert curation._spill_level(9 * gib, 32 * gib) == StorageLevel.MEMORY_AND_DISK
-    assert curation._spill_level(11 * gib, 32 * gib) == StorageLevel.DISK_ONLY
+    assert runtime._spill_level(0, 32 * gib) == StorageLevel.MEMORY_AND_DISK
+    assert runtime._spill_level(9 * gib, 32 * gib) == StorageLevel.MEMORY_AND_DISK
+    assert runtime._spill_level(11 * gib, 32 * gib) == StorageLevel.DISK_ONLY
     # live telemetry path: a small frame stays MEMORY_AND_DISK and the
     # JVM storage APIs the probe uses are reachable
     sc = spark.sparkContext
     assert int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory()) > 0
-    df = curation._cache_persisted(spark.range(10).toDF("id"))
+    df = runtime.persist("corpus", spark.range(10).toDF("id"), eager=True)
     assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
-    # release via the tracked-cache helper, NOT a bare unpersist (ADVICE
-    # r11: out-of-band unpersist left the dead frame in _CORPUS_CACHES,
-    # shrinking the effective cap for later tests in the same session)
-    assert curation._cache_release(df) is True
-    assert all(c is not df for c in curation._CORPUS_CACHES)
+    assert any(c is df for c in runtime._POOLS["corpus"])
+    # release via the pool, NOT a bare unpersist (ADVICE r11: out-of-band
+    # unpersist left the dead frame in the pool, shrinking the effective
+    # cap for later tests in the same session)
+    assert runtime.release("corpus") >= 1
+    assert all(c is not df for c in runtime._POOLS["corpus"])
 
 
 def test_grouped_bucket_blocks_are_sorted(spark):

@@ -584,19 +584,3 @@ def test_remove_empty_batch_dir_uri_and_plain_paths(tmp_root):
             ingest._remove_empty_batch_dir(batch_dir, bronze)
         assert not os.path.exists(os.path.dirname(batch_dir))
         assert os.path.isdir(keep)
-
-
-def test_observation_or_none_bounds_the_wait(monkeypatch):
-    """Engine-drift guard: an observation whose metric never arrives must
-    return None (caller falls back to the dedicated stats job), not hang."""
-    class _NeverDelivers:
-        @property
-        def get(self):
-            import time as _t
-
-            _t.sleep(3600)
-
-    monkeypatch.setattr(
-        "kafka_etl_automation_spark.streaming.ingest._OBS_WAIT_SECONDS", 1
-    )
-    assert ingest._observation_or_none(_NeverDelivers()) is None
