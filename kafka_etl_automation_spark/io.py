@@ -16,7 +16,8 @@
   The reference writes Avro into Hive; Spark's Avro writer lives in the
   external ``spark-avro`` module, so the format is a parameter — parquet by
   default here, ``format="avro"`` on clusters that ship the module.
-- S9 audit sink lives in quality.append_audit.
+- S9 audit sink lives in quality.append_audit; ``append_arrow`` is the
+  job-free writer the collected audits share.
 
 Scale: every sink is a straight ``df.write`` — parallel, no driver
 collects. The per-run directory naming gives the same idempotency unit the
@@ -26,6 +27,7 @@ reference uses: a rerun re-creates its own directory only.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +51,46 @@ def read_delimited(
 def read_text_dir(spark: SparkSession, path: str) -> DataFrame:
     """S3: line-oriented scan of a run directory (``value: string``)."""
     return spark.read.text(path)
+
+
+def fs_path(path: str) -> str:
+    """The local filesystem path behind ``path`` for ``os``/``shutil``: a
+    ``file:`` URI's path component, any other string as given (parsing a
+    plain path as a URI would cut it at a ``#`` or ``?``)."""
+    parsed = urlparse(path)
+    return parsed.path if parsed.scheme == "file" else path
+
+
+def local_path(path: str) -> str:
+    """:func:`fs_path` for a table this process writes itself with
+    pyarrow, such as an audit: a plain path or a ``file:`` URI. Any other
+    scheme raises, rather than the write landing in a local directory
+    named after the URI."""
+    if urlparse(path).scheme not in ("", "file"):
+        raise ValueError(f"audit tables are local files; got {path!r}")
+    return fs_path(path)
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop FileSystem
+    API, which resolves the path's scheme (file://, hdfs://, s3a://) the
+    way Spark's own readers and writers do."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def append_arrow(table, path: str, prefix: str) -> None:
+    """Append a small pyarrow ``table`` to the parquet directory ``path``
+    as one new uniquely named file: a metadata-sized write (an audit row)
+    needs no Spark job. This process writes it, so ``path`` must be a
+    :func:`local_path`."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    local = local_path(path)
+    os.makedirs(local, exist_ok=True)
+    pq.write_table(table, os.path.join(local, f"{prefix}-{uuid.uuid4().hex}.parquet"))
 
 
 def run_dir(base: str, topic: str, partition: int | str, run_id: int) -> str:

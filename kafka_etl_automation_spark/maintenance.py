@@ -7,7 +7,8 @@ row-group overhead). ``compact`` rewrites a parquet directory into
 ~target-sized files and swaps it in (two renames with crash recovery — see
 ``compact``'s docstring for the exact guarantees), preserving the data
 byte-for-byte (it is a pure re-layout; verified by the row-count check
-before the swap).
+before the swap). The rewrite counts its own rows, so a compaction costs
+the schema read, the write and the recount of the new copy.
 """
 
 from __future__ import annotations
@@ -17,13 +18,17 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
+
+from kafka_etl_automation_spark import runtime
+from kafka_etl_automation_spark.io import fs_path
 
 
 def dir_stats(path: str) -> tuple[int, int]:
     """(total bytes, data file count) under a table directory."""
     total, files = 0, 0
-    for root, _, names in os.walk(path):
+    for root, _, names in os.walk(fs_path(path)):
         for n in names:
             if n.startswith(("_", ".")):
                 continue
@@ -36,9 +41,10 @@ def recover(path: str) -> bool:
     """Restore a table stranded by a crash mid-swap: if ``path`` is absent
     but ``<path>__precompact`` exists, rename it back. Returns True when a
     recovery happened. Safe to call unconditionally (no-op otherwise)."""
-    old = path.rstrip("/") + "__precompact"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
+    local = fs_path(path).rstrip("/")
+    old = local + "__precompact"
+    if not os.path.exists(local) and os.path.exists(old):
+        os.rename(old, local)
         return True
     return False
 
@@ -51,11 +57,14 @@ def compact(
 ) -> tuple[int, int]:
     """Rewrite ``path`` into ceil(bytes / target_mb) files (per partition
     directory when ``partition_col`` is given, preserving the partition
-    layout). Returns (files_before, files_after).
+    layout). Returns (files_before, files_after). ``path`` is a local
+    table: a plain path or a ``file:`` URI.
 
     Safety: the compacted copy is written beside the original and only
     swapped in after a row-count equality check — a failed rewrite leaves
-    the table untouched. The swap itself is TWO renames, not atomic: a
+    the table untouched. The rows before are counted by the rewrite job
+    itself (an observed metric), the rows after by an independent read of
+    the new copy. The swap itself is TWO renames, not atomic: a
     crash between them leaves the table absent at ``path`` with the data
     intact under ``<path>__precompact``; the next ``compact`` call (or
     ``recover``) detects the lingering dir and restores it before doing
@@ -64,6 +73,7 @@ def compact(
     its rebuild jobs.
     """
     recover(path)
+    local = fs_path(path).rstrip("/")
     # A hive-partitioned layout (name=value dirs) compacted WITHOUT
     # partitionBy would silently flatten the directory structure —
     # breaking partition pruning and scd.delete_run afterwards. Detect the
@@ -71,8 +81,8 @@ def compact(
     # caller to remember (code-review finding r02).
     part_dirs = [
         d
-        for d in os.listdir(path)
-        if os.path.isdir(os.path.join(path, d)) and "=" in d
+        for d in os.listdir(local)
+        if os.path.isdir(os.path.join(local, d)) and "=" in d
     ]
     if part_dirs:
         detected = sorted({d.split("=", 1)[0] for d in part_dirs})
@@ -88,34 +98,41 @@ def compact(
                 f"partition_col={partition_col!r}"
             )
 
-    bytes_total, files_before = dir_stats(path)
+    bytes_total, files_before = dir_stats(local)
     n_files = max(1, math.ceil(bytes_total / (target_mb * 1024 * 1024)))
 
     df = spark.read.parquet(path)
-    before = df.count()
+    obs = Observation()
+    counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
 
-    tmp = path.rstrip("/") + f"__compact_{uuid.uuid4().hex[:8]}"
-    writer = df.repartition(n_files)
+    suffix = f"__compact_{uuid.uuid4().hex[:8]}"
+    tmp, local_tmp = path.rstrip("/") + suffix, local + suffix
     if partition_col:
         # one sized write per partition value, keeping pruning intact
-        writer = df.repartition(n_files, partition_col)
-        writer.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
+        (
+            counted.repartition(n_files, partition_col)
+            .write.mode("overwrite")
+            .partitionBy(partition_col)
+            .parquet(tmp)
+        )
     else:
-        writer.write.mode("overwrite").parquet(tmp)
+        counted.repartition(n_files).write.mode("overwrite").parquet(tmp)
+    vals = runtime.observed(obs)
+    before = int(vals["n"]) if vals is not None else df.count()
 
-    after = spark.read.parquet(tmp).count()
+    after = spark.read.schema(df.schema).parquet(tmp).count()
     if after != before:
-        shutil.rmtree(tmp)
+        shutil.rmtree(local_tmp)
         raise RuntimeError(
             f"compaction row mismatch ({before} -> {after}); original kept"
         )
-    old = path.rstrip("/") + "__precompact"
+    old = local + "__precompact"
     if os.path.exists(old):
         # previous compact crashed AFTER its swap completed (path exists)
         # but before cleanup — the lingering dir is superseded data
         shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(tmp, path)
+    os.rename(local, old)
+    os.rename(local_tmp, local)
     shutil.rmtree(old)
-    _, files_after = dir_stats(path)
+    _, files_after = dir_stats(local)
     return files_before, files_after

@@ -18,11 +18,14 @@ validation queries, which log a PASS/FAIL row per check:
 - audit sink: append results + timestamp to a parquet log table, the
   ``*_TEST_LOG`` pattern (/root/reference/fact_dim_merging.sh:107-110) (S9)
 
-Scale notes: every combinator is a single lazy plan. count_check is two
-map-side-combinable counts; data_diff's ``except`` pair shuffles each input
-twice (inherent to exact set-diff — the reference pays the same via MINUS);
-dup_check is one hash aggregation; null_check is a filtered count with the
-OR-of-nulls pushed to the scan.
+Scale notes: every combinator is a single lazy plan. count_check is ONE
+aggregate over both inputs, tagged by side and unioned (no join);
+landing_checks adds the target's NULL count to that same aggregate, so a
+landed batch is recounted and NULL-audited in one scan of each side;
+data_diff's ``except`` pair shuffles each input twice (inherent to exact
+set-diff — the reference pays the same via MINUS); dup_check is one hash
+aggregation; null_check is a filtered count with the OR-of-nulls pushed
+to the scan.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kafka_etl_automation_spark.io import append_arrow, hadoop_path
 
 PASS, FAIL = "PASS", "FAIL"
 
@@ -45,13 +50,65 @@ def _result(name: str, ok, metric_a, metric_b) -> list:
     ]
 
 
+def _count_result(name: str, ca, cb) -> list:
+    return _result(name, ca == cb, ca, cb)
+
+
+def _null_result(name: str, bad, total) -> list:
+    return _result(name, bad == 0, bad, total)
+
+
+def _any_null(cols: list[str]) -> F.Column:
+    """OR of ``IS NULL`` over ``cols``; FALSE for an empty list."""
+    return reduce(lambda a, c: a | F.col(c).isNull(), cols, F.lit(False))
+
+
+def _side_counts(source: DataFrame, target: DataFrame, target_flag=None) -> DataFrame:
+    """One aggregate over source rows tagged TRUE unioned with target rows
+    tagged FALSE: ``ca`` source rows, ``cb`` target rows and ``flagged``,
+    the target rows where ``target_flag`` holds. One shuffle-free partial
+    aggregate per input partition, one tiny final merge."""
+    tagged = source.select(
+        F.lit(True).alias("_src"), F.lit(False).alias("_flag")
+    ).unionAll(
+        target.select(
+            F.lit(False).alias("_src"),
+            (F.lit(False) if target_flag is None else target_flag).alias("_flag"),
+        )
+    )
+    src = F.col("_src")
+    return tagged.agg(
+        F.count_if(src).alias("ca"),
+        F.count_if(~src).alias("cb"),
+        F.count_if(F.col("_flag")).alias("flagged"),
+    )
+
+
 def count_check(source: DataFrame, target: DataFrame, name: str = "count_check") -> DataFrame:
     """Q1: row-count equality. metric_a=source count, metric_b=target."""
-    a = source.agg(F.count(F.lit(1)).alias("ca"))
-    b = target.agg(F.count(F.lit(1)).alias("cb"))
-    return a.crossJoin(b).select(
-        *_result(name, F.col("ca") == F.col("cb"), F.col("ca"), F.col("cb"))
+    return _side_counts(source, target).select(
+        *_count_result(name, F.col("ca"), F.col("cb"))
     )
+
+
+def landing_checks(
+    source: DataFrame,
+    target: DataFrame,
+    cols: Iterable[str],
+    count_name: str,
+    null_name: str,
+) -> DataFrame:
+    """count_check(source, target, count_name) followed by
+    null_check(target, cols, null_name) — the same two result rows — from
+    ONE aggregate over both inputs, so a landed batch is recounted and
+    NULL-audited in a single scan of each side."""
+    counts = _side_counts(source, target, _any_null(list(cols)))
+    ca, cb = F.col("ca"), F.col("cb")
+    rows = F.array(
+        F.struct(*_count_result(count_name, ca, cb)),
+        F.struct(*_null_result(null_name, F.col("flagged"), cb)),
+    )
+    return counts.select(F.explode(rows).alias("_r")).select("_r.*")
 
 
 def data_diff(source: DataFrame, target: DataFrame, name: str = "data_diff") -> DataFrame:
@@ -115,24 +172,17 @@ def null_check(
     to check a declared constraint set instead. metric_a=# offending rows,
     metric_b=total rows."""
     cols = list(cols) if cols is not None else not_null_columns(df)
-    if not cols:
-        cond = F.lit(False)
-    else:
-        cond = reduce(lambda a, c: a | F.col(c).isNull(), cols[1:], F.col(cols[0]).isNull())
     agg = df.agg(
-        F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).alias("bad"),
+        F.count_if(_any_null(cols)).alias("bad"),
         F.count(F.lit(1)).alias("total"),
     )
-    return agg.select(*_result(name, F.col("bad") == 0, F.col("bad"), F.col("total")))
+    return agg.select(*_null_result(name, F.col("bad"), F.col("total")))
 
 
 def null_offenders(df: DataFrame, cols: Iterable[str] | None = None) -> DataFrame:
     """The offending rows (reference fetches them, fact_dim_merging.sh:322-358)."""
     cols = list(cols) if cols is not None else not_null_columns(df)
-    if not cols:
-        return df.limit(0)
-    cond = reduce(lambda a, c: a | F.col(c).isNull(), cols[1:], F.col(cols[0]).isNull())
-    return df.filter(cond)
+    return df.filter(_any_null(cols))
 
 
 def run_suite(checks: Iterable[DataFrame]) -> DataFrame:
@@ -191,10 +241,11 @@ def run_config_validations(
 def artifact_check(spark, path: str, name: str = "artifact_check") -> DataFrame:
     """Q6: artifact-existence validation — the reference asserts expected
     HDFS dirs/files exist by name (Kafka_ArrivalToConform.sh:311-332,
-    KafkaScript_ConformToStaging.sh:151-153). metric_a=1 if present."""
-    import os
-
-    exists = os.path.exists(path)
+    KafkaScript_ConformToStaging.sh:151-153). metric_a=1 if present.
+    ``path`` resolves through the Hadoop FileSystem, so ``file:`` URIs and
+    cluster schemes are checked where Spark would read them."""
+    fs, hpath = hadoop_path(spark, path)
+    exists = bool(fs.exists(hpath))
     return spark.range(1).select(
         F.lit(name).alias("check_name"),
         F.lit(PASS if exists else FAIL).alias("status"),
@@ -214,3 +265,29 @@ def append_audit(results: DataFrame, path: str, run_id: int | None = None) -> No
         .write.mode("append")
         .parquet(path)
     )
+
+
+def append_audit_rows(rows: Iterable, path: str, run_id: int | None = None) -> None:
+    """:func:`append_audit` for result rows already collected: the same
+    columns, written as one small parquet file by pyarrow, with no Spark
+    job (and so no second run of the suite that produced them)."""
+    import datetime
+
+    import pyarrow as pa
+
+    rows = list(rows)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    columns = {
+        "check_name": pa.string(),
+        "status": pa.string(),
+        "metric_a": pa.int64(),
+        "metric_b": pa.int64(),
+    }
+    table = pa.table(
+        {c: pa.array([r[c] for r in rows], t) for c, t in columns.items()}
+        | {
+            "audit_ts": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
+            "job_run_id": pa.array([run_id] * len(rows), pa.int64()),
+        }
+    )
+    append_arrow(table, path, "dq")

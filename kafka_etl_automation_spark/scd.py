@@ -13,11 +13,20 @@ Re-expresses the reference's dimensional-load core (M1-M4):
 
 Design: ``scd_merge`` is a pure DataFrame -> DataFrame transform (current
 dim state + incoming snapshot -> new dim state), so Catalyst owns the
-physical plan: the single equi-join on the business key broadcasts when the
-incoming delta is small, sort-merges otherwise — the right call at both
-SFs and 100 TB. Persistence is plain parquet partitioned by
-``create_job_run_id`` with dynamic partition overwrite: re-writing a run id
-replaces exactly that partition (M3) without a table-format dependency.
+physical plan. Type 2 runs in one pass: a single full outer join of the
+whole dimension (history included) with the snapshot, matched on open
+rows only, then one ``explode`` that emits each joined row's surviving
+versions: the current side (closed when its attributes changed) and the
+incoming side (when new or changed). One join means one shuffle of each
+input and one plan to compile; the earlier shape referenced the join five
+times and unioned six branches (perfbench's cold ``scd`` span, two merges
+and their writes: 13 Spark jobs then, 7 now). A full outer join does not
+broadcast: it sort-merges, or AQE turns it into a shuffled hash join when
+the measured build side is small. Static and Type 1 join on the business
+key the same way, as anti/inner joins that broadcast a small side.
+Persistence is plain parquet partitioned by ``create_job_run_id`` with
+dynamic partition overwrite: re-writing a run id replaces exactly that
+partition (M3) without a table-format dependency.
 
 Type-2 current-row convention matches the reference: ``record_status='1'``
 current / ``'0'`` closed (the flagship query filters RECORD_STATUS='1',
@@ -26,10 +35,13 @@ current / ``'0'`` closed (the flagship query filters RECORD_STATUS='1',
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kafka_etl_automation_spark.io import hadoop_path
 
 LINEAGE_COLS = ("create_job_run_id", "update_job_run_id", "record_status")
 
@@ -113,46 +125,42 @@ def scd_merge(
         new_keys = inc.join(cur, on, "left_anti")
         return unmatched_cur.unionByName(matched).unionByName(new_keys)
 
-    # type 2. Side presence is tracked with explicit marker columns, not
-    # key-null checks: a legitimately NULL business-key value on either
-    # side would otherwise register as "row absent" and fabricate spurious
-    # all-NULL rows (code-review finding r02).
-    cur_open = cur.filter(F.col("record_status") == "1").withColumn(
-        "_cur_present", F.lit(True)
-    )
-    cur_closed = current.filter(F.col("record_status") == "0")
-    inc_marked = inc.withColumn("_inc_present", F.lit(True))
-    joined = cur_open.join(inc_marked, on, "full_outer")
+    # type 2, one pass: a single full outer join of the WHOLE dimension
+    # with the snapshot, matching open rows only (closed history never
+    # matches and passes through unchanged), then one two-slot row per
+    # joined row: [current side, closed when changed; incoming side, kept
+    # when new or changed], NULL slots dropped. Side presence is tracked
+    # with explicit marker columns, not key-null checks: a legitimately
+    # NULL business-key value on either side would otherwise register as
+    # "row absent" and fabricate spurious all-NULL rows (code-review
+    # finding r02). NULL keys never match under ``=``: a current row with
+    # one passes through, an incoming row with one inserts.
+    cur = current.withColumn("_cur_present", F.lit(True)).alias("cur")
+    inc = incoming.withColumn("_inc_present", F.lit(True)).alias("inc")
+    joined = cur.join(inc, on + [F.col("cur.record_status") == "1"], "full_outer")
     cur_present = F.col("_cur_present").isNotNull()
     inc_present = F.col("_inc_present").isNotNull()
-    is_match = cur_present & inc_present
-    changed = is_match & _changed(attrs)
-
-    keep_open = joined.filter(is_match & ~_changed(attrs)).select(
-        *[F.col(f"cur.{c}").alias(c) for c in current.columns]
+    changed = cur_present & inc_present & _changed(attrs)
+    closing = {
+        "update_job_run_id": F.when(changed, F.lit(run_id).cast("long")).otherwise(
+            F.col("cur.update_job_run_id")
+        ),
+        "record_status": F.when(changed, F.lit("0")).otherwise(
+            F.col("cur.record_status")
+        ),
+    }
+    cur_row = F.when(
+        cur_present,
+        F.struct(*[closing.get(c, F.col(f"cur.{c}")).alias(c) for c in current.columns]),
     )
-    closed_now = joined.filter(changed).select(
-        *[F.col(f"cur.{k}").alias(k) for k in keys],
-        *[F.col(f"cur.{a}").alias(a) for a in attrs],
-        F.col("cur.create_job_run_id").alias("create_job_run_id"),
-        F.lit(run_id).cast("long").alias("update_job_run_id"),
-        F.lit("0").alias("record_status"),
-    )
-    opened_now = joined.filter(changed).select(
-        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns]
-    )
-    brand_new = joined.filter(~cur_present).select(
-        *[F.col(f"inc.{c}").alias(c) for c in incoming.columns]
-    )
-    disappeared = joined.filter(~inc_present).select(
-        *[F.col(f"cur.{c}").alias(c) for c in current.columns]
+    inc_row = F.when(
+        inc_present & (changed | ~cur_present),
+        F.struct(*[F.col(f"inc.{c}").alias(c) for c in current.columns]),
     )
     return (
-        cur_closed.unionByName(keep_open)
-        .unionByName(disappeared)
-        .unionByName(closed_now)
-        .unionByName(opened_now)
-        .unionByName(brand_new)
+        joined.select(F.explode(F.array(cur_row, inc_row)).alias("_row"))
+        .filter(F.col("_row").isNotNull())
+        .select("_row.*")
     )
 
 
@@ -192,11 +200,7 @@ def delete_run(spark: SparkSession, path: str, run_id: int, run_col: str = "crea
     backs the no-duplicate-on-retry guarantee (rerunnability.sh:91-131)
     works identically on local disk and on cluster storage (a local-FS
     rmtree would silently no-op off local disk — ADVICE r02)."""
-    import os
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"{run_col}={run_id}"))
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_path(spark, os.path.join(path, f"{run_col}={run_id}"))
     if fs.exists(hpath):
         fs.delete(hpath, True)
 

@@ -45,6 +45,12 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static, so it cannot go in sql_confs):
+        # Spark keeps 100 compiled classes, but one LSH keep-list call
+        # generates ~115, so every warm call recompiled nearly all of
+        # them in Janino. 1000 holds the engine's working set; a class is
+        # a few KB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in {**sql_confs(max(cpus, 32)), **(extra_conf or {})}.items():
         builder = builder.config(k, v)

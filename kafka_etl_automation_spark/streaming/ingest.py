@@ -77,7 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.io import run_dir
+from kafka_etl_automation_spark.io import append_arrow, fs_path, local_path, run_dir
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -106,12 +106,8 @@ def _append_audit_row(audit_path: str, row: dict) -> None:
     a single-row metadata write does not need a Spark job (saves ~1-2s of
     job overhead per micro-batch; the reference's equivalent is one Oracle
     INSERT). Schema matches AUDIT_SCHEMA so spark.read sees one table."""
-    import uuid
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    os.makedirs(audit_path, exist_ok=True)
     table = pa.table(
         {
             "topic": pa.array([row["topic"]], pa.string()),
@@ -127,7 +123,7 @@ def _append_audit_row(audit_path: str, row: dict) -> None:
             "batch_seconds": pa.array([row["batch_seconds"]], pa.float64()),
         }
     )
-    pq.write_table(table, os.path.join(audit_path, f"audit-{uuid.uuid4().hex}.parquet"))
+    append_arrow(table, audit_path, "audit")
 
 
 def kafka_stream_options(brokers: str, topic: str) -> dict[str, str]:
@@ -236,12 +232,8 @@ class ProgressAuditListener:
         self.listener = _L()
 
     def _write(self, row: dict) -> None:
-        import uuid
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        os.makedirs(self.audit_path, exist_ok=True)
         table = pa.table(
             {
                 "query_id": pa.array([row["query_id"]], pa.string()),
@@ -252,9 +244,7 @@ class ProgressAuditListener:
                 "duration_ms": pa.array([row["duration_ms"]], pa.int64()),
             }
         )
-        pq.write_table(
-            table, os.path.join(self.audit_path, f"p-{uuid.uuid4().hex}.parquet")
-        )
+        append_arrow(table, self.audit_path, "p")
 
     def attach(self, spark: SparkSession) -> "ProgressAuditListener":
         spark.streams.addListener(self.listener)
@@ -316,15 +306,9 @@ def _remove_empty_batch_dir(batch_dir: str, stop_at: str) -> None:
     up to but NOT including ``stop_at`` (bronze_base may legitimately
     remain as an empty dir). Both paths may be ``file:`` URIs (the only
     scheme ``_is_local_path`` admits besides plain paths); ``shutil`` and
-    ``os`` need the URI's path, or the removal silently does nothing.
-    Plain paths are used as given: parsing them as URIs would cut them at
-    a ``#`` or ``?``."""
+    ``os`` need the URI's path (:func:`io.fs_path`), or the removal
+    silently does nothing."""
     import shutil
-    from urllib.parse import urlparse
-
-    def fs_path(p: str) -> str:
-        parsed = urlparse(p)
-        return parsed.path if parsed.scheme == "file" else p
 
     batch_dir = fs_path(batch_dir)
     shutil.rmtree(batch_dir, ignore_errors=True)
@@ -357,8 +341,10 @@ def run_file_ingest(
 
     Uses ``availableNow`` so the call processes everything present and
     stops — the deterministic-test trigger; swap for
-    ``processingTime`` in a long-running deployment.
+    ``processingTime`` in a long-running deployment. ``audit_path`` is a
+    local table (:func:`io.local_path`), checked before the first batch.
     """
+    local_path(audit_path)
     # Streaming must not inherit a batch pipeline's raised shuffle floor
     # (ADVICE r12 medium): no AQE coalescing in streaming, so a leaked
     # 2048-partition conf turns every stateful stage into 2048 tasks and

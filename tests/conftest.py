@@ -18,6 +18,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_SMALL = "/root/testdata/sf0.001"
 
 
+def spark_work(spark, fn) -> dict:
+    """Run ``fn`` and count the jobs it submitted, their completed tasks
+    (skipped stages excluded) and their call-site names, from the status
+    store: unlike walls, host load cannot move these counts."""
+    jsc = spark.sparkContext._jsc.sc()
+    first = int(jsc.dagScheduler().numTotalJobs())
+    fn()
+    end = int(jsc.dagScheduler().numTotalJobs())
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    stage_ids: set[int] = set()
+    names = []
+    for j in range(first, end):
+        job = store.job(j)
+        names.append(job.name())
+        ids = job.stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+    tasks = 0
+    for sid in stage_ids:
+        st = store.lastStageAttempt(sid)
+        if st.status().toString() != "SKIPPED":
+            tasks += st.numCompleteTasks()
+    return {"jobs": end - first, "tasks": tasks, "names": names}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

@@ -22,7 +22,7 @@ from kafka_etl_automation_spark.catalog import load_tables
 from kafka_etl_automation_spark.operators import dedup
 from kafka_etl_automation_spark.session import sql_confs
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, spark_work
 
 SHUFFLE_PARTITIONS = 32
 # the parent of this policy ran ~500 tasks per keep-list call on 1,000
@@ -56,30 +56,6 @@ def _keep_list(docs, out: str) -> None:
     ).write.parquet(out)
 
 
-def _spark_work(spark, fn) -> dict:
-    """Run ``fn`` and count the jobs it submitted, their completed tasks
-    (skipped stages excluded) and their call-site names."""
-    jsc = spark.sparkContext._jsc.sc()
-    first = int(jsc.dagScheduler().numTotalJobs())
-    fn()
-    end = int(jsc.dagScheduler().numTotalJobs())
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    stage_ids: set[int] = set()
-    names = []
-    for j in range(first, end):
-        job = store.job(j)
-        names.append(job.name())
-        ids = job.stageIds()
-        stage_ids.update(ids.apply(i) for i in range(ids.size()))
-    tasks = 0
-    for sid in stage_ids:
-        st = store.lastStageAttempt(sid)
-        if st.status().toString() != "SKIPPED":
-            tasks += st.numCompleteTasks()
-    return {"jobs": end - first, "tasks": tasks, "names": names}
-
-
 def _collapse_group_cache():
     """The exact-collapse's per-text group frame (grp): its cache sits
     behind a shuffle, so its partition count shows the cache policy."""
@@ -97,7 +73,7 @@ def docs(spark):
 def test_keep_list_task_and_job_budget(spark, docs, tmp_path):
     engine = sql_confs(SHUFFLE_PARTITIONS)
     with _scoped_confs(spark, engine):
-        work = _spark_work(spark, lambda: _keep_list(docs, str(tmp_path / "keep")))
+        work = spark_work(spark, lambda: _keep_list(docs, str(tmp_path / "keep")))
         grp_parts = _collapse_group_cache().rdd.getNumPartitions()
     assert work["tasks"] <= MAX_TASKS, work
     assert work["jobs"] <= MAX_JOBS, work

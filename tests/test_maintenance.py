@@ -74,3 +74,47 @@ def test_compact_recovers_stranded_table(spark, tmp_root):
     os.rename(path, path + "__precompact")
     b, a = maintenance.compact(spark, path, target_mb=256)
     assert spark.read.parquet(path).count() == 100
+
+
+def test_compact_file_uri(spark, tmp_root):
+    """A ``file://`` table path compacts like the plain path: the local
+    filesystem steps (layout detection, sizing, swap) use its path."""
+    path = os.path.join(tmp_root, "t")
+    spark.range(200).select(
+        F.col("id"), (F.col("id") % 2).alias("run")
+    ).repartition(8).write.partitionBy("run").parquet(path)
+    b, a = maintenance.compact(spark, "file://" + path, target_mb=256)
+    assert a < b
+    assert sorted(d for d in os.listdir(path) if d.startswith("run=")) == [
+        "run=0",
+        "run=1",
+    ]
+    assert not [d for d in os.listdir(tmp_root) if d != "t"]  # no leftovers
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(200))
+
+
+def test_compact_job_budget(spark, tmp_root):
+    """The rewrite counts its own rows (an observed metric), and the new
+    copy is read back with the source's schema: the schema read, the write
+    and the recount, 5 jobs (8 when the rows were counted by a separate
+    job and the copy's schema inferred)."""
+    from tests.conftest import spark_work
+
+    path = os.path.join(tmp_root, "t")
+    spark.range(2000).select(
+        F.col("id"), (F.col("id") % 3).alias("run")
+    ).repartition(12).write.partitionBy("run").parquet(path)
+    work = spark_work(spark, lambda: maintenance.compact(spark, path, target_mb=256))
+    assert work["jobs"] <= 5, work
+    assert spark.read.parquet(path).count() == 2000
+
+
+def test_compact_without_observed_count(spark, tmp_root, monkeypatch):
+    """When the observed metric does not arrive, the row count before the
+    swap falls back to a count of the source."""
+    path = os.path.join(tmp_root, "t")
+    spark.range(500).repartition(5).write.parquet(path)
+    monkeypatch.setattr(maintenance.runtime, "observed", lambda obs: None)
+    b, a = maintenance.compact(spark, path, target_mb=256)
+    assert (b, a) == (5, 1)
+    assert spark.read.parquet(path).count() == 500

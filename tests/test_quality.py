@@ -99,3 +99,38 @@ def test_suite_and_audit_sink(spark, tmp_root):
     row = log.first()
     assert row.audit_ts is not None  # F5 timestamp stamped
     assert set(r.job_run_id for r in log.collect()) == {7, 8}
+
+
+def test_artifact_check_file_uri(spark, tmp_root):
+    """A ``file://`` URI resolves through the Hadoop FileSystem: an
+    existing directory passes, a missing one fails."""
+    found = quality.artifact_check(spark, "file://" + tmp_root).first()
+    assert (found.status, found.metric_a) == ("PASS", 1)
+    missing = quality.artifact_check(spark, "file://" + tmp_root + "/nope").first()
+    assert (missing.status, missing.metric_a) == ("FAIL", 0)
+
+
+def test_landing_checks_match_the_separate_checks(spark):
+    """landing_checks gives count_check's and null_check's rows, in that
+    order, from one aggregate."""
+    src = spark.createDataFrame([(1, "a"), (2, None), (3, "c")], "k long, v string")
+    tgt = src.filter("k < 3")
+    got = quality.landing_checks(src, tgt, ["v"], "c", "n").collect()
+    want = quality.run_suite(
+        [quality.count_check(src, tgt, "c"), quality.null_check(tgt, ["v"], "n")]
+    ).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert [tuple(r) for r in got] == [("c", "FAIL", 3, 2), ("n", "FAIL", 1, 2)]
+
+
+def test_audit_rows_need_a_local_path(tmp_root):
+    """Collected audit rows are written by pyarrow: a ``file:`` URI
+    lands in its directory, a cluster scheme raises instead of creating a
+    local directory named after the URI."""
+    import pytest
+
+    row = {"check_name": "c", "status": "PASS", "metric_a": 1, "metric_b": 1}
+    quality.append_audit_rows([row], "file://" + os.path.join(tmp_root, "a"), 3)
+    assert len(os.listdir(os.path.join(tmp_root, "a"))) == 1
+    with pytest.raises(ValueError, match="local files"):
+        quality.append_audit_rows([row], "hdfs://nn:8020/audit", 3)

@@ -6,9 +6,11 @@ import os
 
 from pyspark.sql import functions as F
 
-from kafka_etl_automation_spark import scd
+from kafka_etl_automation_spark import quality, scd
 from kafka_etl_automation_spark.control import JobRegistry
 from kafka_etl_automation_spark.transform import incremental_load
+
+from tests.conftest import spark_work
 
 
 def _src_runs(reg, n):
@@ -64,7 +66,6 @@ def test_failed_dq_does_not_advance_hwm(spark, tmp_root, monkeypatch):
     """A load whose DQ suite fails must record status 2 and leave the
     high-water mark untouched, so the next attempt retries the SAME window
     (the reference's failed-run-not-consumed semantics)."""
-    from kafka_etl_automation_spark import quality as q
     from kafka_etl_automation_spark import transform as tf
 
     reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
@@ -73,20 +74,20 @@ def test_failed_dq_does_not_advance_hwm(spark, tmp_root, monkeypatch):
     )
     _src_runs(reg, 1)
 
-    real_count_check = q.count_check
+    real_append_run = tf.scd.append_run
 
-    def failing_count_check(src, tgt, name="count_check"):
-        out = real_count_check(src, tgt, name)
-        return out.withColumn("status", F.lit("FAIL"))
+    def lossy_append_run(df, path, run_id):
+        # a writer that drops a row: the landed recount must catch it
+        real_append_run(df.filter(F.col("id") != 0), path, run_id)
 
-    monkeypatch.setattr(tf.quality, "count_check", failing_count_check)
+    monkeypatch.setattr(tf.scd, "append_run", lossy_append_run)
     r1 = tf.incremental_load(
         spark, reg, "stg", "conform", source, "job_run_id",
         os.path.join(tmp_root, "staging"),
     )
     assert r1 is not None and not r1.dq_passed
     assert reg.run_status("stg", r1.run_id) == 2  # failed
-    monkeypatch.setattr(tf.quality, "count_check", real_count_check)
+    monkeypatch.setattr(tf.scd, "append_run", real_append_run)
 
     # retry sees the SAME window and succeeds
     r2 = tf.incremental_load(
@@ -140,3 +141,77 @@ def test_two_loads_consume_disjoint_windows(spark, tmp_root):
     # DQ audit rows landed with run ids
     log = spark.read.parquet(audit)
     assert log.filter("status = 'PASS'").count() == log.count() and log.count() == 4
+
+
+def test_one_window_job_budget(spark, tmp_root):
+    """One window costs the emptiness probe, the write and ONE DQ
+    aggregate over the batch and the landed partition; the audit is
+    written from the collected rows with no job. 13 jobs when the suite
+    ran twice (collect, then the audit write) and the landed partition's
+    schema was inferred."""
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(100).select(
+        F.col("id"), (F.col("id") % 4 + 1).alias("job_run_id")
+    )
+    _src_runs(reg, 2)
+    loads = []
+    work = spark_work(
+        spark,
+        lambda: loads.append(
+            incremental_load(
+                spark, reg, "stg", "conform", source, "job_run_id",
+                os.path.join(tmp_root, "staging"), os.path.join(tmp_root, "audit"),
+            )
+        ),
+    )
+    assert loads[0] is not None and loads[0].dq_passed and loads[0].records == 50
+    assert work["jobs"] <= 6, work
+
+
+def test_audit_rows_match_the_lazy_suite(spark, tmp_root):
+    """The audit written from the collected rows holds what append_audit
+    writes for the lazy count_check + null_check suite over the same
+    frames: same schema, same rows apart from audit_ts."""
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(40).select(
+        F.col("id"), (F.col("id") % 2 + 1).alias("job_run_id")
+    )
+    staging = os.path.join(tmp_root, "staging")
+    _src_runs(reg, 2)
+    r = incremental_load(
+        spark, reg, "stg", "conform", source, "job_run_id", staging,
+        os.path.join(tmp_root, "audit"),
+    )
+    assert r is not None and r.dq_passed
+
+    landed = scd.read_dim(spark, staging).filter(F.col("create_job_run_id") == r.run_id)
+    lazy = quality.run_suite(
+        [
+            quality.count_check(source, landed, f"stg_run{r.run_id}_count"),
+            quality.null_check(landed, ["job_run_id"], f"stg_run{r.run_id}_runcol_notnull"),
+        ]
+    )
+    quality.append_audit(lazy, os.path.join(tmp_root, "lazy_audit"), r.run_id)
+    got = spark.read.parquet(os.path.join(tmp_root, "audit"))
+    want = spark.read.parquet(os.path.join(tmp_root, "lazy_audit"))
+    assert got.schema == want.schema
+    assert sorted(got.drop("audit_ts").collect()) == sorted(want.drop("audit_ts").collect())
+    assert got.filter(F.col("audit_ts").isNull()).isEmpty()
+
+
+def test_non_local_audit_path_rejected_before_the_run(spark, tmp_root):
+    """The DQ audit is written by pyarrow: a cluster-scheme audit path
+    raises before a run is started or a row lands."""
+    import pytest
+
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(10).select(F.col("id"), F.lit(1).cast("long").alias("job_run_id"))
+    _src_runs(reg, 1)
+    staging = os.path.join(tmp_root, "staging")
+    with pytest.raises(ValueError, match="local files"):
+        incremental_load(
+            spark, reg, "stg", "conform", source, "job_run_id", staging,
+            "hdfs://nn:8020/dq_audit",
+        )
+    assert reg.run_status("stg", 1) is None
+    assert not os.path.exists(staging)

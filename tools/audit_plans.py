@@ -38,7 +38,6 @@ ALLOW = {
     "ext_cosine_topk": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     # single-row agg frames cross-joined into one result row — constant size
     "a9_count_minus": {"CartesianProduct", "BroadcastNestedLoopJoin"},
-    "q1_count_check": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     "q2_data_diff": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     "f5_timestamp_sanity": {"CartesianProduct", "BroadcastNestedLoopJoin"},
     # scalar-subquery equality join: Catalyst plans the one-row subquery as
