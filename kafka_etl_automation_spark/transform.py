@@ -65,57 +65,73 @@ def incremental_load(
         return None  # NO RECORDS AVAILABLE TO PROCESS
 
     run_id = registry.start_run(job_name)
-    batch = apply_window(source_df, window, src_run_col)
-    if src_run_col == "create_job_run_id":
-        # preserve upstream lineage under its own name: append_run restamps
-        # create_job_run_id to THIS run (see scd.append_run docstring)
-        batch = batch.withColumnRenamed(src_run_col, "src_job_run_id")
-        src_run_col = "src_job_run_id"
+    try:
+        batch = apply_window(source_df, window, src_run_col)
+        if src_run_col == "create_job_run_id":
+            # preserve upstream lineage under its own name: append_run
+            # restamps create_job_run_id to THIS run (see scd.append_run)
+            batch = batch.withColumnRenamed(src_run_col, "src_job_run_id")
+            src_run_col = "src_job_run_id"
 
-    if batch.isEmpty():
-        # a successful source run can legitimately carry zero rows (the
-        # reference's "NO RECORDS" runs complete with success status);
-        # consume the window without writing a footerless empty partition
-        registry.finish_run(job_name, run_id, status=1, records=0)
-        registry.record_consumed(job_name, run_id, src_job_name, window)
-        return LoadResult(run_id, window, 0, True)
+        if batch.isEmpty():
+            # a successful source run can legitimately carry zero rows (the
+            # reference's "NO RECORDS" runs complete with success status);
+            # consume the window without writing a footerless empty
+            # partition
+            registry.finish_run(job_name, run_id, status=1, records=0)
+            registry.record_consumed(job_name, run_id, src_job_name, window)
+            return LoadResult(run_id, window, 0, True)
 
-    scd.append_run(batch, target_path, run_id)
+        scd.append_run(batch, target_path, run_id)
 
-    # The recount reads the landed partition back from storage,
-    # independent of the writer (VERDICT r12 #6), with the schema
-    # append_run wrote (the batch's columns, then the long run column), so
-    # no schema-inference job reads a footer first.
-    run_col = "create_job_run_id"
-    landed_schema = T.StructType(
-        [f for f in batch.schema.fields if f.name != run_col]
-        + [T.StructField(run_col, T.LongType())]
-    )
-    landed = (
-        spark.read.schema(landed_schema)
-        .parquet(target_path)
-        .filter(F.col(run_col) == run_id)
-    )
-    rows = quality.landing_checks(
-        batch,
-        landed,
-        [src_run_col],
-        f"{job_name}_run{run_id}_count",
-        f"{job_name}_run{run_id}_runcol_notnull",
-    ).collect()
-    passed = all(r.status == quality.PASS for r in rows)
-    records = int(rows[0].metric_b)
-    if audit_path:
-        quality.append_audit_rows(rows, audit_path, run_id)
+        # The recount reads the landed partition back from storage,
+        # independent of the writer (VERDICT r12 #6), with the schema
+        # append_run wrote (the batch's columns, then the long run column),
+        # so no schema-inference job reads a footer first.
+        run_col = "create_job_run_id"
+        landed_schema = T.StructType(
+            [f for f in batch.schema.fields if f.name != run_col]
+            + [T.StructField(run_col, T.LongType())]
+        )
+        landed = (
+            spark.read.schema(landed_schema)
+            .parquet(target_path)
+            .filter(F.col(run_col) == run_id)
+        )
+        rows = quality.landing_checks(
+            batch,
+            landed,
+            [src_run_col],
+            f"{job_name}_run{run_id}_count",
+            f"{job_name}_run{run_id}_runcol_notnull",
+        ).collect()
+        passed = all(r.status == quality.PASS for r in rows)
+        records = int(rows[0].metric_b)
+        if audit_path:
+            quality.append_audit_rows(rows, audit_path, run_id)
 
-    registry.finish_run(job_name, run_id, status=1 if passed else 2, records=records)
-    if passed:
-        registry.record_consumed(job_name, run_id, src_job_name, window)
-    else:
-        # failed run's rows must not linger for a retry to duplicate —
-        # the reference's delete-then-reload contract (rerunnability.sh:91-131)
-        scd.delete_run(spark, target_path, run_id)
-    return LoadResult(run_id, window, records, passed)
+        registry.finish_run(
+            job_name, run_id, status=1 if passed else 2, records=records
+        )
+        if passed:
+            registry.record_consumed(job_name, run_id, src_job_name, window)
+        else:
+            # failed run's rows must not linger for a retry to duplicate —
+            # the reference's delete-then-reload contract
+            # (rerunnability.sh:91-131)
+            scd.delete_run(spark, target_path, run_id)
+        return LoadResult(run_id, window, records, passed)
+    except BaseException as exc:
+        # a run that raised must not strand at status 0 over a landed
+        # partition: fail it and delete its rows, so the retry reloads the
+        # window exactly once. The load's error wins; an error raised while
+        # cleaning up is chained to it as the cause.
+        try:
+            registry.finish_run(job_name, run_id, status=2)
+            scd.delete_run(spark, target_path, run_id)
+        except BaseException as cleanup_exc:
+            raise exc from cleanup_exc
+        raise
 
 
 # Re-aggregatable merge rules: how two partial states of the same aggregate

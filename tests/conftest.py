@@ -54,6 +54,10 @@ def spark():
         .appName("kea-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
+        # spark_work reads every stage of the jobs it counts from the status
+        # store, which past 1000 stages evicts skipped stages first — those
+        # of the call being counted included
+        .config("spark.ui.retainedStages", "100000")
         .config("spark.driver.memory", "8g")
         # saveAsTable targets (bucketing tests) land in a temp warehouse,
         # never in the repo

@@ -1,4 +1,5 @@
-"""Task and job budgets of the LSH keep-list under the engine's confs.
+"""Task and job budgets of the LSH keep-list and decontamination under the
+engine's confs.
 
 ``session.get_spark`` lets AQE coalesce inside cached plans, so the
 keep-list's persisted intermediates shrink to the partitions their bytes
@@ -19,7 +20,7 @@ import pytest
 
 from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.catalog import load_tables
-from kafka_etl_automation_spark.operators import dedup
+from kafka_etl_automation_spark.operators import curation, dedup
 from kafka_etl_automation_spark.session import sql_confs
 
 from tests.conftest import SF_SMALL, spark_work
@@ -28,7 +29,10 @@ SHUFFLE_PARTITIONS = 32
 # the parent of this policy ran ~500 tasks per keep-list call on 1,000
 # documents; with coalescing in cached plans a call runs ~40
 MAX_TASKS = 80
-MAX_JOBS = 45
+# a keep-list call runs 24 jobs since connected components label a small
+# pair graph in one task; the round loop ran 37
+MAX_JOBS = 28
+MAX_DECON_JOBS = 44  # per decontaminate_canonical_lsh call
 
 
 @contextmanager
@@ -54,6 +58,10 @@ def _keep_list(docs, out: str) -> None:
             collapse_exact=False, candidate_scope="star", max_bucket=1000,
         ),
     ).write.parquet(out)
+
+
+def _decontaminate(docs, out: str) -> None:
+    curation.decontaminate_canonical_lsh(docs, max_bucket=1000).write.parquet(out)
 
 
 def _collapse_group_cache():
@@ -128,3 +136,13 @@ def test_partition_floor_pins_cached_partitioning(
         runtime._SNAPSHOTS.pop(app, None)
     # outside the scope the vanilla session is back at Spark's default
     assert spark.conf.get(dedup._CACHED_PARTITIONING, None) is None
+
+
+def test_decontamination_job_budget(spark, docs, tmp_path):
+    """Both passes' pair graphs are labelled in one task each: a call runs
+    ~40 jobs; with the round loop it ran 54-55 (the collapse's async
+    member count makes the count vary by one)."""
+    with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
+        work = spark_work(spark, lambda: _decontaminate(docs, str(tmp_path / "decon")))
+    runtime.release("corpus")
+    assert work["jobs"] <= MAX_DECON_JOBS, work

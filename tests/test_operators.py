@@ -120,13 +120,14 @@ def test_connected_components(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
-def test_connected_components_frees_superseded_checkpoints(spark):
+def test_connected_components_frees_superseded_checkpoints(spark, monkeypatch):
     """ADVICE r07: each CC iteration localCheckpoints a labels frame;
-    superseded ones (and the edge frame) must be freed when dead, or a
-    long-lived session clustering repeatedly accumulates O(iterations)
-    checkpointed RDD blocks per call. After a call, at most the RETURNED
-    labels frame's blocks may linger; the result must still be usable
-    (its leaf is self-contained)."""
+    superseded ones (and the edge and pair frames) must be freed when dead,
+    or a long-lived session clustering repeatedly accumulates
+    O(iterations) checkpointed RDD blocks per call. After a call, at most
+    the RETURNED labels frame's blocks may linger; the result must still
+    be usable (its leaf is self-contained). Bound 0: the round loop."""
+    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     pairs = spark.createDataFrame(
@@ -142,9 +143,11 @@ def test_connected_components_frees_superseded_checkpoints(spark):
     assert {r.cluster_id for r in out.collect()} == {0}
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     import pytest
 
+    # bound 0: the round loop, the path max_iter bounds
+    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
     # chain of diameter 5 cannot converge in 1 iteration
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"

@@ -102,7 +102,9 @@ def _spy_observed(monkeypatch) -> list:
 
 def test_connected_components_with_the_breaker_tripped(spark, gate, monkeypatch):
     """With observation off for the application, every CC round takes the
-    limit(1) count fallback and the labels do not change."""
+    limit(1) count fallback and the labels do not change. Bound 0: the
+    round loop in both calls."""
+    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         # chain 1..6 (several rounds), cycle 10-11-12
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (11, 12), (12, 10)],
@@ -120,7 +122,8 @@ def test_connected_components_with_the_breaker_tripped(spark, gate, monkeypatch)
     fallback = sorted(dedup.connected_components(pairs, ids, stats=stats).collect())
     assert fallback == observed
     assert {r.cluster_id for r in fallback} == {1, 10, 99}
-    assert len(seen) == stats["iterations"] >= 2 and not any(seen)
+    # one wait for the pair count, then one per round
+    assert len(seen) - 1 == stats["iterations"] >= 2 and not any(seen)
 
 
 def test_file_ingest_with_the_breaker_tripped(spark, tmp_root, gate, monkeypatch):

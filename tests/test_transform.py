@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import quality, scd
@@ -215,3 +216,80 @@ def test_non_local_audit_path_rejected_before_the_run(spark, tmp_root):
         )
     assert reg.run_status("stg", 1) is None
     assert not os.path.exists(staging)
+
+
+_REAL_LANDING_CHECKS = quality.landing_checks
+
+
+def _failing_dq_aggregate(*args):
+    # the aggregate job itself fails, after the batch has landed
+    checks = _REAL_LANDING_CHECKS(*args)
+    return checks.select(F.raise_error(F.lit("dq aggregate failed")))
+
+
+def _failing_audit_write(*args):
+    raise OSError("audit write failed")
+
+
+@pytest.mark.parametrize(
+    "step, fake, error",
+    [
+        ("landing_checks", _failing_dq_aggregate, "dq aggregate failed"),
+        ("append_audit_rows", _failing_audit_write, "audit write failed"),
+    ],
+    ids=["dq_aggregate", "audit_write"],
+)
+def test_raising_step_fails_the_run_and_deletes_its_rows(
+    spark, tmp_root, monkeypatch, step, fake, error
+):
+    """A step that raises after the run started and the batch landed (the
+    DQ aggregate, the audit write) re-raises its error, leaves the run at
+    status 2 and no landed partition, and the retry loads the same window
+    exactly once."""
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(40).select(
+        F.col("id"), (F.col("id") % 2 + 1).alias("job_run_id")
+    )
+    staging = os.path.join(tmp_root, "staging")
+    audit = os.path.join(tmp_root, "audit")
+    _src_runs(reg, 2)
+
+    monkeypatch.setattr(quality, step, fake)
+    load = ("stg", "conform", source, "job_run_id", staging, audit)
+    with pytest.raises(Exception, match=error):
+        incremental_load(spark, reg, *load)
+    assert reg.run_status("stg", 1) == 2
+    assert not os.path.exists(os.path.join(staging, "create_job_run_id=1"))
+    monkeypatch.undo()
+
+    r = incremental_load(spark, reg, *load)
+    assert r is not None and r.dq_passed and r.run_id == 2
+    assert (r.window.min_run_id, r.window.max_run_id) == (1, 2)
+    dim = scd.read_dim(spark, staging)
+    assert dim.count() == 40 and dim.select("id").distinct().count() == 40
+    runs = dim.select("create_job_run_id").distinct().collect()
+    assert [x.create_job_run_id for x in runs] == [2]
+
+
+def test_cleanup_error_is_chained_to_the_load_error(spark, tmp_root, monkeypatch):
+    """When failing the run raises too, the load's error still propagates,
+    with the cleanup error as its cause."""
+    reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
+    source = spark.range(10).select(
+        F.col("id"), F.lit(1).cast("long").alias("job_run_id")
+    )
+    _src_runs(reg, 1)
+
+    def delete_fails(*args, **kwargs):
+        raise RuntimeError("delete failed")
+
+    monkeypatch.setattr(quality, "append_audit_rows", _failing_audit_write)
+    monkeypatch.setattr(scd, "delete_run", delete_fails)
+    with pytest.raises(OSError, match="audit write failed") as info:
+        incremental_load(
+            spark, reg, "stg", "conform", source, "job_run_id",
+            os.path.join(tmp_root, "staging"), os.path.join(tmp_root, "audit"),
+        )
+    assert isinstance(info.value.__cause__, RuntimeError)
+    assert str(info.value.__cause__) == "delete failed"
+    assert reg.run_status("stg", 1) == 2
