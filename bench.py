@@ -29,6 +29,14 @@ r04). First-run timings are kept in "queries_cold" inside
 BENCH_DETAIL.json for visibility. Workflow queries (m4/pipelines/stream)
 materialize fresh state on BOTH runs, so their number still contains their
 real write cost.
+
+Profiles: BENCH_DETAIL.json's "profiles" holds, per query, one entry per
+run that splits the run at the moment ``fn(spark, sf_dir)`` returns into
+"construct" (the jobs run while building the frame: eager counts, audits,
+CC checkpoints) and "write" (the noop write of the final plan). Each half
+has its wall and, from the status store (``session.spark_work``: no event
+log, no extra job), its jobs and their call-site names, stages, tasks,
+executor seconds, shuffle read/write MB and spill MB.
 """
 
 from __future__ import annotations
@@ -37,6 +45,7 @@ import json
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -133,9 +142,17 @@ def main() -> int:
         sf = None
 
     import __spark_entry__ as entry_mod
-    from kafka_etl_automation_spark.session import get_spark
+    from kafka_etl_automation_spark.session import get_spark, next_job_id, spark_work
 
-    spark = get_spark("bench")
+    # the profiles read every stage of a run from the status store, so keep
+    # the whole board's jobs and stages there (Spark keeps 1000 of each)
+    spark = get_spark(
+        "bench",
+        extra_conf={
+            "spark.ui.retainedJobs": "100000",
+            "spark.ui.retainedStages": "100000",
+        },
+    )
     qs = entry_mod.queries()
 
     # Warm the JVM/codegen paths AND the Arrow Python-worker pool once so
@@ -175,11 +192,25 @@ def main() -> int:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     errors: dict[str, str] = {}
+    profiles: dict[str, list[dict]] = {}
+
+    def profile(first: int, end: int, wall_s: float) -> dict:
+        work = spark_work(spark, first, end)
+        names = Counter(work.pop("names"))
+        return {
+            "wall_s": round(wall_s, 3),
+            **{k: round(v, 3) for k, v in work.items()},
+            "names": dict(names),
+        }
 
     def run_once(fn, name: str) -> float | None:
+        j0 = next_job_id(spark)
         t0 = time.time()
         try:
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            frame = fn(spark, sf_dir)
+            t1, j1 = time.time(), next_job_id(spark)
+            frame.write.format("noop").mode("overwrite").save()
+            j2 = next_job_id(spark)
         except Exception as exc:  # one bad query must not zero the bench
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
@@ -188,7 +219,11 @@ def main() -> int:
             # operators that persist() multi-branch intermediates (minhash
             # LSH) would otherwise accumulate cached blocks across the run
             spark.catalog.clearCache()
-        return round(time.time() - t0, 3)
+        t2 = time.time()
+        profiles.setdefault(name, []).append(
+            {"construct": profile(j0, j1, t1 - t0), "write": profile(j1, j2, t2 - t1)}
+        )
+        return round(t2 - t0, 3)
 
     for name in BENCH_QUERIES:
         fn = qs.get(name)
@@ -230,18 +265,14 @@ def main() -> int:
             fn = qs.get(name)
             if fn is None:
                 continue
-            first = run_once(lambda s, _d, f=fn: f(s, scaling_dir), name)
+            key = f"scaling__{name}"
+            first = run_once(lambda s, _d, f=fn: f(s, scaling_dir), key)
             if first is None:
                 continue
-            cold[f"scaling__{name}"] = first
-            second = run_once(lambda s, _d, f=fn: f(s, scaling_dir), name)
-            timings[f"scaling__{name}"] = (
-                min(first, second) if second is not None else first
-            )
-            print(
-                f"# scaling__{name}: {timings[f'scaling__{name}']:.2f}s",
-                file=sys.stderr,
-            )
+            cold[key] = first
+            second = run_once(lambda s, _d, f=fn: f(s, scaling_dir), key)
+            timings[key] = min(first, second) if second is not None else first
+            print(f"# {key}: {timings[key]:.2f}s", file=sys.stderr)
 
     # "value" is the 57-query board only: the optional
     # scaling__ legs time a different corpus, so adding them would make
@@ -261,6 +292,7 @@ def main() -> int:
         "queries": timings,
         "queries_cold": cold,
         "errors": errors,
+        "profiles": profiles,
         "sf": sf,
         "calib_sec": calib_sec,
         "cpus": cpus,

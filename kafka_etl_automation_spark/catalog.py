@@ -31,8 +31,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Runtime SQL confs every read path needs, independent of who built the
 # session.  nanosAsLong: testdata's events.ts is parquet TIMESTAMP(NANOS),
 # which Spark's reader rejects outright without it (PARQUET_TYPE_ILLEGAL).
@@ -82,10 +80,6 @@ def _normalize_ts(df: DataFrame, name: str) -> DataFrame:
         elif isinstance(dt, T.TimestampNTZType):
             df = df.withColumn(col, F.col(col).cast(T.TimestampType()))
     return df
-
-
-# historical name, kept so any external caller keeps working
-_fix_nano_ts = _normalize_ts
 
 
 def write_bucketed(

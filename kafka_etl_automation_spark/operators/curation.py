@@ -47,8 +47,8 @@ def score_and_filter(
 ) -> DataFrame:
     """The scan-side half of :func:`curate`: score + filter as pure
     projections over the documents scan — no shuffle at any scale. Exposed
-    as its own seam so per-stage cost attribution (tools/stage_bench.py)
-    times exactly the plan ``curate`` runs, not a reconstruction of it.
+    as its own seam so a stage's cost can be timed on exactly the plan
+    ``curate`` runs, not a reconstruction of it.
 
     Fanned out to core count before scoring: stage attribution (round 5)
     put 99.5% of the pipeline's cost in these projections, and a small

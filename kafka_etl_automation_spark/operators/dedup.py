@@ -341,9 +341,9 @@ def _shingle_hash_rows(
       a cheap long sequence. Same-day A/B (min-of-two, noop sink, full
       64-min signature aggregation downstream): sf0.1 lead-window
       0.975s / slice+zip 1.182s / this 0.982s; 300x octave 11.34s /
-      9.26s / 9.09s — dominant at both ends. The cost relation is also
-      pinned by the shingle-formulation rows in tools/stage_bench.py so
-      a future swap can't regress silently.
+      9.26s / 9.09s — dominant at both ends (BENCH_SCALE.md records
+      the stage rows). test_shingle_hash_rows_formulations pins the
+      three formulations' values row for row.
 
     Same values row-for-row (xxhash64 over the same n token columns;
     duplicates retained — min/collect_set downstream are duplicate-
@@ -774,7 +774,6 @@ def minhash_lsh_pairs(
     content_keyed: bool = False,
     sig_source: DataFrame | None = None,
     bipartite_col: str | None = None,
-    members: DataFrame | None = None,
     verify: str | None = None,
     max_labels: int | None = None,
 ) -> DataFrame:
@@ -969,21 +968,20 @@ def minhash_lsh_pairs(
         # (id, sh, mh0..mh{k-1}) frame — usually one signature_sets() pass
         # over a superset corpus, filtered per LSH pass — so this call does
         # no shingling/collapsing of its own. Collapse/label semantics are
-        # the caller's job: pass ``members`` for member fan-out and
-        # ``bipartite_col`` (a label column already ON sig_source) for the
-        # cross-label contract.
+        # the caller's job: pass ``bipartite_col`` (a label column already
+        # ON sig_source) for the cross-label contract.
         if collapse_exact:
             raise ValueError(
                 "sig_source requires collapse_exact=False: the caller owns "
-                "collapse (pass members= for the fan-out)"
+                "collapse"
             )
         if bipartite is not None:
             raise ValueError(
                 "sig_source requires bipartite=None: put the label on the "
                 "signed frame and name it via bipartite_col"
             )
-    elif bipartite_col is not None or members is not None:
-        raise ValueError("bipartite_col/members are only valid with sig_source")
+    elif bipartite_col is not None:
+        raise ValueError("bipartite_col is only valid with sig_source")
     if bipartite_col is not None and candidate_scope == "star":
         raise ValueError(
             "candidate_scope='star' and bipartite_col are mutually exclusive: "
@@ -1007,7 +1005,7 @@ def minhash_lsh_pairs(
 
     src, band_src, band_cols, members = _lsh_signed_source(
         df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
-        sig_source, bipartite_col, members,
+        sig_source, bipartite_col,
     )
     banded = _lsh_bands(band_src, band_cols, bands, num_hashes // bands)
     audit = _lsh_cap_audit(
@@ -1043,13 +1041,13 @@ def minhash_lsh_pairs(
 
 def _lsh_signed_source(
     df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
-    sig_source, bipartite_col, members,
+    sig_source, bipartite_col,
 ) -> tuple[DataFrame, DataFrame, list[str], DataFrame | None]:
     """Stage 1 of minhash_lsh_pairs: ``(src, band_src, band_cols,
     members)`` — the signed frame (id, sh, mh0..), the frame banding
     reads (``src`` plus the cross-label contract's label as ``_lbl``),
-    the label columns banding carries, and the member map (from the
-    exact collapse, or the caller's in shared-signature mode)."""
+    the label columns banding carries, and the member map of the exact
+    collapse (None without one)."""
     from pyspark import StorageLevel
 
     if sig_source is None:
@@ -1060,6 +1058,7 @@ def _lsh_signed_source(
         # at octave scale; canonical_keep_list/decontaminate_canonical_lsh
         # already floored before collapse, this entry did not).
         scale_partition_floor(df)
+    members = None
     if collapse_exact:
         df, members = _exact_text_collapse(df, text_col, id_col)
     # (id, label) projection for bipartite filtering. Taken AFTER collapse,

@@ -315,16 +315,13 @@ def _assign_scores(
     return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
 
 
-def _lloyd_step(
-    v: DataFrame, cent: DataFrame, dim: int | None = None
-) -> DataFrame:
+def _lloyd_step(v: DataFrame, cent: DataFrame) -> DataFrame:
     """One Lloyd iteration: Arrow-batched centroid assign (round-6 cosine
     argmax, cell-id tiebreak) then element-wise mean through exact DECIMAL
     sums — the deterministic building block shared by ``kmeans_centroids``
     and ``kmeans_convergence``. ``cent`` is executed (n_cells rows) to
-    seed the assignment closure; see _assign_scores for why. ``dim`` is
-    kept for signature stability (the Arrow fold reads the width from the
-    centroid matrix)."""
+    seed the assignment closure; see _assign_scores for why. The Arrow
+    fold reads the vector width from the centroid matrix."""
     scored = _assign_scores(v, cent, "vid", "e").withColumn(
         "csim", F.round(F.col("csim_raw"), 6)
     )
@@ -368,7 +365,6 @@ def kmeans_convergence(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_mod: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Per-iteration Lloyd convergence metrics: one row per iteration with
     the max and mean Euclidean centroid shift — the observable that tells a
@@ -405,7 +401,7 @@ def kmeans_convergence(
     )
     metrics = []
     for i in range(1, iters + 1):
-        new = _lloyd_step(v, cent, dim).persist(StorageLevel.MEMORY_AND_DISK)
+        new = _lloyd_step(v, cent).persist(StorageLevel.MEMORY_AND_DISK)
         pair = (
             cent.select("cell", F.col("ce").alias("prev"))
             .join(new.select("cell", F.col("ce").alias("cur")), "cell")
@@ -432,7 +428,6 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_mod: int = 1,
-    dim: int | None = None,
 ) -> DataFrame:
     """Deterministic distributed Lloyd iterations -> (cell, cvec) centroids.
 
@@ -474,7 +469,7 @@ def kmeans_centroids(
     )
     v = full.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else full
     for _ in range(iters):
-        cent = _lloyd_step(v, cent, dim)
+        cent = _lloyd_step(v, cent)
     # n_cells rows; persisted because callers (ivf_topk) reference the
     # centroid frame from two plan branches (vector + query assignment) —
     # without this the whole Lloyd lineage executes twice

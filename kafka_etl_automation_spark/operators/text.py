@@ -99,10 +99,6 @@ def _marker_score(col: Column | str, words: tuple[str, ...]) -> Column:
     return _word_hits(col, words)
 
 
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    return {lang: _marker_score(col, words) for lang, words in LANG_MARKERS.items()}
-
-
 def lang_id(col: Column | str) -> Column:
     """Argmax language over marker scores, 'und' (undetermined) when all
     scores are 0. Ties break by language code order — fully deterministic:

@@ -546,7 +546,7 @@ def ext_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cent = similarity.kmeans_centroids(emb, n_cells=16, iters=2, dim=64)
+    cent = similarity.kmeans_centroids(emb, n_cells=16, iters=2)
     return similarity.ivf_topk(
         emb, queries, k=5, n_cells=16, n_probe=2, centroids=cent, dim=64
     )
@@ -604,7 +604,7 @@ def ext_kmeans_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     instruments."""
     t = load_tables(spark, sf_dir, names=("embeddings",))
     return similarity.kmeans_convergence(
-        t["embeddings"], n_cells=16, iters=2, dim=64
+        t["embeddings"], n_cells=16, iters=2
     )
 
 

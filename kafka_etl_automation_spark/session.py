@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -80,6 +81,68 @@ def get_spark(
     except Exception:
         pass  # py4j internals drift -> cosmetic guard only, never fatal
     return spark
+
+
+def next_job_id(spark: SparkSession) -> int:
+    """The id the DAG scheduler hands the next job. Read it before and
+    after a call: the ids in between are the call's jobs, whichever thread
+    submitted them (AQE's stage jobs and the async eager counts too)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def spark_work(spark: SparkSession, first: int, end: int) -> dict:
+    """The Spark work of jobs ``[first, end)``, read from the status store:
+    no event log, and no job is scheduled.
+
+    Returns ``jobs``, their call-site ``names``, and over their distinct
+    non-skipped stages: ``stages``, completed ``tasks``, executor run time
+    ``exec_run_s``, ``shuffle_read_mb``, ``shuffle_write_mb`` and
+    ``spill_mb`` (memory plus disk). A job or stage the store has already
+    evicted (past ``spark.ui.retainedJobs`` / ``retainedStages``) is
+    counted in ``evicted`` and its work is missing from the sums."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+
+    def lookup(get, key):
+        """``get(key)``, or None when the store holds no such entry."""
+        try:
+            return get(key)
+        except Py4JJavaError as exc:
+            missing = "java.util.NoSuchElementException"
+            if exc.java_exception.getClass().getName() != missing:
+                raise
+            return None
+
+    out = {
+        "jobs": end - first, "names": [], "stages": 0, "tasks": 0,
+        "exec_run_s": 0.0, "shuffle_read_mb": 0.0, "shuffle_write_mb": 0.0,
+        "spill_mb": 0.0, "evicted": 0,
+    }
+    stage_ids: set[int] = set()
+    for j in range(first, end):
+        job = lookup(store.job, j)
+        if job is None:
+            out["evicted"] += 1
+            continue
+        out["names"].append(job.name())
+        ids = job.stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
+    mb = 1024 * 1024
+    for sid in stage_ids:
+        st = lookup(store.lastStageAttempt, sid)
+        if st is None:
+            out["evicted"] += 1
+            continue
+        if st.status().toString() == "SKIPPED":
+            continue
+        out["stages"] += 1
+        out["tasks"] += st.numCompleteTasks()
+        out["exec_run_s"] += st.executorRunTime() / 1000.0
+        out["shuffle_read_mb"] += st.shuffleReadBytes() / mb
+        out["shuffle_write_mb"] += st.shuffleWriteBytes() / mb
+        out["spill_mb"] += (st.memoryBytesSpilled() + st.diskBytesSpilled()) / mb
+    return out
 
 
 def sql_confs(shuffle_partitions: int) -> dict[str, str]:

@@ -15,32 +15,18 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kafka_etl_automation_spark import session  # noqa: E402
+
 SF_SMALL = "/root/testdata/sf0.001"
 
 
 def spark_work(spark, fn) -> dict:
-    """Run ``fn`` and count the jobs it submitted, their completed tasks
-    (skipped stages excluded) and their call-site names, from the status
-    store: unlike walls, host load cannot move these counts."""
-    jsc = spark.sparkContext._jsc.sc()
-    first = int(jsc.dagScheduler().numTotalJobs())
+    """Run ``fn`` and read the Spark work of the jobs it submitted
+    (``session.spark_work``): jobs, completed tasks, call-site names and
+    stage metrics. Unlike walls, host load cannot move these counts."""
+    first = session.next_job_id(spark)
     fn()
-    end = int(jsc.dagScheduler().numTotalJobs())
-    jsc.listenerBus().waitUntilEmpty()
-    store = jsc.statusStore()
-    stage_ids: set[int] = set()
-    names = []
-    for j in range(first, end):
-        job = store.job(j)
-        names.append(job.name())
-        ids = job.stageIds()
-        stage_ids.update(ids.apply(i) for i in range(ids.size()))
-    tasks = 0
-    for sid in stage_ids:
-        st = store.lastStageAttempt(sid)
-        if st.status().toString() != "SKIPPED":
-            tasks += st.numCompleteTasks()
-    return {"jobs": end - first, "tasks": tasks, "names": names}
+    return session.spark_work(spark, first, session.next_job_id(spark))
 
 
 @pytest.fixture(scope="session")
@@ -56,7 +42,8 @@ def spark():
         .config("spark.ui.enabled", "false")
         # spark_work reads every stage of the jobs it counts from the status
         # store, which past 1000 stages evicts skipped stages first — those
-        # of the call being counted included
+        # of the call being counted included, which it would then count as
+        # evicted instead of reading
         .config("spark.ui.retainedStages", "100000")
         .config("spark.driver.memory", "8g")
         # saveAsTable targets (bucketing tests) land in a temp warehouse,

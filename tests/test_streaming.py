@@ -364,9 +364,9 @@ def test_interval_join_rejects_ambiguous_columns(spark):
 
 def test_interval_join_chunked_sources_bound_state(spark, tmp_root):
     """The interval join's 100 TB deployment shape (BENCH_SCALE.md r08,
-    measured at 300x by tools/stream_ij_attrib.py --chunks): event-time-
-    aligned chunk files + maxFilesPerTrigger=1 make the watermark advance
-    between micro-batches, so the derived eviction watermark expires old
+    measured at 300x with 16 chunks): event-time-aligned chunk files +
+    maxFilesPerTrigger=1 make the watermark advance between
+    micro-batches, so the derived eviction watermark expires old
     state — peak join state is bounded by chunk size, not stream length —
     while output stays identical to a static join with the same interval
     condition (including matches that straddle a chunk boundary)."""

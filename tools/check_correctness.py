@@ -345,12 +345,14 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from pyspark.sql import SparkSession
 
+    from kafka_etl_automation_spark.session import next_job_id, spark_work
+
     # Deliberately a VANILLA session (not get_spark): the driver gate builds
     # its own SparkSession, so queries must be correct without any factory
     # confs — round 1 failed exactly this way (VERDICT.md item 1).
-    # CHECK_CPUS / CHECK_DRIVER_MEM / CHECK_EVENTLOG deliberately shrink the
-    # session (and capture task metrics) for the memory-pressure/spill
-    # sweep (VERDICT r05 #5); defaults match the driver gate.
+    # CHECK_CPUS / CHECK_DRIVER_MEM deliberately shrink the session for the
+    # memory-pressure/spill sweep (VERDICT r05 #5); defaults match the
+    # driver gate. A query that spilled shows its spill on its line.
     import os as _os
 
     builder = (
@@ -365,12 +367,6 @@ def main() -> int:
         )
         .config("spark.sql.session.timeZone", "UTC")
     )
-    evlog = _os.environ.get("CHECK_EVENTLOG")
-    if evlog:
-        _os.makedirs(evlog, exist_ok=True)
-        builder = builder.config("spark.eventLog.enabled", "true").config(
-            "spark.eventLog.dir", evlog
-        )
     # Harness-side, not engine-side: the streaming gate queries land in a
     # memory sink whose batches are serialized task results — at the 300x
     # octave (30M events -> ~28.6M session rows) that legitimately exceeds
@@ -417,6 +413,11 @@ def main() -> int:
 
     con = _duck_connect()
 
+    def _spill(first: int) -> str:
+        """The line suffix ' spill=<MB>' when the query's jobs spilled."""
+        mb = spark_work(spark, first, next_job_id(spark))["spill_mb"]
+        return f" spill={mb:.1f}MB" if mb else ""
+
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     failures, errors, no_oracle = [], [], []
     n_run = 0
@@ -424,7 +425,7 @@ def main() -> int:
         if only and name not in only:
             continue
         n_run += 1
-        t0 = time.time()
+        t0, j0 = time.time(), next_job_id(spark)
         # one erroring query must REPORT, not kill the sweep — the r03
         # ext_sessionize break went unnoticed because an earlier error
         # aborted the whole run (VERDICT r03 #3)
@@ -435,6 +436,7 @@ def main() -> int:
                 # materialization (the whole point at 100x/300x)
                 sdig = spark_engine_digest(sdf_frame)
                 t_spark = time.time() - t0
+                spill = _spill(j0)
                 if sdig is not None:
                     ddig = duck_engine_digest(con, oracles[name])
                 if sdig is not None and ddig is not None:
@@ -447,7 +449,7 @@ def main() -> int:
                     print(f"  {name:28s} {status} rows={sdig[0]}/{ddig[0]} "
                           f"edigest={sdig[1] % 10**12}/{ddig[1] % 10**12} "
                           f"[{time.time()-t0:.1f}s spark={t_spark:.1f} "
-                          f"duck={t_duck:.1f}]")
+                          f"duck={t_duck:.1f}]{spill}")
                     if not ok:
                         failures.append(name)
                         if st != dt_:
@@ -455,6 +457,7 @@ def main() -> int:
                     continue
                 print(f"  {name:28s} (engine-hash unsupported type -> pandas)")
             sdf = sdf_frame.toPandas()
+            spill = _spill(j0)
         except Exception as exc:
             errors.append(name)
             msg = str(exc).splitlines()[0][:200]
@@ -477,7 +480,7 @@ def main() -> int:
         if name not in oracles:
             no_oracle.append(name)
             print(f"  {name:28s} rows={len(sdf):>7} (rows-only, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[{time.time()-t0:.1f}s]{spill}")
             continue
         ddf = con.execute(oracles[name]).df()
         sn, sc, sh = canon(sdf)
@@ -486,7 +489,7 @@ def main() -> int:
         ok = (sn, sc, sh, st) == (dn, dc, dh, dt_)
         status = "OK " if ok else "FAIL"
         print(f"  {name:28s} {status} rows={sn}/{dn} hash={sh}/{dh} "
-              f"[{time.time()-t0:.1f}s]")
+              f"[{time.time()-t0:.1f}s]{spill}")
         if not ok:
             failures.append(name)
             if sc != dc:
