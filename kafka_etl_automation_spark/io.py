@@ -9,15 +9,22 @@
   ``spark.read.text``.
 - S4 per-run file sink with empty-batch suppression (T4): processed data
   lands in ``{topic}_{partition}_{run}/part-*`` and a zero-record batch
-  must create NO directory
+  must leave NO directory
   (/root/reference/Kafka_ArrivalToConform.sh:286-318, naming :317).
+  ``write_dir`` is the one sink for this shape, shared by
+  ``write_run_dir`` and the streaming bronze micro-batches: the row count
+  (and any further aggregate, such as the offset range) is observed on
+  the write job itself, and a rowless directory is removed again through
+  the Hadoop FileSystem, so any scheme behaves as Spark's writer resolved
+  it.
 - S5 conformed sink: lineage-stamped, partitioned by create_date /
   source_file_name (/root/reference/Kafka_ArrivalToConform.sh:481,536-539).
   The reference writes Avro into Hive; Spark's Avro writer lives in the
   external ``spark-avro`` module, so the format is a parameter — parquet by
   default here, ``format="avro"`` on clusters that ship the module.
-- S9 audit sink lives in quality.append_audit; ``append_arrow`` is the
-  job-free writer the collected audits share.
+- S9 audit sink lives in quality.append_audit; ``append_rows`` is the
+  job-free writer the collected audits share: each audit table states its
+  columns once, as a Spark ``StructType``.
 
 Scale: every sink is a straight ``df.write`` — parallel, no driver
 collects. The per-run directory naming gives the same idempotency unit the
@@ -31,6 +38,9 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kafka_etl_automation_spark import runtime
 
 
 def read_delimited(
@@ -54,7 +64,7 @@ def read_text_dir(spark: SparkSession, path: str) -> DataFrame:
 
 
 def fs_path(path: str) -> str:
-    """The local filesystem path behind ``path`` for ``os``/``shutil``: a
+    """The local filesystem path behind ``path`` for ``os``: a
     ``file:`` URI's path component, any other string as given (parsing a
     plain path as a URI would cut it at a ``#`` or ``?``)."""
     parsed = urlparse(path)
@@ -79,18 +89,57 @@ def hadoop_path(spark: SparkSession, path: str):
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
-def append_arrow(table, path: str, prefix: str) -> None:
-    """Append a small pyarrow ``table`` to the parquet directory ``path``
-    as one new uniquely named file: a metadata-sized write (an audit row)
-    needs no Spark job. This process writes it, so ``path`` must be a
+def append_rows(rows, schema: T.StructType, path: str, prefix: str) -> None:
+    """Append ``rows`` (dicts or Rows with ``schema``'s field names) to the
+    parquet directory ``path`` as one new uniquely named file, written by
+    pyarrow with ``schema``'s Arrow form: a metadata-sized write (an audit
+    row) needs no Spark job, and ``spark.read`` sees the same columns as
+    in ``schema``. This process writes it, so ``path`` must be a
     :func:`local_path`."""
     import uuid
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow = to_arrow_schema(schema)
+    table = pa.table({f.name: [r[f.name] for r in rows] for f in arrow}, schema=arrow)
     local = local_path(path)
     os.makedirs(local, exist_ok=True)
     pq.write_table(table, os.path.join(local, f"{prefix}-{uuid.uuid4().hex}.parquet"))
+
+
+def remove_dir(spark: SparkSession, path: str, prune_to: str | None = None) -> None:
+    """Delete the directory ``path`` through the Hadoop FileSystem (see
+    :func:`hadoop_path`), then, when ``prune_to`` is given, each parent
+    this left empty, up to but not including ``prune_to``."""
+    fs, hpath = hadoop_path(spark, path)
+    fs.delete(hpath, True)
+    if prune_to is None:
+        return
+    stop = fs.makeQualified(hadoop_path(spark, prune_to)[1])
+    cur = fs.makeQualified(hpath).getParent()
+    while cur is not None and not cur.equals(stop) and len(fs.listStatus(cur)) == 0:
+        fs.delete(cur, False)
+        cur = cur.getParent()
+
+
+def write_dir(df: DataFrame, path: str, base: str, fmt: str = "parquet", *aggs) -> dict:
+    """S4 + T4 in one job: write ``df`` to the directory ``path`` and
+    return its row count ``n``, plus the named aggregates ``aggs``,
+    observed on the write itself (:func:`runtime.run_observed`). When
+    ``n`` is 0 the rowless directory is removed again, with the parents
+    it emptied up to ``base`` (:func:`remove_dir`): a zero-record batch
+    leaves no directory (Kafka_ArrivalToConform.sh:286-318)."""
+    vals = runtime.run_observed(
+        df,
+        lambda d: d.write.mode("overwrite").format(fmt).save(path),
+        F.count(F.lit(1)).alias("n"),
+        *aggs,
+    )
+    if vals["n"] == 0:
+        remove_dir(df.sparkSession, path, base)
+    return vals
 
 
 def run_dir(base: str, topic: str, partition: int | str, run_id: int) -> str:
@@ -107,18 +156,15 @@ def write_run_dir(
     run_id: int,
     fmt: str = "parquet",
 ) -> str | None:
-    """S4 + T4: write one batch to its per-run directory; suppress entirely
-    when the batch is empty (no directory may exist for a zero-record run —
-    the reference asserts this, Kafka_ArrivalToConform.sh:286-309).
+    """S4 + T4: write one batch to its per-run directory under ``base``
+    with :func:`write_dir`, one job; a zero-record batch leaves no
+    directory (the reference asserts this,
+    Kafka_ArrivalToConform.sh:286-309).
 
-    Returns the directory written, or None when suppressed. The emptiness
-    probe is a cheap limit-1 scan, not a full count.
+    Returns the directory written, or None when suppressed.
     """
-    if df.isEmpty():
-        return None
     target = run_dir(base, topic, partition, run_id)
-    df.write.mode("overwrite").format(fmt).save(target)
-    return target
+    return target if write_dir(df, target, base, fmt)["n"] else None
 
 
 def write_conformed(

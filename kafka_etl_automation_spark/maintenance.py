@@ -15,14 +15,13 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 import uuid
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.io import fs_path
+from kafka_etl_automation_spark.io import fs_path, remove_dir
 
 
 def dir_stats(path: str) -> tuple[int, int]:
@@ -102,37 +101,36 @@ def compact(
     n_files = max(1, math.ceil(bytes_total / (target_mb * 1024 * 1024)))
 
     df = spark.read.parquet(path)
-    obs = Observation()
-    counted = df.observe(obs, F.count(F.lit(1)).alias("n"))
-
     suffix = f"__compact_{uuid.uuid4().hex[:8]}"
     tmp, local_tmp = path.rstrip("/") + suffix, local + suffix
-    if partition_col:
-        # one sized write per partition value, keeping pruning intact
-        (
-            counted.repartition(n_files, partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(tmp)
-        )
-    else:
-        counted.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    vals = runtime.observed(obs)
-    before = int(vals["n"]) if vals is not None else df.count()
+
+    def rewrite(counted):
+        if partition_col:
+            # one sized write per partition value, keeping pruning intact
+            (
+                counted.repartition(n_files, partition_col)
+                .write.mode("overwrite")
+                .partitionBy(partition_col)
+                .parquet(tmp)
+            )
+        else:
+            counted.repartition(n_files).write.mode("overwrite").parquet(tmp)
+
+    before = int(runtime.run_observed(df, rewrite, F.count(F.lit(1)).alias("n"))["n"])
 
     after = spark.read.schema(df.schema).parquet(tmp).count()
     if after != before:
-        shutil.rmtree(local_tmp)
+        remove_dir(spark, tmp)
         raise RuntimeError(
             f"compaction row mismatch ({before} -> {after}); original kept"
         )
-    old = local + "__precompact"
-    if os.path.exists(old):
+    old, local_old = path.rstrip("/") + "__precompact", local + "__precompact"
+    if os.path.exists(local_old):
         # previous compact crashed AFTER its swap completed (path exists)
         # but before cleanup — the lingering dir is superseded data
-        shutil.rmtree(old)
-    os.rename(local, old)
+        remove_dir(spark, old)
+    os.rename(local, local_old)
     os.rename(local_tmp, local)
-    shutil.rmtree(old)
+    remove_dir(spark, old)
     _, files_after = dir_stats(local)
     return files_before, files_after

@@ -332,8 +332,6 @@ def decontaminate_canonical(
     n: int = 3,
     threshold: float = 0.2,
     train_pct: int = 90,
-    keep_pair_source=None,
-    contam_pair_source=None,
 ) -> DataFrame:
     """Decontaminate eval against the DEDUPLICATED train corpus — the
     contract a 100 TB pipeline actually ships, composed from the two
@@ -359,11 +357,9 @@ def decontaminate_canonical(
     fall below threshold; the LSH twin's recall floor test quantifies the
     analogous banding trade).
 
-    ``keep_pair_source`` / ``contam_pair_source`` default to exact trigram
-    Jaccard (deterministic — the gate query carries a full recursive-CTE +
-    all-pairs DuckDB oracle); at scale pass minhash closures (star scope
-    for the keep-list, bipartite banding for the cross-split check) for
-    the bounded deployable shape.
+    Both passes use exact trigram Jaccard pairs (deterministic — the gate
+    query carries a full recursive-CTE + all-pairs DuckDB oracle);
+    ``decontaminate_canonical_lsh`` is the bounded deployable shape.
 
     Reference parity: generalizes the duplicate-elimination semantics of
     fact_dim_merging.sh:361-413 to the corpus-curation setting, same as
@@ -373,9 +369,7 @@ def decontaminate_canonical(
 
     split = text.hash_split(text_col, train_pct)
     train = documents.filter(split == "train")
-    keeps = dedup.canonical_keep_list(
-        train, text_col, id_col, n, threshold, pair_source=keep_pair_source
-    )
+    keeps = dedup.canonical_keep_list(train, text_col, id_col, n, threshold)
     # keep_id IS a doc_id (the cluster's min member) — one semi join
     # selects the canonical documents, no extra projection needed
     kept = train.join(
@@ -392,10 +386,7 @@ def decontaminate_canonical(
     # dedup's collapse caches (ADVICE r05): evicted frames stay correct,
     # they just recompute on the next action.
     corpus = runtime.persist("corpus", kept.unionByName(evals), eager=True)
-    if contam_pair_source is None:
-        pairs = dedup.ngram_jaccard_pairs(corpus, text_col, id_col, n, threshold)
-    else:
-        pairs = contam_pair_source(corpus)
+    pairs = dedup.ngram_jaccard_pairs(corpus, text_col, id_col, n, threshold)
     return cross_split_contamination(corpus, pairs, text_col, id_col, train_pct)
 
 
@@ -425,9 +416,9 @@ def decontaminate_canonical_lsh(
     — and enumerates pairs post-shuffle inside the bucket row. See
     BENCH_SCALE.md round 10 for the measured octaves and the crossover.
 
-    Semantics are identical to ``decontaminate_canonical`` with star-scope
-    minhash as keep_pair_source and bipartite minhash as
-    contam_pair_source — that closure formulation shingled + signed two
+    Semantics are those of ``decontaminate_canonical`` with its two exact
+    pair passes swapped for star-scope and bipartite minhash banding.
+    Running those as two separate pair sources would shingle + sign two
     overlapping corpora (the train split, then kept-train ∪ eval), almost
     all fixed overhead at bench SF. Here the whole corpus collapses ONCE
     (exact-duplicate groups never cross a content-keyed split, so every
@@ -441,8 +432,8 @@ def decontaminate_canonical_lsh(
          rows (bipartite_col rides the signed frame — no label re-scan),
          fanned out to raw eval members via the global collapse map
          restricted to eval (kept canonicals map to themselves: their
-         dropped exact-dup train members are NOT reintroduced, same as the
-         closure shape which collapsed kept ∪ eval only).
+         dropped exact-dup train members are NOT reintroduced, same as
+         ``decontaminate_canonical``, which collapses kept ∪ eval only).
 
     The final report's split tags also derive from the signed frame, so
     after the initial collapse the documents table is never re-scanned.

@@ -2082,7 +2082,6 @@ def canonical_keep_list(
     n: int = 3,
     threshold: float = 0.2,
     pair_source=None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Corpus-scale canonical dedup keep-list: exact collapse -> near-dup
     pair graph over DISTINCT texts only -> connected components -> ONE row
@@ -2108,9 +2107,7 @@ def canonical_keep_list(
         pairs = ngram_jaccard_pairs(reps, text_col, id_col, n, threshold)
     else:
         pairs = pair_source(reps)
-    comp = connected_components(
-        pairs, reps.select(F.col(id_col)), id_col=id_col, stats=stats
-    )
+    comp = connected_components(pairs, reps.select(F.col(id_col)), id_col=id_col)
     return (
         comp.join(members, comp[id_col] == members["rep"])
         .groupBy("cluster_id")

@@ -606,7 +606,12 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 from contextlib import contextmanager
 
 
-def _await_bounded(q, idle_budget: float = 1800.0) -> None:
+# Bound on a bounded streaming run's IDLE time (no newly completed batch),
+# see _await_bounded.
+STREAM_IDLE_BUDGET_S = 1800.0
+
+
+def _await_bounded(q) -> None:
     """Wait for an availableNow streaming query to self-terminate.
 
     ``q.awaitTermination(n)`` returning False is NOT completion: at the
@@ -617,27 +622,27 @@ def _await_bounded(q, idle_budget: float = 1800.0) -> None:
     own, so wait in short poll steps and bound only IDLE time (no newly
     completed batch) rather than total runtime: scale growth extends the
     wait, while a stalled query still dies within one idle window and a
-    dead one surfaces its real exception immediately. ``idle_budget``
-    must exceed the longest SINGLE micro-batch (progress lands per
-    batch, so it cannot tick mid-batch): the 100x interval join's one
-    availableNow batch ran past a 300s budget, so the default is a
-    generous 1800s — it exists to catch true hangs/deaths, not to pace
-    healthy processing.
+    dead one surfaces its real exception immediately.
+    ``STREAM_IDLE_BUDGET_S`` must exceed the longest SINGLE micro-batch
+    (progress lands per batch, so it cannot tick mid-batch): the 100x
+    interval join's one availableNow batch ran past a 300s budget, so it
+    is a generous 1800s — it exists to catch true hangs/deaths, not to
+    pace healthy processing.
     """
     import time
 
-    last, deadline = None, time.time() + idle_budget
+    last, deadline = None, time.time() + STREAM_IDLE_BUDGET_S
     while not q.awaitTermination(2.0):
         if q.exception() is not None:
             raise q.exception()
         p = q.lastProgress or {}
         tag = (p.get("batchId"), p.get("timestamp"))
         if tag != last:
-            last, deadline = tag, time.time() + idle_budget
+            last, deadline = tag, time.time() + STREAM_IDLE_BUDGET_S
         if time.time() > deadline:
             q.stop()
             raise RuntimeError(
-                f"streaming query made no batch progress for {idle_budget}s"
+                f"streaming query made no batch progress for {STREAM_IDLE_BUDGET_S}s"
             )
 
 
@@ -683,16 +688,18 @@ def _stream_partitions(n_rows: int) -> int:
 
 
 @contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int):
+def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str):
     """Temporarily size shuffle partitions (= streaming state-store
     partition count, pinned by the fresh checkpoint at query start) for a
-    bounded streaming run, restoring the session value afterwards.
+    bounded streaming run over ``sf_dir``'s events, by
+    :func:`_stream_partitions`, restoring the session value afterwards.
 
     State partitions should track state volume: a gate-SF run holds a few
     thousand keys, and 32 state stores cost ~4x the wall-clock of 8 in
     per-batch setup/commit (measured at sf0.01). At 100 TB you'd size this
     UP, not down — the knob is the same. Safe because gate queries run
     sequentially on the session; the conf is restored in finally."""
+    n = _stream_partitions(_parquet_num_rows(sf_dir, "events"))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -767,7 +774,7 @@ def stream_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "sess_" + os.path.basename(root).replace("-", "_")
     import time
 
-    with _scoped_shuffle_partitions(spark, _stream_partitions(_parquet_num_rows(sf_dir, "events"))):
+    with _stream_shuffle_partitions(spark, sf_dir):
         stream = spark.readStream.schema(events.schema).parquet(src)
         out = sessions.stream_sessionize(
             stream, gap_minutes=30, timeout_seconds=2
@@ -835,7 +842,7 @@ def stream_windowed_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(root, "src")
     events.coalesce(1).write.parquet(src)
     name = "swin_" + os.path.basename(root).replace("-", "_")
-    with _scoped_shuffle_partitions(spark, _stream_partitions(_parquet_num_rows(sf_dir, "events"))):
+    with _stream_shuffle_partitions(spark, sf_dir):
         stream = spark.readStream.schema(events.schema).parquet(src)
         out = sessions.stream_windowed_counts(
             stream, window_minutes=60, watermark_minutes=120
@@ -893,7 +900,7 @@ def stream_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases.coalesce(1).write.parquet(pur_src)
 
     name = "sij_" + os.path.basename(root).replace("-", "_")
-    with _scoped_shuffle_partitions(spark, _stream_partitions(_parquet_num_rows(sf_dir, "events"))):
+    with _stream_shuffle_partitions(spark, sf_dir):
         out = enrich.interval_join(
             spark.readStream.schema(clicks.schema).parquet(clk_src),
             spark.readStream.schema(purchases.schema).parquet(pur_src),
@@ -950,7 +957,7 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(src)
 
     name = "sdedup_" + os.path.basename(root).replace("-", "_")
-    with _scoped_shuffle_partitions(spark, _stream_partitions(_parquet_num_rows(sf_dir, "events"))):
+    with _stream_shuffle_partitions(spark, sf_dir):
         stream = (
             spark.readStream.schema(events.schema)
             .option("maxFilesPerTrigger", "1")

@@ -35,10 +35,23 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from kafka_etl_automation_spark.io import append_arrow, hadoop_path
+from kafka_etl_automation_spark.io import append_rows, hadoop_path
 
 PASS, FAIL = "PASS", "FAIL"
+
+# The DQ audit table: a suite's result columns, then what the audit stamps.
+AUDIT_SCHEMA = T.StructType(
+    [
+        T.StructField("check_name", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("metric_a", T.LongType()),
+        T.StructField("metric_b", T.LongType()),
+        T.StructField("audit_ts", T.TimestampType()),
+        T.StructField("job_run_id", T.LongType()),
+    ]
+)
 
 
 def _result(name: str, ok, metric_a, metric_b) -> list:
@@ -273,21 +286,8 @@ def append_audit_rows(rows: Iterable, path: str, run_id: int | None = None) -> N
     job (and so no second run of the suite that produced them)."""
     import datetime
 
-    import pyarrow as pa
-
-    rows = list(rows)
     now = datetime.datetime.now(datetime.timezone.utc)
-    columns = {
-        "check_name": pa.string(),
-        "status": pa.string(),
-        "metric_a": pa.int64(),
-        "metric_b": pa.int64(),
-    }
-    table = pa.table(
-        {c: pa.array([r[c] for r in rows], t) for c, t in columns.items()}
-        | {
-            "audit_ts": pa.array([now] * len(rows), pa.timestamp("us", tz="UTC")),
-            "job_run_id": pa.array([run_id] * len(rows), pa.int64()),
-        }
-    )
-    append_arrow(table, path, "dq")
+    stamp = {"audit_ts": now, "job_run_id": run_id}
+    result_cols = [c for c in AUDIT_SCHEMA.fieldNames() if c not in stamp]
+    stamped = [{c: r[c] for c in result_cols} | stamp for r in rows]
+    append_rows(stamped, AUDIT_SCHEMA, path, "dq")

@@ -11,7 +11,8 @@ asynchronously. This module owns that state, so ``operators/`` and
   :func:`settle_on_exit`, which settles them on every exit of an operator;
 - the first-raise snapshot of the confs a partition floor changes:
   :func:`snapshot_confs` and :func:`restore_confs`;
-- one bounded wait on an ``Observation``: :func:`observed`.
+- one bounded wait on an ``Observation``: :func:`observed`, and the
+  observe-or-aggregate pattern built on it: :func:`run_observed`.
 
 Per-application state is keyed by ``applicationId``, because a
 ``foreachBatch`` micro-batch runs on a cloned session of the same
@@ -250,3 +251,17 @@ def observed(obs) -> dict | None:
         _LOG.warning("observed metric failed (%r) — falling back", got[0])
         return None
     return got[0]
+
+
+def run_observed(frame: DataFrame, action, *aggs) -> dict:
+    """Run ``action`` on ``frame`` with the named aggregates ``aggs``
+    observed on it, and return their values by name. They come from the
+    action's own job; when :func:`observed` returns None they are computed
+    over the same ``frame`` by one aggregation query, so a lost delivery
+    costs that query, never a wrong value."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    action(frame.observe(obs, *aggs))
+    vals = observed(obs)
+    return vals if vals is not None else frame.agg(*aggs).first().asDict()

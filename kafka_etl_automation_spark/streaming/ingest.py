@@ -13,8 +13,11 @@ Spark-native re-expression of the reference's arrival->conform contract
   from must equal the previous until (T2 contiguity, :221-237) and
   sum(until-from) must equal rows landed (T3 conservation, :239-251).
 - S4 per-run directory sink with T4 empty-batch suppression (:286-318):
-  zero-record batches write NO file and log ``FILE_PROCESSING_STATUS=0,
-  FILE_NAME=''``.
+  zero-record batches leave NO file and log ``FILE_PROCESSING_STATUS=0,
+  FILE_NAME=''``. Each micro-batch is one job on every scheme: the bronze
+  write observes its own offset range and row count (``io.write_dir``),
+  and an empty batch's rowless dir is removed through the Hadoop
+  FileSystem.
 - T1 batch duration (:131-181): wall-clock per batch recorded in the audit.
 
 Scale: ``foreachBatch`` bodies are pure DataFrame writes (no collects); the
@@ -77,7 +80,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.io import append_arrow, fs_path, local_path, run_dir
+from kafka_etl_automation_spark.io import append_rows, local_path, run_dir, write_dir
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -93,37 +96,23 @@ AUDIT_SCHEMA = T.StructType(
     ]
 )
 
+PROGRESS_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.StringType()),
+        T.StructField("batch_id", T.LongType()),
+        T.StructField("num_input_rows", T.LongType()),
+        T.StructField("start_offset", T.StringType()),
+        T.StructField("end_offset", T.StringType()),
+        T.StructField("duration_ms", T.LongType()),
+    ]
+)
+
 
 @dataclass
 class IngestResult:
     n_batches: int
     n_records: int
     bronze_dirs: list[str]
-
-
-def _append_audit_row(audit_path: str, row: dict) -> None:
-    """Append one audit row as a small parquet file via pyarrow directly —
-    a single-row metadata write does not need a Spark job (saves ~1-2s of
-    job overhead per micro-batch; the reference's equivalent is one Oracle
-    INSERT). Schema matches AUDIT_SCHEMA so spark.read sees one table."""
-    import pyarrow as pa
-
-    table = pa.table(
-        {
-            "topic": pa.array([row["topic"]], pa.string()),
-            "partition": pa.array([row["partition"]], pa.int32()),
-            "batch_id": pa.array([row["batch_id"]], pa.int64()),
-            "from_offset": pa.array([row["from_offset"]], pa.int64()),
-            "until_offset": pa.array([row["until_offset"]], pa.int64()),
-            "n_records": pa.array([row["n_records"]], pa.int64()),
-            "file_name": pa.array([row["file_name"]], pa.string()),
-            "file_processing_status": pa.array(
-                [row["file_processing_status"]], pa.int32()
-            ),
-            "batch_seconds": pa.array([row["batch_seconds"]], pa.float64()),
-        }
-    )
-    append_arrow(table, audit_path, "audit")
 
 
 def kafka_stream_options(brokers: str, topic: str) -> dict[str, str]:
@@ -207,18 +196,15 @@ class ProgressAuditListener:
                 p = event.progress
                 try:
                     src = p.sources[0] if p.sources else None
-                    outer._write(
-                        {
-                            "query_id": str(p.id),
-                            "batch_id": int(p.batchId),
-                            "num_input_rows": int(p.numInputRows),
-                            "start_offset": str(src.startOffset) if src else None,
-                            "end_offset": str(src.endOffset) if src else None,
-                            "duration_ms": int(
-                                p.durationMs.get("triggerExecution", 0)
-                            ),
-                        }
-                    )
+                    row = {
+                        "query_id": str(p.id),
+                        "batch_id": int(p.batchId),
+                        "num_input_rows": int(p.numInputRows),
+                        "start_offset": str(src.startOffset) if src else None,
+                        "end_offset": str(src.endOffset) if src else None,
+                        "duration_ms": int(p.durationMs.get("triggerExecution", 0)),
+                    }
+                    append_rows([row], PROGRESS_SCHEMA, outer.audit_path, "p")
                 except Exception:
                     pass  # a broken audit row must never kill the stream
 
@@ -230,21 +216,6 @@ class ProgressAuditListener:
 
         self.audit_path = audit_path
         self.listener = _L()
-
-    def _write(self, row: dict) -> None:
-        import pyarrow as pa
-
-        table = pa.table(
-            {
-                "query_id": pa.array([row["query_id"]], pa.string()),
-                "batch_id": pa.array([row["batch_id"]], pa.int64()),
-                "num_input_rows": pa.array([row["num_input_rows"]], pa.int64()),
-                "start_offset": pa.array([row["start_offset"]], pa.string()),
-                "end_offset": pa.array([row["end_offset"]], pa.string()),
-                "duration_ms": pa.array([row["duration_ms"]], pa.int64()),
-            }
-        )
-        append_arrow(table, self.audit_path, "p")
 
     def attach(self, spark: SparkSession) -> "ProgressAuditListener":
         spark.streams.addListener(self.listener)
@@ -291,37 +262,6 @@ def parse_kafka_records(raw: DataFrame, value_schema) -> DataFrame:
     ).select("v.*")
 
 
-def _is_local_path(path: str) -> bool:
-    """True for plain/`file:` paths — where removing a just-written dir is
-    a cheap local fs op, enabling the one-job-per-batch observed-stats
-    shape in run_file_ingest."""
-    from urllib.parse import urlparse
-
-    return urlparse(path).scheme in ("file", "")
-
-
-def _remove_empty_batch_dir(batch_dir: str, stop_at: str) -> None:
-    """Remove the rowless bronze dir a zero-record batch wrote (T4: an
-    empty batch must leave no bronze file), pruning parents it emptied —
-    up to but NOT including ``stop_at`` (bronze_base may legitimately
-    remain as an empty dir). Both paths may be ``file:`` URIs (the only
-    scheme ``_is_local_path`` admits besides plain paths); ``shutil`` and
-    ``os`` need the URI's path (:func:`io.fs_path`), or the removal
-    silently does nothing."""
-    import shutil
-
-    batch_dir = fs_path(batch_dir)
-    shutil.rmtree(batch_dir, ignore_errors=True)
-    cur = os.path.dirname(batch_dir)
-    stop = os.path.abspath(fs_path(stop_at))
-    while os.path.abspath(cur) != stop:
-        try:
-            os.rmdir(cur)  # fails (and stops the walk) unless empty
-        except OSError:
-            break
-        cur = os.path.dirname(cur)
-
-
 def run_file_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -360,88 +300,42 @@ def run_file_ingest(
 
     state = {"batches": 0, "records": 0, "dirs": []}
 
-    # One JOB per micro-batch instead of two (r13, guide §5 — fewer
-    # driver-scheduled actions): the offset stats ride the bronze write as
-    # an OBSERVED metric instead of a dedicated aggregation job ahead of
-    # it. Observation values are exact (computed by the write job itself
-    # over every row). The write therefore happens before emptiness is
-    # known, so the (rare) zero-record batch writes a rowless dir and
-    # immediately removes it — the FINAL bronze state is identical to the
-    # stats-first shape, which is what T4 specifies (no bronze file for an
-    # empty batch; Kafka_ArrivalToConform.sh:286-318). Local bronze paths
-    # only: removal must be a cheap atomic-enough fs op; non-local bronze
-    # (object stores) keeps the two-job stats-first shape.
-    local_bronze = _is_local_path(bronze_base)
-
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        lo = hi = None
-        n = -1
-        batch_dir = None
-        if local_bronze:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            target = run_dir(bronze_base, topic, partition, run_id)
-            batch_dir = os.path.join(target, f"batch_id={batch_id}")
-            (
-                batch_df.observe(
-                    obs,
-                    # aggregate-then-cast, matching the fallback/stats-job
-                    # expressions exactly (min of a string offset col then
-                    # cast differs from casting first)
-                    F.min(offset_col).cast("long").alias("lo"),
-                    F.max(offset_col).cast("long").alias("hi"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .write.mode("overwrite")
-                .format(fmt)
-                .save(batch_dir)
-            )
-            vals = runtime.observed(obs)
-            if vals is not None:
-                n = int(vals["n"])
-                lo, hi = vals["lo"], vals["hi"]
-        if n < 0:
-            # non-local bronze, or no observed metric (runtime.observed's
-            # bounded wait): the pre-r13 dedicated stats job. The write
-            # above (if any) stays valid — the stats are over the same
-            # immutable micro-batch.
-            stats = batch_df.agg(
-                F.min(offset_col).cast("long").alias("lo"),
-                F.max(offset_col).cast("long").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            n, lo, hi = int(stats["n"]), stats["lo"], stats["hi"]
-        if n == 0:
-            # T4: no file, status 0, empty name
-            # (Kafka_ArrivalToConform.sh:286-318).
-            if batch_dir is not None:
-                _remove_empty_batch_dir(batch_dir, bronze_base)
-            file_name, status = "", 0
-        else:
-            if batch_dir is None:
-                target = run_dir(bronze_base, topic, partition, run_id)
-                batch_dir = os.path.join(target, f"batch_id={batch_id}")
-                batch_df.write.mode("overwrite").format(fmt).save(batch_dir)
+        batch_dir = os.path.join(
+            run_dir(bronze_base, topic, partition, run_id), f"batch_id={batch_id}"
+        )
+        # One job per micro-batch: the offset range rides the bronze write
+        # as observed aggregates (aggregate-then-cast: the min of a string
+        # offset column, then cast, differs from casting first), and a
+        # zero-record batch's rowless dir is removed again (T4).
+        vals = write_dir(
+            batch_df,
+            batch_dir,
+            bronze_base,
+            fmt,
+            F.min(offset_col).cast("long").alias("lo"),
+            F.max(offset_col).cast("long").alias("hi"),
+        )
+        n = int(vals["n"])
+        if n:
             state["dirs"].append(batch_dir)
-            file_name, status = batch_dir, 1
         state["batches"] += 1
         state["records"] += n
-        _append_audit_row(
-            audit_path,
-            {
-                "topic": topic,
-                "partition": partition,
-                "batch_id": int(batch_id),
-                "from_offset": None if n == 0 else int(lo),
-                "until_offset": None if n == 0 else int(hi),
-                "n_records": n,
-                "file_name": file_name,
-                "file_processing_status": status,
-                "batch_seconds": float(time.time() - t0),
-            },
-        )
+        # T4 audit of an empty batch: no offsets, status 0, empty name
+        # (Kafka_ArrivalToConform.sh:286-318).
+        row = {
+            "topic": topic,
+            "partition": partition,
+            "batch_id": int(batch_id),
+            "from_offset": int(vals["lo"]) if n else None,
+            "until_offset": int(vals["hi"]) if n else None,
+            "n_records": n,
+            "file_name": batch_dir if n else "",
+            "file_processing_status": 1 if n else 0,
+            "batch_seconds": float(time.time() - t0),
+        }
+        append_rows([row], AUDIT_SCHEMA, audit_path, "audit")
 
     query = (
         stream.writeStream.foreachBatch(handle_batch)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,6 +35,87 @@ def test_write_run_dir_empty_suppressed(spark, tmp_root):
     out = kio.write_run_dir(spark.range(0), tmp_root, "topic", 1, 9)
     assert out is None
     assert not os.path.exists(kio.run_dir(tmp_root, "topic", 1, 9))
+
+
+def test_write_run_dir_runs_one_job(spark, tmp_root):
+    """The row count rides the write as an observed metric: one job for a
+    non-empty frame (two with an emptiness probe first)."""
+    from tests.conftest import spark_work
+
+    work = spark_work(spark, lambda: kio.write_run_dir(spark.range(5), tmp_root, "t", 0, 1))
+    assert work["jobs"] == 1, work
+    assert spark.read.parquet(kio.run_dir(tmp_root, "t", 0, 1)).count() == 5
+
+
+def test_write_dir_without_observed_metric(spark, tmp_root, monkeypatch):
+    """When the observed metric does not arrive, the same aggregates come
+    from one aggregation over the frame after the write, and an empty
+    frame still leaves no directory."""
+    from tests.conftest import spark_work
+
+    aggs = (F.count(F.lit(1)).alias("n"), F.max("id").alias("hi"))
+    agg_jobs = spark_work(spark, lambda: spark.range(7).agg(*aggs).first())["jobs"]
+    monkeypatch.setattr(kio.runtime, "observed", lambda obs: None)
+    out = []
+    path = os.path.join(tmp_root, "a")
+    work = spark_work(
+        spark,
+        lambda: out.append(kio.write_dir(spark.range(7), path, tmp_root, "parquet", aggs[1])),
+    )
+    assert out == [{"n": 7, "hi": 6}] and work["jobs"] == 1 + agg_jobs, work
+    assert kio.write_dir(spark.range(0), os.path.join(tmp_root, "b"), tmp_root)["n"] == 0
+    assert os.listdir(tmp_root) == ["a"]
+
+
+def test_write_dir_prunes_emptied_parents_up_to_base(spark, tmp_root):
+    """An empty frame's directory goes, with the parents it emptied, but
+    the walk stops at a non-empty parent and never removes the base."""
+    bronze = os.path.join(tmp_root, "bronze")
+    empty = spark.range(0)
+    # sibling batch keeps its parent chain alive
+    keep = os.path.join(bronze, "t", "p0", "run=2", "batch_id=0")
+    os.makedirs(keep)
+    kio.write_dir(empty, os.path.join(bronze, "t", "p0", "run=1", "batch_id=4"), bronze)
+    assert os.listdir(os.path.join(bronze, "t", "p0")) == ["run=2"]
+    # all-empty run: everything under the base goes, the base itself stays
+    shutil.rmtree(os.path.join(bronze, "t"))
+    kio.write_dir(empty, os.path.join(bronze, "t", "p0", "run=1", "batch_id=0"), bronze)
+    assert os.listdir(bronze) == []
+
+
+def test_write_dir_file_uri_and_hash_paths(spark, tmp_root):
+    """An empty frame's directory is removed where Spark's writer put it,
+    both for a ``file:`` URI and for a plain path with a ``#`` in it."""
+    for base, prefix in (("uri", "file://"), ("a#b", "")):
+        bronze = os.path.join(tmp_root, base, "bronze")
+        keep = os.path.join(bronze, "t_0_2", "batch_id=0")
+        os.makedirs(keep)
+        batch_dir = os.path.join(bronze, "t_0_1", "batch_id=3")
+        kio.write_dir(spark.range(0), prefix + batch_dir, prefix + bronze)
+        assert os.listdir(bronze) == ["t_0_2"]
+        assert os.path.isdir(keep)
+
+
+def test_write_dir_scheme_less_path_on_a_non_local_default_fs(spark, tmp_root):
+    """A scheme-less path resolves against ``fs.defaultFS``, as Spark's
+    writer resolves it: with a ``viewfs://`` default mounted onto a local
+    directory, an empty frame's directory is removed from the mount, not
+    looked for on the local disk."""
+    bronze = os.path.join(tmp_root, "bronze")
+    os.makedirs(os.path.join(bronze, "keep"))
+    conf = spark._jsc.hadoopConfiguration()
+    prev = conf.get("fs.defaultFS")
+    link = "fs.viewfs.mounttable.kea.link./bronze"
+    conf.set(link, "file://" + bronze)
+    conf.set("fs.defaultFS", "viewfs://kea/")
+    try:
+        assert kio.write_dir(spark.range(3), "/bronze/t_0_1/batch_id=0", "/bronze")["n"] == 3
+        assert kio.write_dir(spark.range(0), "/bronze/t_0_2/batch_id=0", "/bronze")["n"] == 0
+    finally:
+        conf.set("fs.defaultFS", prev)
+        conf.unset(link)
+    assert sorted(os.listdir(bronze)) == ["keep", "t_0_1"]
+    assert os.listdir(os.path.join(bronze, "t_0_1")) == ["batch_id=0"]
 
 
 def test_write_conformed_layout(spark, tmp_root):

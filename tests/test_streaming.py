@@ -545,42 +545,65 @@ def test_progress_listener_reconciles_with_foreachbatch_audit(spark, tmp_root):
         lst.detach(spark)
 
 
-def test_remove_empty_batch_dir_prunes_parents(tmp_root):
-    """r13 one-job-per-batch fold: a zero-record batch writes a rowless
-    bronze dir (stats ride the write as an observed metric) and removes
-    it again — pruning must clear the parents it created but never walk
-    past bronze_base."""
-    bronze = os.path.join(tmp_root, "bronze")
-    batch_dir = os.path.join(bronze, "t", "p0", "run=1", "batch_id=4")
-    os.makedirs(batch_dir)
-    # sibling batch keeps its parent chain alive
-    keep = os.path.join(bronze, "t", "p0", "run=2", "batch_id=0")
-    os.makedirs(keep)
-    ingest._remove_empty_batch_dir(batch_dir, bronze)
-    assert not os.path.exists(os.path.join(bronze, "t", "p0", "run=1"))
-    assert os.path.exists(keep)  # stopped at the shared non-empty parent
-    # all-empty run: everything under bronze goes, bronze itself stays
-    solo = os.path.join(bronze, "t", "p0", "run=1", "batch_id=0")
-    os.makedirs(solo)
-    os.rmdir(keep)
-    os.removedirs(os.path.dirname(keep))  # clear the run=2 chain first
-    os.makedirs(bronze, exist_ok=True)
-    ingest._remove_empty_batch_dir(solo, bronze)
-    assert os.path.exists(bronze) and os.listdir(bronze) == []
+def _ingest_mixed(spark, root):
+    """Ingest two data files and two zero-row files, one micro-batch
+    each; returns the result and the Spark work of the ingest alone."""
+    from tests.conftest import spark_work
+
+    src = os.path.join(root, "src")
+    for lo, hi in [(0, 40), (40, 40), (40, 90), (90, 90)]:
+        _write_batch_file(spark, src, lo, hi, "x")
+    got = []
+    work = spark_work(spark, lambda: got.append(_run(spark, root, src)))
+    return got[0], work
 
 
-def test_remove_empty_batch_dir_uri_and_plain_paths(tmp_root):
-    """``file:`` URIs are removed through their path; a plain path is used
-    as given, so a ``#`` in it cannot cut it short."""
-    for base in ("uri", "a#b"):
-        bronze = os.path.join(tmp_root, base, "bronze")
-        batch_dir = os.path.join(bronze, "t_0_1", "batch_id=3")
-        keep = os.path.join(bronze, "t_0_2", "batch_id=0")
-        os.makedirs(batch_dir)
-        os.makedirs(keep)
-        if base == "uri":
-            ingest._remove_empty_batch_dir("file://" + batch_dir, "file://" + bronze)
-        else:
-            ingest._remove_empty_batch_dir(batch_dir, bronze)
-        assert not os.path.exists(os.path.dirname(batch_dir))
-        assert os.path.isdir(keep)
+def _audit_values(spark, root):
+    audit = ingest.read_audit(spark, os.path.join(root, "audit"))
+    return sorted(
+        (r.batch_id, r.from_offset, r.until_offset, r.n_records,
+         os.path.relpath(r.file_name, root) if r.file_name else "",
+         r.file_processing_status)
+        for r in audit.collect()
+    )
+
+
+def test_ingest_runs_one_job_per_micro_batch(spark, tmp_root):
+    """The bronze write observes its own offset range and row count, so
+    every micro-batch, empty or not, is exactly one Spark job, and an
+    empty batch leaves no bronze dir (T4)."""
+    res, work = _ingest_mixed(spark, tmp_root)
+    assert (res.n_batches, res.n_records) == (4, 90)
+    assert work["jobs"] == res.n_batches, work
+    (run,) = os.listdir(os.path.join(tmp_root, "bronze"))
+    assert sorted(os.listdir(os.path.join(tmp_root, "bronze", run))) == [
+        "batch_id=0", "batch_id=2",
+    ]
+    assert _audit_values(spark, tmp_root) == [
+        (0, 0, 39, 40, "bronze/t_0_1/batch_id=0", 1),
+        (1, None, None, 0, "", 0),
+        (2, 40, 89, 50, "bronze/t_0_1/batch_id=2", 1),
+        (3, None, None, 0, "", 0),
+    ]
+
+
+def test_ingest_without_observed_metric(spark, tmp_root, monkeypatch):
+    """When the observed metric does not arrive, each micro-batch counts
+    its offsets in one more aggregation over the same frame (two jobs:
+    AQE runs its shuffle-map stage as a job of its own): the same audit
+    rows, the same empty-batch suppression."""
+    from kafka_etl_automation_spark import runtime
+
+    monkeypatch.setattr(runtime, "observed", lambda obs: None)
+    res, work = _ingest_mixed(spark, tmp_root)
+    assert work["jobs"] == 3 * res.n_batches, work
+    (run,) = os.listdir(os.path.join(tmp_root, "bronze"))
+    assert sorted(os.listdir(os.path.join(tmp_root, "bronze", run))) == [
+        "batch_id=0", "batch_id=2",
+    ]
+    assert _audit_values(spark, tmp_root) == [
+        (0, 0, 39, 40, "bronze/t_0_1/batch_id=0", 1),
+        (1, None, None, 0, "", 0),
+        (2, 40, 89, 50, "bronze/t_0_1/batch_id=2", 1),
+        (3, None, None, 0, "", 0),
+    ]

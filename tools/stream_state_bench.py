@@ -32,6 +32,8 @@ from datetime import timedelta
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kafka_etl_automation_spark.plans.lifecycle import _await_bounded  # noqa: E402
+
 
 def write_time_chunks(df, ts_col: str, path: str, k: int) -> int:
     """Write df as k single-file parquet chunks in ascending event-time
@@ -53,22 +55,6 @@ def write_time_chunks(df, ts_col: str, path: str, k: int) -> int:
         written += 1
         time.sleep(0.05)  # distinct mtimes (ms resolution on ext4)
     return written
-
-
-def _drain(q, poll=2.0, idle_budget=1800.0):
-    """availableNow drain with idle-budget semantics (mirrors
-    plans.lifecycle._await_bounded)."""
-    last, deadline = None, time.time() + idle_budget
-    while not q.awaitTermination(poll):
-        if q.exception() is not None:
-            raise q.exception()
-        p = q.lastProgress or {}
-        tag = (p.get("batchId"), p.get("timestamp"))
-        if tag != last:
-            last, deadline = tag, time.time() + idle_budget
-        if time.time() > deadline:
-            q.stop()
-            raise RuntimeError("no batch progress within idle budget")
 
 
 def _progress_metrics(q):
@@ -150,7 +136,7 @@ def run_interval_join(spark, sf_dir, chunks):
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True).start()
     )
-    _drain(q)
+    _await_bounded(q)
     wall = time.time() - t0
     emitted = spark.table(name).count()
     return {
@@ -208,7 +194,7 @@ def run_dedup(spark, sf_dir, chunks):
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True).start()
     )
-    _drain(q)
+    _await_bounded(q)
     wall = time.time() - t0
     emitted = spark.table(name).count()
     return {
@@ -305,7 +291,7 @@ def run_windowed_counts(spark, sf_dir, chunks):
         .option("checkpointLocation", os.path.join(root, "ckpt"))
         .trigger(availableNow=True).start()
     )
-    _drain(q)
+    _await_bounded(q)
     wall = time.time() - t0
     emitted = spark.table(name).count()
     return {
