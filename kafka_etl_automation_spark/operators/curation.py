@@ -449,15 +449,15 @@ def decontaminate_canonical_lsh(
     """
     from kafka_etl_automation_spark.operators import dedup
 
-    # Scale-adaptive shuffle floor BEFORE the first wide stage (guide §2 /
+    # Scale-adaptive partition floor for the caches below (guide §2 /
     # r12): at the 2700x octave the default 32 local partitions OOM the
     # pass-2 corpus-signature materialization at the default heap; the
     # floor derives partitions from the source scan size (~2 MiB/partition,
-    # anchored to r11's measured 512p@1.2GB working point). No-op at
+    # anchored to r11's measured 512p@1.2GB working point). None at
     # gate/bench SFs (they sit under the floor).
-    dedup.scale_partition_floor(documents)
+    parts = dedup.scale_partition_floor(documents)
     split = text.hash_split(text_col, train_pct)
-    reps, members = dedup._exact_text_collapse(documents, text_col, id_col)
+    reps, members = dedup._exact_text_collapse(documents, text_col, id_col, parts)
     # One signed frame for everything downstream. The label join costs one
     # narrow (id, label) scan of reps — cheap next to the shingle pass the
     # sharing removes. All three caches below go to the runtime's corpus
@@ -483,7 +483,12 @@ def decontaminate_canonical_lsh(
     sig = runtime.persist(
         "corpus",
         dedup.signature_sets(
-            reps, text_col, id_col, n, num_hashes, carry={"_lbl": split}
+            dedup._by_id(reps, id_col, parts),
+            text_col,
+            id_col,
+            n,
+            num_hashes,
+            carry={"_lbl": split},
         ),
     )
 

@@ -148,17 +148,24 @@ def _plan_num_partitions(plan) -> int | None:
     adaptive plan's current physical plan (exchanges inserted), unary
     nodes and a broadcast hash join's streamed side to a leaf (its RDD:
     file splits, a driver-side listing, no job) or a loaded cache (its
-    block count). Nodes on the way that report a partition count (a
-    coalesce, a single-partition operator) cap it. A shuffle (exchange,
-    query stage or shuffle read), an unloaded cache (its RDD would build
-    the cache) or another multi-child node (unions, other joins) answer
-    None."""
+    block count) or an explicit ``repartition(n, ...)`` (AQE never changes
+    its count). Nodes on the way that report a partition count (a
+    coalesce, a single-partition operator) cap it. Any other shuffle
+    (exchange, query stage or shuffle read), an unloaded cache (its RDD
+    would build the cache) or another multi-child node (unions, other
+    joins) answer None."""
     cap = None
     while True:
         cls = plan.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
             plan = plan.executedPlan()
             continue
+        if (
+            cls == "ShuffleExchangeExec"
+            and plan.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            count = plan.outputPartitioning().numPartitions()
+            break
         if "Exchange" in cls or "QueryStage" in cls or cls == "AQEShuffleReadExec":
             return None
         n = plan.outputPartitioning().numPartitions()
@@ -419,7 +426,7 @@ def signature_sets(
 
 
 def _exact_text_collapse(
-    df: DataFrame, text_col: str, id_col: str
+    df: DataFrame, text_col: str, id_col: str, parts: int | None
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse exact-duplicate texts to their min-id representative.
 
@@ -427,7 +434,8 @@ def _exact_text_collapse(
     distinct text; ``members`` maps ``rep -> member`` for EVERY input id
     (reps map to themselves). Group identity is (length, xxhash64) of the
     raw text — same collision class (~N²/2⁶⁴) the shingle hashing already
-    accepts.
+    accepts. ``parts``: the caller's :func:`scale_partition_floor` count,
+    which the group cache keeps (None: the session's plan).
 
     Why this exists: near-dup candidate generation is quadratic in
     bucket occupancy, and real crawl corpora carry exact-duplicate
@@ -461,8 +469,14 @@ def _exact_text_collapse(
     # a MATERIALIZED InMemoryRelation reports its measured size, so the
     # planner broadcasts it exactly when it truly fits (small corpora)
     # and never when it doesn't.
+    # With a floor, the group-by's own exchange becomes a repartition to
+    # its count: AQE leaves a repartition's count alone, so grp keeps it.
+    # The partial min then runs after the exchange; it only ever folded
+    # exact duplicates of 20-byte rows, so the shuffle grows by those rows
+    # at most.
+    by_text = keyed if parts is None else keyed.repartition(parts, "_kl", "_kh")
     grp = runtime.persist(
-        "collapse", keyed.groupBy("_kl", "_kh").agg(F.min("member").alias("rep"))
+        "collapse", by_text.groupBy("_kl", "_kh").agg(F.min("member").alias("rep"))
     )
     # (no count here: members' eager count below materializes grp
     # transitively — one materialization job, two measured caches)
@@ -538,9 +552,9 @@ def _flood_escalation(
     known BEFORE enumeration, so a run that would ENOSPC a single-disk
     local box 10 minutes in can abort NOW naming the exact knobs
     (spark.io.compression.codec is immutable after session start), and a
-    run that merely needs more reduction tasks gets them automatically
-    (shuffle partitions ARE runtime-settable; AQE coalesces small
-    partitions back, so sub-flood plans are untouched).
+    run that merely needs more reduction tasks gets them automatically:
+    the narrow reduction is repartitioned to ``n`` (sub-flood plans are
+    untouched).
 
     Returns ``("abort", message)``, ``("raise_partitions", n)``, or None.
     """
@@ -553,8 +567,8 @@ def _flood_escalation(
             "ride the grouped verify shuffle — past the single-disk lz4 "
             f"ENOSPC ceiling (~{_FLOOD_NARROW_ROWS:,}, measured "
             "BENCH_SCALE.md r11). Restart the session with "
-            "SPARK_GRAFT_IO_CODEC=zstd (halves shuffle bytes; the shuffle "
-            "partitions are then raised automatically), "
+            "SPARK_GRAFT_IO_CODEC=zstd (halves shuffle bytes; the narrow "
+            "reduction is then repartitioned to fit automatically), "
             "or cap the flood (max_bucket=<int>) if these buckets are "
             "boilerplate",
         )
@@ -564,20 +578,19 @@ def _flood_escalation(
     return None
 
 
-# Scale-adaptive shuffle-partition floor (guide §2: partitioning must
-# derive from input size, not a constant tuned for either local mode or
-# the cluster). ~2 MiB of source parquet per shuffle partition anchors to
-# the measured working point: the 2700x octave's 1.2 GB documents table
-# ran the canonical pipelines at 32 GB heap with 512 partitions (r11,
-# BENCH_SCALE.md) = 2.3 MiB/partition, while 32 partitions — the local
-# default — OOMs the pass-2 corpus materialization at that octave (r12,
-# measured: Java heap space in the corpus pool's runtime.persist). Gate/bench
-# SFs sit far below the floor (sf0.1 documents ≈ 2 MB -> want 1), so
-# their plans and walls are untouched; AQE coalesces any over-partitioned
-# small stage right back. Caches are the exception: any input past the
-# threshold (a floor of 2+ partitions, ~4 MiB of source) pins cached
-# partitioning, raised or not, so caches persisted from then on keep the
-# session's count (see _CACHED_PARTITIONING).
+# Scale-adaptive partition floor (guide §2: partitioning must derive from
+# input size, not a constant tuned for either local mode or the cluster).
+# ~2 MiB of source parquet per partition anchors to the measured working
+# point: the 2700x octave's 1.2 GB documents table ran the canonical
+# pipelines at 32 GB heap with 512 partitions (r11, BENCH_SCALE.md) = 2.3
+# MiB/partition, while 32 partitions — the local default — OOMs the
+# pass-2 corpus materialization at that octave (r12, measured: Java heap
+# space in the corpus pool's runtime.persist). Gate/bench SFs sit far
+# below the threshold (sf0.1 documents ≈ 0.6 MB), so their plans are
+# untouched. Past it (a floor of 2+ partitions, ~4 MiB of source) the
+# corpus operators repartition the inputs of their corpus-scale caches
+# to scale_partition_floor's count; AQE never coalesces such an exchange,
+# so each cache keeps that count and its per-task state stays bounded.
 _SCALE_BYTES_PER_PARTITION = 2 * 1024 * 1024
 _SCALE_PARTITION_CAP = 2048
 
@@ -589,106 +602,47 @@ def _partition_floor(input_bytes: int, cur_partitions: int) -> int | None:
     return int(want) if want > cur_partitions else None
 
 
-# The runtime keeps a first-raise snapshot of spark.sql.shuffle.partitions
-# per application: scale_partition_floor / the flood escalation raise the
-# conf session-sticky (the floored PIPELINE executes lazily, so the raise
-# must outlive the builder call), but a STREAMING query started later in
-# the same session must not inherit it — streaming gets no AQE coalescing,
-# and a 2048-partition state-store stage overflows
-# spark.driver.maxResultSize (the r12 incident; ADVICE r12 medium). The
-# streaming builders call restore_shuffle_partitions() before starting
-# their query; the next batch-pipeline entry re-derives its floor from its
-# own input size, so nothing is lost. The snapshot also holds the
-# cached-partitioning conf a raise pins.
-
-# Engine sessions let AQE coalesce inside cached plans (session.sql_confs);
-# every partition raise, and any scale_partition_floor input past the
-# floor threshold, pins that off until restore_shuffle_partitions, so
-# caches persisted under a floor keep its count (see scale_partition_floor).
-_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
-def _pin_cached_partitioning(spark, cur: int) -> None:
-    """Pin cached partitioning off, snapshotting it and the current shuffle
-    partitions (``cur``) on the session's first pin or raise."""
-    runtime.snapshot_confs(
-        spark,
-        {
-            "spark.sql.shuffle.partitions": str(cur),
-            _CACHED_PARTITIONING: spark.conf.get(_CACHED_PARTITIONING, None),
-        },
-    )
-    spark.conf.set(_CACHED_PARTITIONING, "false")
-
-
-def _raise_shuffle_partitions(spark, cur: int, want: int) -> None:
-    """Set the session's shuffle partitions to ``want`` and pin cached
-    partitioning (see :func:`_pin_cached_partitioning`)."""
-    _pin_cached_partitioning(spark, cur)
-    spark.conf.set("spark.sql.shuffle.partitions", str(want))
-
-
-def restore_shuffle_partitions(spark) -> int | None:
-    """Restore ``spark.sql.shuffle.partitions`` and the cached-partitioning
-    conf to their values before the first scale_partition_floor /
-    flood-escalation raise of this session. No-op when nothing was ever
-    raised. Returns the restored partition count."""
-    prev = runtime.restore_confs(spark)
-    return None if prev is None else int(prev["spark.sql.shuffle.partitions"])
-
-
 def scale_partition_floor(df: DataFrame) -> int | None:
-    """Raise ``spark.sql.shuffle.partitions`` to a floor derived from
-    ``df``'s file-source scan size, session-sticky, never lowering.
+    """Partitions for the corpus-scale caches built from ``df``: the floor
+    derived from ``df``'s file-source scan size, never below the session's
+    ``spark.sql.shuffle.partitions`` (read, never written). None below the
+    threshold (a floor of at most one partition), where the caches keep
+    the session's plan.
 
-    Every corpus-scale pipeline entry calls this BEFORE its first wide
-    stage, so per-task state (signature-cache unroll, join builds, sort
-    runs) shrinks with corpus growth automatically instead of requiring
-    the operator to know the magic number. Input size comes
-    from the driver-side file listing (``df.inputFiles`` + stat for
-    ``file:`` URIs — zero Spark jobs). Frames with no stat-able local file
-    source (in-memory relations, RDD-backed plans, remote schemes) are
-    left alone: Catalyst's fallback ``sizeInBytes`` is NOT a usable proxy
-    here — it defaults to ``Long.MaxValue`` for RDD-backed plans and
-    multiplies children for joins, so trusting it once leaked a sticky
-    2048-partition conf into a test session and broke unrelated streaming
-    queries (no AQE coalescing there) with 2048-task state-store stages
-    overflowing ``spark.driver.maxResultSize``. Any input past the floor
-    threshold (a floor above one partition) also pins cached partitioning
-    (``canChangeCachedPlanOutputPartitioning=false``, see
-    ``_CACHED_PARTITIONING``), whether or not the conf had to be raised: a
-    session already at or above the floor (many cores) needs its caches
-    held at that count just as much, since the floor exists for the caches'
-    per-task state and AQE's coalescing inside cached plans would shrink
-    them back to a few partitions. ``restore_shuffle_partitions`` undoes
-    both. Returns the new floor, or None when the conf was not raised.
+    The corpus operators (minhash_lsh_pairs, canonical_keep_list,
+    decontaminate_canonical_lsh) call this before their first wide stage
+    and apply the count as an explicit ``repartition(n, *keys)`` where a
+    cache's input is exchanged anyway, so per-task cache state (signature
+    unroll, join builds, sort runs) shrinks with corpus growth while the
+    session's confs, and so every later query's plan, stay as they were.
+    Input size comes from the driver-side file listing (``df.inputFiles``
+    + stat for ``file:`` URIs — zero Spark jobs). Frames with no stat-able
+    local file source (in-memory relations, RDD-backed plans, remote
+    schemes) get None: Catalyst's fallback ``sizeInBytes`` is NOT a usable
+    proxy here — it defaults to ``Long.MaxValue`` for RDD-backed plans and
+    multiplies children for joins, so trusting it once sized a
+    2048-partition floor for a test session's in-memory frame.
     """
-    spark = df.sparkSession
     total = _local_input_bytes(df)
-    if total is None:
-        return None  # no stat-able file source -> leave the conf alone
+    if total is None or total // _SCALE_BYTES_PER_PARTITION <= 1:
+        return None
     try:
-        # conf read inside the fail-safe too (ADVICE r12): a non-numeric
-        # or unreadable session value must degrade to the documented
-        # leave-the-conf-alone no-op, not raise out of the operator
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # a non-numeric or unreadable session value degrades to the
+        # no-floor answer, not an error out of the operator (ADVICE r12)
+        cur = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
         return None
-    want = _partition_floor(total, cur)
-    if want is not None:
-        _raise_shuffle_partitions(spark, cur, want)
-        _LOG.warning(
-            "scale_partition_floor: raising spark.sql.shuffle.partitions "
-            "%d -> %d for a ~%.1f GB file-source corpus (sticky for this "
-            "session; AQE coalesces small shuffle partitions back, caches "
-            "persisted from now on keep the floor)",
-            cur,
-            want,
-            total / 2**30,
-        )
-    elif total // _SCALE_BYTES_PER_PARTITION > 1:
-        _pin_cached_partitioning(spark, cur)
-    return want
+    return _partition_floor(total, cur) or cur
+
+
+def _by_id(df: DataFrame, id_col: str, parts: int | None) -> DataFrame:
+    """``df`` as the input of a signed-frame cache under the partition
+    floor ``parts``: repartitioned to it on ``id_col``. The gram explode
+    never splits a document across partitions, so signature_sets' per-doc
+    aggregation then needs no exchange of its own: the documents ride this
+    one instead of the per-doc partial aggregates, the gram rows ride
+    none, and the signed frame keeps ``parts`` partitions."""
+    return df if parts is None else df.repartition(parts, id_col)
 
 
 def release_collapse_caches() -> int:
@@ -1050,17 +1004,14 @@ def _lsh_signed_source(
     collapse (None without one)."""
     from pyspark import StorageLevel
 
-    if sig_source is None:
-        # Size the shuffle floor from the source scan BEFORE the first
-        # wide stage — the exact-collapse groupBy and the eager member
-        # count below are corpus-scale shuffles too (ADVICE r12: the old
-        # placement below the collapse left them at the session default
-        # at octave scale; canonical_keep_list/decontaminate_canonical_lsh
-        # already floored before collapse, this entry did not).
-        scale_partition_floor(df)
+    # The partition floor, sized from the source scan: the collapse's
+    # group cache and the signed frame keep it (ADVICE r12: the collapse
+    # is a corpus-scale shuffle too). A shared sig_source is sized by its
+    # caller.
+    parts = None if sig_source is not None else scale_partition_floor(df)
     members = None
     if collapse_exact:
-        df, members = _exact_text_collapse(df, text_col, id_col)
+        df, members = _exact_text_collapse(df, text_col, id_col, parts)
     # (id, label) projection for bipartite filtering. Taken AFTER collapse,
     # which is sound only for content-determined labels (e.g.
     # text.hash_split): identical texts share a label, so the rep's label
@@ -1097,9 +1048,9 @@ def _lsh_signed_source(
             )
         src = sig_source
     else:
-        src = signature_sets(df, text_col, id_col, n, num_hashes).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        src = signature_sets(
+            _by_id(df, id_col, parts), text_col, id_col, n, num_hashes
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         # (src is materialized transitively by banded's eager count in
         # the cap audit — banded derives from src, so one job measures
         # both caches)
@@ -1436,30 +1387,28 @@ def _lsh_verify_grouped(
     # shuffle codec ENOSPCs (r11: 2700x needed zstd to complete), and
     # spark.io.compression.codec is immutable after session start — so
     # abort NOW naming the exact knobs instead of dying 10 minutes in.
-    # Clusters (non-local masters) only get the partition escalation:
-    # shuffle partitions ARE runtime-settable, so size them to keep
-    # each reduction task's hash table / sort run in memory and let
-    # AQE coalesce everything smaller right back (gate/bench plans are
-    # untouched — their volumes sit orders of magnitude below this).
+    # Otherwise a flood gets the partition escalation: the narrow
+    # reduction is repartitioned so each task's hash table / sort run
+    # stays in memory (gate/bench plans are untouched — their volumes
+    # sit orders of magnitude below this).
     spark = sized.sparkSession
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     action = _flood_escalation(
         audit.bucket_join_work,
         spark.sparkContext.master,
         spark.conf.get("spark.io.compression.codec", "lz4"),
-        cur,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
+    parts = None
     if action is not None:
         kind, payload = action
         if kind == "abort":
             raise RuntimeError(payload)
-        _raise_shuffle_partitions(spark, cur, payload)
+        parts = payload
         _LOG.warning(
-            "minhash_lsh_pairs: raising spark.sql.shuffle.partitions "
-            "-> %d for a ~%d-row narrow verify shuffle (sticky for "
-            "this session; AQE coalesces small partitions back)",
-            payload,
+            "minhash_lsh_pairs: repartitioning a ~%d-row narrow verify "
+            "reduction to %d partitions",
             audit.bucket_join_work,
+            parts,
         )
     # The packed location needs band in bits 55..62 (bands <= 256) and
     # i, j in 27 bits each (max kept bucket < 2^27, known from the audit
@@ -1469,8 +1418,10 @@ def _lsh_verify_grouped(
     pool = sized.filter(F.col("bsz") >= 2)
     if band_cols:
         binary = max_labels is not None and max_labels <= 2
-        return _grouped_cross_label(pool, band_src, binary, packed, threshold)
-    return _grouped_label_free(pool, band_src, packed, threshold)
+        return _grouped_cross_label(
+            pool, band_src, binary, packed, threshold, parts
+        )
+    return _grouped_label_free(pool, band_src, packed, threshold, parts)
 
 
 def _jaccard(sh_a: Column, sh_b: Column) -> Column:
@@ -1511,8 +1462,14 @@ def _narrow_candidates(
     )
 
 
-def _min_location(narrow: DataFrame, packed: bool) -> DataFrame:
+def _min_location(narrow: DataFrame, packed: bool, parts: int | None) -> DataFrame:
     """Each pair's minimum location, as (id_a, id_b, band, w, i, j, bkey).
+
+    ``parts`` (the flood escalation's count, else None): the reduction's
+    exchange becomes a repartition to it on the pair keys. The partial
+    aggregate then runs after the exchange; at flood scale it folded
+    little, since a pair's emissions come from different bands' buckets,
+    which sit in different map tasks.
 
     Packed (VERDICT r11 #2): min over a STRUCT compiles to SortAggregate
     (struct buffers aren't hash-agg mutable), which sorts the full narrow
@@ -1525,6 +1482,8 @@ def _min_location(narrow: DataFrame, packed: bool) -> DataFrame:
     occupies exactly one bucket and one (i, j), so bkey never tiebreaks
     and min(packed) selects the same row the lexicographic struct min
     does (pinned by test_once_per_pair_reduction_packed_is_hash_aggregable)."""
+    if parts is not None:
+        narrow = narrow.repartition(parts, "id_a", "id_b")
     if not packed:
         return (
             narrow.groupBy("id_a", "id_b")
@@ -1563,7 +1522,11 @@ def _min_location(narrow: DataFrame, packed: bool) -> DataFrame:
 
 
 def _grouped_label_free(
-    pool: DataFrame, src: DataFrame, packed: bool, threshold: float
+    pool: DataFrame,
+    src: DataFrame,
+    packed: bool,
+    threshold: float,
+    parts: int | None,
 ) -> DataFrame:
     """Grouped verification of the all-pairs contract: each bucket row
     holds its id-sorted (id, sh) structs in ``ds``, so i < j gives
@@ -1588,7 +1551,8 @@ def _grouped_label_free(
     a = F.element_at("ds", F.col("i"))
     b = F.element_at("ds", F.col("j"))
     ids = (a.getField("id").alias("id_a"), b.getField("id").alias("id_b"))
-    best = _min_location(_narrow_candidates(ex, ids, 0, packed), packed).drop("w")
+    narrow = _narrow_candidates(ex, ids, 0, packed)
+    best = _min_location(narrow, packed, parts).drop("w")
     # unhinted for the same 32g-OOM reason as the cross-label join
     # (AQE re-converts when safe)
     joined = best.join(grouped, ["band", "bkey"])
@@ -1603,6 +1567,7 @@ def _grouped_cross_label(
     binary: bool,
     packed: bool,
     threshold: float,
+    parts: int | None,
 ) -> DataFrame:
     """Grouped verification of the cross-label contract, BLOCK-SPLIT:
     each bucket splits into its min-label block ``da`` and the rest
@@ -1734,7 +1699,7 @@ def _grouped_cross_label(
         narrow = narrow.unionByName(
             _narrow_candidates(ndf, _ids(a_d, b_d), 1, packed)
         )
-    best = _min_location(narrow, packed)
+    best = _min_location(narrow, packed, parts)
     # (band, bkey) is the aggregation's own output
     # partitioning — only the narrow pair side exchanges. NO
     # static join hint: a forced shuffle_hash build of the
@@ -2101,8 +2066,9 @@ def canonical_keep_list(
     generation banded/bounded (recall then follows the LSH probability,
     which is why that shape is measured, not oracle-checked).
     """
-    scale_partition_floor(df)
-    reps, members = _exact_text_collapse(df, text_col, id_col)
+    reps, members = _exact_text_collapse(
+        df, text_col, id_col, scale_partition_floor(df)
+    )
     if pair_source is None:
         pairs = ngram_jaccard_pairs(reps, text_col, id_col, n, threshold)
     else:
@@ -2189,7 +2155,7 @@ def simhash_near_pairs(
         )
     members = None
     if collapse_exact:
-        df, members = _exact_text_collapse(df, text_col, id_col)
+        df, members = _exact_text_collapse(df, text_col, id_col, None)
     fps = simhash(df, text_col, id_col)
     width = 64 // chunks
     chunk_cols = [

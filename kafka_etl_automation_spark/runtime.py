@@ -2,15 +2,13 @@
 
 Operators build lazy Spark plans, but some of what they do while building
 outlives the call: cached intermediates, eager counts running on a daemon
-thread, a raised shuffle-partition conf, and observed metrics that arrive
-asynchronously. This module owns that state, so ``operators/`` and
-``streaming/`` hold none:
+thread, and observed metrics that arrive asynchronously. This module owns
+that state, so ``operators/`` and ``streaming/`` hold none, and no
+operator writes a session conf:
 
 - two bounded FIFO cache pools: :func:`persist` and :func:`release`;
 - async eager counts: :func:`eager_count`, :func:`settle`, and
   :func:`settle_on_exit`, which settles them on every exit of an operator;
-- the first-raise snapshot of the confs a partition floor changes:
-  :func:`snapshot_confs` and :func:`restore_confs`;
 - one bounded wait on an ``Observation``: :func:`observed`, and the
   observe-or-aggregate pattern built on it: :func:`run_observed`.
 
@@ -43,10 +41,6 @@ _POOLS: dict[str, list[DataFrame]] = {name: [] for name in POOL_CAPS}
 # (thread, box) per in-flight async count; the box receives any exception
 # the count raised, re-raised at settle so failures are never swallowed.
 _PENDING: list[tuple[threading.Thread, list]] = []
-
-# applicationId -> the confs as they were before the first partition
-# raise or cached-partitioning pin of that application.
-_SNAPSHOTS: dict[str, dict[str, str | None]] = {}
 
 # Bound on one wait for an observed metric, and the applications in which
 # a wait already timed out: their later waits return None at once.
@@ -193,32 +187,6 @@ def settle_on_exit():
             raise exc from count_exc
         raise
     settle()
-
-
-def snapshot_confs(spark, confs: dict[str, str | None]) -> None:
-    """Record ``confs`` as the application's values before its first
-    partition raise; a later call keeps the first snapshot."""
-    _SNAPSHOTS.setdefault(spark.sparkContext.applicationId, confs)
-
-
-def restore_confs(spark) -> dict[str, str | None] | None:
-    """Set the confs of the application's snapshot back (unsetting those
-    that were unset) and forget it. Returns the snapshot, or None when
-    nothing was raised."""
-    prev = _SNAPSHOTS.pop(spark.sparkContext.applicationId, None)
-    for key, value in (prev or {}).items():
-        if value is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, value)
-    if prev is not None:
-        _LOG.warning(
-            "restored %s to their values before the first partition raise "
-            "(streaming has no AQE coalescing; batch pipelines re-derive "
-            "their floor per call)",
-            prev,
-        )
-    return prev
 
 
 def observed(obs) -> dict | None:

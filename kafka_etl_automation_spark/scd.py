@@ -66,6 +66,24 @@ def _changed(attrs: Sequence[str]) -> F.Column:
     return cond
 
 
+def _one_row_per_key(incoming: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key (NULL keys group together): the row whose non-key
+    columns, as a struct in column order, are greatest. One aggregation,
+    like the ``dropDuplicates`` it replaces, whose survivor among
+    differing duplicates depended on row order. A single non-key column
+    takes a plain max (the same row): a struct buffer would turn a
+    fixed-width snapshot's hash aggregate into a sort-based one."""
+    rest = [c for c in incoming.columns if c not in keys]
+    if not rest:
+        return incoming.dropDuplicates(keys)
+    if len(rest) == 1:
+        top = [F.max(rest[0]).alias(rest[0])]
+    else:
+        top = [F.max(F.struct(*rest)).alias("_row")]
+        rest = ["_row.*"]
+    return incoming.groupBy(*keys).agg(*top).select(*keys, *rest).select(*incoming.columns)
+
+
 def scd_merge(
     current: DataFrame | None,
     incoming: DataFrame,
@@ -89,13 +107,18 @@ def scd_merge(
     delete — matching the reference, where deletes arrive as explicit
     reprocess/delete flows (rerunnability.sh), never inferred from a feed.
 
+    A snapshot that repeats a key keeps one row for it: the greatest of
+    its non-key columns compared as a struct, in column order, NULL below
+    any value (:func:`_one_row_per_key`). The result is the same however
+    the snapshot is ordered or partitioned.
+
     Returns the complete new dim state (history included for type 2).
     """
     scd_type = str(scd_type).lower().lstrip("type").strip() or "2"
     if scd_type not in {"static", "1", "2"}:
         raise ValueError(f"scd_type must be static/1/2, got {scd_type!r}")
     keys = list(keys)
-    incoming = _stamp_new(incoming.dropDuplicates(keys), run_id)
+    incoming = _stamp_new(_one_row_per_key(incoming, keys), run_id)
 
     if current is None or not current.columns:
         return incoming

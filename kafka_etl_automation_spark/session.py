@@ -22,11 +22,13 @@ def get_spark(
     """Build (or fetch) the engine SparkSession.
 
     Defaults follow the driver contract: ``local[$SPARK_GRAFT_CPUS]`` (32),
-    shuffle partitions ``max(cpus, 32)``, raised per input by the
-    corpus-scale pipelines (``dedup.scale_partition_floor``) — at 100 TB
-    you would size shuffle partitions to keep post-shuffle partitions
-    ~128-256 MB and let AQE coalesce, which is exactly what these settings
-    do at any scale.
+    shuffle partitions ``max(cpus, 32)`` — at 100 TB you would size shuffle
+    partitions to keep post-shuffle partitions ~128-256 MB and let AQE
+    coalesce, which is exactly what these settings do at any scale. The
+    corpus-scale pipelines size their own caches from their input
+    (``dedup.scale_partition_floor``, an explicit repartition); no
+    operator changes the session's confs, so a stream started later in
+    the same session plans with these values.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -161,13 +163,13 @@ def sql_confs(shuffle_partitions: int) -> dict[str, str]:
         # corpus caches) at all shuffle partitions, so each stage scanning
         # one runs that many near-empty tasks at gate/bench scale (the LSH
         # keep-list: ~500 tasks per call on 1,000 documents, ~40 with
-        # this). Spark reads the conf when a frame is persisted. The
-        # exception is corpus scale: dedup.scale_partition_floor (any
-        # file-backed input past its threshold, ~4 MiB, raised or not) and
-        # the LSH flood escalation pin this back to false until
-        # dedup.restore_shuffle_partitions, because there the partitions
-        # bound per-task cache state. Vanilla sessions keep Spark's
-        # default and produce the same outputs.
+        # this). Spark reads the conf when a frame is persisted. Corpus
+        # scale is the exception, where the partitions bound per-task
+        # cache state: past dedup.scale_partition_floor's threshold
+        # (~4 MiB of file-backed input) the corpus operators repartition
+        # their caches' inputs to its count, and AQE never coalesces such
+        # an exchange. Vanilla sessions keep Spark's default and produce
+        # the same outputs.
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         # Broadcast policy (r09): static threshold stays enabled — small
         # dims and EAGERLY-MATERIALIZED caches (whose InMemoryRelation

@@ -79,7 +79,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.io import append_rows, local_path, run_dir, write_dir
 
 AUDIT_SCHEMA = T.StructType(
@@ -285,12 +284,6 @@ def run_file_ingest(
     local table (:func:`io.local_path`), checked before the first batch.
     """
     local_path(audit_path)
-    # Streaming must not inherit a batch pipeline's raised shuffle floor
-    # (ADVICE r12 medium): no AQE coalescing in streaming, so a leaked
-    # 2048-partition conf turns every stateful stage into 2048 tasks and
-    # can overflow spark.driver.maxResultSize. No-op unless a floor was
-    # raised earlier in this session.
-    runtime.restore_confs(spark)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))

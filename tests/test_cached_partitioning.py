@@ -3,10 +3,11 @@ engine's confs.
 
 ``session.get_spark`` lets AQE coalesce inside cached plans, so the
 keep-list's persisted intermediates shrink to the partitions their bytes
-need instead of keeping every shuffle partition; an input past the
-partition floor's threshold (``dedup.scale_partition_floor``) pins cached
-partitioning so caches built afterwards keep the session's count. Task and job counts are read from the status
-store: unlike walls, host load cannot move them.
+need instead of keeping every shuffle partition; past the partition
+floor's threshold (``dedup.scale_partition_floor``) the corpus operators
+repartition their caches' inputs, so those caches keep the floor's count
+while the session's confs stay as they were. Task and job counts are read
+from the status store: unlike walls, host load cannot move them.
 
 The engine's SQL confs are scoped onto the shared vanilla test session
 and restored afterwards, so later tests still see a vanilla session.
@@ -100,42 +101,79 @@ def test_keep_list_task_and_job_budget(spark, docs, tmp_path):
     assert engine_rows == vanilla_rows and engine_rows
 
 
+def _confs(spark) -> dict[str, str]:
+    return dict(spark.conf.getAll)
+
+
+def _cached(spark, seen: set[int]) -> dict[str, int]:
+    """Partition count per cache materialized since ``seen`` (RDD ids),
+    keyed by the first operator line of its plan."""
+    out = {}
+    for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() not in seen:
+            lines = info.name().splitlines()
+            out[lines[min(1, len(lines) - 1)]] = info.numPartitions()
+    return out
+
+
 @pytest.mark.parametrize(
     "session_partitions, floor",
     [
-        (SHUFFLE_PARTITIONS, 48),  # the floor raises the conf
-        (40, 24),  # the session already exceeds the floor: no raise
+        (SHUFFLE_PARTITIONS, 48),  # the floor exceeds the session's count
+        (40, 24),  # the session already exceeds the floor
     ],
 )
-def test_partition_floor_pins_cached_partitioning(
+def test_partition_floor_repartitions_caches(
     spark, docs, tmp_path, monkeypatch, session_partitions, floor
 ):
-    """An input past the floor threshold pins cached partitioning, raised
-    or not: caches built afterwards keep the session's partition count."""
+    """An input past the floor threshold gets its corpus caches (the
+    collapse's group frame, the signed frame and its bands) repartitioned
+    to max(floor, session partitions), and leaves the confs alone."""
     size = dedup._local_input_bytes(docs)
     assert size is not None
     monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // floor)
-    engine = sql_confs(session_partitions)
     want = max(floor, session_partitions)
-    app = spark.sparkContext.applicationId
-    runtime._SNAPSHOTS.pop(app, None)
-    try:
-        with _scoped_confs(spark, engine):
-            _keep_list(docs, str(tmp_path / "keep"))
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
-            assert spark.conf.get(dedup._CACHED_PARTITIONING) == "false"
-            # grp was persisted after the pin: it keeps the count
-            assert _collapse_group_cache().rdd.getNumPartitions() == want
-            # restoring undoes the raise and the pin together
-            assert dedup.restore_shuffle_partitions(spark) == session_partitions
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                session_partitions
-            )
-            assert spark.conf.get(dedup._CACHED_PARTITIONING) == "true"
-    finally:
-        runtime._SNAPSHOTS.pop(app, None)
-    # outside the scope the vanilla session is back at Spark's default
-    assert spark.conf.get(dedup._CACHED_PARTITIONING, None) is None
+    with _scoped_confs(spark, sql_confs(session_partitions)):
+        before = _confs(spark)
+        assert dedup.scale_partition_floor(docs) == want
+        seen = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+        _keep_list(docs, str(tmp_path / "keep"))
+        assert _confs(spark) == before
+        assert _collapse_group_cache().rdd.getNumPartitions() == want
+        cached = _cached(spark, seen)
+        signed = {k: n for k, n in cached.items() if "collect_set" in k or "AS band" in k}
+        assert len(signed) == 2 and set(signed.values()) == {want}, cached
+
+
+def test_corpus_operators_leave_session_confs_unchanged(spark, docs, monkeypatch):
+    """No corpus operator changes a session conf, with the partition floor
+    and the LSH flood escalation both forced: every conf reads the same
+    before and after each call and its output's action, and the forced
+    repartitions leave the LSH pairs as they were."""
+    with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
+        plain = sorted(dedup.minhash_lsh_pairs(docs, max_bucket=1000).collect())
+    dedup.release_collapse_caches()
+    size = dedup._local_input_bytes(docs)
+    monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // 48)
+    monkeypatch.setattr(dedup, "_flood_escalation", lambda *a: ("raise_partitions", 64))
+    calls = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs, max_bucket=1000),
+        "canonical_keep_list": lambda: dedup.canonical_keep_list(docs),
+        "decontaminate_canonical_lsh": lambda: curation.decontaminate_canonical_lsh(
+            docs, max_bucket=1000
+        ),
+        "decontaminate_canonical": lambda: curation.decontaminate_canonical(docs),
+        "simhash_near_pairs": lambda: dedup.simhash_near_pairs(docs),
+    }
+    with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
+        for name, call in calls.items():
+            before = _confs(spark)
+            rows = sorted(call().collect())
+            assert _confs(spark) == before, name
+            if name == "minhash_lsh_pairs":
+                assert rows == plain and rows
+            dedup.release_collapse_caches()
+            runtime.release("corpus")
 
 
 def test_decontamination_job_budget(spark, docs, tmp_path):

@@ -27,9 +27,10 @@ def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp
     """_fanout_rebalance's JVM-side partition probe is a private API
     (df._jdf); the portable fallback must produce the identical decision
     when the private path breaks (VERDICT r03 #8). Adaptive (AQE-wrapped)
-    inputs included: the plan walk answers only where no shuffle lies on
-    the output path (a broadcast join over a file scan, read without a
-    job); a shuffle-topped input keeps the executing probe, whose count
+    inputs included: the plan walk answers where no shuffle lies on the
+    output path (a broadcast join over a file scan, read without a job)
+    and for an explicit repartition (AQE never changes its count); any
+    other shuffle-topped input keeps the executing probe, whose count
     after coalescing decides the fan-out."""
     from pyspark.sql.functions import broadcast
 
@@ -43,10 +44,11 @@ def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp
         # tiny shuffle: AQE coalesces it below defaultParallelism
         "shuffle_topped": scan.groupBy("doc_id").agg(F.max("text").alias("text")),
         "broadcast_over_scan": scan.join(broadcast(keep), "doc_id", "semi"),
+        "repartitioned": scan.repartition(2, "doc_id"),
     }
     jsc = spark.sparkContext._jsc.sc()
     walked = {}
-    for name in ("shuffle_topped", "broadcast_over_scan"):
+    for name in ("shuffle_topped", "broadcast_over_scan", "repartitioned"):
         plan = cases[name]._jdf.queryExecution().executedPlan()
         assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec", name
         before = int(jsc.dagScheduler().numTotalJobs())
@@ -54,6 +56,7 @@ def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp
         assert int(jsc.dagScheduler().numTotalJobs()) == before, name
     assert walked["shuffle_topped"] is None
     assert walked["broadcast_over_scan"] == scan.rdd.getNumPartitions()
+    assert walked["repartitioned"] == 2
 
     primary = {k: dedup._fanout_rebalance(df) for k, df in cases.items()}
 
@@ -67,7 +70,7 @@ def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp
             fallback.rdd.getNumPartitions() == primary[name].rdd.getNumPartitions()
         ), name
         assert sorted(fallback.collect()) == sorted(df.collect()), name
-    # every input here has fewer partitions than cores, so both fanned out
+    # every input here has fewer partitions than cores, so all fanned out
     # (the shuffle-topped one only after AQE coalesced it)
     assert {d.rdd.getNumPartitions() for d in primary.values()} == {
         spark.sparkContext.defaultParallelism
@@ -1122,7 +1125,7 @@ def test_collapse_cache_registry_bounded(spark):
         [(i, f"text {i % 3}") for i in range(12)], "doc_id long, text string"
     )
     for _ in range(runtime.POOL_CAPS["collapse"] + 3):
-        reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
+        reps, members = dedup._exact_text_collapse(df, "text", "doc_id", None)
         members.count()
     assert len(runtime._POOLS["collapse"]) <= runtime.POOL_CAPS["collapse"]
     assert dedup.release_collapse_caches() >= 1
@@ -1617,7 +1620,7 @@ def test_grouped_verify_matches_pairs(spark):
     t_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **tkw3))
     assert t_p == t_g and len(t_p) > 0
     # sig_source modes (the decontaminate_canonical_lsh passes)
-    reps, members = dedup._exact_text_collapse(df, "text", "doc_id")
+    reps, members = dedup._exact_text_collapse(df, "text", "doc_id", None)
     sig = (
         dedup.signature_sets(reps, "text", "doc_id", 3, 64)
         .join(
@@ -1896,11 +1899,11 @@ def test_flood_escalation_policy():
 
 
 def test_scale_partition_floor(spark, monkeypatch):
-    """r12: the scale-adaptive shuffle floor — partitions derive from
+    """r12: the scale-adaptive partition floor — partitions derive from
     the source scan size (~2 MiB/partition, anchored to r11's measured
-    512p @ 1.2 GB 2700x working point), never lower, and stay a no-op at
-    gate/bench SFs so boarded plans and walls are untouched."""
-    from kafka_etl_automation_spark import runtime
+    512p @ 1.2 GB 2700x working point), never below the session's count,
+    and None at gate/bench SFs so boarded plans are untouched. The
+    session's conf is read, never written."""
     from kafka_etl_automation_spark.catalog import load_tables
     from kafka_etl_automation_spark.operators import dedup
 
@@ -1913,16 +1916,14 @@ def test_scale_partition_floor(spark, monkeypatch):
     )
 
     docs = load_tables(spark, SF_SMALL, names=("documents",))["documents"]
-    # the floor is session-sticky by design, so an earlier test may have
-    # left the conf raised — pin a known starting point and restore after
     restore = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "4")
-        # gate-SF corpus sits far below the floor: conf untouched
+        # gate-SF corpus sits far below the floor
         assert dedup.scale_partition_floor(docs) is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
 
-        # an octave-sized corpus (simulated via the stat seam) raises it
+        # an octave-sized corpus (simulated via the stat seam) gets its
+        # floor, the same on every call, and the conf stays as it was
         import os as _os
 
         real_getsize = _os.path.getsize
@@ -1931,17 +1932,16 @@ def test_scale_partition_floor(spark, monkeypatch):
         )
         floor = dedup.scale_partition_floor(docs)
         assert floor is not None and floor > 4
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(floor)
-        # second call: already at the floor -> no further raise
-        assert dedup.scale_partition_floor(docs) is None
+        assert dedup.scale_partition_floor(docs) == floor
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+        # a session already above the floor keeps its own count
+        spark.conf.set("spark.sql.shuffle.partitions", str(floor + 1))
+        assert dedup.scale_partition_floor(docs) == floor + 1
 
-        # regression (r12): frames with NO stat-able file source must
-        # no-op — Catalyst's fallback sizeInBytes is Long.MaxValue for
+        # regression (r12): frames with NO stat-able file source get no
+        # floor — Catalyst's fallback sizeInBytes is Long.MaxValue for
         # RDD-backed plans and a child-product for joins, and trusting it
-        # once leaked a sticky 2048-partition conf that broke the
-        # streaming interval-join tests (2048-task state-store stages
-        # overflow spark.driver.maxResultSize; streaming has no AQE).
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        # once sized a 2048-partition floor for an in-memory frame.
         local = spark.createDataFrame([("a", 1)], ["text", "doc_id"])
         assert dedup.scale_partition_floor(local) is None
         rdd_backed = spark.createDataFrame(
@@ -1950,48 +1950,63 @@ def test_scale_partition_floor(spark, monkeypatch):
         assert dedup.scale_partition_floor(rdd_backed) is None
         joined = local.join(local.select("doc_id"), "doc_id")
         assert dedup.scale_partition_floor(joined) is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", restore)
-        # drop the first-raise snapshot this test's synthetic raise left,
-        # so a later streaming test's restore doesn't rewind to "4"
-        runtime._SNAPSHOTS.pop(spark.sparkContext.applicationId, None)
 
 
-def test_streaming_restores_pre_floor_partitions(spark, tmp_path, monkeypatch):
-    """VERDICT r12 #4 / ADVICE r12 medium: a streaming query started AFTER
-    a batch pipeline raised the scale-adaptive shuffle floor must see the
-    pre-pipeline partition setting — streaming gets no AQE coalescing, and
-    an inherited 2048-partition conf turns every state-store stage into
-    2048 tasks (the r12 maxResultSize incident). The lifecycle stream
-    builders pin their own scoped value; run_file_ingest (the remaining
-    unpinned entry) restores the first-raise snapshot before starting."""
-    from kafka_etl_automation_spark import runtime
+def test_streaming_after_floored_pipeline_keeps_session_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """VERDICT r12 #4 / ADVICE r12 medium: a stream started after a
+    floored batch pipeline runs at the session's shuffle partitions —
+    streaming gets no AQE coalescing, and an inherited 2048-partition
+    conf once turned every state-store stage into 2048 tasks (the r12
+    maxResultSize incident). The pipeline leaves the conf alone, so
+    run_file_ingest starts without writing any conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from kafka_etl_automation_spark.operators import dedup
     from kafka_etl_automation_spark.streaming import ingest
 
     restore = spark.conf.get("spark.sql.shuffle.partitions")
-    app = spark.sparkContext.applicationId
-    runtime._SNAPSHOTS.pop(app, None)
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
-        # simulate a floored batch pipeline: a real file-backed frame plus
-        # the stat seam the floor test uses, so the raise takes the exact
-        # production path (snapshot + conf set)
-        docs = spark.range(10).selectExpr("id AS doc_id", "'x y z' AS text")
+        # a floored batch pipeline: a real file-backed frame with the
+        # floor forced past the session's count
+        docs = spark.range(40).selectExpr(
+            "id AS doc_id", "concat('x y z w ', id % 3) AS text"
+        )
         src_dir = str(tmp_path / "floor_src")
         docs.write.parquet(src_dir)
         file_backed = spark.read.parquet(src_dir)
-        import os as _os
+        size = dedup._local_input_bytes(file_backed)
+        monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // 16)
+        assert dedup.scale_partition_floor(file_backed) == 16
+        assert dedup.minhash_lsh_pairs(file_backed, max_bucket=1000).count() > 0
+        dedup.release_collapse_caches()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
 
-        real_getsize = _os.path.getsize
-        monkeypatch.setattr(
-            dedup.os.path, "getsize", lambda p: real_getsize(p) + 2 * 2**30
-        )
-        assert dedup.scale_partition_floor(file_backed) is not None
-        monkeypatch.setattr(dedup.os.path, "getsize", real_getsize)
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 7
+        writes = []
 
+        def recorded(name):
+            real = getattr(RuntimeConfig, name)
+
+            def write(self, *args):
+                writes.append((name, args))
+                return real(self, *args)
+
+            return write
+
+        for name in ("set", "unset"):
+            monkeypatch.setattr(RuntimeConfig, name, recorded(name))
+        seen = []
+        real_write_dir = ingest.write_dir
+
+        def spy(df, *args, **kwargs):
+            seen.append(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            return real_write_dir(df, *args, **kwargs)
+
+        monkeypatch.setattr(ingest, "write_dir", spy)
         events = spark.range(4).selectExpr("id AS event_id", "id AS v")
         stream_src = str(tmp_path / "stream_src")
         events.coalesce(1).write.parquet(stream_src)
@@ -2006,14 +2021,13 @@ def test_streaming_restores_pre_floor_partitions(spark, tmp_path, monkeypatch):
             run_id=1,
             max_files_per_trigger=1,
         )
-        # the stream started (and the session continues) at the
-        # pre-pipeline setting, not the floored one
+        # every micro-batch ran at the session's count; nothing was set
+        assert seen and set(seen) == {"7"}
+        assert writes == []
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        # idempotent: nothing recorded anymore
-        assert dedup.restore_shuffle_partitions(spark) is None
     finally:
+        monkeypatch.undo()
         spark.conf.set("spark.sql.shuffle.partitions", restore)
-        runtime._SNAPSHOTS.pop(app, None)
 
 
 def test_ngram_overlap_bloom_generic_id_type(spark):

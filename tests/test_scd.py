@@ -65,6 +65,32 @@ def test_type2_null_business_key_no_fabricated_rows(spark):
     assert not any(r.k is None and r.seg is None for r in rows)
 
 
+@pytest.mark.parametrize("scd_type", ["static", "1", "2"])
+def test_duplicate_incoming_keys_keep_the_greatest_row(spark, scd_type):
+    """A snapshot repeating a key with different attributes keeps the row
+    with the greatest attribute struct, whatever the snapshot's order or
+    partitioning (``dropDuplicates`` kept whichever row came first)."""
+    dim = scd.scd_merge(None, snap(spark, [(1, "A"), (2, "B"), (3, "C")]), ["k"], "2", 1)
+    rows = [(1, "Z"), (1, None), (1, "M"), (2, "B"), (2, "A"), (4, "P"), (4, "Q")]
+    rows += [(None, "N1"), (None, "N2"), (5, None), (5, None)]
+    incoming = snap(spark, rows)
+    shuffled = incoming.orderBy(F.rand(7))
+    merged = [
+        sorted(map(tuple, scd.scd_merge(dim, frame, ["k"], scd_type, 2).collect()), key=repr)
+        for frame in (incoming.coalesce(1), shuffled.repartition(7), shuffled.coalesce(1))
+    ]
+    assert merged[0] == merged[1] == merged[2]
+    current = {
+        r.k: r.seg
+        for r in scd.scd_merge(dim, shuffled.repartition(7), ["k"], scd_type, 2).collect()
+        if r.record_status == "1" and r.create_job_run_id == 2
+    }
+    if scd_type == "static":
+        assert current == {4: "Q", None: "N2", 5: None}
+    elif scd_type == "2":
+        assert current == {1: "Z", 4: "Q", None: "N2", 5: None}
+
+
 def test_append_run_always_restamps(spark, tmp_root):
     path = os.path.join(tmp_root, "dim")
     df = spark.range(5).withColumn("create_job_run_id", F.lit(42).cast("long"))

@@ -5,9 +5,10 @@ dimension with the snapshot plus one ``explode``. The earlier form,
 kept here only as the reference, joined the open rows and unioned six
 branches over that join. Both are compared on seeded random inputs that
 hold NULL keys, NULL attributes, closed history, keys found only in
-closed rows and duplicate incoming keys (exact copies: which of several
-differing duplicates survives ``dropDuplicates`` is unspecified), and on
-a dimension with no attribute columns.
+closed rows and duplicate incoming keys, both exact copies and copies
+with different attributes (both forms keep the same one, by
+``scd._one_row_per_key``'s rule), and on a dimension with no attribute
+columns.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from kafka_etl_automation_spark import scd
 def _six_branch_type2(current, incoming, keys, run_id):
     """The Type-2 branch of scd_merge before the one-pass rewrite."""
     keys = list(keys)
-    incoming = scd._stamp_new(incoming.dropDuplicates(keys), run_id)
+    incoming = scd._stamp_new(scd._one_row_per_key(incoming, keys), run_id)
     attrs = scd._attrs(incoming, keys)
     cur = current.alias("cur")
     inc = incoming.alias("inc")
@@ -106,9 +107,8 @@ def _frames(spark, rng, keys, attrs):
         + ["create_job_run_id long", "update_job_run_id long", "record_status string"]
     )
     current = spark.createDataFrame(history, schema)
-    # One version per incoming key: which of several differing duplicates
-    # dropDuplicates keeps is arbitrary, so duplicates are exact copies.
-    # The snapshot always holds the NULL key and the closed-only key.
+    # One version per incoming key, then duplicates below. The snapshot
+    # always holds the NULL key and the closed-only key.
     versions = {}
     for row in rng.sample(history, k=len(history) // 2) + [None] * 6:
         key = row[: len(keys)] if row else tuple(pick[k]() for k in keys)
@@ -119,7 +119,10 @@ def _frames(spark, rng, keys, attrs):
     versions.setdefault(closed_only, tuple(pick[a]() for a in attrs))
     versions.setdefault(null_key, tuple(pick[a]() for a in attrs))
     snapshot = [(*key, *version) for key, version in versions.items()]
-    snapshot += rng.sample(snapshot, k=3)  # duplicate incoming keys
+    snapshot += rng.sample(snapshot, k=3)  # exact duplicate incoming keys
+    # ... and duplicates whose attributes differ
+    for row in rng.sample(snapshot, k=3):
+        snapshot.append((*row[: len(keys)], *[pick[a]() for a in attrs]))
     incoming = spark.createDataFrame(
         snapshot, ", ".join(f"{c} {_DDL[c]}" for c in keys + attrs)
     )

@@ -13,6 +13,10 @@ The sf_dir is an explicit flag (ADVICE r12): the old positional
 ``isdir(args[0])`` heuristic silently consumed a query name that happened
 to match a directory (e.g. 'plans' run from the repo root) and could then
 exit 0 having written nothing.
+
+Plans are written normalized: expression ids (``#123``) read ``#N`` and
+``plan_id=123`` reads ``plan_id=N``, so dumps of two trees compare with a
+plain ``diff -r``.
 """
 
 from __future__ import annotations
@@ -20,9 +24,16 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with its run-specific ids replaced: ``#123`` reads ``#N``
+    and ``plan_id=123`` reads ``plan_id=N``."""
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
 
 
 def main() -> int:
@@ -58,10 +69,11 @@ def main() -> int:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
+        plan = normalize(buf.getvalue())
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
-        print(f"  wrote {path} ({len(buf.getvalue())} chars)")
+            fh.write(plan)
+        print(f"  wrote {path} ({len(plan)} chars)")
         spark.catalog.clearCache()
     return 0
 
