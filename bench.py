@@ -216,8 +216,9 @@ def main() -> int:
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             return None
         finally:
-            # operators that persist() multi-branch intermediates (minhash
-            # LSH) would otherwise accumulate cached blocks across the run
+            # every query starts cold: the operators' bounded cache pools
+            # would otherwise carry one query's frames (the collapse maps
+            # of the same documents, say) into the next one's timing
             spark.catalog.clearCache()
         t2 = time.time()
         profiles.setdefault(name, []).append(

@@ -12,9 +12,13 @@ unbanded cross joins), so they scale to 100 TB by adding executors:
                     only materialize inside buckets.
 - simhash:          64-bit SimHash + chunk-banded Hamming candidates.
 
-Everything is pure Catalyst expressions (xxhash64, explode, groupBy) — no
-Python in the hot path. Determinism: all hash seeds are literals, so
-signatures are reproducible across runs/partitionings.
+Signatures, banding, candidates and verification are pure Catalyst
+expressions (xxhash64, explode, groupBy) — no Python there. The one
+Python kernel is connected components' one-task labelling (a
+``mapInPandas`` over the whole pair graph), taken only when the graph has
+at most ``_CC_ONE_TASK_MAX_EDGES`` rows; larger graphs run the Catalyst
+round loop. Determinism: all hash seeds are literals, so signatures are
+reproducible across runs/partitionings.
 """
 
 from __future__ import annotations
@@ -646,14 +650,16 @@ def _by_id(df: DataFrame, id_col: str, parts: int | None) -> DataFrame:
 
 
 def release_collapse_caches() -> int:
-    """Unpersist every member map cached by `_exact_text_collapse`.
+    """Unpersist every frame in the collapse pool: the group and member
+    maps of `_exact_text_collapse`, and the signed and banded frames of
+    minhash_lsh_pairs and simhash_near_pairs.
 
-    Call after materializing the result of a collapse-backed query
-    (minhash_lsh_pairs / simhash_near_pairs / dedup pipelines) to return
-    the cached (rep, member) partitions; re-running the result DataFrame
-    afterwards stays correct — it just recomputes the map. Without an
-    explicit call, `_exact_text_collapse` itself evicts FIFO past a small
-    cap, so long-lived sessions stay bounded either way (ADVICE r05).
+    Call after materializing the result of one of these queries (or of a
+    dedup pipeline built on them) to return the cached partitions;
+    re-running the result DataFrame afterwards stays correct — it just
+    recomputes them. Without an explicit call, the pool evicts FIFO past
+    a small cap, so long-lived sessions stay bounded either way (ADVICE
+    r05).
     Returns the number of frames released.
     """
     return runtime.release("collapse")
@@ -727,8 +733,6 @@ def minhash_lsh_pairs(
     bipartite=None,
     content_keyed: bool = False,
     sig_source: DataFrame | None = None,
-    bipartite_col: str | None = None,
-    verify: str | None = None,
     max_labels: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified with exact
@@ -753,22 +757,27 @@ def minhash_lsh_pairs(
         star is what makes ext_dedup_canonical_lsh documents-linear.
         Precision is unchanged — star candidates are exact-verified too.
 
-    ``bipartite``: optional Column over ``df``'s columns (e.g.
-    ``text.hash_split("text")``). Only candidates whose two sides DIFFER
-    on this label are emitted. For cross-split decontamination the
+    ``bipartite``: optional Column over the rows the call receives —
+    ``df``'s columns (e.g. ``text.hash_split("text")``), or in sig_source
+    mode ``sig_source``'s (e.g. ``F.col("_lbl")`` for a label carried
+    through :func:`signature_sets`). Only candidates whose two sides
+    DIFFER on this label are emitted. For cross-split decontamination the
     downstream filter discards same-split pairs anyway, so this is
     output-identical and removes the within-split (train-train) share —
-    the quadratic bulk — from the self-join. Mutually exclusive with
-    ``candidate_scope="star"``. With ``collapse_exact`` the label must be
-    CONTENT-determined (a function of ``text_col``, like ``hash_split``):
-    the label is evaluated once per distinct-text rep and inherited by
-    every member, which is exact iff identical texts share a label.
+    the quadratic bulk — from the self-join. The label rides the signed
+    frame as ``_lbl``: carried through the signature aggregation in df
+    mode, projected onto ``sig_source`` otherwise — never joined on.
+    Mutually exclusive with ``candidate_scope="star"``. With
+    ``collapse_exact`` the label must be CONTENT-determined (a function
+    of ``text_col``, like ``hash_split``): the label is evaluated once
+    per distinct-text rep and inherited by every member, which is exact
+    iff identical texts share a label.
 
-    ``verify`` (default ``None`` = CONTRACT-AWARE: ``"pairs"`` for
-    ``candidate_scope="star"``, ``"grouped"`` otherwise — the r10 octave
-    ladder measured the crossover, BENCH_SCALE.md round 10):
-      - ``"pairs"`` (the r09 shape; star's only shape): distinct candidate
-        pairs re-join both signature sets — each surviving candidate
+    Verification follows the contract (the r10 octave ladder measured the
+    crossover, BENCH_SCALE.md round 10; ``_verifies_per_pair`` is the one
+    place that decides):
+      - per pair, for ``candidate_scope="star"`` (the r09 shape): distinct
+        candidate pairs re-join both signature sets — each surviving candidate
         ships TWO ~|sh|-sized array copies through the verify joins, so
         verify shuffle bytes are quadratic in bucket occupancy (the
         measured 2700x ceiling: 1.3e9 surviving pairs x ~750B of sets ≈
@@ -781,10 +790,9 @@ def minhash_lsh_pairs(
         r=4 bands, so grouped re-intersected each star edge up to 16x:
         measured 16.5s vs 31.8s at 30x and 46.3s vs 112.7s at 300x on
         the keep-list pipeline; once-per-pair grouped still lost 2.3x at
-        900x (BENCH_SCALE.md round 11). Star with ``"grouped"`` raises
-        ValueError.
-      - ``"grouped"`` (per-BUCKET grouped verification with ONCE-PER-PAIR
-        Jaccard — VERDICT r10 #1; the default for the all-pairs and
+        900x (BENCH_SCALE.md round 11).
+      - grouped, for every other contract (per-BUCKET verification with
+        ONCE-PER-PAIR Jaccard — VERDICT r10 #1; the all-pairs and
         bipartite contracts): surviving bucket members (bucket size in
         [2, max_bucket]) join their hash set ONCE PER BUCKET MEMBERSHIP
         (<= bands copies per doc — LINEAR in corpus size), aggregate to
@@ -804,8 +812,9 @@ def minhash_lsh_pairs(
         Packing keeps the reduction a HashAggregate (VERDICT r11 #2);
         past its bounds (bands > 256, or a kept bucket of 2^27 docs) a
         min over a struct selects the same row.
-        Value-identical to "pairs" by construction — pinned by
-        tests/test_operators.py::test_grouped_verify_matches_pairs.
+        Value-identical to per-pair verification by construction —
+        pinned by tests/test_operators.py::test_grouped_verify_matches_pairs,
+        which patches ``_verifies_per_pair`` to get the reference.
 
     ``max_labels``: optional caller attestation that the bipartite label
     column takes at most this many distinct values; with 2 (the
@@ -883,15 +892,6 @@ def minhash_lsh_pairs(
         raise ValueError(
             f"candidate_scope must be 'all' or 'star', got {candidate_scope!r}"
         )
-    if verify is None:
-        verify = "pairs" if candidate_scope == "star" else "grouped"
-    if verify not in ("pairs", "grouped"):
-        raise ValueError(f"verify must be 'pairs' or 'grouped', got {verify!r}")
-    if candidate_scope == "star" and verify == "grouped":
-        raise ValueError(
-            "candidate_scope='star' and verify='grouped' are mutually "
-            "exclusive: star verifies its distinct edges by pairs"
-        )
     if isinstance(max_bucket, str):
         if max_bucket != "auto":
             raise ValueError(
@@ -908,7 +908,7 @@ def minhash_lsh_pairs(
         # for buckets holding >2 distinct labels, impossible under the
         # attestation. Wrong attestation = silently dropped cross-label
         # pairs among non-min labels, so this is opt-in, never inferred.
-        if bipartite is None and bipartite_col is None:
+        if bipartite is None:
             raise ValueError("max_labels is only meaningful with a bipartite label")
         if max_labels < 2:
             raise ValueError(f"max_labels must be >= 2, got {max_labels}")
@@ -917,29 +917,14 @@ def minhash_lsh_pairs(
             "candidate_scope='star' and bipartite are mutually exclusive: "
             "star edges all touch the bucket min regardless of label"
         )
-    if sig_source is not None:
+    if sig_source is not None and collapse_exact:
         # Shared-signature mode (VERDICT r07 #2): the caller pre-built the
         # (id, sh, mh0..mh{k-1}) frame — usually one signature_sets() pass
         # over a superset corpus, filtered per LSH pass — so this call does
-        # no shingling/collapsing of its own. Collapse/label semantics are
-        # the caller's job: pass ``bipartite_col`` (a label column already
-        # ON sig_source) for the cross-label contract.
-        if collapse_exact:
-            raise ValueError(
-                "sig_source requires collapse_exact=False: the caller owns "
-                "collapse"
-            )
-        if bipartite is not None:
-            raise ValueError(
-                "sig_source requires bipartite=None: put the label on the "
-                "signed frame and name it via bipartite_col"
-            )
-    elif bipartite_col is not None:
-        raise ValueError("bipartite_col is only valid with sig_source")
-    if bipartite_col is not None and candidate_scope == "star":
+        # no shingling/collapsing of its own.
         raise ValueError(
-            "candidate_scope='star' and bipartite_col are mutually exclusive: "
-            "star edges all touch the bucket min regardless of label"
+            "sig_source requires collapse_exact=False: the caller owns "
+            "collapse"
         )
     if bipartite is not None and collapse_exact and not content_keyed:
         # The label is evaluated once per distinct-text rep and inherited
@@ -957,11 +942,11 @@ def minhash_lsh_pairs(
             "row-identity labels"
         )
 
-    src, band_src, band_cols, members = _lsh_signed_source(
-        df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
-        sig_source, bipartite_col,
+    src, members = _lsh_signed_source(
+        df, text_col, id_col, n, num_hashes, collapse_exact, bipartite, sig_source
     )
-    banded = _lsh_bands(band_src, band_cols, bands, num_hashes // bands)
+    band_cols = [] if bipartite is None else ["_lbl"]
+    banded = _lsh_bands(src, band_cols, bands, num_hashes // bands)
     audit = _lsh_cap_audit(
         banded, band_cols, candidate_scope, max_bucket, stats is not None
     )
@@ -969,16 +954,14 @@ def minhash_lsh_pairs(
         banded, band_cols, candidate_scope, audit.effective_max_bucket
     )
     if stats is not None:
-        # Probe instrumentation: the audit's numbers come from the job
-        # that materialized the caches; only candidates_distinct costs a
-        # probe-only pass.
-        stats.update(audit._asdict(), candidates_distinct=cand.count())
-    if verify == "grouped":
-        verified = _lsh_verify_grouped(
-            sized, band_src, band_cols, audit, bands, threshold, max_labels
-        )
-    else:
+        # the audit's numbers come from the job that materialized the caches
+        stats.update(audit._asdict())
+    if _verifies_per_pair(candidate_scope):
         verified = _lsh_verify_pairs(cand, src, threshold)
+    else:
+        verified = _lsh_verify_grouped(
+            sized, src, band_cols, audit, bands, threshold, max_labels
+        )
     if members is None:
         return verified
     # jaccard(S, S) = n/n, exactly 1.0 in IEEE — same value the
@@ -993,41 +976,20 @@ def minhash_lsh_pairs(
     )
 
 
+def _verifies_per_pair(candidate_scope: str) -> bool:
+    """The verification rule (see minhash_lsh_pairs): star verifies its
+    distinct edges per pair, every other contract by bucket. Tests patch
+    it to run the per-pair reference on the grouped contracts."""
+    return candidate_scope == "star"
+
+
 def _lsh_signed_source(
-    df, text_col, id_col, n, num_hashes, collapse_exact, bipartite,
-    sig_source, bipartite_col,
-) -> tuple[DataFrame, DataFrame, list[str], DataFrame | None]:
-    """Stage 1 of minhash_lsh_pairs: ``(src, band_src, band_cols,
-    members)`` — the signed frame (id, sh, mh0..), the frame banding
-    reads (``src`` plus the cross-label contract's label as ``_lbl``),
-    the label columns banding carries, and the member map of the exact
-    collapse (None without one)."""
-    from pyspark import StorageLevel
-
-    # The partition floor, sized from the source scan: the collapse's
-    # group cache and the signed frame keep it (ADVICE r12: the collapse
-    # is a corpus-scale shuffle too). A shared sig_source is sized by its
-    # caller.
-    parts = None if sig_source is not None else scale_partition_floor(df)
-    members = None
-    if collapse_exact:
-        df, members = _exact_text_collapse(df, text_col, id_col, parts)
-    # (id, label) projection for bipartite filtering. Taken AFTER collapse,
-    # which is sound only for content-determined labels (e.g.
-    # text.hash_split): identical texts share a label, so the rep's label
-    # is every member's label. One row per doc, joined onto the one-row-
-    # per-doc src frame pre-explode so the banded rows carry it for free.
-    lbl = (
-        df.select(F.col(id_col).alias("id"), bipartite.alias("_lbl"))
-        if bipartite is not None
-        else None
-    )
-
-    # One pass builds BOTH the verification hash set and the signature;
-    # it feeds band generation and both verification sides. Persisted —
-    # one row per doc, a sliver of corpus size at any scale. In shared
-    # mode the caller owns sig_source's persistence (it is typically a
-    # filter over one persisted signed frame feeding several passes).
+    df, text_col, id_col, n, num_hashes, collapse_exact, bipartite, sig_source
+) -> tuple[DataFrame, DataFrame | None]:
+    """Stage 1 of minhash_lsh_pairs: ``(src, members)`` — the signed frame
+    (id, sh, mh0..[, _lbl]) every later stage reads, and the member map of
+    the exact collapse (None without one). The ``bipartite`` label rides
+    it as ``_lbl``."""
     if sig_source is not None:
         # Fail fast on a mis-built shared frame (ADVICE r08): a sig_source
         # carrying MORE mh columns than num_hashes would silently band
@@ -1046,36 +1008,49 @@ def _lsh_signed_source(
                 f"with more hashes than num_hashes={num_hashes}; banding "
                 "over a subset would silently change recall"
             )
-        src = sig_source
-    else:
-        src = signature_sets(
-            _by_id(df, id_col, parts), text_col, id_col, n, num_hashes
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # (src is materialized transitively by banded's eager count in
-        # the cap audit — banded derives from src, so one job measures
-        # both caches)
+        # The caller owns sig_source's persistence (it is typically a
+        # filter over one persisted signed frame feeding several passes)
+        # and its partition floor.
+        if bipartite is None:
+            return sig_source, None
+        return sig_source.withColumn("_lbl", bipartite), None
 
-    if lbl is not None:
-        return src, src.join(lbl, "id"), ["_lbl"], members
-    if bipartite_col is not None:
-        # label already rides the signed frame — no join, no extra scan
-        band_src = (
-            src
-            if bipartite_col == "_lbl"
-            else src.withColumnRenamed(bipartite_col, "_lbl")
-        )
-        return src, band_src, ["_lbl"], members
-    return src, src, [], members
+    # The partition floor, sized from the source scan: the collapse's
+    # group cache and the signed frame keep it (ADVICE r12: the collapse
+    # is a corpus-scale shuffle too).
+    parts = scale_partition_floor(df)
+    members = None
+    if collapse_exact:
+        df, members = _exact_text_collapse(df, text_col, id_col, parts)
+    # One pass builds BOTH the verification hash set and the signature;
+    # it feeds band generation and both verification sides. Persisted —
+    # one row per doc, a sliver of corpus size at any scale. The label is
+    # evaluated on the collapse's reps, which is sound only for
+    # content-determined labels (identical texts share a label, so the
+    # rep's label is every member's label).
+    src = runtime.persist(
+        "collapse",
+        signature_sets(
+            _by_id(df, id_col, parts),
+            text_col,
+            id_col,
+            n,
+            num_hashes,
+            carry=None if bipartite is None else {"_lbl": bipartite},
+        ),
+    )
+    # (src is materialized transitively by banded's eager count in the
+    # cap audit — banded derives from src, so one job measures both
+    # caches)
+    return src, members
 
 
 def _lsh_bands(
-    band_src: DataFrame, band_cols: list[str], bands: int, rows: int
+    src: DataFrame, band_cols: list[str], bands: int, rows: int
 ) -> DataFrame:
     """Stage 2a: one persisted (id[, _lbl], band, bkey) row per document
     and band; bkey hashes the band's ``rows`` signature mins. It feeds
     bucket sizing and both self-join sides — 16 narrow rows per doc."""
-    from pyspark import StorageLevel
-
     band_structs = [
         F.struct(
             F.lit(bid).alias("band"),
@@ -1085,15 +1060,15 @@ def _lsh_bands(
         )
         for bid in range(bands)
     ]
-    return (
-        band_src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
+    return runtime.persist(
+        "collapse",
+        src.select("id", *band_cols, F.explode(F.array(*band_structs)).alias("bb"))
         .select(
             "id",
             *band_cols,
             F.col("bb.band").alias("band"),
             F.col("bb.bkey").alias("bkey"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
     )
 
 
@@ -1333,7 +1308,7 @@ def _lsh_candidates(
 def _lsh_verify_pairs(
     cand: DataFrame, src: DataFrame, threshold: float
 ) -> DataFrame:
-    """Stage 4, ``verify="pairs"``: exact verification on candidates only —
+    """Stage 4, per pair (star): exact verification on candidates only —
     each pair re-joins the two hash SETS and intersects them worker-side;
     no inverted index, no per-shingle rows."""
     pa = src.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -1355,14 +1330,14 @@ def _lsh_verify_pairs(
 
 def _lsh_verify_grouped(
     sized: DataFrame,
-    band_src: DataFrame,
+    src: DataFrame,
     band_cols: list[str],
     audit: _CapAudit,
     bands: int,
     threshold: float,
     max_labels: int | None,
 ) -> DataFrame:
-    """Stage 4, ``verify="grouped"``: per-BUCKET verification with
+    """Stage 4, grouped (every other contract): per-BUCKET verification with
     once-per-pair Jaccard (see minhash_lsh_pairs), after the plan-time
     flood policy.
 
@@ -1419,9 +1394,9 @@ def _lsh_verify_grouped(
     if band_cols:
         binary = max_labels is not None and max_labels <= 2
         return _grouped_cross_label(
-            pool, band_src, binary, packed, threshold, parts
+            pool, src, binary, packed, threshold, parts
         )
-    return _grouped_label_free(pool, band_src, packed, threshold, parts)
+    return _grouped_label_free(pool, src, packed, threshold, parts)
 
 
 def _jaccard(sh_a: Column, sh_b: Column) -> Column:
@@ -1563,7 +1538,7 @@ def _grouped_label_free(
 
 def _grouped_cross_label(
     pool: DataFrame,
-    band_src: DataFrame,
+    src: DataFrame,
     binary: bool,
     packed: bool,
     threshold: float,
@@ -1597,9 +1572,8 @@ def _grouped_cross_label(
         .filter(F.col("_nl") >= 2)
         .select("id", "band", "bkey", "_nl", "_lbl0")
     )
-    # _lbl rides src (sig_source mode) or joins on via lbl — in
-    # both cases band_src carries it alongside sh
-    sh_map = band_src.select("id", "_lbl", "sh")
+    # _lbl rides the signed frame alongside sh
+    sh_map = src.select("id", "_lbl", "sh")
     # array_sort is LOAD-BEARING, not cosmetic: collect_list's
     # element order over a shuffle is nondeterministic across
     # (re-)executions, and the once-per-pair shape evaluates this

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.functions import scalar
 from kafka_etl_automation_spark.operators.dedup import _fanout_rebalance
 
@@ -376,8 +377,9 @@ def kmeans_convergence(
     shift is a zip_with/aggregate over centroid pairs, and the returned
     frame is ``iters`` rows — no data row ever reaches the driver. At
     100 TB the marginal cost over plain training is one n_cells-row join
-    per iteration: free."""
-    from pyspark import StorageLevel
+    per iteration: free. The centroid frames go to the runtime's corpus
+    pool; with more ``iters`` than its cap the earliest are evicted and
+    recomputed when the metric union runs."""
     from functools import reduce
 
     # assignment multiplies CPU x n_cells per row; a small parquet corpus
@@ -401,7 +403,7 @@ def kmeans_convergence(
     )
     metrics = []
     for i in range(1, iters + 1):
-        new = _lloyd_step(v, cent).persist(StorageLevel.MEMORY_AND_DISK)
+        new = runtime.persist("corpus", _lloyd_step(v, cent))
         pair = (
             cent.select("cell", F.col("ce").alias("prev"))
             .join(new.select("cell", F.col("ce").alias("cur")), "cell")
@@ -473,11 +475,7 @@ def kmeans_centroids(
     # n_cells rows; persisted because callers (ivf_topk) reference the
     # centroid frame from two plan branches (vector + query assignment) —
     # without this the whole Lloyd lineage executes twice
-    from pyspark import StorageLevel
-
-    return cent.select("cell", F.col("ce").alias("cvec")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    return runtime.persist("corpus", cent.select("cell", F.col("ce").alias("cvec")))
 
 
 def ivf_topk(

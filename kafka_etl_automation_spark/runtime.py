@@ -30,11 +30,17 @@ _LOG = logging.getLogger(__name__)
 
 # Pool caps. Evicted frames stay correct (they recompute on their next
 # action); a cap only bounds what a long-lived session that never releases
-# keeps cached (ADVICE r05). collapse: the exact collapse caches two frames
-# per call, simhash's banded frame one. corpus: decontaminate_canonical
-# caches one frame per call, decontaminate_canonical_lsh three (reps, the
-# signed frame, the pass-2 corpus rows), so 6 keeps the two most recent
-# calls warm.
+# keeps cached (ADVICE r05), and is set so that no call evicts a frame it
+# still reads. collapse: the exact collapse caches its group and member
+# maps, minhash_lsh_pairs its signed frame (unless the caller passes one)
+# and its banded rows, simhash its banded frame. The most one call holds
+# is 4: a collapse-backed LSH call, a keep-list over an LSH pair source,
+# or decontaminate_canonical_lsh (the collapse's two maps and one banded
+# frame per pass). corpus: decontaminate_canonical caches one frame per
+# call, decontaminate_canonical_lsh three (reps, the signed frame, the
+# pass-2 corpus rows), kmeans_centroids one and kmeans_convergence one per
+# iteration, so 6 keeps the two most recent decontaminations warm and past
+# 6 iterations kmeans_convergence evicts its earliest.
 POOL_CAPS = {"collapse": 4, "corpus": 6}
 _POOLS: dict[str, list[DataFrame]] = {name: [] for name in POOL_CAPS}
 
@@ -116,6 +122,25 @@ def _unpersist(frame: DataFrame) -> bool:
     return True
 
 
+def _same_plan(a: DataFrame, b: DataFrame) -> bool:
+    try:
+        return a.sameSemantics(b)
+    except Exception:  # e.g. one session is gone: it holds no cache
+        return False
+
+
+def _drop(frame: DataFrame) -> bool:
+    """Unpersist a frame that has left its pool, unless a frame still
+    pooled has the same plan. Spark keeps one cache per plan, so that
+    unpersist would free the other frame's cache: a frame
+    ``catalog.clearCache`` already freed stays in its pool, and a later
+    call may cache its plan again (two queries signing the same
+    documents with the same label)."""
+    if any(_same_plan(frame, f) for p in _POOLS.values() for f in p):
+        return True
+    return _unpersist(frame)
+
+
 def persist(pool: str, frame: DataFrame, eager: bool = False) -> DataFrame:
     """Persist ``frame`` into ``pool`` ("collapse" or "corpus"), evicting
     oldest-first BEFORE appending so the live set never exceeds the pool's
@@ -128,7 +153,7 @@ def persist(pool: str, frame: DataFrame, eager: bool = False) -> DataFrame:
     caches."""
     cached = _POOLS[pool]
     while len(cached) >= POOL_CAPS[pool]:
-        _unpersist(cached.pop(0))
+        _drop(cached.pop(0))
     out = frame.persist(_storage_level(frame))
     if eager:
         out.count()
@@ -143,7 +168,7 @@ def release(pool: str) -> int:
     rest of the session and is unpersisted again on eviction (ADVICE
     r11)."""
     cached, _POOLS[pool] = _POOLS[pool], []
-    return sum(_unpersist(c) for c in cached)
+    return sum(_drop(c) for c in cached)
 
 
 def eager_count(frame: DataFrame, overlap: bool) -> None:

@@ -1,11 +1,15 @@
-"""Operators and streaming code never write a session conf.
+"""Operators and streaming code never write a session conf, and cache
+only through the runtime's bounded pools.
 
 A conf an operator sets outlives its call: every later query in the
 session plans with it, and a stateful stream fixes its state partitions
-from ``spark.sql.shuffle.partitions`` when it starts. This walks the
-source with ``ast``, so code paths no test drives (a cluster-only branch)
-are covered too: any ``<x>.conf.set(...)`` or ``<x>.conf.unset(...)``
-call under ``operators/`` or ``streaming/`` fails it.
+from ``spark.sql.shuffle.partitions`` when it starts. A frame an operator
+persists outside ``runtime.persist`` outlives its call too, and neither
+the pool caps nor a release ever frees it. This walks the source with
+``ast``, so code paths no test drives (a cluster-only branch) are covered
+too: any ``<x>.conf.set(...)`` or ``<x>.conf.unset(...)`` call, and any
+``.persist(...)`` or ``.cache(...)`` call other than ``runtime.persist``,
+under ``operators/`` or ``streaming/`` fails it.
 """
 
 from __future__ import annotations
@@ -18,15 +22,26 @@ import kafka_etl_automation_spark
 PACKAGE = Path(kafka_etl_automation_spark.__file__).parent
 
 
-def _conf_writes(path: Path) -> list[str]:
+def _is_conf_write(f: ast.Attribute) -> bool:
+    return (
+        f.attr in ("set", "unset")
+        and isinstance(f.value, ast.Attribute)
+        and f.value.attr == "conf"
+    )
+
+
+def _is_unpooled_cache(f: ast.Attribute) -> bool:
+    pooled = isinstance(f.value, ast.Name) and f.value.id == "runtime"
+    return f.attr in ("persist", "cache") and not pooled
+
+
+def _violations(path: Path) -> list[str]:
     found = []
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("set", "unset")
-            and isinstance(node.func.value, ast.Attribute)
-            and node.func.value.attr == "conf"
+            and (_is_conf_write(node.func) or _is_unpooled_cache(node.func))
         ):
             found.append(f"{path}:{node.lineno}")
     return found
@@ -37,7 +52,7 @@ def test_operators_and_streaming_write_no_conf():
         f for d in ("operators", "streaming") for f in (PACKAGE / d).rglob("*.py")
     )
     assert files
-    assert [w for f in files for w in _conf_writes(f)] == []
+    assert [w for f in files for w in _violations(f)] == []
 
 
 def test_the_walk_finds_a_conf_write(tmp_path):
@@ -48,4 +63,15 @@ def test_the_walk_finds_a_conf_write(tmp_path):
         "    df.sparkSession.conf.unset('k')\n"
         "    spark.conf.get('k')\n"
     )
-    assert len(_conf_writes(src)) == 2
+    assert len(_violations(src)) == 2
+
+
+def test_the_walk_finds_an_unpooled_cache(tmp_path):
+    src = tmp_path / "op.py"
+    src.write_text(
+        "def f(df):\n"
+        "    a = df.persist()\n"
+        "    b = df.select('x').cache()\n"
+        "    return runtime.persist('collapse', df), a, b\n"
+    )
+    assert [w.rsplit(":", 1)[1] for w in _violations(src)] == ["2", "3"]

@@ -285,6 +285,8 @@ def test_kmeans_train_mod_samples_iterations_not_seed(spark):
     """train_mod trains Lloyd on the 1/m id-modulus sample but must still
     seed from the full set (n_cells centroids even when the sample misses
     low ids) and keep search results exact-scored."""
+    from kafka_etl_automation_spark import runtime
+
     emb = spark.createDataFrame(
         [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(40)],
         "vec_id long, embedding array<float>",
@@ -308,7 +310,7 @@ def test_kmeans_train_mod_samples_iterations_not_seed(spark):
             exact[(r.query_id, r.neighbor_id)] == r.cosine for r in got
         )
     finally:
-        cent.unpersist()
+        runtime.release("corpus")  # the centroid frame is pooled
 
 
 def test_winnowing_shared_run_guarantee(spark):
@@ -683,6 +685,36 @@ def test_minhash_candidate_scopes(spark):
         ).collect()
     }
     assert via_src == allp
+
+
+def test_bipartite_label_rides_the_signed_frame(spark):
+    """The bipartite label is carried through the signature aggregation,
+    never joined onto the signed frame: on a file-backed input the
+    bipartite call's plan scans the documents exactly as often as the
+    label-free call with the same parameters (a joined label projection
+    added a scan of its own)."""
+    from kafka_etl_automation_spark.catalog import load_tables
+
+    docs = load_tables(spark, SF_SMALL, names=("documents",))["documents"]
+    kw = dict(
+        n=3, num_hashes=64, bands=32, threshold=0.2, max_bucket=1000,
+        collapse_exact=False,
+    )
+
+    def scans(d):
+        d.collect()
+        return d._jdf.queryExecution().executedPlan().toString().count("FileScan")
+
+    try:
+        free = scans(dedup.minhash_lsh_pairs(docs, **kw))
+        bip = scans(
+            dedup.minhash_lsh_pairs(
+                docs, bipartite=text.hash_split("text", 90), max_labels=2, **kw
+            )
+        )
+    finally:
+        dedup.release_collapse_caches()
+    assert free > 0 and bip == free, (free, bip)
 
 
 def test_lsh_recall_floors(spark):
@@ -1549,17 +1581,23 @@ def test_exploded_shingles_matches_shingles(spark):
     assert len([1 for i, _ in got if i == 90001]) == 2  # distinct, not 6
 
 
-def test_grouped_verify_matches_pairs(spark):
+def _per_pair_reference(monkeypatch, df, **kw):
+    """minhash_lsh_pairs with the contract's verification decision patched
+    to per-pair verification, whatever the contract."""
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_verifies_per_pair", lambda scope: True)
+        return dedup.minhash_lsh_pairs(df, **kw)
+
+
+def test_grouped_verify_matches_pairs(spark, monkeypatch):
     """VERDICT r09 #1: per-BUCKET grouped verification (ship each bucket's
     c signature sets once instead of c² pair copies) must be VALUE-identical
     to the per-pair verify-join shape on every contract it serves —
     all-pairs with exact collapse (member fan-out + within-group identity
     pairs included), bipartite, and the shared-signature sig_source mode
-    the canonical decontamination pipeline uses. Star scope verifies by
-    pairs only, and the retired r10 per-band shape is rejected."""
-    from pyspark import StorageLevel
-
-    from kafka_etl_automation_spark.operators import dedup, text
+    the canonical decontamination pipeline uses. The per-pair reference
+    comes from patching the one verification decision."""
+    from kafka_etl_automation_spark import runtime
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     other = "totally different content about spark execution engines"
@@ -1579,16 +1617,27 @@ def test_grouped_verify_matches_pairs(spark):
     def res(d):
         return sorted((r.id_a, r.id_b, round(r.jaccard, 12)) for r in d.collect())
 
+    def ref(d, **kw):
+        return res(_per_pair_reference(monkeypatch, d, **kw))
+
+    def analyzed(d):
+        return d._jdf.queryExecution().analyzed().toString()
+
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.3)
-    # all-pairs, collapse on (ext_minhash_lsh contract); r11: "grouped" is
+    # all-pairs, collapse on (ext_minhash_lsh contract); r11: grouped is
     # the once-per-pair min-band shape
-    a_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
-    a_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **kw))
-    assert a_p == a_g and len(a_p) > 10
-    # star (keep-list contract) verifies by pairs only
-    skw = dict(kw, collapse_exact=False, candidate_scope="star")
-    with pytest.raises(ValueError, match="star"):
-        dedup.minhash_lsh_pairs(df, verify="grouped", **skw)
+    grouped = dedup.minhash_lsh_pairs(df, **kw)
+    reference = _per_pair_reference(monkeypatch, df, **kw)
+    # the patched decision really builds the per-pair shape
+    assert "collect_list" in analyzed(grouped)
+    assert "collect_list" not in analyzed(reference)
+    a_p = res(reference)
+    assert a_p == res(grouped) and len(a_p) > 10
+    # star (keep-list contract) verifies per pair
+    star = dedup.minhash_lsh_pairs(
+        df, collapse_exact=False, candidate_scope="star", **kw
+    )
+    assert "collect_list" not in analyzed(star)
     # bipartite with content-keyed label (cross-split contract)
     bkw = dict(
         kw,
@@ -1597,15 +1646,13 @@ def test_grouped_verify_matches_pairs(spark):
         bipartite=text.hash_split("text", 50),
         content_keyed=True,
     )
-    b_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
-    b_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **bkw))
-    assert b_p == b_g
+    b_p = ref(df, **bkw)
+    assert b_p == res(dedup.minhash_lsh_pairs(df, **bkw))
     # attested-binary label (hash_split): the plan-time branch skip must
     # be value-identical to the unattested plan
-    b_a = res(dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw))
-    assert b_p == b_a
+    assert b_p == res(dedup.minhash_lsh_pairs(df, max_labels=2, **bkw))
     with pytest.raises(ValueError, match="max_labels"):
-        dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **kw)
+        dedup.minhash_lsh_pairs(df, max_labels=2, **kw)
     # >2 distinct labels exercises grouped's within-db enumeration branch
     # (the min-label block-split covers only cross pairs touching the min
     # label; label2 x label3 pairs come from the nl>2-gated branch)
@@ -1616,36 +1663,28 @@ def test_grouped_verify_matches_pairs(spark):
         collapse_exact=False,
         bipartite=F.pmod(F.xxhash64("text"), F.lit(3)),
     )
-    t_p = res(dedup.minhash_lsh_pairs(df, verify="pairs", **tkw3))
-    t_g = res(dedup.minhash_lsh_pairs(df, verify="grouped", **tkw3))
-    assert t_p == t_g and len(t_p) > 0
-    # sig_source modes (the decontaminate_canonical_lsh passes)
-    reps, members = dedup._exact_text_collapse(df, "text", "doc_id", None)
-    sig = (
-        dedup.signature_sets(reps, "text", "doc_id", 3, 64)
-        .join(
-            reps.select(
-                F.col("doc_id").alias("id"),
-                text.hash_split("text", 50).alias("_lbl"),
-            ),
-            "id",
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    t_p = ref(df, **tkw3)
+    assert t_p == res(dedup.minhash_lsh_pairs(df, **tkw3)) and len(t_p) > 0
+    # sig_source mode (the decontaminate_canonical_lsh cross-split pass):
+    # the label is carried through the signature aggregation and named
+    # by a Column over the signed rows
+    reps, _members = dedup._exact_text_collapse(df, "text", "doc_id", None)
+    sig = runtime.persist(
+        "corpus",
+        dedup.signature_sets(
+            reps, "text", "doc_id", 3, 64,
+            carry={"_lbl": text.hash_split("text", 50)},
+        ),
+        eager=True,
     )
-    sig.count()
     gkw = dict(
-        n=3, num_hashes=64, bands=32, threshold=0.2,
-        collapse_exact=False, sig_source=sig, bipartite_col="_lbl",
+        n=3, num_hashes=64, bands=32, threshold=0.2, collapse_exact=False,
+        sig_source=sig, bipartite=F.col("_lbl"), max_labels=2,
     )
-    assert res(dedup.minhash_lsh_pairs(None, verify="pairs", **gkw)) == res(
-        dedup.minhash_lsh_pairs(None, verify="grouped", **gkw)
-    )
-    sig.unpersist()
-    with pytest.raises(ValueError, match="verify"):
-        dedup.minhash_lsh_pairs(df, verify="bogus", **kw)
-    # the r10 per-band control shape is retired
-    with pytest.raises(ValueError, match="verify"):
-        dedup.minhash_lsh_pairs(df, verify="grouped_perband", **kw)
+    g_p = ref(None, **gkw)
+    assert g_p == res(dedup.minhash_lsh_pairs(None, **gkw)) and len(g_p) > 0
+    runtime.release("corpus")
+    dedup.release_collapse_caches()
 
 
 def test_lsh_cap_stats_are_loud(spark):
@@ -1812,7 +1851,7 @@ def test_auto_max_bucket_resolution(spark, caplog, monkeypatch):
         dedup.minhash_lsh_pairs(df, max_bucket=1, **kw)
 
 
-def test_once_per_pair_reduction_packed_is_hash_aggregable(spark):
+def test_once_per_pair_reduction_packed_is_hash_aggregable(spark, monkeypatch):
     """VERDICT r11 #2: the once-per-pair reduction's min over a STRUCT
     compiled to SortAggregate — a full sort (+ spill) of the narrow
     candidate stream, the dominant remaining flood-octave cost. The packed
@@ -1837,11 +1876,15 @@ def test_once_per_pair_reduction_packed_is_hash_aggregable(spark):
         return d._jdf.queryExecution().executedPlan().toString()
 
     kw = dict(n=3, num_hashes=64, bands=16, threshold=0.2)
-    packed = dedup.minhash_lsh_pairs(df, verify="grouped", **kw)
+
+    def ref(**kw_):
+        return res(_per_pair_reference(monkeypatch, df, **kw_))
+
+    packed = dedup.minhash_lsh_pairs(df, **kw)
     assert "SortAggregate" not in plan(packed)
     assert "partial_min_by" in plan(packed)  # map-side combine is real
     r_packed = res(packed)
-    assert r_packed == res(dedup.minhash_lsh_pairs(df, verify="pairs", **kw))
+    assert r_packed == ref(**kw)
     assert len(r_packed) > 0
 
     # bipartite block-split contract (both the attested-binary and
@@ -1849,25 +1892,25 @@ def test_once_per_pair_reduction_packed_is_hash_aggregable(spark):
     bkw = dict(
         kw, bands=32, bipartite=text.hash_split("text", 50), content_keyed=True
     )
-    bp = dedup.minhash_lsh_pairs(df, verify="grouped", **bkw)
+    bp = dedup.minhash_lsh_pairs(df, **bkw)
     assert "SortAggregate" not in plan(bp)
-    assert res(bp) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **bkw))
-    ba = dedup.minhash_lsh_pairs(df, verify="grouped", max_labels=2, **bkw)
+    assert res(bp) == ref(**bkw)
+    ba = dedup.minhash_lsh_pairs(df, max_labels=2, **bkw)
     assert "SortAggregate" not in plan(ba)
     assert res(ba) == res(bp)
 
     # 257 bands overflow the packed band field (bits 55..62): the struct
     # fallback, on the label-free and the unattested cross-label plans
     wide = dict(kw, num_hashes=257, bands=257)
-    fb = dedup.minhash_lsh_pairs(df, verify="grouped", **wide)
+    fb = dedup.minhash_lsh_pairs(df, **wide)
     assert "SortAggregate" in plan(fb)
     r_fb = res(fb)
-    assert r_fb == res(dedup.minhash_lsh_pairs(df, verify="pairs", **wide))
+    assert r_fb == ref(**wide)
     assert len(r_fb) > 0
     bwide = dict(bkw, num_hashes=257, bands=257)
-    bfb = dedup.minhash_lsh_pairs(df, verify="grouped", **bwide)
+    bfb = dedup.minhash_lsh_pairs(df, **bwide)
     assert "SortAggregate" in plan(bfb)
-    assert res(bfb) == res(dedup.minhash_lsh_pairs(df, verify="pairs", **bwide))
+    assert res(bfb) == ref(**bwide)
 
 
 def test_flood_escalation_policy():
@@ -2107,13 +2150,12 @@ def test_grouped_bucket_blocks_are_sorted(spark):
         return d._jdf.queryExecution().analyzed().toString()
 
     # label-free contract: the single ds block
-    p = agg_plan(dedup.minhash_lsh_pairs(df, verify="grouped", **kw))
+    p = agg_plan(dedup.minhash_lsh_pairs(df, **kw))
     assert p.count("array_sort(collect_list") >= 1
     # cross-label contract: BOTH blocks (da and db) sorted
     bp = agg_plan(
         dedup.minhash_lsh_pairs(
             df,
-            verify="grouped",
             bipartite=text.hash_split("text", 50),
             content_keyed=True,
             **kw,

@@ -201,7 +201,7 @@ def test_flood_abort_settles_the_collapse_count(spark, monkeypatch):
     monkeypatch.setattr(dedup, "_AUDIT_SKIP_MAX_WORST", 0)
     try:
         with pytest.raises(RuntimeError, match="ENOSPC"):
-            dedup.minhash_lsh_pairs(docs, verify="grouped")
+            dedup.minhash_lsh_pairs(docs)
         assert not runtime._PENDING
         assert not [
             t for t in threading.enumerate()
@@ -209,3 +209,65 @@ def test_flood_abort_settles_the_collapse_count(spark, monkeypatch):
         ]
     finally:
         dedup.release_collapse_caches()
+
+
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_operator_caches_stay_in_the_bounded_pools(spark):
+    """Every frame the LSH and k-means operators cache goes to a runtime
+    pool: calls on distinct inputs keep at most the pools' caps cached,
+    and releasing the pools leaves none of their frames behind. Counted
+    by RDD id: frames earlier tests left behind may be cleaned meanwhile."""
+    from kafka_etl_automation_spark.operators import similarity
+
+    docs = load_tables(spark, SF_SMALL, names=("documents",))["documents"]
+    runtime.release("collapse")
+    runtime.release("corpus")
+    base = _persisted(spark)
+    caps = runtime.POOL_CAPS
+    try:
+        for i in range(4):
+            sub = docs.filter(F.col("doc_id") % 5 != i)
+            dedup.minhash_lsh_pairs(sub, max_bucket=1000).count()
+            assert len(_persisted(spark) - base) <= caps["collapse"]
+        for i in range(3):
+            emb = spark.createDataFrame(
+                [(j, [float((j + i) % 7), float(j % 5), 1.0]) for j in range(24)],
+                "vec_id long, embedding array<float>",
+            )
+            similarity.kmeans_convergence(emb, n_cells=2, iters=2).collect()
+            similarity.kmeans_centroids(emb, n_cells=2, iters=1).collect()
+            assert len(_persisted(spark) - base) <= caps["collapse"] + caps["corpus"]
+    finally:
+        runtime.release("collapse")
+        runtime.release("corpus")
+    assert not _persisted(spark) - base
+
+
+def test_eviction_keeps_a_cache_another_pooled_frame_shares(spark, monkeypatch):
+    """Spark keeps one cache per plan. A frame ``catalog.clearCache``
+    already freed stays in its pool; evicting it later must not free the
+    cache a later pooled frame with the same plan holds."""
+    from pyspark import StorageLevel
+
+    def same_plan():
+        return spark.range(50).selectExpr("id * 7 AS x")
+
+    monkeypatch.setitem(runtime.POOL_CAPS, "collapse", 2)
+    runtime.release("collapse")
+    runtime.release("corpus")
+    try:
+        stale = runtime.persist("collapse", same_plan(), eager=True)
+        spark.catalog.clearCache()
+        live = runtime.persist("corpus", same_plan(), eager=True)
+        runtime.persist("collapse", spark.range(3).toDF("y"))
+        runtime.persist("collapse", spark.range(4).toDF("z"))  # evicts stale
+        assert all(f is not stale for f in runtime._POOLS["collapse"])
+        assert live.storageLevel != StorageLevel.NONE
+    finally:
+        runtime.release("collapse")
+        runtime.release("corpus")
+    assert live.storageLevel == StorageLevel.NONE
