@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
@@ -283,8 +283,8 @@ def cross_split_contamination(
     scale). One keyed join of the pair list against the split projection;
     output one row per contaminated eval doc with its worst train match.
     (decontaminate_canonical_lsh does NOT route through here: its report
-    aggregates at canonical-representative level before member fan-out,
-    a different shape built inline there.)
+    aggregates at canonical-representative level before member fan-out;
+    both share the aggregation, _worst_train_matches.)
     """
     splits = documents.select(
         F.col(id_col).alias("sid"),
@@ -307,16 +307,24 @@ def cross_split_contamination(
         )
         .filter(F.col("split_a") != F.col("split_b"))
     )
-    eval_side = tagged.select(
-        F.when(F.col("split_a") == "eval", F.col("id_a"))
-        .otherwise(F.col("id_b"))
-        .alias("eval_doc_id"),
-        F.when(F.col("split_a") == "eval", F.col("id_b"))
+    return _worst_train_matches(tagged, F.col("split_a") == "eval", "eval_doc_id")
+
+
+def _worst_train_matches(
+    pairs: DataFrame, a_is_eval: Column, eval_col: str
+) -> DataFrame:
+    """The contamination report over cross-split ``(id_a, id_b, jaccard)``
+    pairs, ``a_is_eval`` telling which side is the eval document: one row
+    per eval id (named ``eval_col``) with its worst train match (highest
+    jaccard, then lowest train id), max_jaccard and n_train_matches."""
+    oriented = pairs.select(
+        F.when(a_is_eval, F.col("id_a")).otherwise(F.col("id_b")).alias(eval_col),
+        F.when(a_is_eval, F.col("id_b"))
         .otherwise(F.col("id_a"))
         .alias("train_doc_id"),
         F.col("jaccard"),
     )
-    return eval_side.groupBy("eval_doc_id").agg(
+    return oriented.groupBy(eval_col).agg(
         F.max_by("train_doc_id", F.struct("jaccard", -F.col("train_doc_id"))).alias(
             "worst_train_match"
         ),
@@ -456,16 +464,11 @@ def decontaminate_canonical_lsh(
     # anchored to r11's measured 512p@1.2GB working point). None at
     # gate/bench SFs (they sit under the floor).
     parts = dedup.scale_partition_floor(documents)
-    split = text.hash_split(text_col, train_pct)
+    is_eval = text.hash_split(text_col, train_pct) == "eval"
     reps, members = dedup._exact_text_collapse(documents, text_col, id_col, parts)
-    # One signed frame for everything downstream. The label join costs one
-    # narrow (id, label) scan of reps — cheap next to the shingle pass the
-    # sharing removes. All three caches below go to the runtime's corpus
-    # pool, which evicts before EACH append so the live set never exceeds
-    # the cap mid-call (ADVICE r08).
-    # reps feeds the signature build AND the label projection — persisted,
-    # or the collapse group-agg re-executes per reference (the same lesson
-    # the r07 ladder taught for the corpus frame)
+    # One signed frame for everything downstream. All three caches below
+    # go to the runtime's corpus pool, which evicts before EACH append so
+    # the live set never exceeds the cap mid-call (ADVICE r08).
     reps = runtime.persist("corpus", reps)  # pass 1's audit covers it
     # Not eager (VERDICT r12 #1): pass 1's always-on cap audit is the
     # FIRST job after this frame exists and scans banded <- train_sig <-
@@ -473,9 +476,10 @@ def decontaminate_canonical_lsh(
     # — the dedicated count here was a full extra signature pass at every
     # scale. Planning inside that audit job sees the identical
     # unmaterialized-reps state the old sig.count() planned against.
-    # The split label rides the signature aggregation itself (r13,
-    # signature_sets carry=): hash_split is a pure function of the text,
-    # so it is per-document constant and first()-reducible — the previous
+    # The split label, as the boolean "is eval" minhash_lsh_pairs'
+    # bipartite contract takes, rides the signature aggregation itself
+    # (r13, signature_sets carry=): hash_split is a pure function of the
+    # text, so it is per-document constant and first()-reducible — the previous
     # formulation joined the signed frame against a (id, label)
     # projection of reps, one full extra id-keyed shuffle of the signed
     # frame at any scale (guide §2.4: two operations keyed the same way
@@ -488,12 +492,12 @@ def decontaminate_canonical_lsh(
             id_col,
             n,
             num_hashes,
-            carry={"_lbl": split},
+            carry={"_lbl": is_eval},
         ),
     )
 
     # Pass 1: star-scope keep-list over the train rows of the signed frame
-    train_sig = sig.filter(F.col("_lbl") == "train")
+    train_sig = sig.filter(~F.col("_lbl"))
     keep_pairs = dedup.minhash_lsh_pairs(
         None,
         n=n,
@@ -522,7 +526,7 @@ def decontaminate_canonical_lsh(
     corpus_sig = runtime.persist(
         "corpus",
         sig.join(kept_ids, "id", "semi").unionByName(
-            sig.filter(F.col("_lbl") == "eval")
+            sig.filter(F.col("_lbl"))
         ),
     )
     rep_pairs = dedup.minhash_lsh_pairs(
@@ -534,11 +538,8 @@ def decontaminate_canonical_lsh(
         max_bucket=max_bucket,
         collapse_exact=False,
         sig_source=corpus_sig,
-        # the split label the signature aggregation carried; hash_split
-        # labels are binary by construction -> grouped verification skips
-        # its within-rest-block branch at plan time
+        # the "is eval" label the signature aggregation carried
         bipartite=F.col("_lbl"),
-        max_labels=2,
     )
     # Report aggregation at the REP level, then fan out: every raw eval
     # member inherits exactly its rep's matches (identical signatures ->
@@ -549,26 +550,13 @@ def decontaminate_canonical_lsh(
     # ONE label lookup: pairs are cross-split by construction, so knowing
     # id_a's split determines both sides.
     la = sig.select(F.col("id").alias("id_a"), F.col("_lbl").alias("_lbl_a"))
-    oriented = rep_pairs.join(la, "id_a").select(
-        F.when(F.col("_lbl_a") == "eval", F.col("id_a"))
-        .otherwise(F.col("id_b"))
-        .alias("eval_rep"),
-        F.when(F.col("_lbl_a") == "eval", F.col("id_b"))
-        .otherwise(F.col("id_a"))
-        .alias("train_doc_id"),
-        F.col("jaccard"),
-    )
-    rep_report = oriented.groupBy("eval_rep").agg(
-        F.max_by(
-            "train_doc_id", F.struct("jaccard", -F.col("train_doc_id"))
-        ).alias("worst_train_match"),
-        F.max("jaccard").alias("max_jaccard"),
-        F.count(F.lit(1)).cast("long").alias("n_train_matches"),
+    rep_report = _worst_train_matches(
+        rep_pairs.join(la, "id_a"), F.col("_lbl_a"), "eval_rep"
     )
     # Member fan-out of the finished per-rep report (kept canonicals map to
     # themselves; dropped exact-dup train members stay dropped)
     eval_members = members.join(
-        sig.filter(F.col("_lbl") == "eval").select(F.col("id").alias("rep")),
+        sig.filter(F.col("_lbl")).select(F.col("id").alias("rep")),
         "rep",
         "semi",
     )

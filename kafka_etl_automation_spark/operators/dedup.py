@@ -29,6 +29,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kafka_etl_automation_spark import runtime
 
@@ -412,10 +413,10 @@ def signature_sets(
     ``df``'s row that is CONSTANT per document (e.g. a content-keyed
     split label) — carried through the gram explode and reduced with
     ``first()`` in the same per-doc aggregation. first() is
-    deterministic here ONLY because the value is per-group constant
-    (the F.first("_nl") invariant); the alternative was a corpus-wide
-    id-keyed JOIN of the signed frame against a label projection — one
-    full extra shuffle of the signed frame at any scale (guide §2.4).
+    deterministic here ONLY because the value is per-group constant;
+    the alternative was a corpus-wide id-keyed JOIN of the signed frame
+    against a label projection — one full extra shuffle of the signed
+    frame at any scale (guide §2.4).
     The carried column rides the zero-exchange explode and the map-side
     partial combine, so it never crosses a shuffle at gram volume."""
     rows = _shingle_hash_rows(df, text_col, id_col, n, carry=carry)
@@ -531,9 +532,9 @@ _FLOOD_ROWS_PER_PARTITION = 12_500_000
 # kept emission volume (banded_rows x (cap-1) / 2) sits at or under this
 # bound — then the flood policy is settled conservatively (worst case is
 # already under the ENOSPC ceiling) and the packed-reduction index bound
-# is the cap itself. Equal to the flood ceiling, but a separate knob so
-# tests can exercise the full-audit path without also tripping the
-# flood abort.
+# is the cap or one band's row count, whichever is smaller. Equal to the
+# flood ceiling, but a separate knob so tests can exercise the full-audit
+# path without also tripping the flood abort.
 _AUDIT_SKIP_MAX_WORST = _FLOOD_NARROW_ROWS
 
 # Connected components' one-task bound: a pair graph of at most this many
@@ -549,19 +550,29 @@ _CC_ONE_TASK_MAX_EDGES = 1 << 21
 
 
 def _flood_escalation(
-    kept_work: int, master: str, codec: str, cur_partitions: int
+    kept_work: int, max_bucket_size: int, master: str, codec: str, cur_partitions: int
 ) -> tuple[str, object] | None:
     """Plan-time flood policy for the grouped verify shuffle (VERDICT r11
-    #5) — pure for testability. The cap audit's kept emission count is
-    known BEFORE enumeration, so a run that would ENOSPC a single-disk
-    local box 10 minutes in can abort NOW naming the exact knobs
-    (spark.io.compression.codec is immutable after session start), and a
-    run that merely needs more reduction tasks gets them automatically:
-    the narrow reduction is repartitioned to ``n`` (sub-flood plans are
-    untouched).
+    #5) — pure for testability. The cap audit's kept emission count and
+    largest kept bucket are known BEFORE enumeration, so a run that would
+    ENOSPC a single-disk local box 10 minutes in can abort NOW naming the
+    exact knobs (spark.io.compression.codec is immutable after session
+    start), and a run that merely needs more reduction tasks gets them
+    automatically: the narrow reduction is repartitioned to ``n``
+    (sub-flood plans are untouched). A kept bucket of 2^27 documents
+    always aborts: the packed pair location holds bucket indices in 27
+    bits, and such a bucket's C(2^27, 2) ≈ 9e15 emissions are past every
+    flood ceiling.
 
     Returns ``("abort", message)``, ``("raise_partitions", n)``, or None.
     """
+    if max_bucket_size > _IJ_MASK:
+        return (
+            "abort",
+            f"minhash_lsh_pairs: a kept bucket holds {max_bucket_size:,} "
+            f"documents — past the {_IJ_MASK + 1:,} the packed pair "
+            "location can index. Cap the flood (max_bucket=<int>)",
+        )
     if kept_work <= _FLOOD_NARROW_ROWS:
         return None
     if master.startswith("local") and codec == "lz4":
@@ -733,7 +744,6 @@ def minhash_lsh_pairs(
     bipartite=None,
     content_keyed: bool = False,
     sig_source: DataFrame | None = None,
-    max_labels: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified with exact
     Jaccard over the 64-bit shingle-hash sets so the output has no false
@@ -757,11 +767,13 @@ def minhash_lsh_pairs(
         star is what makes ext_dedup_canonical_lsh documents-linear.
         Precision is unchanged — star candidates are exact-verified too.
 
-    ``bipartite``: optional Column over the rows the call receives —
-    ``df``'s columns (e.g. ``text.hash_split("text")``), or in sig_source
-    mode ``sig_source``'s (e.g. ``F.col("_lbl")`` for a label carried
-    through :func:`signature_sets`). Only candidates whose two sides
-    DIFFER on this label are emitted. For cross-split decontamination the
+    ``bipartite``: optional BOOLEAN Column over the rows the call
+    receives — ``df``'s columns (e.g. ``text.hash_split("text") ==
+    "eval"``), or in sig_source mode ``sig_source``'s (e.g.
+    ``F.col("_lbl")`` for a label carried through
+    :func:`signature_sets`). Only pairs of one true and one false row are
+    emitted; a NULL label pairs with nothing. Any other label type raises
+    ValueError at call time. For cross-split decontamination the
     downstream filter discards same-split pairs anyway, so this is
     output-identical and removes the within-split (train-train) share —
     the quadratic bulk — from the self-join. The label rides the signed
@@ -801,7 +813,7 @@ def minhash_lsh_pairs(
         (id_a, id_b, location) candidates — ids and array indices only,
         the sh arrays stay in the bucket row — a groupBy reduces each
         pair to its MINIMUM co-occurring band (min over a bit-packed
-        (band, w, i, j) long), and a narrow join back to the bucket
+        (band, i, j) long), and a narrow join back to the bucket
         rows on (band, bkey) — partition-aligned with the aggregation,
         so only the pair side shuffles — runs exact Jaccard EXACTLY ONCE
         per distinct pair via element_at on the min band's array. The
@@ -809,18 +821,14 @@ def minhash_lsh_pairs(
         (tight families co-occur in most of 16 bands — the bulk of the
         compute-super-linear 2700x wall); the min-band reduction trades
         that for one narrow shuffle, linear in candidate emissions.
-        Packing keeps the reduction a HashAggregate (VERDICT r11 #2);
-        past its bounds (bands > 256, or a kept bucket of 2^27 docs) a
-        min over a struct selects the same row.
+        Packing keeps the reduction a HashAggregate (VERDICT r11 #2).
+        Its bounds are checks: ``bands`` > 256 raises ValueError, and a
+        kept bucket of 2^27 documents aborts in the flood policy
+        (``_flood_escalation``) — its C(2^27, 2) emissions are past
+        every flood ceiling anyway.
         Value-identical to per-pair verification by construction —
         pinned by tests/test_operators.py::test_grouped_verify_matches_pairs,
         which patches ``_verifies_per_pair`` to get the reference.
-
-    ``max_labels``: optional caller attestation that the bipartite label
-    column takes at most this many distinct values; with 2 (the
-    train/eval hash_split contracts) grouped verification skips its
-    within-rest-block enumeration branch at plan time. Only valid with a
-    bipartite label; never inferred from data.
 
     ``max_bucket`` is a SKEW GUARD, not a free parameter — a bucket is
     dropped wholesale when it overflows, and at duplicate-heavy corpora
@@ -900,18 +908,11 @@ def minhash_lsh_pairs(
             )
     elif max_bucket is not None and max_bucket < 2:
         raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
-    if max_labels is not None:
-        # Caller ATTESTATION that the bipartite label column takes at most
-        # this many distinct values (e.g. 2 for text.hash_split's binary
-        # train/eval). With <=2, grouped verification's within-rest-block
-        # enumeration branch is skipped at PLAN time — it can only emit
-        # for buckets holding >2 distinct labels, impossible under the
-        # attestation. Wrong attestation = silently dropped cross-label
-        # pairs among non-min labels, so this is opt-in, never inferred.
-        if bipartite is None:
-            raise ValueError("max_labels is only meaningful with a bipartite label")
-        if max_labels < 2:
-            raise ValueError(f"max_labels must be >= 2, got {max_labels}")
+    if bands > 256:
+        raise ValueError(
+            f"bands must be <= 256 (the packed pair location holds the "
+            f"band in 8 bits), got {bands}"
+        )
     if candidate_scope == "star" and bipartite is not None:
         raise ValueError(
             "candidate_scope='star' and bipartite are mutually exclusive: "
@@ -941,6 +942,14 @@ def minhash_lsh_pairs(
             "rep's label correctly; pass collapse_exact=False for "
             "row-identity labels"
         )
+    if bipartite is not None:
+        rows = df if sig_source is None else sig_source
+        lbl_type = rows.select(bipartite).schema[0].dataType
+        if not isinstance(lbl_type, T.BooleanType):
+            raise ValueError(
+                f"bipartite must be a boolean Column, got {lbl_type.simpleString()}"
+                " (e.g. text.hash_split(...) == 'eval')"
+            )
 
     src, members = _lsh_signed_source(
         df, text_col, id_col, n, num_hashes, collapse_exact, bipartite, sig_source
@@ -948,7 +957,7 @@ def minhash_lsh_pairs(
     band_cols = [] if bipartite is None else ["_lbl"]
     banded = _lsh_bands(src, band_cols, bands, num_hashes // bands)
     audit = _lsh_cap_audit(
-        banded, band_cols, candidate_scope, max_bucket, stats is not None
+        banded, band_cols, candidate_scope, max_bucket, bands, stats is not None
     )
     sized, cand = _lsh_candidates(
         banded, band_cols, candidate_scope, audit.effective_max_bucket
@@ -959,9 +968,7 @@ def minhash_lsh_pairs(
     if _verifies_per_pair(candidate_scope):
         verified = _lsh_verify_pairs(cand, src, threshold)
     else:
-        verified = _lsh_verify_grouped(
-            sized, src, band_cols, audit, bands, threshold, max_labels
-        )
+        verified = _lsh_verify_grouped(sized, src, band_cols, audit, threshold)
     if members is None:
         return verified
     # jaccard(S, S) = n/n, exactly 1.0 in IEEE — same value the
@@ -1077,9 +1084,10 @@ class _CapAudit(NamedTuple):
     probe reports it. bucket_join_work is the exact number of kept
     candidate emissions: sum C(bucket,2) for the all-pairs self-join, sum
     (bucket-1) for star's window-min edges, and for the bipartite
-    block-split the CROSS-label pair count (r12; same-label pairs never
-    leave the candidate join). On the explicit-cap fast path it and
-    max_bucket_size are upper bounds and the dropped counts read 0."""
+    block-split the true x false pair count (r12; same-label and NULL-label
+    pairs never leave the candidate join). On the explicit-cap fast path
+    it and max_bucket_size are upper bounds and the dropped counts read
+    0."""
 
     bucket_join_work: int
     max_bucket_size: int
@@ -1094,6 +1102,7 @@ def _lsh_cap_audit(
     band_cols: list[str],
     candidate_scope: str,
     max_bucket: int | str | None,
+    bands: int,
     probed: bool,
 ) -> _CapAudit:
     """Stage 2b: the always-on bucket-size audit. Resolves
@@ -1123,7 +1132,8 @@ def _lsh_cap_audit(
     # kept volume — every banded row in a bucket exactly at the cap,
     # banded_rows * (cap-1) / 2 emissions — already sits under the flood
     # ceiling, (b) is settled conservatively and (c) is bounded by the cap
-    # itself, so the per-bucket + histogram aggregations are replaced by a
+    # or by one band's row count (banded_rows // bands), whichever is
+    # smaller, so the per-bucket + histogram aggregations are replaced by a
     # plain count (the same job that materializes the src/banded caches,
     # minus two aggregation stages and the collect). The trade, documented:
     # in this provably-under-ceiling regime a biting cap is not WARNed —
@@ -1142,38 +1152,26 @@ def _lsh_cap_audit(
                 worst_kept,
                 _AUDIT_SKIP_MAX_WORST,
             )
-            return _CapAudit(worst_kept, max_bucket, 0, 0, max_bucket, banded_rows)
+            bound = min(max_bucket, banded_rows // bands)
+            return _CapAudit(worst_kept, bound, 0, 0, max_bucket, banded_rows)
     # Per-bucket emission work, CONTRACT-exact (r12): star emits c-1 edges,
-    # all-pairs C(c,2), and the bipartite block-split only CROSS-label
-    # pairs — C(c,2) minus the per-label within sums. Counting same-label
-    # pairs that never leave the candidate join would both mis-budget
-    # "auto" and overfire the flood guard (r11 ran the 900x bipartite
-    # decon fine under the default env; its C(c,2) overcount would not
-    # have). Work is carried DOUBLED (c*(c-1) is always even) so the
-    # histogram stays integer; halved driver-side.
+    # all-pairs C(c,2), and the bipartite block-split only true x false
+    # pairs — a*b for a true and b false rows (NULL labels pair with
+    # nothing). Counting same-label pairs that never leave the candidate
+    # join would both mis-budget "auto" and overfire the flood guard (r11
+    # ran the 900x bipartite decon fine under the default env; its C(c,2)
+    # overcount would not have). Work is carried DOUBLED (c*(c-1) is
+    # always even) so the histogram stays integer; halved driver-side.
+    _c = F.count(F.lit(1))
     if candidate_scope == "star":
-        per_bucket = banded.groupBy("band", "bkey").agg(
-            F.count(F.lit(1)).alias("count"),
-            (2 * (F.count(F.lit(1)) - 1)).alias("w2"),
-        )
+        w2 = 2 * (_c - 1)
     elif band_cols:
-        _c = F.sum("lc")
-        per_bucket = (
-            banded.groupBy("band", "bkey", "_lbl")
-            .agg(F.count(F.lit(1)).alias("lc"))
-            .groupBy("band", "bkey")
-            .agg(
-                _c.alias("count"),
-                (_c * (_c - 1) - F.sum(F.col("lc") * (F.col("lc") - 1))).alias(
-                    "w2"
-                ),
-            )
-        )
+        w2 = 2 * F.count_if(F.col("_lbl")) * F.count_if(~F.col("_lbl"))
     else:
-        _c = F.count(F.lit(1))
-        per_bucket = banded.groupBy("band", "bkey").agg(
-            _c.alias("count"), (_c * (_c - 1)).alias("w2")
-        )
+        w2 = _c * (_c - 1)
+    per_bucket = banded.groupBy("band", "bkey").agg(
+        _c.alias("count"), w2.alias("w2")
+    )
     hist = (
         per_bucket.groupBy("count")
         .agg(F.count(F.lit(1)).alias("nb"), F.sum("w2").alias("w2"))
@@ -1333,9 +1331,7 @@ def _lsh_verify_grouped(
     src: DataFrame,
     band_cols: list[str],
     audit: _CapAudit,
-    bands: int,
     threshold: float,
-    max_labels: int | None,
 ) -> DataFrame:
     """Stage 4, grouped (every other contract): per-BUCKET verification with
     once-per-pair Jaccard (see minhash_lsh_pairs), after the plan-time
@@ -1346,7 +1342,7 @@ def _lsh_verify_grouped(
     can emit (2 <= bsz <= max_bucket) join their hash set by id — <=
     bands copies per doc, linear in corpus size — then ONE (band, bkey)
     aggregation materializes each bucket as a single row of id-sorted
-    (id[, _lbl], sh) structs. Pair enumeration runs AFTER that shuffle,
+    (id, sh) structs. Pair enumeration runs AFTER that shuffle,
     inside the bucket row: explode(sequence) + element_at keep the struct
     array a codegen variable (indexed, never copied — the r09 shingle
     pattern). Enumeration emits only NARROW (id_a, id_b, location) rows;
@@ -1356,8 +1352,7 @@ def _lsh_verify_grouped(
     shuffles — runs the exact Jaccard EXACTLY ONCE per distinct pair
     (VERDICT r10 #1)."""
     # Flood fail-fast (VERDICT r11 #5): the audit's kept emission count
-    # IS the narrow candidate row count (upper bound for the bipartite
-    # block-split, exact otherwise), known at PLAN time. On a
+    # IS the narrow candidate row count, known at PLAN time. On a
     # single-disk local box past _FLOOD_NARROW_ROWS the default lz4
     # shuffle codec ENOSPCs (r11: 2700x needed zstd to complete), and
     # spark.io.compression.codec is immutable after session start — so
@@ -1369,6 +1364,7 @@ def _lsh_verify_grouped(
     spark = sized.sparkSession
     action = _flood_escalation(
         audit.bucket_join_work,
+        audit.max_bucket_size,
         spark.sparkContext.master,
         spark.conf.get("spark.io.compression.codec", "lz4"),
         int(spark.conf.get("spark.sql.shuffle.partitions")),
@@ -1385,18 +1381,10 @@ def _lsh_verify_grouped(
             audit.bucket_join_work,
             parts,
         )
-    # The packed location needs band in bits 55..62 (bands <= 256) and
-    # i, j in 27 bits each (max kept bucket < 2^27, known from the audit
-    # histogram); outside that envelope the reduction takes the struct
-    # min (see _min_location).
-    packed = bands <= 256 and audit.max_bucket_size < (1 << 27)
     pool = sized.filter(F.col("bsz") >= 2)
     if band_cols:
-        binary = max_labels is not None and max_labels <= 2
-        return _grouped_cross_label(
-            pool, src, binary, packed, threshold, parts
-        )
-    return _grouped_label_free(pool, src, packed, threshold, parts)
+        return _grouped_cross_label(pool, src, threshold, parts)
+    return _grouped_label_free(pool, src, threshold, parts)
 
 
 def _jaccard(sh_a: Column, sh_b: Column) -> Column:
@@ -1407,38 +1395,24 @@ def _jaccard(sh_a: Column, sh_b: Column) -> Column:
 _IJ_MASK = (1 << 27) - 1
 
 
-def _pack_loc(w: int) -> Column:
-    """(band, w, i, j) bit-packed into one long: band in bits 55..62, w in
-    bit 54, i in bits 27..53, j in bits 0..26 — band-first, so the min
-    packed long is the min location."""
-    return (
-        F.shiftleft(F.col("band").cast("long"), 55)
-        .bitwiseOR(F.lit(w << 54).cast("long"))
+def _narrow_candidates(ex: DataFrame, ids: tuple[Column, Column]) -> DataFrame:
+    """Narrow once-per-pair candidates from enumerated bucket rows: the
+    pair's ids, its bucket key, and its location (band, i, j) bit-packed
+    into one long ``p`` — band in bits 54..61 (bands <= 256), i in bits
+    27..53, j in bits 0..26 (a kept bucket holds < 2^27 docs) — the sh
+    arrays stay in the bucket row. Band-first, so the min ``p`` is the
+    pair's minimum co-occurring band; within one band a pair occupies
+    exactly one bucket and one (i, j)."""
+    p = (
+        F.shiftleft(F.col("band").cast("long"), 54)
         .bitwiseOR(F.shiftleft(F.col("i").cast("long"), 27))
         .bitwiseOR(F.col("j").cast("long"))
     )
+    return ex.select(*ids, p.alias("p"), "bkey")
 
 
-def _narrow_candidates(
-    ex: DataFrame, ids: tuple[Column, Column], w: int, packed: bool
-) -> DataFrame:
-    """Narrow once-per-pair candidates from enumerated bucket rows: the
-    pair's ids plus its location — the sh arrays stay in the bucket row.
-    Location fields are band-first so the min location picks each pair's
-    minimum co-occurring band; w names the block the indices address
-    (0: i in da (or ds), j in db (or ds); 1: both in db) — within one
-    band a pair occupies exactly one bucket and one block, so the
-    location is unique per band."""
-    if packed:
-        return ex.select(*ids, _pack_loc(w).alias("p"), "bkey")
-    return ex.select(
-        *ids,
-        F.struct("band", F.lit(w).alias("w"), "bkey", "i", "j").alias("loc"),
-    )
-
-
-def _min_location(narrow: DataFrame, packed: bool, parts: int | None) -> DataFrame:
-    """Each pair's minimum location, as (id_a, id_b, band, w, i, j, bkey).
+def _min_location(narrow: DataFrame, parts: int | None) -> DataFrame:
+    """Each pair's minimum location, as (id_a, id_b, band, i, j, bkey).
 
     ``parts`` (the flood escalation's count, else None): the reduction's
     exchange becomes a repartition to it on the pair keys. The partial
@@ -1446,43 +1420,23 @@ def _min_location(narrow: DataFrame, packed: bool, parts: int | None) -> DataFra
     little, since a pair's emissions come from different bands' buckets,
     which sit in different map tasks.
 
-    Packed (VERDICT r11 #2): min over a STRUCT compiles to SortAggregate
+    Packed (VERDICT r11 #2): a min over a STRUCT compiles to SortAggregate
     (struct buffers aren't hash-agg mutable), which sorts the full narrow
     candidate stream — the dominant remaining cost at flood octaves
-    (~1.3e9 rows at 2700x). min(packed) with min_by(bkey, packed) keeps
-    BOTH aggregate buffers primitive, so the reduction compiles to
+    (~1.3e9 rows at 2700x). min(p) with min_by(bkey, p) keeps BOTH
+    aggregate buffers primitive, so the reduction compiles to
     HashAggregate with map-side partial combine — no sort, and the
-    exchange carries ~distinct pairs per task instead of raw emissions.
-    Value-identical to the struct min: within one (band, w) a pair
-    occupies exactly one bucket and one (i, j), so bkey never tiebreaks
-    and min(packed) selects the same row the lexicographic struct min
-    does (pinned by test_once_per_pair_reduction_packed_is_hash_aggregable)."""
+    exchange carries ~distinct pairs per task instead of raw emissions
+    (pinned by test_once_per_pair_reduction_packed_is_hash_aggregable)."""
     if parts is not None:
         narrow = narrow.repartition(parts, "id_a", "id_b")
-    if not packed:
-        return (
-            narrow.groupBy("id_a", "id_b")
-            .agg(F.min("loc").alias("loc"))
-            .select(
-                "id_a",
-                "id_b",
-                *[
-                    F.col(f"loc.{f}").alias(f)
-                    for f in ("band", "w", "i", "j", "bkey")
-                ],
-            )
-        )
     return (
         narrow.groupBy("id_a", "id_b")
         .agg(F.min("p").alias("p"), F.min_by("bkey", "p").alias("bkey"))
         .select(
             "id_a",
             "id_b",
-            F.shiftright("p", 55).cast("int").alias("band"),
-            F.shiftright("p", 54)
-            .bitwiseAND(F.lit(1).cast("long"))
-            .cast("int")
-            .alias("w"),
+            F.shiftright("p", 54).cast("int").alias("band"),
             F.shiftright("p", 27)
             .bitwiseAND(F.lit(_IJ_MASK).cast("long"))
             .cast("int")
@@ -1499,7 +1453,6 @@ def _min_location(narrow: DataFrame, packed: bool, parts: int | None) -> DataFra
 def _grouped_label_free(
     pool: DataFrame,
     src: DataFrame,
-    packed: bool,
     threshold: float,
     parts: int | None,
 ) -> DataFrame:
@@ -1526,8 +1479,7 @@ def _grouped_label_free(
     a = F.element_at("ds", F.col("i"))
     b = F.element_at("ds", F.col("j"))
     ids = (a.getField("id").alias("id_a"), b.getField("id").alias("id_b"))
-    narrow = _narrow_candidates(ex, ids, 0, packed)
-    best = _min_location(narrow, packed, parts).drop("w")
+    best = _min_location(_narrow_candidates(ex, ids), parts)
     # unhinted for the same 32g-OOM reason as the cross-label join
     # (AQE re-converts when safe)
     joined = best.join(grouped, ["band", "bkey"])
@@ -1539,38 +1491,31 @@ def _grouped_label_free(
 def _grouped_cross_label(
     pool: DataFrame,
     src: DataFrame,
-    binary: bool,
-    packed: bool,
     threshold: float,
     parts: int | None,
 ) -> DataFrame:
     """Grouped verification of the cross-label contract, BLOCK-SPLIT:
-    each bucket splits into its min-label block ``da`` and the rest
-    ``db``. ``binary``: the caller attested at most two labels."""
+    each bucket splits into its false-label block ``da`` and its
+    true-label block ``db``, and every cross-label pair is one of da x
+    db."""
     # Two taxes the naive enumerate-all-pairs-and-guard shape pays and
     # pairs-mode never did (its join condition skips same-label pairs
     # inside the join): (1) label-PURE buckets — the undeduped side's
     # variant floods at the straddle octaves — ship their full
     # signature sets for zero possible output; (2) MIXED buckets
     # enumerate their same-label bulk (e.g. eval-eval pairs inside
-    # a family bucket) only to null-guard it. Both die here:
-    # the bucket's distinct-label count and MIN label ride the
-    # SAME (band, bkey) window exchange the size filter pays,
-    # pure buckets are pruned before the grouped shuffle, and the
-    # aggregation splits each bucket into the min-label block
-    # ``da`` vs the rest ``db`` (collect_list skips the
-    # when-nulls), so enumeration is the pure cross product
+    # a family bucket) only to null-guard it. Both die here: the
+    # bucket's min and max label ride the SAME (band, bkey) window
+    # exchange the size filter pays, so pure buckets are pruned before
+    # the grouped shuffle, and the aggregation splits each bucket into
+    # its false and true blocks (collect_list skips the when-nulls, and
+    # with them NULL labels), so enumeration is the pure cross product
     # da x db — every pair cross-label by construction, no guard.
-    # Buckets with >2 distinct labels (impossible under a
-    # max_labels=2 attestation; possible for arbitrary label
-    # columns) additionally enumerate within the rest block under
-    # the label guard — see the binary branch below.
     wb = Window.partitionBy("band", "bkey")
     pool = (
-        pool.withColumn("_nl", F.size(F.collect_set("_lbl").over(wb)))
-        .withColumn("_lbl0", F.min("_lbl").over(wb))
-        .filter(F.col("_nl") >= 2)
-        .select("id", "band", "bkey", "_nl", "_lbl0")
+        pool.withColumn("_mixed", F.min("_lbl").over(wb) != F.max("_lbl").over(wb))
+        .filter("_mixed")
+        .select("id", "band", "bkey")
     )
     # _lbl rides the signed frame alongside sh
     sh_map = src.select("id", "_lbl", "sh")
@@ -1584,96 +1529,36 @@ def _grouped_cross_label(
     # element_at(da/db, i) dereferenced the WRONG doc's signature
     # set (caught at the 2700x octave: 440,089 vs 431,985
     # contaminated evals). Sorting by the unique leading id makes
-    # both evaluations bit-identical. The label-free branch
-    # was always sorted.
+    # both evaluations bit-identical. Every aggregate here must stay
+    # deterministic under that re-execution (ADVICE r11).
     grouped = (
         pool.join(sh_map, "id")
         .groupBy("band", "bkey")
         .agg(
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_lbl") == F.col("_lbl0"),
-                        F.struct(F.col("id"), F.col("sh")),
-                    )
-                )
+                F.collect_list(F.when(~F.col("_lbl"), F.struct("id", "sh")))
             ).alias("da"),
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_lbl") != F.col("_lbl0"),
-                        F.struct(
-                            F.col("id"), F.col("_lbl"), F.col("sh")
-                        ),
-                    )
-                )
+                F.collect_list(F.when(F.col("_lbl"), F.struct("id", "sh")))
             ).alias("db"),
-            # INVARIANT (ADVICE r11): every aggregate in this agg
-            # must be DETERMINISTIC under shuffle re-execution —
-            # the once shape evaluates `grouped` TWICE (index
-            # capture + index resolution on the verify join's
-            # bucket side), so any order-dependent column here
-            # silently re-introduces the wrong-signature
-            # dereference that array_sort above fixes. first(_nl)
-            # is safe ONLY because _nl is bucket-CONSTANT (a
-            # window over the same (band, bkey) key); do not add
-            # first/any_value over non-constant columns.
-            F.first("_nl").alias("nl"),
         )
     )
-
-    def _ids(a, b):
-        # pairs-mode orders ids via x.id < y.id in the self-join;
-        # block membership doesn't follow id order, so order here
-        return (
-            F.least(a.getField("id"), b.getField("id")).alias("id_a"),
-            F.greatest(a.getField("id"), b.getField("id")).alias("id_b"),
-        )
-
-    # Attested-binary label (the train/eval contracts): every
-    # cross-label pair touches the min label, so the min x rest
-    # cross product is COMPLETE and the within-rest branch never
-    # builds. (An earlier shape re-aggregated that branch's own
-    # subset instead — for binary labels its probe side is empty,
-    # but the join still exchanged the full signed frame:
-    # 78 -> 157s at the 300x octave. Plan-time skip is the only
-    # formulation that pays literally nothing.) Unattested
-    # labels: >2-label buckets additionally enumerate within the
-    # rest block under the label guard, per-row gated by nl so
-    # 2-label buckets emit NOTHING (explode of an empty array).
-    # Rides the SAME aggregation — ReuseExchange shares the
-    # shuffle; the second final-agg scan is the price of not
-    # attesting.
-    exc = grouped.select(
+    ex = grouped.select(
         "da", "db", "band", "bkey",
         F.explode(F.sequence(F.lit(1), F.size("da"))).alias("i"),
     ).select(
         "da", "db", "band", "bkey", "i",
         F.explode(F.sequence(F.lit(1), F.size("db"))).alias("j"),
     )
-    a_c = F.element_at("da", F.col("i"))
-    b_c = F.element_at("db", F.col("j"))
-    narrow = _narrow_candidates(exc, _ids(a_c, b_c), 0, packed)
-    if not binary:
-        exd = grouped.select(
-            "db", "band", "bkey",
-            F.explode(
-                F.when(
-                    F.col("nl") > 2,
-                    F.sequence(F.lit(1), F.size("db") - 1),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("i"),
-        ).select(
-            "db", "band", "bkey", "i",
-            F.explode(F.sequence(F.col("i") + 1, F.size("db"))).alias("j"),
-        )
-        a_d = F.element_at("db", F.col("i"))
-        b_d = F.element_at("db", F.col("j"))
-        ndf = exd.filter(a_d.getField("_lbl") != b_d.getField("_lbl"))
-        narrow = narrow.unionByName(
-            _narrow_candidates(ndf, _ids(a_d, b_d), 1, packed)
-        )
-    best = _min_location(narrow, packed, parts)
+    a = F.element_at("da", F.col("i"))
+    b = F.element_at("db", F.col("j"))
+    # pairs-mode orders ids via x.id < y.id in the self-join; block
+    # membership doesn't follow id order, so order here
+    ids = (
+        F.least(a.getField("id"), b.getField("id")).alias("id_a"),
+        F.greatest(a.getField("id"), b.getField("id")).alias("id_b"),
+    )
+    best = _min_location(_narrow_candidates(ex, ids), parts)
     # (band, bkey) is the aggregation's own output
     # partitioning — only the narrow pair side exchanges. NO
     # static join hint: a forced shuffle_hash build of the
@@ -1685,16 +1570,8 @@ def _grouped_cross_label(
     # session.get_spark) converts back to the fast hash join
     # exactly when the MEASURED per-partition build fits.
     joined = best.join(grouped, ["band", "bkey"])
-    sh_b = F.element_at("db", F.col("j")).getField("sh")
-    if binary:
-        sh_a = F.element_at("da", F.col("i")).getField("sh")
-    else:
-        sh_a = F.when(
-            F.col("w") == 0,
-            F.element_at("da", F.col("i")).getField("sh"),
-        ).otherwise(F.element_at("db", F.col("i")).getField("sh"))
     return joined.select(
-        "id_a", "id_b", _jaccard(sh_a, sh_b).alias("jaccard")
+        "id_a", "id_b", _jaccard(a.getField("sh"), b.getField("sh")).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
 
 

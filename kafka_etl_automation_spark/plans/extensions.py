@@ -1575,7 +1575,8 @@ def ext_decontamination_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact and output is a subset of the oracle-checked twin — pinned by
     tests/test_operators.py::test_decontamination_lsh_subset_of_exact;
     recall follows the LSH probability, hence rows-only. ``bipartite``
-    passes the SAME content-keyed split the downstream filter uses, so the
+    is the SAME content-keyed split the downstream filter uses (as the
+    boolean "is eval"), so the
     within-split (train-train) share — the quadratic bulk of the bucket
     self-join — never leaves the candidate join; output-identical because
     cross_split_contamination discards same-split pairs anyway."""
@@ -1585,8 +1586,7 @@ def ext_decontamination_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t["documents"]
     pairs = dedup.minhash_lsh_pairs(
         docs, n=3, num_hashes=64, bands=32, threshold=0.2,
-        bipartite=text.hash_split("text", 90), content_keyed=True,
-        max_labels=2,  # hash_split is binary -> plan-time branch skip
+        bipartite=text.hash_split("text", 90) == "eval", content_keyed=True,
         max_bucket=1000,  # explicit determinism pin (r12); default is "auto"
     )
     return curation.cross_split_contamination(docs, pairs)

@@ -71,6 +71,7 @@ itself; everything around it is verified here):
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from dataclasses import dataclass
@@ -80,6 +81,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark.io import append_rows, local_path, run_dir, write_dir
+
+_LOG = logging.getLogger(__name__)
 
 AUDIT_SCHEMA = T.StructType(
     [
@@ -205,7 +208,16 @@ class ProgressAuditListener:
                     }
                     append_rows([row], PROGRESS_SCHEMA, outer.audit_path, "p")
                 except Exception:
-                    pass  # a broken audit row must never kill the stream
+                    # a broken audit row must never kill the stream, but
+                    # it must not vanish either
+                    _LOG.warning(
+                        "progress audit row of query %s batch %s not written "
+                        "to %s",
+                        p.id,
+                        p.batchId,
+                        outer.audit_path,
+                        exc_info=True,
+                    )
 
             def onQueryTerminated(self, event):
                 pass

@@ -635,7 +635,7 @@ def test_minhash_candidate_scopes(spark):
     bip = {
         (r.id_a, r.id_b)
         for r in dedup.minhash_lsh_pairs(
-            df, bipartite=(F.col("doc_id") % 2).cast("int"), **kw
+            df, bipartite=F.col("doc_id") % 2 == 1, **kw
         ).collect()
     }
     assert bip == {
@@ -647,7 +647,7 @@ def test_minhash_candidate_scopes(spark):
         dedup.minhash_lsh_pairs(
             df,
             candidate_scope="star",
-            bipartite=text.hash_split("text", 90),
+            bipartite=text.hash_split("text", 90) == "eval",
             **kw,
         )
     # bipartite + collapse_exact demands an explicit content-keyed
@@ -655,7 +655,7 @@ def test_minhash_candidate_scopes(spark):
     # members (ADVICE r07)
     with pytest.raises(ValueError, match="content_keyed"):
         dedup.minhash_lsh_pairs(
-            df, bipartite=(F.col("doc_id") % 2).cast("int"), collapse_exact=True
+            df, bipartite=F.col("doc_id") % 2 == 1, collapse_exact=True
         )
     # sig_source schema validation (ADVICE r08): a frame built with MORE
     # hashes than num_hashes must fail fast (banding over a subset would
@@ -709,7 +709,7 @@ def test_bipartite_label_rides_the_signed_frame(spark):
         free = scans(dedup.minhash_lsh_pairs(docs, **kw))
         bip = scans(
             dedup.minhash_lsh_pairs(
-                docs, bipartite=text.hash_split("text", 90), max_labels=2, **kw
+                docs, bipartite=text.hash_split("text", 90) == "eval", **kw
             )
         )
     finally:
@@ -1596,8 +1596,9 @@ def test_grouped_verify_matches_pairs(spark, monkeypatch):
     all-pairs with exact collapse (member fan-out + within-group identity
     pairs included), bipartite, and the shared-signature sig_source mode
     the canonical decontamination pipeline uses. The per-pair reference
-    comes from patching the one verification decision."""
-    from kafka_etl_automation_spark import runtime
+    comes from patching the one verification decision. A label that is not
+    boolean raises before any Spark job runs."""
+    from kafka_etl_automation_spark import runtime, session
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     other = "totally different content about spark execution engines"
@@ -1643,28 +1644,19 @@ def test_grouped_verify_matches_pairs(spark, monkeypatch):
         kw,
         threshold=0.2,
         bands=32,
-        bipartite=text.hash_split("text", 50),
+        bipartite=text.hash_split("text", 50) == "eval",
         content_keyed=True,
     )
     b_p = ref(df, **bkw)
-    assert b_p == res(dedup.minhash_lsh_pairs(df, **bkw))
-    # attested-binary label (hash_split): the plan-time branch skip must
-    # be value-identical to the unattested plan
-    assert b_p == res(dedup.minhash_lsh_pairs(df, max_labels=2, **bkw))
-    with pytest.raises(ValueError, match="max_labels"):
-        dedup.minhash_lsh_pairs(df, max_labels=2, **kw)
-    # >2 distinct labels exercises grouped's within-db enumeration branch
-    # (the min-label block-split covers only cross pairs touching the min
-    # label; label2 x label3 pairs come from the nl>2-gated branch)
-    tkw3 = dict(
-        kw,
-        threshold=0.2,
-        bands=32,
-        collapse_exact=False,
-        bipartite=F.pmod(F.xxhash64("text"), F.lit(3)),
-    )
-    t_p = ref(df, **tkw3)
-    assert t_p == res(dedup.minhash_lsh_pairs(df, **tkw3)) and len(t_p) > 0
+    assert b_p == res(dedup.minhash_lsh_pairs(df, **bkw)) and len(b_p) > 0
+    # the label's type carries the two-sided contract: a non-boolean label
+    # (here the split string itself) is refused up front
+    first_job = session.next_job_id(spark)
+    with pytest.raises(ValueError, match="boolean"):
+        dedup.minhash_lsh_pairs(
+            df, **dict(bkw, bipartite=text.hash_split("text", 50))
+        )
+    assert session.next_job_id(spark) == first_job
     # sig_source mode (the decontaminate_canonical_lsh cross-split pass):
     # the label is carried through the signature aggregation and named
     # by a Column over the signed rows
@@ -1673,13 +1665,13 @@ def test_grouped_verify_matches_pairs(spark, monkeypatch):
         "corpus",
         dedup.signature_sets(
             reps, "text", "doc_id", 3, 64,
-            carry={"_lbl": text.hash_split("text", 50)},
+            carry={"_lbl": text.hash_split("text", 50) == "eval"},
         ),
         eager=True,
     )
     gkw = dict(
         n=3, num_hashes=64, bands=32, threshold=0.2, collapse_exact=False,
-        sig_source=sig, bipartite=F.col("_lbl"), max_labels=2,
+        sig_source=sig, bipartite=F.col("_lbl"),
     )
     g_p = ref(None, **gkw)
     assert g_p == res(dedup.minhash_lsh_pairs(None, **gkw)) and len(g_p) > 0
@@ -1729,6 +1721,44 @@ def test_lsh_cap_stats_are_loud(spark):
         max_bucket=2, stats=st_sim,
     ).count()
     assert st_sim["dropped_buckets"] > 0 and st_sim["dropped_emissions"] > 0
+
+
+def test_bipartite_audit_counts_true_false_pairs(spark):
+    """The cap audit's bipartite work is the true x false pair count per
+    bucket, sum a*b, from one aggregation: NULL labels pair with nothing,
+    so they count in a bucket's size but not in its work. Checked against
+    pandas over the same banded rows. The explicit-cap fast path bounds
+    the largest bucket by one band's row count when the cap is larger."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = []
+    for fam in range(4):
+        rows += [(fam * 10 + k, f"{base} fam{fam} tail{k % 3}") for k in range(6)]
+    rows += [(100 + i, f"unrelated background text number {i}") for i in range(4)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    lbl = F.when(F.col("doc_id") % 5 == 0, F.lit(None)).otherwise(
+        F.col("doc_id") % 2 == 1
+    )
+    st: dict = {}
+    dedup.minhash_lsh_pairs(
+        df, n=3, num_hashes=64, bands=16, threshold=0.2, collapse_exact=False,
+        max_bucket=None, bipartite=lbl, stats=st,
+    ).count()
+    try:
+        sig = dedup.signature_sets(df, "text", "doc_id", 3, 64, carry={"_lbl": lbl})
+        banded = dedup._lsh_bands(sig, ["_lbl"], 16, 4)
+        pdf = banded.toPandas()
+        fast = dedup._lsh_cap_audit(banded, ["_lbl"], "all", 10**6, 16, False)
+    finally:
+        dedup.release_collapse_caches()
+    work = 0
+    for _, lab in pdf.groupby(["band", "bkey"])["_lbl"]:
+        a = sum(v is True for v in lab)
+        b = sum(v is False for v in lab)
+        work += a * b
+    assert pdf["_lbl"].isna().any() and work > 0
+    assert st["bucket_join_work"] == work
+    assert st["banded_rows"] == len(pdf)
+    assert fast.max_bucket_size == len(pdf) // 16 == len(rows)
 
 
 def test_lsh_cap_warns_in_shipping_path(spark, caplog, monkeypatch):
@@ -1855,13 +1885,13 @@ def test_once_per_pair_reduction_packed_is_hash_aggregable(spark, monkeypatch):
     """VERDICT r11 #2: the once-per-pair reduction's min over a STRUCT
     compiled to SortAggregate — a full sort (+ spill) of the narrow
     candidate stream, the dominant remaining flood-octave cost. The packed
-    formulation (bit-packed (band, w, i, j) long + min_by(bkey, packed))
-    must (a) compile to HashAggregate with a map-side partial — NO
+    formulation (bit-packed (band, i, j) long + min_by(bkey, packed))
+    must compile to HashAggregate with a map-side partial — NO
     SortAggregate anywhere in the plan — on the all-pairs and bipartite
-    contracts, and (b) past the packing bounds (bands > 256) fall back to
-    the struct min, which stays value-identical to per-pair verification
-    (same row selected: within one (band, w) a pair occupies exactly one
-    bucket and one (i, j), so bkey never tiebreaks)."""
+    contracts, value-identical to per-pair verification. Past the band
+    field's bound (bands > 256) the call raises before any Spark job
+    runs."""
+    from kafka_etl_automation_spark import session
     from kafka_etl_automation_spark.operators import dedup, text
 
     stem = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1887,30 +1917,23 @@ def test_once_per_pair_reduction_packed_is_hash_aggregable(spark, monkeypatch):
     assert r_packed == ref(**kw)
     assert len(r_packed) > 0
 
-    # bipartite block-split contract (both the attested-binary and
-    # unattested >=2-label plans)
+    # bipartite block-split contract
     bkw = dict(
-        kw, bands=32, bipartite=text.hash_split("text", 50), content_keyed=True
+        kw,
+        bands=32,
+        bipartite=text.hash_split("text", 50) == "eval",
+        content_keyed=True,
     )
     bp = dedup.minhash_lsh_pairs(df, **bkw)
     assert "SortAggregate" not in plan(bp)
+    assert "partial_min_by" in plan(bp)
     assert res(bp) == ref(**bkw)
-    ba = dedup.minhash_lsh_pairs(df, max_labels=2, **bkw)
-    assert "SortAggregate" not in plan(ba)
-    assert res(ba) == res(bp)
 
-    # 257 bands overflow the packed band field (bits 55..62): the struct
-    # fallback, on the label-free and the unattested cross-label plans
-    wide = dict(kw, num_hashes=257, bands=257)
-    fb = dedup.minhash_lsh_pairs(df, **wide)
-    assert "SortAggregate" in plan(fb)
-    r_fb = res(fb)
-    assert r_fb == ref(**wide)
-    assert len(r_fb) > 0
-    bwide = dict(bkw, num_hashes=257, bands=257)
-    bfb = dedup.minhash_lsh_pairs(df, **bwide)
-    assert "SortAggregate" in plan(bfb)
-    assert res(bfb) == ref(**bwide)
+    # 257 bands overflow the packed band field (bits 54..61)
+    first_job = session.next_job_id(spark)
+    with pytest.raises(ValueError, match="bands must be <= 256"):
+        dedup.minhash_lsh_pairs(df, **dict(kw, num_hashes=257, bands=257))
+    assert session.next_job_id(spark) == first_job
 
 
 def test_flood_escalation_policy():
@@ -1919,26 +1942,41 @@ def test_flood_escalation_policy():
     local box under the immutable-after-start lz4 codec NAMING the exact
     knobs, auto-raise the (runtime-settable) shuffle partitions otherwise,
     and never touch sub-flood plans (gate/bench volumes sit orders of
-    magnitude below the ceiling)."""
+    magnitude below the ceiling). A kept bucket of 2^27 documents always
+    aborts: the packed pair location cannot index it."""
     from kafka_etl_automation_spark.operators import dedup
 
     flood = dedup._FLOOD_NARROW_ROWS
+    big = 1000  # a kept bucket size well inside the packed indices
     # sub-flood: untouched regardless of env
-    assert dedup._flood_escalation(flood, "local[32]", "lz4", 32) is None
-    assert dedup._flood_escalation(10_000, "local[32]", "lz4", 32) is None
+    assert dedup._flood_escalation(flood, big, "local[32]", "lz4", 32) is None
+    assert dedup._flood_escalation(10_000, big, "local[32]", "lz4", 32) is None
     # flood + local + lz4: abort naming the knobs
-    kind, msg = dedup._flood_escalation(2 * flood, "local[32]", "lz4", 32)
+    kind, msg = dedup._flood_escalation(2 * flood, big, "local[32]", "lz4", 32)
     assert kind == "abort"
     assert "SPARK_GRAFT_IO_CODEC=zstd" in msg and "max_bucket" in msg
     # flood + local + zstd: partition escalation, sized to the volume
-    kind, n = dedup._flood_escalation(2 * flood, "local[32]", "zstd", 32)
+    kind, n = dedup._flood_escalation(2 * flood, big, "local[32]", "zstd", 32)
     assert kind == "raise_partitions"
     assert n == (2 * flood) // dedup._FLOOD_ROWS_PER_PARTITION
     # flood on a CLUSTER master: never abort (multi-disk), just escalate
-    kind, n = dedup._flood_escalation(2 * flood, "spark://host:7077", "lz4", 32)
+    kind, n = dedup._flood_escalation(
+        2 * flood, big, "spark://host:7077", "lz4", 32
+    )
     assert kind == "raise_partitions" and n > 32
     # partitions already sized: nothing to do
-    assert dedup._flood_escalation(2 * flood, "local[32]", "zstd", 4096) is None
+    assert dedup._flood_escalation(2 * flood, big, "local[32]", "zstd", 4096) is None
+    # a kept bucket of 2^27 docs aborts on any master and codec, naming
+    # the cap; one doc fewer is still indexable
+    for master, codec in (("local[32]", "lz4"), ("spark://host:7077", "zstd")):
+        kind, msg = dedup._flood_escalation(
+            2 * flood, 1 << 27, master, codec, 4096
+        )
+        assert kind == "abort" and "max_bucket" in msg
+    assert (
+        dedup._flood_escalation(2 * flood, (1 << 27) - 1, "local[32]", "zstd", 4096)
+        is None
+    )
 
 
 def test_scale_partition_floor(spark, monkeypatch):
@@ -2156,7 +2194,7 @@ def test_grouped_bucket_blocks_are_sorted(spark):
     bp = agg_plan(
         dedup.minhash_lsh_pairs(
             df,
-            bipartite=text.hash_split("text", 50),
+            bipartite=text.hash_split("text", 50) == "eval",
             content_keyed=True,
             **kw,
         )

@@ -163,6 +163,39 @@ def test_progress_listener_records_offsets(spark, tmp_root):
         lst.detach(spark)
 
 
+def test_progress_listener_logs_a_failed_audit_row(spark, tmp_root, caplog):
+    """A progress row that cannot be written (here: a non-local audit
+    path, which io.local_path refuses) is logged as a WARNING naming the
+    query and batch, and the stream still drains."""
+    import logging
+    import re
+    import time
+
+    src = os.path.join(tmp_root, "src")
+    _write_batch_file(spark, src, 0, 40, "a")
+    lst = ingest.ProgressAuditListener("hdfs://namenode/progress").attach(spark)
+    logger = "kafka_etl_automation_spark.streaming.ingest"
+    try:
+        with caplog.at_level(logging.WARNING, logger=logger):
+            res = _run(spark, tmp_root, src)
+            assert res.n_records == 40 and res.n_batches == 1
+            # listener callbacks run on the listener-bus thread
+            deadline, hits = time.time() + 20, []
+            while not hits and time.time() < deadline:
+                hits = [
+                    r for r in caplog.records
+                    if r.name == logger and "progress audit row" in r.getMessage()
+                ]
+                time.sleep(0.5)
+    finally:
+        lst.detach(spark)
+    assert hits and all(r.levelno == logging.WARNING for r in hits)
+    assert re.search(
+        r"query [0-9a-f-]{36} batch \d+ not written to hdfs://namenode/progress",
+        hits[0].getMessage(),
+    ), hits[0].getMessage()
+
+
 def test_kafka_shape_roundtrip_and_corrupt_records(spark):
     df = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", -2.0)], "event_id long, kind string, v double"
