@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_etl_automation_spark.io import local_path
+
 CONTROL_SCHEMA = T.StructType(
     [
         T.StructField("job_name", T.StringType(), False),
@@ -102,14 +104,16 @@ class HwmWindow:
 
 
 class JobRegistry:
-    """Run registry backed by parquet control tables under ``root``."""
+    """Run registry backed by parquet control tables under ``root``, a
+    local directory (:func:`io.local_path`: a plain path or a ``file:``
+    URI)."""
 
     LOCK_TIMEOUT = 10.0  # seconds to wait for .registry.lock before raising
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
+        self.root = local_path(root)
+        os.makedirs(self.root, exist_ok=True)
 
     # -- storage ------------------------------------------------------------
 

@@ -73,11 +73,11 @@ def fs_path(path: str) -> str:
 
 def local_path(path: str) -> str:
     """:func:`fs_path` for a table this process writes itself with
-    pyarrow, such as an audit: a plain path or a ``file:`` URI. Any other
-    scheme raises, rather than the write landing in a local directory
-    named after the URI."""
+    pyarrow, such as an audit or the control tables: a plain path or a
+    ``file:`` URI. Any other scheme raises, rather than the write landing
+    in a local directory named after the URI."""
     if urlparse(path).scheme not in ("", "file"):
-        raise ValueError(f"audit tables are local files; got {path!r}")
+        raise ValueError(f"audit and control tables are local files; got {path!r}")
     return fs_path(path)
 
 

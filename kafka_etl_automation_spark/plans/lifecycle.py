@@ -16,9 +16,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
+import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from kafka_etl_automation_spark import quality, scd
 from kafka_etl_automation_spark.catalog import load_table, load_tables
@@ -599,51 +603,72 @@ def stream_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stateful streaming operators as gate queries (VERDICT r03 #7)
+# Stateful streaming operators as gate queries (VERDICT r03 #7). Each gate
+# drains a bounded source through run_bounded, the one memory-sink run the
+# gates, tools/stream_state_bench.py and the tests share.
 # ---------------------------------------------------------------------------
 
 
-from contextlib import contextmanager
-
-
-# Bound on a bounded streaming run's IDLE time (no newly completed batch),
-# see _await_bounded.
+# Bound on a bounded streaming run's IDLE time (no progress), see
+# run_bounded.
 STREAM_IDLE_BUDGET_S = 1800.0
 
 
-def _await_bounded(q) -> None:
-    """Wait for an availableNow streaming query to self-terminate.
+def run_bounded(
+    out: DataFrame, root: str, mode: str = "append", rows: int | None = None
+) -> tuple[DataFrame, StreamingQuery]:
+    """Run the streaming frame ``out`` into a memory sink with an
+    availableNow trigger (checkpoint under ``root``) until it is done, and
+    return ``(sink, query)``: the sink's rows as a frame and the stopped
+    query, whose progress stays readable.
+
+    Done means the query terminated on its own or, when ``rows`` is given,
+    the sink holds at least ``rows`` rows. The target is for streams that
+    never terminate on their own: availableNow keeps an
+    applyInPandasWithState query running while processing-time timeouts
+    are pending, after its data has drained.
 
     ``q.awaitTermination(n)`` returning False is NOT completion: at the
     100x scale-proof SF the interval join outran a flat 180s budget and
     the gate silently read a still-empty memory sink (0 rows where 30x
-    emitted 11,159) — the same absolute-deadline failure class the
-    sessionize poll already fixed. availableNow always terminates on its
-    own, so wait in short poll steps and bound only IDLE time (no newly
-    completed batch) rather than total runtime: scale growth extends the
-    wait, while a stalled query still dies within one idle window and a
-    dead one surfaces its real exception immediately.
-    ``STREAM_IDLE_BUDGET_S`` must exceed the longest SINGLE micro-batch
-    (progress lands per batch, so it cannot tick mid-batch): the 100x
-    interval join's one availableNow batch ran past a 300s budget, so it
-    is a generous 1800s — it exists to catch true hangs/deaths, not to
-    pace healthy processing.
-    """
-    import time
-
-    last, deadline = None, time.time() + STREAM_IDLE_BUDGET_S
-    while not q.awaitTermination(2.0):
-        if q.exception() is not None:
-            raise q.exception()
-        p = q.lastProgress or {}
-        tag = (p.get("batchId"), p.get("timestamp"))
-        if tag != last:
-            last, deadline = tag, time.time() + STREAM_IDLE_BUDGET_S
-        if time.time() > deadline:
-            q.stop()
-            raise RuntimeError(
-                f"streaming query made no batch progress for {STREAM_IDLE_BUDGET_S}s"
-            )
+    emitted 11,159). So the wait bounds only IDLE time: a new batch, or
+    with ``rows`` a sink that grew, restarts ``STREAM_IDLE_BUDGET_S``.
+    Scale growth extends the wait, a stalled query is stopped with a
+    RuntimeError within one idle window, and a failed one raises its own
+    exception at once. The budget must exceed the longest SINGLE
+    micro-batch (progress lands per batch): the 100x interval join's one
+    availableNow batch ran past 300s, so it is a generous 1800s. It
+    detects hangs; it does not pace healthy processing."""
+    spark = out.sparkSession
+    name = "sink_" + uuid.uuid4().hex
+    q = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        last, deadline = None, time.monotonic() + STREAM_IDLE_BUDGET_S
+        # awaitTermination raises the query's own exception once it failed
+        while not q.awaitTermination(0.5):
+            if rows is None:
+                p = q.lastProgress or {}
+                seen = (p.get("batchId"), p.get("timestamp"))
+            else:
+                seen = spark.table(name).count()
+                if seen >= rows:
+                    break
+            if seen != last:
+                last, deadline = seen, time.monotonic() + STREAM_IDLE_BUDGET_S
+            elif time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"streaming query made no progress for {STREAM_IDLE_BUDGET_S}s"
+                )
+    finally:
+        q.stop()
+    return spark.table(name), q
 
 
 def _parquet_num_rows(sf_dir: str, table: str) -> int:
@@ -760,9 +785,10 @@ def stream_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_etl_automation_spark.operators import sessions
 
     events = load_table(spark, sf_dir, "events")
-    # expected = batch sessionization on truncated-seconds ts; polling
-    # against it makes the bounded run deterministic (state flush lands
-    # when the processing-time timeout fires, not at data exhaustion)
+    # expected = batch sessionization on truncated-seconds ts; running the
+    # stream to it makes the bounded run deterministic (state flush lands
+    # when the processing-time timeout fires, not at data exhaustion, and
+    # the query keeps running cleanup batches while timeouts are pending)
     trunc = events.withColumn(
         "ts", F.timestamp_seconds(F.unix_timestamp("ts"))
     )
@@ -771,44 +797,12 @@ def stream_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp("ssess")
     src = os.path.join(root, "src")
     events.coalesce(1).write.parquet(src)  # one file => one data batch
-    name = "sess_" + os.path.basename(root).replace("-", "_")
-    import time
-
     with _stream_shuffle_partitions(spark, sf_dir):
         stream = spark.readStream.schema(events.schema).parquet(src)
         out = sessions.stream_sessionize(
             stream, gap_minutes=30, timeout_seconds=2
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
-        )
-        try:
-            # the engine keeps scheduling cleanup batches while timeouts
-            # are pending, so poll the sink to the known total, then stop.
-            # The deadline is PROGRESS-based (reset whenever the sink
-            # grows), not absolute: the 30x scale-proof ran the fixed
-            # 120s budget down to 118s of genuine processing — an
-            # absolute deadline turns scale growth into a false failure,
-            # while a stalled query still dies within one window.
-            last_n, deadline = -1, time.time() + 120
-            while time.time() < deadline:
-                if q.exception() is not None:
-                    # a dead query would otherwise burn the deadline and
-                    # fail with a misleading row-count assertion
-                    raise q.exception()
-                n_now = spark.table(name).count()
-                if n_now >= expected:
-                    break
-                if n_now > last_n:
-                    last_n, deadline = n_now, time.time() + 120
-                time.sleep(0.5)
-        finally:
-            q.stop()
-    got = spark.table(name)
+        got, _ = run_bounded(out, root, rows=expected)
     n_got = got.count()
     assert n_got == expected, (
         f"streaming sessionize emitted {n_got} sessions, "
@@ -841,22 +835,13 @@ def stream_windowed_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tmp("swin")
     src = os.path.join(root, "src")
     events.coalesce(1).write.parquet(src)
-    name = "swin_" + os.path.basename(root).replace("-", "_")
     with _stream_shuffle_partitions(spark, sf_dir):
         stream = spark.readStream.schema(events.schema).parquet(src)
         out = sessions.stream_windowed_counts(
             stream, window_minutes=60, watermark_minutes=120
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_bounded(q)
-    return spark.table(name).select(
+        got, _ = run_bounded(out, root, mode="complete")
+    return got.select(
         "window_start", "window_end", "n_events", "sum_value"
     )
 
@@ -899,7 +884,6 @@ def stream_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks.coalesce(1).write.parquet(clk_src)
     purchases.coalesce(1).write.parquet(pur_src)
 
-    name = "sij_" + os.path.basename(root).replace("-", "_")
     with _stream_shuffle_partitions(spark, sf_dir):
         out = enrich.interval_join(
             spark.readStream.schema(clicks.schema).parquet(clk_src),
@@ -910,16 +894,8 @@ def stream_interval_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             lead="1 hour",
             watermark="10 minutes",
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_bounded(q)
-    return spark.table(name).select(
+        got, _ = run_bounded(out, root)
+    return got.select(
         "user_id", "click_id", "click_ts", "purch_ts", "purch_value"
     )
 
@@ -956,7 +932,6 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append"
     ).parquet(src)
 
-    name = "sdedup_" + os.path.basename(root).replace("-", "_")
     with _stream_shuffle_partitions(spark, sf_dir):
         stream = (
             spark.readStream.schema(events.schema)
@@ -966,22 +941,13 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = s_ingest.exactly_once_dedup(
             stream, key_cols=("event_id",), ts_col="ts", watermark="60 days"
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_bounded(q)
+        got, q = run_bounded(out, root)
         # the redeliveries must have arrived in a LATER micro-batch, or
         # this would only prove in-batch dedup, not state carry-over
         last_batch = (q.lastProgress or {}).get("batchId", 0)
         assert last_batch >= 1, (
             f"expected >=2 micro-batches, saw batchId={last_batch}"
         )
-    got = spark.table(name)
     n_got, n_src = got.count(), events.count()
     # a redelivery that leaked through would make this count 1/7 larger
     assert n_got == n_src, (

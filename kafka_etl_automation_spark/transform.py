@@ -19,8 +19,9 @@ reference runs per job (/root/reference/KafkaScript_ConformToStaging.sh):
 
 Scale: the control-plane steps are tiny metadata ops; the data-plane read
 is a single windowed scan -> partitioned write, fully parallel. Nothing
-here collects data: the only collect is the DQ suite's two result rows. Past the emptiness probe, a hop costs the write, one DQ
-aggregate over the window and the landed partition, and no audit job.
+here collects data: the only collect is the DQ suite's two result rows. A
+hop, an empty window included, costs the write, one DQ aggregate over the
+window and the landed partition, and no audit job.
 """
 
 from __future__ import annotations
@@ -73,15 +74,10 @@ def incremental_load(
             batch = batch.withColumnRenamed(src_run_col, "src_job_run_id")
             src_run_col = "src_job_run_id"
 
-        if batch.isEmpty():
-            # a successful source run can legitimately carry zero rows (the
-            # reference's "NO RECORDS" runs complete with success status);
-            # consume the window without writing a footerless empty
-            # partition
-            registry.finish_run(job_name, run_id, status=1, records=0)
-            registry.record_consumed(job_name, run_id, src_job_name, window)
-            return LoadResult(run_id, window, 0, True)
-
+        # A successful source run can legitimately carry zero rows (the
+        # reference's "NO RECORDS" runs complete with success status): such
+        # a window takes the same path, its dynamic-overwrite write lands no
+        # partition, the recount reads 0 and the run consumes the window.
         scd.append_run(batch, target_path, run_id)
 
         # The recount reads the landed partition back from storage,

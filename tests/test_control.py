@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from kafka_etl_automation_spark.control import HwmWindow, JobRegistry, apply_window
 
 
@@ -83,3 +87,18 @@ def test_registry_lock_blocks_and_times_out(spark, tmp_root):
     os.unlink(lock)
     assert reg.start_run("job_a") == 1  # lock released -> proceeds
     assert not os.path.exists(lock)  # and cleans up after itself
+
+
+def test_registry_root_is_a_local_path(spark, tmp_root, monkeypatch):
+    """The control tables are written by pyarrow: a ``file:`` URI root
+    lands at its path, and a cluster scheme raises before any file is
+    created, rather than a local directory named after the URI."""
+    monkeypatch.chdir(tmp_root)  # where a URI taken as a relative path lands
+    root = os.path.join(tmp_root, "ctl")
+    reg = JobRegistry(spark, "file://" + root)
+    reg.finish_run("job_a", reg.start_run("job_a"), status=1)
+    assert os.path.isfile(os.path.join(root, "job_process_control.parquet"))
+    assert reg.latest_success("job_a") == 1
+    with pytest.raises(ValueError, match="local files"):
+        JobRegistry(spark, "hdfs://nn:8020/ctl")
+    assert os.listdir(tmp_root) == ["ctl"]

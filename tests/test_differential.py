@@ -37,6 +37,11 @@ FAST_SUBSET = [
     "ext_gapfill",
     "ext_session_window",
     "ext_grouping_sets",
+    # the bounded stream gates, each run through lifecycle.run_bounded
+    "stream_sessionize",
+    "stream_windowed_counts",
+    "stream_interval_join",
+    "stream_dedup",
 ]
 
 

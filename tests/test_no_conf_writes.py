@@ -1,5 +1,6 @@
 """Operators and streaming code never write a session conf, and cache
-only through the runtime's bounded pools.
+only through the runtime's bounded pools; plans and tools start a memory
+sink only through ``lifecycle.run_bounded``.
 
 A conf an operator sets outlives its call: every later query in the
 session plans with it, and a stateful stream fixes its state partitions
@@ -10,6 +11,15 @@ the pool caps nor a release ever frees it. This walks the source with
 too: any ``<x>.conf.set(...)`` or ``<x>.conf.unset(...)`` call, and any
 ``.persist(...)`` or ``.cache(...)`` call other than ``runtime.persist``,
 under ``operators/`` or ``streaming/`` fails it.
+
+A memory-sink run started by hand also picks its own stop rule, and a
+wait whose "not finished" answer is ignored reads a sink that is still
+filling. Any ``.writeStream.format("memory")`` call under ``plans/`` or
+``tools/`` outside ``run_bounded`` fails the walk. Before run_bounded
+there were eight: the four ``stream_*`` gates in ``plans/lifecycle.py``
+(the sessionize gate with its own 120 s poll loop) and the four runners
+in ``tools/stream_state_bench.py`` (the sessionize one with a 3600 s
+loop).
 """
 
 from __future__ import annotations
@@ -47,6 +57,27 @@ def _violations(path: Path) -> list[str]:
     return found
 
 
+def _memory_sinks(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text(), str(path))
+    allowed = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name == "run_bounded"
+        for n in ast.walk(f)
+    }
+    return [
+        f"{path}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "format"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "writeStream"
+        and [a.value for a in node.args if isinstance(a, ast.Constant)] == ["memory"]
+        and id(node) not in allowed
+    ]
+
+
 def test_operators_and_streaming_write_no_conf():
     files = sorted(
         f for d in ("operators", "streaming") for f in (PACKAGE / d).rglob("*.py")
@@ -75,3 +106,23 @@ def test_the_walk_finds_an_unpooled_cache(tmp_path):
         "    return runtime.persist('collapse', df), a, b\n"
     )
     assert [w.rsplit(":", 1)[1] for w in _violations(src)] == ["2", "3"]
+
+
+def test_plans_and_tools_start_memory_sinks_only_in_run_bounded():
+    files = sorted((PACKAGE / "plans").rglob("*.py")) + sorted(
+        (PACKAGE.parent / "tools").glob("*.py")
+    )
+    assert any(f.name == "stream_state_bench.py" for f in files)
+    assert [w for f in files for w in _memory_sinks(f)] == []
+
+
+def test_the_walk_finds_a_memory_sink_outside_run_bounded(tmp_path):
+    src = tmp_path / "gate.py"
+    src.write_text(
+        "def run_bounded(out):\n"
+        "    return out.writeStream.format('memory').start()\n"
+        "def gate(out):\n"
+        "    out.writeStream.format('parquet').start()\n"
+        "    return out.writeStream.format('memory').queryName('x').start()\n"
+    )
+    assert [w.rsplit(":", 1)[1] for w in _memory_sinks(src)] == ["5"]

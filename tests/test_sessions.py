@@ -8,6 +8,7 @@ from datetime import datetime, timezone
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark.operators import sessions
+from kafka_etl_automation_spark.plans.lifecycle import run_bounded
 
 
 def ts(minute):
@@ -61,19 +62,8 @@ def test_stream_windowed_counts_matches_batch(spark, tmp_root):
         spark.readStream.schema(events_df(spark, ROWS).schema).parquet(src)
     )
     agg = sessions.stream_windowed_counts(stream, 60, watermark_minutes=120)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("wincounts")
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.window_start: (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM wincounts").collect()
-    }
+    sink, _ = run_bounded(agg, tmp_root, mode="complete")
+    got = {r.window_start: (r.n_events, r.sum_value) for r in sink.collect()}
     batch = {
         r.window_start: (r.n_events, r.sum_value)
         for r in sessions.windowed_counts(events_df(spark, ROWS), 60).collect()
@@ -89,30 +79,11 @@ def test_stream_sessionize_stateful(spark, tmp_root):
     events_df(spark, ROWS).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(events_df(spark, ROWS).schema).parquet(src)
     out = sessions.stream_sessionize(stream, gap_minutes=30)
-    # NOTE: availableNow + ProcessingTimeTimeout keeps running state-cleanup
-    # batches until pending timeouts fire, so drive the query with
-    # processAllAvailable + stop instead of awaitTermination.
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp_root, "ckpt"))
-        .start()
-    )
-    import time
-
-    try:
-        # poll the sink: the engine keeps running state-cleanup batches
-        # (pending processing-time timeouts), so both awaitTermination and
-        # processAllAvailable would block far longer than the data needs
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT count(*) c FROM sess").first().c >= 1:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    rows = spark.sql("SELECT * FROM sess").collect()
+    # availableNow + ProcessingTimeTimeout keeps running state-cleanup
+    # batches until pending timeouts fire, so run the sink to its one
+    # closed session instead of waiting for termination
+    sink, _ = run_bounded(out, tmp_root, rows=1)
+    rows = sink.collect()
     got = {(r.user_id, r.session_start, r.session_end, r.n_events) for r in rows}
     naive = lambda m: ts(m).replace(tzinfo=None)  # noqa: E731
     # user 1's first session (0-20, 3 events) closed deterministically when

@@ -9,6 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_etl_automation_spark.plans import lifecycle
+from kafka_etl_automation_spark.plans.lifecycle import run_bounded
 from kafka_etl_automation_spark.streaming import ingest
 
 
@@ -308,21 +310,56 @@ def test_exactly_once_dedup_drops_redeliveries(spark, tmp_root):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
     out = ingest.exactly_once_dedup(stream, ("event_id",), "ts", "10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("eo_dedup")
-        .outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join(tmp_root, "eo_ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r.event_id for r in spark.sql("SELECT event_id FROM eo_dedup").collect()
-    )
+    sink, _ = run_bounded(out, tmp_root)
+    got = sorted(r.event_id for r in sink.select("event_id").collect())
     assert got == [1, 2, 3]
+
+
+def test_run_bounded_stops_a_stream_that_stops_progressing(
+    spark, tmp_root, monkeypatch
+):
+    """A rows target the stream never reaches: once the sink has not grown
+    for STREAM_IDLE_BUDGET_S, run_bounded raises and leaves no query
+    running. The sessionizer's 30-minute processing-time timeout keeps
+    the availableNow query alive after its one closed session lands."""
+    from datetime import datetime
+
+    from kafka_etl_automation_spark.operators import sessions
+
+    monkeypatch.setattr(lifecycle, "STREAM_IDLE_BUDGET_S", 3.0)
+    src = os.path.join(tmp_root, "src")
+    schema = "user_id long, ts timestamp"
+    spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 0, 0)), (1, datetime(2024, 1, 1, 2, 0))], schema
+    ).coalesce(1).write.parquet(src)
+    out = sessions.stream_sessionize(
+        spark.readStream.schema(schema).parquet(src), gap_minutes=30
+    )
+    with pytest.raises(RuntimeError, match="no progress for 3.0s"):
+        run_bounded(out, tmp_root, rows=2)
+    assert spark.streams.active == []
+
+
+def test_run_bounded_raises_the_stream_error_at_once(spark, tmp_root):
+    """A stream whose UDF raises surfaces that exception as soon as the
+    query dies, without waiting out the idle budget."""
+    import time
+
+    from pyspark.errors import StreamingQueryException
+
+    src = os.path.join(tmp_root, "src")
+    spark.range(3).coalesce(1).write.parquet(src)
+
+    @F.udf("long")
+    def fail(x):
+        raise ValueError("a row the stream cannot take")
+
+    out = spark.readStream.schema("id long").parquet(src).select(fail("id").alias("x"))
+    t0 = time.monotonic()
+    with pytest.raises(StreamingQueryException, match="a row the stream cannot take"):
+        run_bounded(out, tmp_root)
+    assert time.monotonic() - t0 < lifecycle.STREAM_IDLE_BUDGET_S / 10
+    assert spark.streams.active == []
 
 
 def test_interval_join_stream_stream(spark, tmp_root):
@@ -362,19 +399,8 @@ def test_interval_join_stream_stream(spark, tmp_root):
         imps, clks, on=["ad_id"], left_ts="imp_ts", right_ts="clk_ts",
         lead="1 hour", watermark="10 minutes",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp_root, "ssj_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.ad_id, r.click_id)
-        for r in spark.sql("SELECT ad_id, click_id FROM ssj_out").collect()
-    }
+    sink, _ = run_bounded(out, tmp_root)
+    got = {(r.ad_id, r.click_id) for r in sink.select("ad_id", "click_id").collect()}
     assert got == {(1, 100)}
 
 
@@ -480,20 +506,9 @@ def test_interval_join_chunked_sources_bound_state(spark, tmp_root):
         on=["ad_id"], left_ts="imp_ts", right_ts="clk_ts",
         lead="1 hour", watermark="10 minutes",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cij_out")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp_root, "cij_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    sink, q = run_bounded(out, tmp_root)
     progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    got = {
-        (r.ad_id, r.click_id)
-        for r in spark.sql("SELECT ad_id, click_id FROM cij_out").collect()
-    }
+    got = {(r.ad_id, r.click_id) for r in sink.select("ad_id", "click_id").collect()}
     assert got == expect  # chunking is value-preserving, straddles included
 
     # one micro-batch per chunk file, and the state PLATEAUS: with 600

@@ -41,20 +41,28 @@ def test_second_hop_restamps_upstream_lineage(spark, tmp_root):
     assert set(x.src_job_run_id for x in dim.select("src_job_run_id").distinct().collect()) == {1, 2}
 
 
-def test_empty_window_batch_completes_without_write(spark, tmp_root):
-    """A successful source run with zero matching rows must consume the
-    window (status 1, records 0) and not leave a footerless partition."""
+def test_empty_window_takes_the_common_path(spark, tmp_root):
+    """A successful source run with zero matching rows takes the path of
+    any window: the write lands no partition, the landed recount reads 0
+    and the DQ audit logs two 0/0 PASS rows; the run finishes with status
+    1 and 0 records and consumes the window."""
     reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
     source = spark.range(10).select(
         F.col("id"), F.lit(99).cast("long").alias("job_run_id")  # never in window
     )
     _src_runs(reg, 1)
+    staging, audit = os.path.join(tmp_root, "staging"), os.path.join(tmp_root, "audit")
     r = incremental_load(
-        spark, reg, "stg", "conform", source, "job_run_id",
-        os.path.join(tmp_root, "staging"),
+        spark, reg, "stg", "conform", source, "job_run_id", staging, audit
     )
     assert r is not None and r.dq_passed and r.records == 0
-    assert not os.path.exists(os.path.join(tmp_root, "staging"))
+    run = reg.control().filter(F.col("job_name") == "stg").first()
+    assert (run.job_run_status, run.records_processed) == (1, 0)
+    assert not [p for p in os.listdir(staging) if p.startswith("create_job_run_id=")]
+    got = sorted(
+        (x.status, x.metric_a, x.metric_b) for x in spark.read.parquet(audit).collect()
+    )
+    assert got == [("PASS", 0, 0), ("PASS", 0, 0)]
     # window consumed: next call short-circuits
     assert (
         incremental_load(spark, reg, "stg", "conform", source, "job_run_id",
@@ -145,11 +153,11 @@ def test_two_loads_consume_disjoint_windows(spark, tmp_root):
 
 
 def test_one_window_job_budget(spark, tmp_root):
-    """One window costs the emptiness probe, the write and ONE DQ
-    aggregate over the batch and the landed partition; the audit is
-    written from the collected rows with no job. 13 jobs when the suite
-    ran twice (collect, then the audit write) and the landed partition's
-    schema was inferred."""
+    """One window costs the write and ONE DQ aggregate over the batch and
+    the landed partition; the audit is written from the collected rows
+    with no job. 13 jobs when the suite ran twice (collect, then the audit
+    write) and the landed partition's schema was inferred; 4 while an
+    emptiness probe ran before the write."""
     reg = JobRegistry(spark, os.path.join(tmp_root, "ctl"))
     source = spark.range(100).select(
         F.col("id"), (F.col("id") % 4 + 1).alias("job_run_id")
@@ -166,7 +174,7 @@ def test_one_window_job_budget(spark, tmp_root):
         ),
     )
     assert loads[0] is not None and loads[0].dq_passed and loads[0].records == 50
-    assert work["jobs"] <= 6, work
+    assert work["jobs"] <= 3, work
 
 
 def test_audit_rows_match_the_lazy_suite(spark, tmp_root):

@@ -32,7 +32,7 @@ from datetime import timedelta
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_etl_automation_spark.plans.lifecycle import _await_bounded  # noqa: E402
+from kafka_etl_automation_spark.plans.lifecycle import run_bounded  # noqa: E402
 
 
 def write_time_chunks(df, ts_col: str, path: str, k: int) -> int:
@@ -120,7 +120,6 @@ def run_interval_join(spark, sf_dir, chunks):
         )
         .count()
     )
-    name = "ssb_ij_" + os.path.basename(root)
     out = enrich.interval_join(
         spark.readStream.schema(clicks.schema)
         .option("maxFilesPerTrigger", "1").parquet(clk),
@@ -130,15 +129,9 @@ def run_interval_join(spark, sf_dir, chunks):
         lead="1 hour", watermark="10 minutes",
     )
     t0 = time.time()
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    _await_bounded(q)
+    sink, q = run_bounded(out, root)
     wall = time.time() - t0
-    emitted = spark.table(name).count()
+    emitted = sink.count()
     return {
         "query": "stream_interval_join", "wall_sec": round(wall, 1),
         "emitted": emitted, "expected": expected,
@@ -179,7 +172,6 @@ def run_dedup(spark, sf_dir, chunks):
         ).coalesce(1).write.mode("append").parquet(src)
         time.sleep(0.05)
 
-    name = "ssb_dd_" + os.path.basename(root)
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -188,15 +180,9 @@ def run_dedup(spark, sf_dir, chunks):
         stream, key_cols=("event_id",), ts_col="ts", watermark=f"{wm_days} days"
     )
     t0 = time.time()
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    _await_bounded(q)
+    sink, q = run_bounded(out, root)
     wall = time.time() - t0
-    emitted = spark.table(name).count()
+    emitted = sink.count()
     return {
         "query": "stream_dedup", "wall_sec": round(wall, 1),
         "emitted": emitted, "expected": n_src,
@@ -217,7 +203,6 @@ def run_sessionize(spark, sf_dir, chunks):
     src = os.path.join(root, "src")
     write_time_chunks(events, "ts", src, chunks)
 
-    name = "ssb_se_" + os.path.basename(root)
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -227,30 +212,15 @@ def run_sessionize(spark, sf_dir, chunks):
     # after the drain — the gate's 2s value could flush mid-drain here
     out = sessions.stream_sessionize(stream, gap_minutes=30, timeout_seconds=30)
     t0 = time.time()
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True).start()
-    )
     # availableNow + applyInPandasWithState does not self-terminate while
-    # processing-time timeouts are pending: poll the sink to expected
-    deadline = time.time() + 3600
-    while time.time() < deadline:
-        if q.exception() is not None:
-            raise q.exception()
-        if not q.isActive or spark.table(name).count() >= expected:
-            break
-        time.sleep(5)
-    metrics = _progress_metrics(q)
-    if q.isActive:
-        q.stop()
+    # processing-time timeouts are pending: run the sink to expected
+    sink, q = run_bounded(out, root, rows=expected)
     wall = time.time() - t0
-    emitted = spark.table(name).count()
+    emitted = sink.count()
     return {
         "query": "stream_sessionize", "wall_sec": round(wall, 1),
         "emitted": emitted, "expected": expected,
-        "equal": emitted == expected, "metrics": metrics,
+        "equal": emitted == expected, "metrics": _progress_metrics(q),
     }
 
 
@@ -276,7 +246,6 @@ def run_windowed_counts(spark, sf_dir, chunks):
     exp_lo = buckets.filter(F.col("end") < wm).count()
     exp_hi = buckets.filter(F.col("end") <= wm).count()
 
-    name = "ssb_wc_" + os.path.basename(root)
     stream = (
         spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -285,15 +254,9 @@ def run_windowed_counts(spark, sf_dir, chunks):
         stream, window_minutes=60, watermark_minutes=120
     )
     t0 = time.time()
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    _await_bounded(q)
+    sink, q = run_bounded(out, root)
     wall = time.time() - t0
-    emitted = spark.table(name).count()
+    emitted = sink.count()
     return {
         "query": "stream_windowed_counts", "wall_sec": round(wall, 1),
         "emitted": emitted, "expected": [exp_lo, exp_hi],
