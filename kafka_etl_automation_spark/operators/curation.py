@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.operators import text
+from kafka_etl_automation_spark.operators import partitioning, text
 from kafka_etl_automation_spark.operators.dedup import normalized_text
 
 _LOG = logging.getLogger(__name__)
@@ -54,10 +54,8 @@ def score_and_filter(
     put 99.5% of the pipeline's cost in these projections, and a small
     single-file corpus scans as ~4 tasks; the rebalance is guarded
     pass-through on any already-wide scan."""
-    from kafka_etl_automation_spark.operators.dedup import _fanout_rebalance
-
     toks = F.split(normalized_text(text_col), " ")
-    scored = _fanout_rebalance(documents).select(
+    scored = partitioning.fan_out(documents).select(
         F.col(id_col).alias("doc_id"),
         text.lang_id(text_col).alias("lang"),
         text.token_count(text_col).alias("n_tokens"),
@@ -463,7 +461,7 @@ def decontaminate_canonical_lsh(
     # floor derives partitions from the source scan size (~2 MiB/partition,
     # anchored to r11's measured 512p@1.2GB working point). None at
     # gate/bench SFs (they sit under the floor).
-    parts = dedup.scale_partition_floor(documents)
+    parts = partitioning.scale_partition_floor(documents)
     is_eval = text.hash_split(text_col, train_pct) == "eval"
     reps, members = dedup._exact_text_collapse(documents, text_col, id_col, parts)
     # One signed frame for everything downstream. All three caches below
@@ -487,7 +485,7 @@ def decontaminate_canonical_lsh(
     sig = runtime.persist(
         "corpus",
         dedup.signature_sets(
-            dedup._by_id(reps, id_col, parts),
+            partitioning.by_id(reps, id_col, parts),
             text_col,
             id_col,
             n,

@@ -24,7 +24,6 @@ reproducible across runs/partitionings.
 from __future__ import annotations
 
 import logging
-import os
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, Window
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark import runtime
+from kafka_etl_automation_spark.operators import partitioning
 
 _LOG = logging.getLogger(__name__)
 
@@ -52,30 +52,6 @@ _settle_async_counts = runtime.settle
 # are real data-plane work, not fixed overhead, and the measured-stats
 # ordering is load-bearing. Matches session.py's broadcast threshold.
 _SMALL_SOURCE_BYTES = 64 * 1024 * 1024
-
-
-def _local_input_bytes(df: DataFrame) -> int | None:
-    """Total stat-able local file bytes behind ``df``'s scan, or None when
-    the frame has no trustworthy local file source (in-memory relations,
-    RDD-backed plans, remote schemes). Driver-side listing only — zero
-    Spark jobs. Shared by scale_partition_floor and the small-source
-    fast paths."""
-    total = 0
-    try:
-        from urllib.parse import unquote, urlparse
-
-        for uri in df.inputFiles():
-            parsed = urlparse(uri)
-            if parsed.scheme in ("file", ""):
-                try:
-                    total += os.path.getsize(unquote(parsed.path))
-                except OSError:
-                    pass
-            else:
-                return None  # non-local scheme: no trustworthy size
-    except Exception:
-        return None
-    return total if total > 0 else None
 
 
 def normalized_text(col: Column | str) -> Column:
@@ -145,102 +121,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _plan_num_partitions(plan) -> int | None:
-    """Output partition count of an adaptive JVM physical plan, read
-    without running it, or None when only running it can tell. AQE
-    changes a count only by coalescing a shuffle's output, so the walk
-    answers just for plans whose output path crosses no shuffle: down the
-    adaptive plan's current physical plan (exchanges inserted), unary
-    nodes and a broadcast hash join's streamed side to a leaf (its RDD:
-    file splits, a driver-side listing, no job) or a loaded cache (its
-    block count) or an explicit ``repartition(n, ...)`` (AQE never changes
-    its count). Nodes on the way that report a partition count (a
-    coalesce, a single-partition operator) cap it. Any other shuffle
-    (exchange, query stage or shuffle read), an unloaded cache (its RDD
-    would build the cache) or another multi-child node (unions, other
-    joins) answer None."""
-    cap = None
-    while True:
-        cls = plan.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            plan = plan.executedPlan()
-            continue
-        if (
-            cls == "ShuffleExchangeExec"
-            and plan.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
-        ):
-            count = plan.outputPartitioning().numPartitions()
-            break
-        if "Exchange" in cls or "QueryStage" in cls or cls == "AQEShuffleReadExec":
-            return None
-        n = plan.outputPartitioning().numPartitions()
-        if n > 0:
-            cap = n if cap is None else min(cap, n)
-        if cls == "BroadcastHashJoinExec":
-            plan = plan.streamedPlan()
-        elif cls == "InMemoryTableScanExec":
-            builder = plan.relation().cacheBuilder()
-            if not builder.isCachedColumnBuffersLoaded():
-                return None
-            count = builder.cachedColumnBuffers().getNumPartitions()
-            break
-        else:
-            kids = plan.children()
-            if kids.size() == 1:
-                plan = kids.apply(0)
-            elif kids.size() == 0:
-                count = plan.execute().getNumPartitions()
-                break
-            else:
-                return None
-    return count if cap is None else min(cap, count)
-
-
-def _jvm_num_partitions(df: DataFrame) -> int:
-    """Partition count via the JVM Dataset — df.rdd would build the full
-    javaToPython serializer pipeline per call (VERDICT r02 minor #5).
-
-    The count is the one the input's RDD has, after AQE's coalescing: a
-    plan with no exchange builds its RDD without running anything. An
-    adaptive plan (any exchange, e.g. a broadcast join) builds it by
-    running its query stages, and the real query then recomputes them;
-    where no shuffle lies on the output path the count is read from the
-    plan instead (:func:`_plan_num_partitions`), which gives the same
-    answer. A shuffle-topped input keeps the executing probe: its count
-    after coalescing depends on the shuffle's measured bytes, and a small
-    one coalesces below defaultParallelism, which is exactly when the
-    fan-out must fire.
-
-    PRIVATE API (df._jdf and the physical plan classes), pinned against
-    pyspark 4.1.x. Any drift raises and _fanout_rebalance falls back to
-    the portable probe — tests/test_operators.py asserts the fallback
-    decides identically on plain and adaptive inputs."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        n = _plan_num_partitions(plan)
-        if n is not None:
-            return n
-    return df._jdf.rdd().getNumPartitions()
-
-
-def _fanout_rebalance(df: DataFrame) -> DataFrame:
-    """Scale parallelism UP before a CPU-multiplying stage (shingle/token
-    explode ~100x the row count and hashes every shingle). A small parquet
-    input scans as few partitions (one file => one task), which would
-    single-thread the whole pipeline; round-robin repartition to the
-    cluster's core count first. Guarded: never reduces partitioning, so a
-    100 TB corpus that already scans wide passes through untouched."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        nparts = _jvm_num_partitions(df)
-    except Exception:  # private-API drift -> the portable (slower) probe
-        nparts = df.rdd.getNumPartitions()
-    if nparts < target:
-        return df.repartition(target)
-    return df
-
-
 def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(id, sh): each document's DISTINCT n-gram shingle strings, one row
     per shingle — the exploded form of ``shingles()`` with the identical
@@ -257,7 +137,7 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int) -> Dat
     tests/test_operators.py::test_exploded_shingles_matches_shingles."""
     toks = tokens(text_col)
     base = (
-        _fanout_rebalance(df)
+        partitioning.fan_out(df)
         .select(
             F.col(id_col).alias("id"),
             toks.alias("tk"),
@@ -360,21 +240,19 @@ def _shingle_hash_rows(
     Same values row-for-row (xxhash64 over the same n token columns;
     duplicates retained — min/collect_set downstream are duplicate-
     insensitive); docs with fewer than n tokens emit no rows, matching
-    shingle_hashes' empty-array semantics.
+    shingle_hashes' empty-array semantics. No fan-out here: the engine's
+    callers pass an id-keyed input (``partitioning.by_id``), already at
+    least at the core count.
     """
     toks = tokens(text_col)
     extra = [c.alias(name) for name, c in (carry or {}).items()]
     extra_names = list((carry or {}).keys())
-    base = (
-        _fanout_rebalance(df)
-        .select(
-            F.col(id_col).alias("id"),
-            *extra,
-            toks.alias("tk"),
-            (F.size(toks) - (n - 1)).alias("m"),
-        )
-        .filter(F.col("m") >= 1)
-    )
+    base = df.select(
+        F.col(id_col).alias("id"),
+        *extra,
+        toks.alias("tk"),
+        (F.size(toks) - (n - 1)).alias("m"),
+    ).filter(F.col("m") >= 1)
     return base.select(
         "id", *extra_names, "tk",
         F.explode(F.sequence(F.lit(1), F.col("m"))).alias("p"),
@@ -398,8 +276,9 @@ def signature_sets(
     """The per-document frame minhash_lsh_pairs builds internally: one row
     per doc with BOTH the exact-verification shingle-hash set (``sh``,
     array<long>) and the full MinHash signature (``mh0..mh{k-1}``), built
-    in ONE explode + ONE aggregation (the k mins and the collect_set
-    combine map-side, so the shuffle carries one row per doc).
+    in ONE explode + ONE aggregation. Pass ``df`` keyed on ``id_col``
+    (``partitioning.by_id``): the aggregation then needs no exchange of
+    its own, and the documents ride the input's one exchange.
 
     Public so multi-pass pipelines can sign a corpus ONCE and feed several
     LSH passes via ``minhash_lsh_pairs(sig_source=...)`` — e.g.
@@ -439,7 +318,8 @@ def _exact_text_collapse(
     distinct text; ``members`` maps ``rep -> member`` for EVERY input id
     (reps map to themselves). Group identity is (length, xxhash64) of the
     raw text — same collision class (~N²/2⁶⁴) the shingle hashing already
-    accepts. ``parts``: the caller's :func:`scale_partition_floor` count,
+    accepts. ``parts``: the caller's ``partitioning.scale_partition_floor``
+    count,
     which the group cache keeps (None: the session's plan).
 
     Why this exists: near-dup candidate generation is quadratic in
@@ -499,7 +379,7 @@ def _exact_text_collapse(
     # (runtime.settle_on_exit). At
     # bench SF this removes one full sequential job per collapse-backed
     # query; at octave/cluster scale behavior is unchanged.
-    size = _local_input_bytes(df)
+    size = partitioning.local_input_bytes(df)
     runtime.eager_count(
         members, overlap=size is not None and size <= _SMALL_SOURCE_BYTES
     )
@@ -591,73 +471,6 @@ def _flood_escalation(
     if want > cur_partitions:
         return ("raise_partitions", want)
     return None
-
-
-# Scale-adaptive partition floor (guide §2: partitioning must derive from
-# input size, not a constant tuned for either local mode or the cluster).
-# ~2 MiB of source parquet per partition anchors to the measured working
-# point: the 2700x octave's 1.2 GB documents table ran the canonical
-# pipelines at 32 GB heap with 512 partitions (r11, BENCH_SCALE.md) = 2.3
-# MiB/partition, while 32 partitions — the local default — OOMs the
-# pass-2 corpus materialization at that octave (r12, measured: Java heap
-# space in the corpus pool's runtime.persist). Gate/bench SFs sit far
-# below the threshold (sf0.1 documents ≈ 0.6 MB), so their plans are
-# untouched. Past it (a floor of 2+ partitions, ~4 MiB of source) the
-# corpus operators repartition the inputs of their corpus-scale caches
-# to scale_partition_floor's count; AQE never coalesces such an exchange,
-# so each cache keeps that count and its per-task state stays bounded.
-_SCALE_BYTES_PER_PARTITION = 2 * 1024 * 1024
-_SCALE_PARTITION_CAP = 2048
-
-
-def _partition_floor(input_bytes: int, cur_partitions: int) -> int | None:
-    """Pure sizing rule: partitions the input's heavy shuffles want, or
-    None when the current setting already suffices. Never lowers."""
-    want = min(_SCALE_PARTITION_CAP, input_bytes // _SCALE_BYTES_PER_PARTITION)
-    return int(want) if want > cur_partitions else None
-
-
-def scale_partition_floor(df: DataFrame) -> int | None:
-    """Partitions for the corpus-scale caches built from ``df``: the floor
-    derived from ``df``'s file-source scan size, never below the session's
-    ``spark.sql.shuffle.partitions`` (read, never written). None below the
-    threshold (a floor of at most one partition), where the caches keep
-    the session's plan.
-
-    The corpus operators (minhash_lsh_pairs, canonical_keep_list,
-    decontaminate_canonical_lsh) call this before their first wide stage
-    and apply the count as an explicit ``repartition(n, *keys)`` where a
-    cache's input is exchanged anyway, so per-task cache state (signature
-    unroll, join builds, sort runs) shrinks with corpus growth while the
-    session's confs, and so every later query's plan, stay as they were.
-    Input size comes from the driver-side file listing (``df.inputFiles``
-    + stat for ``file:`` URIs — zero Spark jobs). Frames with no stat-able
-    local file source (in-memory relations, RDD-backed plans, remote
-    schemes) get None: Catalyst's fallback ``sizeInBytes`` is NOT a usable
-    proxy here — it defaults to ``Long.MaxValue`` for RDD-backed plans and
-    multiplies children for joins, so trusting it once sized a
-    2048-partition floor for a test session's in-memory frame.
-    """
-    total = _local_input_bytes(df)
-    if total is None or total // _SCALE_BYTES_PER_PARTITION <= 1:
-        return None
-    try:
-        # a non-numeric or unreadable session value degrades to the
-        # no-floor answer, not an error out of the operator (ADVICE r12)
-        cur = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return None
-    return _partition_floor(total, cur) or cur
-
-
-def _by_id(df: DataFrame, id_col: str, parts: int | None) -> DataFrame:
-    """``df`` as the input of a signed-frame cache under the partition
-    floor ``parts``: repartitioned to it on ``id_col``. The gram explode
-    never splits a document across partitions, so signature_sets' per-doc
-    aggregation then needs no exchange of its own: the documents ride this
-    one instead of the per-doc partial aggregates, the gram rows ride
-    none, and the signed frame keeps ``parts`` partitions."""
-    return df if parts is None else df.repartition(parts, id_col)
 
 
 def release_collapse_caches() -> int:
@@ -1025,7 +838,7 @@ def _lsh_signed_source(
     # The partition floor, sized from the source scan: the collapse's
     # group cache and the signed frame keep it (ADVICE r12: the collapse
     # is a corpus-scale shuffle too).
-    parts = scale_partition_floor(df)
+    parts = partitioning.scale_partition_floor(df)
     members = None
     if collapse_exact:
         df, members = _exact_text_collapse(df, text_col, id_col, parts)
@@ -1038,7 +851,7 @@ def _lsh_signed_source(
     src = runtime.persist(
         "collapse",
         signature_sets(
-            _by_id(df, id_col, parts),
+            partitioning.by_id(df, id_col, parts),
             text_col,
             id_col,
             n,
@@ -1918,7 +1731,7 @@ def canonical_keep_list(
     which is why that shape is measured, not oracle-checked).
     """
     reps, members = _exact_text_collapse(
-        df, text_col, id_col, scale_partition_floor(df)
+        df, text_col, id_col, partitioning.scale_partition_floor(df)
     )
     if pair_source is None:
         pairs = ngram_jaccard_pairs(reps, text_col, id_col, n, threshold)
@@ -1939,7 +1752,7 @@ def simhash(
     """64-bit SimHash per document: each token votes ±1 on every bit of its
     xxhash64; the fingerprint takes the majority sign. Pure expression
     aggregation (bits x conditional sums), map-side combinable."""
-    ex = _fanout_rebalance(df).select(
+    ex = partitioning.fan_out(df).select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
     ).withColumn("h", F.xxhash64("tok"))
     votes = ex.groupBy("id").agg(
@@ -2138,7 +1951,7 @@ def boilerplate_span_dedup(
     # frame is evaluated twice (heavy-set pass + join-back pass); on a
     # narrow small-corpus scan that was 2 x 17s at 4 tasks vs 2 x 3s at
     # core count (round-5 stage timing; pass-through on any wide scan)
-    base = _fanout_rebalance(df).select(
+    base = partitioning.fan_out(df).select(
         F.col(id_col).alias("id"),
         F.posexplode(spans_arr).alias("span_idx", "span_text"),
     )

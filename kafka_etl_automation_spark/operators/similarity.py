@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.functions import scalar
-from kafka_etl_automation_spark.operators.dedup import _fanout_rebalance
+from kafka_etl_automation_spark.operators import partitioning
 
 
 def _dot(a, b, dim: int | None = None):
@@ -104,7 +104,7 @@ def cosine_topk(
         )
     )
     scored = (
-        _fanout_rebalance(embeddings)
+        partitioning.fan_out(embeddings)
         .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec"))
         .join(q, F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
@@ -141,7 +141,7 @@ def embedding_near_dup_pairs(
     """
     # fan-out rebalance the probe side: a small single-file scan would
     # otherwise run the O(N^2) dot products on one task
-    a = _fanout_rebalance(embeddings).select(
+    a = partitioning.fan_out(embeddings).select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
     b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
@@ -385,7 +385,7 @@ def kmeans_convergence(
     # assignment multiplies CPU x n_cells per row; a small parquet corpus
     # scans narrow (round-5 scale-proof: 60k vectors = 4 tasks), so fan
     # out to core count first — guarded pass-through on wide scans
-    full = _fanout_rebalance(embeddings).select(
+    full = partitioning.fan_out(embeddings).select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
     )
     cent = full.filter(F.col("vid") < n_cells).select(
@@ -461,7 +461,7 @@ def kmeans_centroids(
     the vectors themselves beyond the partial-agg combine.
     """
     # fan out before the x n_cells assignment stage (see kmeans_convergence)
-    full = _fanout_rebalance(embeddings).select(
+    full = partitioning.fan_out(embeddings).select(
         F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
     )
     # seed from the FULL set (sampling must not shrink the seed block),
@@ -540,7 +540,7 @@ def ivf_topk(
     base = nearest_cells(
         # every vector scores against n_cells centroids — fan a narrow
         # scan out to core count first (guarded, pass-through when wide)
-        _fanout_rebalance(
+        partitioning.fan_out(
             embeddings.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
             )
@@ -605,7 +605,7 @@ def hyperplane_signatures(
             )
 
     return (
-        _fanout_rebalance(embeddings)
+        partitioning.fan_out(embeddings)
         .select(id_col, vec_col)
         .mapInPandas(signer, out_schema)
     )

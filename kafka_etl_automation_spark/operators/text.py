@@ -11,10 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kafka_etl_automation_spark.operators.dedup import (
-    _fanout_rebalance,
-    normalized_text,
-)
+from kafka_etl_automation_spark.operators import partitioning
+from kafka_etl_automation_spark.operators.dedup import normalized_text
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic.
 # Deliberately small: the operator demonstrates deterministic, engine-
@@ -135,7 +133,7 @@ def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     expressions at 32-way); the rebalance is guarded pass-through on any
     scan that is already wide, i.e. any real-scale corpus."""
     toks = F.split(normalized_text(text_col), " ")
-    return _fanout_rebalance(df).select(
+    return partitioning.fan_out(df).select(
         F.col(id_col),
         F.length(text_col).alias("n_chars"),
         token_count(text_col).alias("n_tokens"),
@@ -188,14 +186,11 @@ def top_terms(
     """
     from pyspark.sql import Window
 
-    from kafka_etl_automation_spark.operators.dedup import (
-        _fanout_rebalance,
-        tokens,
-    )
+    from kafka_etl_automation_spark.operators.dedup import tokens
 
     n_docs = df.count()  # one scalar; the reference point for idf
     tf = (
-        _fanout_rebalance(df)
+        partitioning.fan_out(df)
         .select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
         .filter(F.col("term") != "")
         .groupBy(id_col, "term")
@@ -267,12 +262,9 @@ def winnowing_fingerprints(
     """
     from pyspark.sql import Window
 
-    from kafka_etl_automation_spark.operators.dedup import (
-        _fanout_rebalance,
-        tokens,
-    )
+    from kafka_etl_automation_spark.operators.dedup import tokens
 
-    ex = _fanout_rebalance(df).select(
+    ex = partitioning.fan_out(df).select(
         F.col(id_col).alias("id"), F.posexplode(tokens(text_col)).alias("pos", "t0")
     )
     w = Window.partitionBy("id").orderBy("pos")
@@ -310,7 +302,7 @@ def winnowing_fingerprints(
 def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Content fingerprint: md5 over normalized text plus a 64-bit rolling
     xxhash — the join key for exact dedup and incremental re-crawl diffing."""
-    return _fanout_rebalance(df).select(
+    return partitioning.fan_out(df).select(
         F.col(id_col),
         F.md5(normalized_text(text_col)).alias("fp_md5"),
         F.xxhash64(normalized_text(text_col)).alias("fp_xx64"),
@@ -358,7 +350,7 @@ def bigram_coherence(
             F.slice(toks, 2, n - 1).alias("w2"),
         ),
     ).otherwise(F.array())
-    bg = _fanout_rebalance(df).select(
+    bg = partitioning.fan_out(df).select(
         F.col(id_col), F.explode(pairs).alias("p")
     ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
 
@@ -402,7 +394,7 @@ def repetition_stats(
     pairs = F.arrays_zip(
         F.slice(toks, 1, n - 1).alias("w1"), F.slice(toks, 2, n - 1).alias("w2")
     )
-    base = _fanout_rebalance(df).filter(n >= 2).select(
+    base = partitioning.fan_out(df).filter(n >= 2).select(
         F.col(id_col),
         pairs.alias("bgs"),
         F.round(

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark.catalog import load_tables
-from kafka_etl_automation_spark.operators import dedup, similarity, text
+from kafka_etl_automation_spark.operators import dedup, partitioning, similarity, text
 from kafka_etl_automation_spark.plans.registry import register
 
 # DuckDB equivalent of dedup.normalized_text (Spark regexp_replace replaces
@@ -300,7 +300,7 @@ def ext_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fanned out to core count: the scoring projection is CPU-bound and a
     small corpus scans narrow (round-5 stage attribution)."""
     t = load_tables(spark, sf_dir, names=("documents",))
-    return dedup._fanout_rebalance(t["documents"]).select(
+    return partitioning.fan_out(t["documents"]).select(
         "doc_id", text.lang_id("text").alias("lang_pred")
     )
 
@@ -627,7 +627,7 @@ def ext_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     out to core count: two regex passes per document are CPU-bound and a
     small corpus scans narrow (round-5 stage attribution)."""
     t = load_tables(spark, sf_dir, names=("documents",))
-    d = dedup._fanout_rebalance(t["documents"])
+    d = partitioning.fan_out(t["documents"])
     return d.select(
         "doc_id",
         text.token_count("text").alias("n_tokens"),

@@ -666,6 +666,23 @@ def run_bounded(
                 raise RuntimeError(
                     f"streaming query made no progress for {STREAM_IDLE_BUDGET_S}s"
                 )
+        # Stop between triggers: a stop inside one (a cleanup batch past
+        # the rows target) kills its state-store commit. Cleanup triggers
+        # run back to back, so isTriggerActive is seldom seen false; a
+        # batch's progress lands as its trigger ends, ~0.2 s before the
+        # next trigger's first job, so the stop follows the next progress.
+        batch = (q.lastProgress or {}).get("batchId")
+        deadline = time.monotonic() + STREAM_IDLE_BUDGET_S
+        while (
+            q.isActive
+            and q.status["isTriggerActive"]
+            and (q.lastProgress or {}).get("batchId") == batch
+        ):
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"streaming trigger still running after {STREAM_IDLE_BUDGET_S}s"
+                )
+            time.sleep(0.005)
     finally:
         q.stop()
     return spark.table(name), q

@@ -26,7 +26,7 @@ def get_spark(
     partitions to keep post-shuffle partitions ~128-256 MB and let AQE
     coalesce, which is exactly what these settings do at any scale. The
     corpus-scale pipelines size their own caches from their input
-    (``dedup.scale_partition_floor``, an explicit repartition); no
+    (``partitioning.scale_partition_floor``, an explicit repartition); no
     operator changes the session's confs, so a stream started later in
     the same session plans with these values.
     """
@@ -165,7 +165,7 @@ def sql_confs(shuffle_partitions: int) -> dict[str, str]:
         # keep-list: ~500 tasks per call on 1,000 documents, ~40 with
         # this). Spark reads the conf when a frame is persisted. Corpus
         # scale is the exception, where the partitions bound per-task
-        # cache state: past dedup.scale_partition_floor's threshold
+        # cache state: past partitioning.scale_partition_floor's threshold
         # (~4 MiB of file-backed input) the corpus operators repartition
         # their caches' inputs to its count, and AQE never coalesces such
         # an exchange. Vanilla sessions keep Spark's default and produce

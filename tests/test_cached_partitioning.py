@@ -4,10 +4,12 @@ engine's confs.
 ``session.get_spark`` lets AQE coalesce inside cached plans, so the
 keep-list's persisted intermediates shrink to the partitions their bytes
 need instead of keeping every shuffle partition; past the partition
-floor's threshold (``dedup.scale_partition_floor``) the corpus operators
-repartition their caches' inputs, so those caches keep the floor's count
-while the session's confs stay as they were. Task and job counts are read
-from the status store: unlike walls, host load cannot move them.
+floor's threshold (``partitioning.scale_partition_floor``) the corpus
+operators repartition their caches' inputs, so those caches keep the
+floor's count while the session's confs stay as they were. The signature
+input is keyed by id at every size (``partitioning.by_id``), and no
+partitioning decision runs a job. Task and job counts are read from the
+status store: unlike walls, host load cannot move them.
 
 The engine's SQL confs are scoped onto the shared vanilla test session
 and restored afterwards, so later tests still see a vanilla session.
@@ -15,14 +17,15 @@ and restored afterwards, so later tests still see a vanilla session.
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 import pytest
 
 from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.catalog import load_tables
-from kafka_etl_automation_spark.operators import curation, dedup
-from kafka_etl_automation_spark.session import sql_confs
+from kafka_etl_automation_spark.operators import curation, dedup, partitioning
+from kafka_etl_automation_spark.session import next_job_id, sql_confs
 
 from tests.conftest import SF_SMALL, spark_work
 
@@ -79,16 +82,35 @@ def docs(spark):
     spark.catalog.clearCache()
 
 
-def test_keep_list_task_and_job_budget(spark, docs, tmp_path):
+def _count_decision_jobs(monkeypatch) -> list[tuple[str, int]]:
+    """Wrap the partitioning decisions so that each call records the jobs
+    scheduled while it ran (AQE stage jobs carry no call site, so only the
+    job ids around the call can show them). The collapse's async member
+    count is joined first, so its job is not counted as the call's."""
+    calls = []
+    for name in ("scale_partition_floor", "by_id", "fan_out"):
+        def timed(*args, _f=getattr(partitioning, name), _name=name):
+            runtime.settle()
+            before = next_job_id(args[0].sparkSession)
+            out = _f(*args)
+            calls.append((_name, next_job_id(args[0].sparkSession) - before))
+            return out
+
+        monkeypatch.setattr(partitioning, name, timed)
+    return calls
+
+
+def test_keep_list_task_and_job_budget(spark, docs, tmp_path, monkeypatch):
     engine = sql_confs(SHUFFLE_PARTITIONS)
+    decisions = _count_decision_jobs(monkeypatch)
     with _scoped_confs(spark, engine):
         work = spark_work(spark, lambda: _keep_list(docs, str(tmp_path / "keep")))
         grp_parts = _collapse_group_cache().rdd.getNumPartitions()
     assert work["tasks"] <= MAX_TASKS, work
     assert work["jobs"] <= MAX_JOBS, work
-    # the partition probe before the signature explode plans, never runs:
-    # an executing probe shows as a job named after Dataset.rdd
-    assert not [n for n in work["names"] if n.startswith("rdd at")], work["names"]
+    # the partition decisions read plans and file listings, never run one
+    assert {name for name, _ in decisions} == {"scale_partition_floor", "by_id"}
+    assert not [c for c in decisions if c[1]], decisions
     # the cached group frame coalesced below the shuffle partitions
     assert grp_parts < SHUFFLE_PARTITIONS
 
@@ -129,13 +151,13 @@ def test_partition_floor_repartitions_caches(
     """An input past the floor threshold gets its corpus caches (the
     collapse's group frame, the signed frame and its bands) repartitioned
     to max(floor, session partitions), and leaves the confs alone."""
-    size = dedup._local_input_bytes(docs)
+    size = partitioning.local_input_bytes(docs)
     assert size is not None
-    monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // floor)
+    monkeypatch.setattr(partitioning, "_SCALE_BYTES_PER_PARTITION", size // floor)
     want = max(floor, session_partitions)
     with _scoped_confs(spark, sql_confs(session_partitions)):
         before = _confs(spark)
-        assert dedup.scale_partition_floor(docs) == want
+        assert partitioning.scale_partition_floor(docs) == want
         seen = {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
         _keep_list(docs, str(tmp_path / "keep"))
         assert _confs(spark) == before
@@ -143,6 +165,34 @@ def test_partition_floor_repartitions_caches(
         cached = _cached(spark, seen)
         signed = {k: n for k, n in cached.items() if "collect_set" in k or "AS band" in k}
         assert len(signed) == 2 and set(signed.values()) == {want}, cached
+
+
+@pytest.mark.parametrize("floor", [None, 48])
+def test_signature_input_is_keyed_by_id(spark, docs, monkeypatch, floor):
+    """The signed frame's input is repartitioned on the id at every size:
+    to the core count below the floor, to the floor's count past it. Its
+    plan has one exchange, under the per-document aggregation, and no
+    round-robin fan-out."""
+    want = spark.sparkContext.defaultParallelism
+    if floor is not None:
+        size = partitioning.local_input_bytes(docs)
+        monkeypatch.setattr(partitioning, "_SCALE_BYTES_PER_PARTITION", size // floor)
+        want = max(floor, SHUFFLE_PARTITIONS)
+    with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
+        floored = partitioning.scale_partition_floor(docs)
+        assert floored == (None if floor is None else want)
+        dedup.minhash_lsh_pairs(docs, collapse_exact=False, max_bucket=1000)
+        (signed,) = [c for c in runtime._POOLS["collapse"] if "mh0" in c.columns]
+        plan = signed._jdf.queryExecution().executedPlan().toString()
+    initial = plan.split("== Initial Plan ==")[-1].splitlines()
+    exchanges = [i for i, line in enumerate(initial) if "Exchange" in line]
+    assert len(exchanges) == 1, plan
+    assert re.search(
+        rf"Exchange hashpartitioning\(doc_id#\d+L?, {want}\), REPARTITION_BY_NUM",
+        initial[exchanges[0]],
+    ), plan
+    assert any("Aggregate(keys=[id#" in line for line in initial[: exchanges[0]])
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_corpus_operators_leave_session_confs_unchanged(spark, docs, monkeypatch):
@@ -153,8 +203,8 @@ def test_corpus_operators_leave_session_confs_unchanged(spark, docs, monkeypatch
     with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
         plain = sorted(dedup.minhash_lsh_pairs(docs, max_bucket=1000).collect())
     dedup.release_collapse_caches()
-    size = dedup._local_input_bytes(docs)
-    monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // 48)
+    size = partitioning.local_input_bytes(docs)
+    monkeypatch.setattr(partitioning, "_SCALE_BYTES_PER_PARTITION", size // 48)
     monkeypatch.setattr(dedup, "_flood_escalation", lambda *a: ("raise_partitions", 64))
     calls = {
         "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs, max_bucket=1000),
@@ -176,11 +226,15 @@ def test_corpus_operators_leave_session_confs_unchanged(spark, docs, monkeypatch
             runtime.release("corpus")
 
 
-def test_decontamination_job_budget(spark, docs, tmp_path):
+def test_decontamination_job_budget(spark, docs, tmp_path, monkeypatch):
     """Both passes' pair graphs are labelled in one task each: a call runs
     ~40 jobs; with the round loop it ran 54-55 (the collapse's async
-    member count makes the count vary by one)."""
+    member count makes the count vary by one). Its partitioning decisions
+    run no job."""
+    decisions = _count_decision_jobs(monkeypatch)
     with _scoped_confs(spark, sql_confs(SHUFFLE_PARTITIONS)):
         work = spark_work(spark, lambda: _decontaminate(docs, str(tmp_path / "decon")))
     runtime.release("corpus")
     assert work["jobs"] <= MAX_DECON_JOBS, work
+    assert "by_id" in {name for name, _ in decisions}
+    assert not [c for c in decisions if c[1]], decisions

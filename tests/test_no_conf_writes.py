@@ -1,6 +1,7 @@
 """Operators and streaming code never write a session conf, and cache
-only through the runtime's bounded pools; plans and tools start a memory
-sink only through ``lifecycle.run_bounded``.
+only through the runtime's bounded pools; operators never build an RDD to
+read its partition count; plans and tools start a memory sink only
+through ``lifecycle.run_bounded``.
 
 A conf an operator sets outlives its call: every later query in the
 session plans with it, and a stateful stream fixes its state partitions
@@ -11,6 +12,14 @@ the pool caps nor a release ever frees it. This walks the source with
 too: any ``<x>.conf.set(...)`` or ``<x>.conf.unset(...)`` call, and any
 ``.persist(...)`` or ``.cache(...)`` call other than ``runtime.persist``,
 under ``operators/`` or ``streaming/`` fails it.
+
+An operator's partitioning decision reads the physical plan and runs no
+job, but a ``getNumPartitions()`` on a Dataset's RDD runs the plan's query
+stages to build it. Any ``<x>.rdd.getNumPartitions()`` or
+``<x>.rdd().getNumPartitions()`` call under ``operators/`` fails the walk.
+Before ``partitioning.fan_out`` there were two, both in the old fan-out
+probe in ``operators/dedup.py``: ``df._jdf.rdd().getNumPartitions()``
+and its fallback ``df.rdd.getNumPartitions()``.
 
 A memory-sink run started by hand also picks its own stop rule, and a
 wait whose "not finished" answer is ignored reads a sink that is still
@@ -45,13 +54,22 @@ def _is_unpooled_cache(f: ast.Attribute) -> bool:
     return f.attr in ("persist", "cache") and not pooled
 
 
-def _violations(path: Path) -> list[str]:
+def _is_rdd_partition_probe(f: ast.Attribute) -> bool:
+    rdd = f.value.func if isinstance(f.value, ast.Call) else f.value
+    return (
+        f.attr == "getNumPartitions"
+        and isinstance(rdd, ast.Attribute)
+        and rdd.attr == "rdd"
+    )
+
+
+def _violations(path: Path, checks=(_is_conf_write, _is_unpooled_cache)) -> list[str]:
     found = []
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and (_is_conf_write(node.func) or _is_unpooled_cache(node.func))
+            and any(check(node.func) for check in checks)
         ):
             found.append(f"{path}:{node.lineno}")
     return found
@@ -106,6 +124,27 @@ def test_the_walk_finds_an_unpooled_cache(tmp_path):
         "    return runtime.persist('collapse', df), a, b\n"
     )
     assert [w.rsplit(":", 1)[1] for w in _violations(src)] == ["2", "3"]
+
+
+def test_operators_probe_no_rdd_partitions():
+    files = sorted((PACKAGE / "operators").rglob("*.py"))
+    assert files
+    probes = [w for f in files for w in _violations(f, (_is_rdd_partition_probe,))]
+    assert probes == []
+
+
+def test_the_walk_finds_an_rdd_partition_probe(tmp_path):
+    src = tmp_path / "op.py"
+    src.write_text(
+        "def f(df, plan, builder, jdf):\n"
+        "    a = df.rdd.getNumPartitions()\n"
+        "    b = df._jdf.rdd().getNumPartitions()\n"
+        "    c = plan.execute().getNumPartitions()\n"
+        "    d = builder.cachedColumnBuffers().getNumPartitions()\n"
+        "    jdf.queryExecution().analyzed().rdd().unpersist(True)\n"
+    )
+    found = _violations(src, (_is_rdd_partition_probe,))
+    assert [w.rsplit(":", 1)[1] for w in found] == ["2", "3"]
 
 
 def test_plans_and_tools_start_memory_sinks_only_in_run_bounded():

@@ -5,7 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_etl_automation_spark.operators import dedup, multimodal, similarity, text
+from kafka_etl_automation_spark.operators import (
+    dedup,
+    multimodal,
+    partitioning,
+    similarity,
+    text,
+)
 
 from tests.conftest import SF_SMALL
 
@@ -23,58 +29,64 @@ def test_shingles_short_doc_empty(spark):
     assert by_id[2] == ["one two three", "two three four"]
 
 
-def test_fanout_rebalance_fallback_matches_private_probe(spark, monkeypatch, tmp_path):
-    """_fanout_rebalance's JVM-side partition probe is a private API
-    (df._jdf); the portable fallback must produce the identical decision
-    when the private path breaks (VERDICT r03 #8). Adaptive (AQE-wrapped)
-    inputs included: the plan walk answers where no shuffle lies on the
-    output path (a broadcast join over a file scan, read without a job)
-    and for an explicit repartition (AQE never changes its count); any
-    other shuffle-topped input keeps the executing probe, whose count
-    after coalescing decides the fan-out."""
+def test_fan_out_decides_from_the_plan_without_a_job(spark, monkeypatch, tmp_path):
+    """partitioning.fan_out reads the input's partition count from its
+    physical plan and schedules no Spark job. The walk answers where no
+    shuffle lies on the output path (a coalesce, a broadcast join over a
+    file scan) and for an explicit repartition. A shuffle-topped input,
+    whose count after AQE's coalescing only a run can tell, an unloaded
+    cache, whose RDD would build the cache, and an input whose walk raises
+    all fan out; a scan already at the core count passes through."""
     from pyspark.sql.functions import broadcast
 
-    spark.range(40).selectExpr("id AS doc_id", "concat('doc ', id) AS text").repartition(
-        3
-    ).write.parquet(str(tmp_path / "docs"))
+    from kafka_etl_automation_spark.session import next_job_id
+
+    target = spark.sparkContext.defaultParallelism
+    rows = spark.range(40).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
+    rows.repartition(3).write.parquet(str(tmp_path / "docs"))
+    rows.repartition(target).write.parquet(str(tmp_path / "wide"))
     scan = spark.read.parquet(str(tmp_path / "docs"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
     keep = spark.createDataFrame([(i,) for i in range(0, 40, 2)], "doc_id long")
+    # a plan no other case contains, or the cache would stand in for it
+    cached = scan.select("doc_id", F.upper("text").alias("text")).cache()
     cases = {
         "local": docs_df(spark, [(i, f"doc {i}") for i in range(10)]).coalesce(1),
-        # tiny shuffle: AQE coalesces it below defaultParallelism
         "shuffle_topped": scan.groupBy("doc_id").agg(F.max("text").alias("text")),
         "broadcast_over_scan": scan.join(broadcast(keep), "doc_id", "semi"),
         "repartitioned": scan.repartition(2, "doc_id"),
+        "unloaded_cache": cached,
+        "wide_scan": wide,
     }
-    jsc = spark.sparkContext._jsc.sc()
-    walked = {}
-    for name in ("shuffle_topped", "broadcast_over_scan", "repartitioned"):
-        plan = cases[name]._jdf.queryExecution().executedPlan()
-        assert plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec", name
-        before = int(jsc.dagScheduler().numTotalJobs())
-        walked[name] = dedup._plan_num_partitions(plan)
-        assert int(jsc.dagScheduler().numTotalJobs()) == before, name
-    assert walked["shuffle_topped"] is None
-    assert walked["broadcast_over_scan"] == scan.rdd.getNumPartitions()
-    assert walked["repartitioned"] == 2
-
-    primary = {k: dedup._fanout_rebalance(df) for k, df in cases.items()}
-
-    def broken(_df):
-        raise AttributeError("simulated private-API drift")
-
-    monkeypatch.setattr(dedup, "_jvm_num_partitions", broken)
+    plan = {k: df._jdf.queryExecution().executedPlan() for k, df in cases.items()}
+    walked, out = {}, {}
     for name, df in cases.items():
-        fallback = dedup._fanout_rebalance(df)
-        assert (
-            fallback.rdd.getNumPartitions() == primary[name].rdd.getNumPartitions()
-        ), name
-        assert sorted(fallback.collect()) == sorted(df.collect()), name
-    # every input here has fewer partitions than cores, so all fanned out
-    # (the shuffle-topped one only after AQE coalesced it)
-    assert {d.rdd.getNumPartitions() for d in primary.values()} == {
-        spark.sparkContext.defaultParallelism
-    }
+        before = next_job_id(spark)
+        walked[name] = partitioning.plan_num_partitions(plan[name])
+        out[name] = partitioning.fan_out(df)
+        assert next_job_id(spark) == before, name
+    try:
+        assert walked["local"] == 1
+        assert walked["shuffle_topped"] is None
+        assert walked["broadcast_over_scan"] == scan.rdd.getNumPartitions()
+        assert walked["repartitioned"] == 2
+        assert walked["unloaded_cache"] is None
+        assert walked["wide_scan"] == target
+        assert out["wide_scan"] is wide
+        for name in cases.keys() - {"wide_scan"}:
+            assert out[name].rdd.getNumPartitions() == target, name
+            assert sorted(out[name].collect()) == sorted(cases[name].collect()), name
+
+        def broken(_plan):
+            raise AttributeError("simulated private-API drift")
+
+        monkeypatch.setattr(partitioning, "plan_num_partitions", broken)
+        before = next_job_id(spark)
+        fanned = partitioning.fan_out(wide)
+        assert next_job_id(spark) == before
+        assert fanned is not wide and fanned.rdd.getNumPartitions() == target
+    finally:
+        cached.unpersist()
 
 
 def test_exact_dedup_groups(spark):
@@ -1986,14 +1998,13 @@ def test_scale_partition_floor(spark, monkeypatch):
     and None at gate/bench SFs so boarded plans are untouched. The
     session's conf is read, never written."""
     from kafka_etl_automation_spark.catalog import load_tables
-    from kafka_etl_automation_spark.operators import dedup
 
     # pure sizing rule: under the floor -> None; above -> bytes/2MiB; capped
-    assert dedup._partition_floor(4 * 2**20, 32) is None
-    assert dedup._partition_floor(1_200 * 2**20, 32) == 600
-    assert dedup._partition_floor(1_200 * 2**20, 1024) is None  # never lower
+    assert partitioning.partition_floor(4 * 2**20, 32) is None
+    assert partitioning.partition_floor(1_200 * 2**20, 32) == 600
+    assert partitioning.partition_floor(1_200 * 2**20, 1024) is None  # never lower
     assert (
-        dedup._partition_floor(10**13, 32) == dedup._SCALE_PARTITION_CAP
+        partitioning.partition_floor(10**13, 32) == partitioning._SCALE_PARTITION_CAP
     )
 
     docs = load_tables(spark, SF_SMALL, names=("documents",))["documents"]
@@ -2001,7 +2012,7 @@ def test_scale_partition_floor(spark, monkeypatch):
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "4")
         # gate-SF corpus sits far below the floor
-        assert dedup.scale_partition_floor(docs) is None
+        assert partitioning.scale_partition_floor(docs) is None
 
         # an octave-sized corpus (simulated via the stat seam) gets its
         # floor, the same on every call, and the conf stays as it was
@@ -2009,28 +2020,28 @@ def test_scale_partition_floor(spark, monkeypatch):
 
         real_getsize = _os.path.getsize
         monkeypatch.setattr(
-            dedup.os.path, "getsize", lambda p: real_getsize(p) + 2 * 2**30
+            partitioning.os.path, "getsize", lambda p: real_getsize(p) + 2 * 2**30
         )
-        floor = dedup.scale_partition_floor(docs)
+        floor = partitioning.scale_partition_floor(docs)
         assert floor is not None and floor > 4
-        assert dedup.scale_partition_floor(docs) == floor
+        assert partitioning.scale_partition_floor(docs) == floor
         assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
         # a session already above the floor keeps its own count
         spark.conf.set("spark.sql.shuffle.partitions", str(floor + 1))
-        assert dedup.scale_partition_floor(docs) == floor + 1
+        assert partitioning.scale_partition_floor(docs) == floor + 1
 
         # regression (r12): frames with NO stat-able file source get no
         # floor — Catalyst's fallback sizeInBytes is Long.MaxValue for
         # RDD-backed plans and a child-product for joins, and trusting it
         # once sized a 2048-partition floor for an in-memory frame.
         local = spark.createDataFrame([("a", 1)], ["text", "doc_id"])
-        assert dedup.scale_partition_floor(local) is None
+        assert partitioning.scale_partition_floor(local) is None
         rdd_backed = spark.createDataFrame(
             spark.sparkContext.parallelize([("a", 1)]), ["text", "doc_id"]
         )
-        assert dedup.scale_partition_floor(rdd_backed) is None
+        assert partitioning.scale_partition_floor(rdd_backed) is None
         joined = local.join(local.select("doc_id"), "doc_id")
-        assert dedup.scale_partition_floor(joined) is None
+        assert partitioning.scale_partition_floor(joined) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", restore)
 
@@ -2060,9 +2071,9 @@ def test_streaming_after_floored_pipeline_keeps_session_partitions(
         src_dir = str(tmp_path / "floor_src")
         docs.write.parquet(src_dir)
         file_backed = spark.read.parquet(src_dir)
-        size = dedup._local_input_bytes(file_backed)
-        monkeypatch.setattr(dedup, "_SCALE_BYTES_PER_PARTITION", size // 16)
-        assert dedup.scale_partition_floor(file_backed) == 16
+        size = partitioning.local_input_bytes(file_backed)
+        monkeypatch.setattr(partitioning, "_SCALE_BYTES_PER_PARTITION", size // 16)
+        assert partitioning.scale_partition_floor(file_backed) == 16
         assert dedup.minhash_lsh_pairs(file_backed, max_bucket=1000).count() > 0
         dedup.release_collapse_caches()
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"

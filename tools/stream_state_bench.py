@@ -77,14 +77,13 @@ def _progress_metrics(q):
     return out
 
 
-def run_interval_join(spark, sf_dir, chunks):
+def run_interval_join(spark, sf_dir, chunks, root):
     from pyspark.sql import functions as F
 
     from kafka_etl_automation_spark.catalog import load_table
     from kafka_etl_automation_spark.streaming import enrich
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="ssb_ij_")
     clicks = events.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
@@ -139,14 +138,13 @@ def run_interval_join(spark, sf_dir, chunks):
     }
 
 
-def run_dedup(spark, sf_dir, chunks):
+def run_dedup(spark, sf_dir, chunks, root):
     from pyspark.sql import functions as F
 
     from kafka_etl_automation_spark.catalog import load_table
     from kafka_etl_automation_spark.streaming import ingest as s_ingest
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="ssb_dd_")
     src = os.path.join(root, "src")
     lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo).total_seconds() + 1.0
@@ -190,7 +188,7 @@ def run_dedup(spark, sf_dir, chunks):
     }
 
 
-def run_sessionize(spark, sf_dir, chunks):
+def run_sessionize(spark, sf_dir, chunks, root):
     from pyspark.sql import functions as F
 
     from kafka_etl_automation_spark.catalog import load_table
@@ -199,7 +197,6 @@ def run_sessionize(spark, sf_dir, chunks):
     events = load_table(spark, sf_dir, "events")
     trunc = events.withColumn("ts", F.timestamp_seconds(F.unix_timestamp("ts")))
     expected = sessions.sessionize(trunc, gap_minutes=30).count()
-    root = tempfile.mkdtemp(prefix="ssb_se_")
     src = os.path.join(root, "src")
     write_time_chunks(events, "ts", src, chunks)
 
@@ -224,14 +221,13 @@ def run_sessionize(spark, sf_dir, chunks):
     }
 
 
-def run_windowed_counts(spark, sf_dir, chunks):
+def run_windowed_counts(spark, sf_dir, chunks, root):
     from pyspark.sql import functions as F
 
     from kafka_etl_automation_spark.catalog import load_table
     from kafka_etl_automation_spark.operators import sessions
 
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="ssb_wc_")
     src = os.path.join(root, "src")
     write_time_chunks(events, "ts", src, chunks)
     # append mode emits a window only once the watermark passes its end;
@@ -301,8 +297,11 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     results, all_equal = [], True
+    # one root for the run's source chunks and checkpoints, removed when
+    # main returns
+    tmp = tempfile.TemporaryDirectory(prefix="ssb_")
     for qn in queries:
-        r = RUNNERS[qn](spark, sf_dir, chunks)
+        r = RUNNERS[qn](spark, sf_dir, chunks, os.path.join(tmp.name, qn))
         # compact the trajectory for the summary line: batches, peak/last
         m = [x for x in r["metrics"] if x.get("state_rows") is not None]
         total_in = sum(x["input_rows"] or 0 for x in r["metrics"])
