@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.operators import partitioning, text
+from kafka_etl_automation_spark.operators import components, partitioning, text
 from kafka_etl_automation_spark.operators.dedup import normalized_text
 
 _LOG = logging.getLogger(__name__)
@@ -507,7 +507,7 @@ def decontaminate_canonical_lsh(
         candidate_scope="star",
         sig_source=train_sig,
     )
-    comp = dedup.connected_components(
+    comp = components.connected_components(
         keep_pairs, train_sig.select(F.col("id").alias(id_col)), id_col=id_col
     )
     kept_ids = comp.select(F.col("cluster_id").alias("id")).distinct()

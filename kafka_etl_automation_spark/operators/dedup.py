@@ -13,12 +13,10 @@ unbanded cross joins), so they scale to 100 TB by adding executors:
 - simhash:          64-bit SimHash + chunk-banded Hamming candidates.
 
 Signatures, banding, candidates and verification are pure Catalyst
-expressions (xxhash64, explode, groupBy) — no Python there. The one
-Python kernel is connected components' one-task labelling (a
-``mapInPandas`` over the whole pair graph), taken only when the graph has
-at most ``_CC_ONE_TASK_MAX_EDGES`` rows; larger graphs run the Catalyst
-round loop. Determinism: all hash seeds are literals, so signatures are
-reproducible across runs/partitionings.
+expressions (xxhash64, explode, groupBy) — no Python there. Pairs become
+clusters in operators.components (connected components), which the
+canonical keep-list calls. Determinism: all hash seeds are literals, so
+signatures are reproducible across runs/partitionings.
 """
 
 from __future__ import annotations
@@ -26,12 +24,12 @@ from __future__ import annotations
 import logging
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.operators import partitioning
+from kafka_etl_automation_spark.operators import components, partitioning
 
 _LOG = logging.getLogger(__name__)
 
@@ -416,17 +414,6 @@ _FLOOD_ROWS_PER_PARTITION = 12_500_000
 # flood ceiling, but a separate knob so tests can exercise the full-audit
 # path without also tripping the flood abort.
 _AUDIT_SKIP_MAX_WORST = _FLOOD_NARROW_ROWS
-
-# Connected components' one-task bound: a pair graph of at most this many
-# raw (id_a, id_b) rows is labelled in one Python task instead of the
-# round loop. Measured on LSH-shaped graphs (9-node chains) at local[2] on
-# a 4-vCPU VM with 2 and 4 GB driver heaps: from 2**18 to 2**22 rows one
-# task used 10-21x less CPU than the loop, but one worker holds the whole
-# graph, so its peak memory grows with it (~0.5-0.7 GB per 2**20 rows)
-# while the loop's stays at the heap. 2**21 is the largest size at which
-# one task also peaked below the loop at both heaps; at 2**22 with 2 GB it
-# peaked above it. Tests patch it to force either path.
-_CC_ONE_TASK_MAX_EDGES = 1 << 21
 
 
 def _flood_escalation(
@@ -1388,321 +1375,6 @@ def _grouped_cross_label(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def _observed_changed(obs, ck: DataFrame) -> int:
-    """Convergence signal for one CC round, read from the checkpoint
-    job's own observed metric — the observation rides the eager
-    localCheckpoint's materialization job, so the old per-round
-    ``filter(_changed).limit(1).count()`` action disappears entirely
-    (r13; one fewer scheduled job per round, verified to fire on
-    localCheckpoint in Spark 4.1). When the metric does not arrive
-    (runtime.observed's bounded wait), fall back to that count over the
-    materialized leaf, so the worst case is the pre-r13 behavior, never a
-    hang. Returns nonzero iff any label changed."""
-    vals = runtime.observed(obs)
-    if vals is None:
-        return ck.filter("_changed").limit(1).count()
-    v = vals["chg"]
-    return int(v) if v is not None else 0  # max over zero rows -> null
-
-
-def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the storage blocks behind a ``localCheckpoint(eager=True)``
-    frame. Unlike a persisted frame, a checkpointed one is NOT recomputable
-    once its blocks are dropped (Spark raises CHECKPOINT_RDD_BLOCK_ID_NOT_
-    FOUND) — so this is only safe on frames that are provably dead: no
-    live DataFrame plan references them. ``DataFrame.unpersist()`` does
-    NOT free these blocks (they live in the checkpointed RDD, not the
-    cache manager), which is why connected_components previously leaked
-    O(iterations) label frames per call until driver GC (ADVICE r07);
-    the underlying RDD is reachable as the LogicalRDD leaf's ``rdd`` field.
-    Best-effort: internal-API drift degrades to the old leak-until-GC
-    behavior, never to an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _one_task_labels(raw: DataFrame) -> DataFrame:
-    """``(u, label)`` for every endpoint of the ``(u, v)`` pair rows in
-    ``raw``, label = the minimum id reachable from u, computed in ONE
-    ``mapInPandas`` task, so the rows stay on the executors. Lazy: nothing
-    runs until the caller's action.
-
-    NULL endpoints are dropped before the kernel (the round loop's joins
-    never match NULL either) — in Spark, not in pandas: one NULL turns a
-    long column into float64 in the kernel's pandas frame, which rounds
-    ids past 2**53. The kernel maps ids to index space with ``np.unique``
-    (sorted, so the minimum index is the minimum id), then alternates
-    min-label hooking of the roots over the edges with pointer jumping
-    (``lab = lab[lab]``) to a fixpoint. It is nested, so it is pickled by
-    value like every kernel in the engine: a module-level function is
-    pickled by reference, and a Python worker whose working directory is
-    not this package's parent cannot import it."""
-    dt = raw.select(F.coalesce("u", "v")).schema[0].dataType.simpleString()
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        frames = [b for b in batches if len(b)]
-        if not frames:
-            return
-        e = pd.concat(frames, ignore_index=True)
-        nodes, idx = np.unique(
-            np.concatenate([e["u"].to_numpy(), e["v"].to_numpy()]),
-            return_inverse=True,
-        )
-        u, v = idx[: len(e)], idx[len(e):]
-        lab = np.arange(len(nodes))
-        while True:
-            # every node points at a root here; hook each ROOT to the
-            # smallest root across its edges (Shiloach-Vishkin), so a
-            # smaller label crosses a whole tree per round, not one hop
-            lu, lv = lab[u], lab[v]
-            hooked = lab.copy()
-            np.minimum.at(hooked, lu, lv)
-            np.minimum.at(hooked, lv, lu)
-            jumped = hooked[hooked]
-            while not np.array_equal(jumped, hooked):
-                hooked, jumped = jumped, jumped[jumped]
-            if np.array_equal(hooked, lab):
-                break
-            lab = hooked
-        yield pd.DataFrame({"u": nodes, "label": nodes[lab]})
-
-    return raw.dropna().coalesce(1).mapInPandas(kernel, f"u {dt}, label {dt}")
-
-
-def _label_rounds(
-    raw: DataFrame, ids: DataFrame, id_col: str, max_iter: int, stats: dict | None
-) -> DataFrame:
-    """The round loop of :func:`connected_components` over the checkpointed
-    ``(u, v)`` pair rows: ``(u, label)`` for every row of ``ids``."""
-    # localCheckpoint (not persist): materializes AND truncates lineage —
-    # the symmetrization must not be re-run by every iteration's join.
-    # LAZY local checkpoint (VERDICT r12 #1): round 1's eager ck_labels
-    # materialization consumes every edge partition through its groupBy,
-    # so the edge checkpoint completes inside THAT job instead of paying
-    # its own scheduling round trip. Any partition the first job somehow
-    # skipped is back-filled by Spark's checkpoint finalization, so
-    # iterations 2+ always read blocks.
-    edges = (
-        raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # Round 1 folds the identity initialization: label(u) = u, so the
-    # neighbor-min is just min(v) per u straight off the edge frame and the
-    # pointer jump is a no-op — one groupBy + one left join against the id
-    # list, no initial labels checkpoint, no self-joins. Rounds 2+ run the
-    # general step below.
-    first_nmin = edges.groupBy(F.col("u").alias("nu")).agg(
-        F.min("v").alias("nmin")
-    )
-    obs1 = Observation()
-    iters = 1
-    try:
-        ck_labels = (
-            ids.select(F.col(id_col).alias("u"))
-            .join(first_nmin, F.col("u") == F.col("nu"), "left")
-            .select(
-                "u",
-                F.least(
-                    F.col("u"), F.coalesce(F.col("nmin"), F.col("u"))
-                ).alias("label"),
-            )
-            .select(
-                "u", "label", (F.col("label") != F.col("u")).alias("_changed")
-            )
-            .observe(obs1, F.max(F.col("_changed").cast("int")).alias("chg"))
-            .localCheckpoint(eager=True)
-        )
-        # round 1's job filled the edge checkpoint (Spark back-fills any
-        # partition it skipped), so the pair rows are dead: rounds 2+ hold
-        # one pair frame
-        _free_local_checkpoint(raw)
-        labels = ck_labels.select("u", "label")
-        converged = _observed_changed(obs1, ck_labels) == 0
-        for _ in range(max_iter - 1):
-            if converged:
-                break
-            iters += 1
-            neighbor_min = (
-                edges.join(labels, edges.v == labels.u)
-                .groupBy(edges.u.alias("nu"))
-                .agg(F.min("label").alias("nmin"))
-            )
-            stepped = labels.join(
-                neighbor_min, labels.u == F.col("nu"), "left"
-            ).select(
-                "u",
-                F.col("label").alias("_old"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("l1"),
-            )
-            # pointer jump: label(label(u)). Chains a->b->c->... halve each
-            # round; labels are node ids, so the lookup is a keyed self-join
-            # on the one-row-per-node label frame (l1 misses only when l1 is
-            # already a root that lost its row — coalesce keeps it).
-            jump = labels.select(
-                F.col("u").alias("l1"), F.col("label").alias("l2")
-            )
-            # The convergence flag rides the checkpointed frame itself
-            # (label != previous label) AND is read via an observed metric
-            # computed inside the checkpoint's own materialization job
-            # (r13) — the r07 shape re-joined new vs old labels on u (one
-            # full extra shuffle join per iteration, ~40% of CC's wall,
-            # VERDICT r07 #5); the r12 shape still paid one limit(1)
-            # count job per round over the materialized leaf.
-            obs_i = Observation()
-            new_ck = (
-                stepped.join(jump, "l1", "left")
-                .select(
-                    "u",
-                    "_old",
-                    F.least(
-                        F.col("l1"), F.coalesce(F.col("l2"), F.col("l1"))
-                    ).alias("label"),
-                )
-                .select(
-                    "u",
-                    "label",
-                    (F.col("label") != F.col("_old")).alias("_changed"),
-                )
-                .observe(obs_i, F.max(F.col("_changed").cast("int")).alias("chg"))
-                .localCheckpoint(eager=True)  # plan becomes a LogicalRDD leaf
-            )
-            changed = _observed_changed(obs_i, new_ck)
-            # new_ck is eagerly materialized and the changed count is
-            # done — the superseded labels frame is provably dead; free its
-            # checkpoint blocks now instead of leaking O(iterations) frames
-            # per call until driver GC (ADVICE r07)
-            _free_local_checkpoint(ck_labels)
-            ck_labels = new_ck
-            labels = new_ck.select("u", "label")
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        # the returned labels frame is a self-contained LogicalRDD leaf —
-        # the edge frame is dead once the loop exits (converged or raised),
-        # and so is the pair frame if round 1 raised before freeing it
-        _free_local_checkpoint(edges)
-        _free_local_checkpoint(raw)
-    if stats is not None:
-        stats["iterations"] = iters
-    if not converged:
-        # silent non-convergence would split one real component into
-        # several clusters and keep duplicates — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations (component diameter exceeds max_iter); raise max_iter"
-        )
-    return labels
-
-
-def connected_components(
-    pairs: DataFrame,
-    ids: DataFrame,
-    id_col: str = "id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Cluster near-duplicate pairs into components: every doc gets the
-    minimum reachable doc id as its cluster id (keep ``doc_id ==
-    cluster_id`` to dedup a corpus). Pair endpoints are rows of ``ids``;
-    a NULL endpoint joins nothing.
-
-    The pair projection ``(u, v)`` is localCheckpointed EAGERLY with an
-    observed row count, so the pair source (e.g. a whole LSH pipeline)
-    runs in that one job and the count decides the path at no extra job
-    (read through ``runtime.observed``):
-
-    - ONE TASK, at most ``_CC_ONE_TASK_MAX_EDGES`` pair rows (2**21; see
-      the constant for the measurement behind it): :func:`_one_task_labels`
-      labels the graph in one Python task, and a left join against
-      ``ids`` keeps the singletons (label = own id). Lazy — no job runs
-      until the caller's action. At bench scale the graph has hundreds of
-      edges, where a Spark job costs scheduling and JIT, not data: the
-      keep-list drops 13 round jobs.
-    - ROUND LOOP, above the bound, or when the count did not arrive (the
-      observation breaker is tripped; the loop's memory does not grow
-      with the graph in one task):
-      min-label propagation WITH POINTER JUMPING. Each iteration takes
-      label(u) <- min(label(u), min over neighbors' labels,
-      label(label(u))). The neighbor term is the standard large-graph CC
-      join; the label-of-label term (one extra keyed join per iteration,
-      state stays one row per node) halves every label chain, so
-      convergence is O(log diameter) rounds instead of O(diameter) — the
-      difference between 6 and 25+ rounds on the chain-shaped graphs
-      star-scope LSH candidates produce (same trick as GraphFrames'
-      large-star/small-star and Hash-to-Min). Only nodes are hooked, so
-      a smaller id entering a chain of falling ids at its far end still
-      moves one hop a round. Each round's convergence
-      check is an OBSERVED metric (max of the _changed flags) computed
-      inside that round's checkpoint materialization job — zero extra
-      scheduled jobs per round (r13). Trade-off: the pair checkpoint no
-      longer fuses into round 1 (VERDICT r12 #1), so this path pays one
-      extra job per call — O(1), against the O(log diameter) x 4-5 jobs
-      of the rounds — and holds the pair rows beside the edges until
-      round 1 has filled the edge checkpoint, then frees them.
-
-    Both paths label with the minimum reachable id, so their outputs are
-    identical; ``stats`` records ``edges`` (the pair-row count, None
-    without an observation), ``path`` ("one_task" or "loop") and, on the
-    loop, ``iterations``. One INFO line reports the count, the bound and
-    the path.
-
-    LINEAGE TRUNCATION is load-bearing, not hygiene: every iteration
-    references the previous ``labels`` plan 2-3 times, so without
-    truncation the ANALYZED plan tree grows ~3^iterations copies of the
-    (often enormous — a full LSH pipeline) pair-source lineage, and the
-    driver burns minutes canonicalizing it for cache lookup while the
-    executors idle — r07 measured 5 iterations taking 372s on a 114k-node
-    / 300k-edge graph, single driver core pegged, before this fix; 3.9s
-    after. ``localCheckpoint`` materializes the pairs and each round's
-    labels and swaps the plan for a LogicalRDD leaf, making per-iteration
-    planning cost constant. On a multi-node cluster prefer reliable
-    ``checkpoint()`` (set a checkpoint dir) if executor loss must be
-    survivable mid-algorithm; the algorithm is restartable either way.
-    The one-task result is backed by the pair checkpoint's blocks, as the
-    loop's is by its last labels frame.
-    """
-    obs = Observation()
-    raw = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    vals = runtime.observed(obs)
-    n_edges = None if vals is None else int(vals["n"])
-    one_task = n_edges is not None and n_edges <= _CC_ONE_TASK_MAX_EDGES
-    path = "one_task" if one_task else "loop"
-    _LOG.info(
-        "connected_components: %s pair rows, one-task bound %d -> %s path",
-        n_edges,
-        _CC_ONE_TASK_MAX_EDGES,
-        path,
-    )
-    if stats is not None:
-        stats["edges"] = n_edges
-        stats["path"] = path
-    if one_task:
-        comp = _one_task_labels(raw).select(F.col("u").alias("cu"), "label")
-        labels = (
-            ids.select(F.col(id_col).alias("u"))
-            .join(comp, F.col("u") == F.col("cu"), "left")
-            .select("u", F.coalesce(F.col("label"), F.col("u")).alias("label"))
-        )
-    else:
-        labels = _label_rounds(raw, ids, id_col, max_iter, stats)
-    return labels.select(F.col("u").alias(id_col), F.col("label").alias("cluster_id"))
-
-
 @runtime.settle_on_exit()
 def canonical_keep_list(
     df: DataFrame,
@@ -1737,7 +1409,9 @@ def canonical_keep_list(
         pairs = ngram_jaccard_pairs(reps, text_col, id_col, n, threshold)
     else:
         pairs = pair_source(reps)
-    comp = connected_components(pairs, reps.select(F.col(id_col)), id_col=id_col)
+    comp = components.connected_components(
+        pairs, reps.select(F.col(id_col)), id_col=id_col
+    )
     return (
         comp.join(members, comp[id_col] == members["rep"])
         .groupBy("cluster_id")

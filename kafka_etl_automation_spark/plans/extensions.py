@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark.catalog import load_tables
-from kafka_etl_automation_spark.operators import dedup, partitioning, similarity, text
+from kafka_etl_automation_spark.operators import components, dedup, partitioning, similarity, text
 from kafka_etl_automation_spark.plans.registry import register
 
 # DuckDB equivalent of dedup.normalized_text (Spark regexp_replace replaces
@@ -102,14 +102,14 @@ _CLUSTER_ORACLE = (
 
 @register("ext_dedup_clusters", _CLUSTER_ORACLE)
 def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup clustering (operators.dedup.connected_components): min-label
-    propagation over the exact trigram-Jaccard pair graph; cluster id = min
-    reachable doc id (keep doc_id == cluster_id to dedup). Oracle computes
+    """Near-dup clustering (operators.components.connected_components)
+    over the exact trigram-Jaccard pair graph; cluster id = min reachable
+    doc id (keep doc_id == cluster_id to dedup). Oracle computes
     the same components with a recursive CTE."""
     t = load_tables(spark, sf_dir, names=("documents",))
     docs = t["documents"]
     pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.2)
-    return dedup.connected_components(
+    return components.connected_components(
         pairs, docs.select(F.col("doc_id")), id_col="doc_id"
     )
 
@@ -522,14 +522,15 @@ SELECT u AS vec_id, MIN(v) AS cluster_id FROM r GROUP BY u
 
 @register("ext_semantic_clusters", _SEMANTIC_CLUSTER_ORACLE)
 def ext_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic (embedding-space) dedup clusters: connected components over
-    cosine>=0.4 near-dup pairs; cluster id = min reachable vec id (keep
-    vec_id == cluster_id for the canonical set). Exact pair graph at gate
-    SF; the deployable source is lsh_embedding_near_dup_pairs (same CC)."""
+    """Semantic (embedding-space) dedup clusters: connected components
+    (operators.components) over cosine>=0.4 near-dup pairs; cluster id =
+    min reachable vec id (keep vec_id == cluster_id for the canonical set).
+    Exact pair graph at gate SF; the deployable source is
+    lsh_embedding_near_dup_pairs (same CC)."""
     t = load_tables(spark, sf_dir, names=("embeddings",))
     emb = t["embeddings"]
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.4)
-    return dedup.connected_components(
+    return components.connected_components(
         pairs, emb.select(F.col("vec_id")), id_col="vec_id"
     )
 

@@ -1,7 +1,7 @@
 """Connected components' two paths: the one-task labelling of a small pair
 graph and the round loop above the bound. Each test forces a path by
-patching ``dedup._CC_ONE_TASK_MAX_EDGES`` and checks both against the
-minimum reachable id computed here in Python."""
+patching ``components._CC_ONE_TASK_MAX_EDGES`` and checks both against
+the minimum reachable id computed here in Python."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import logging
 import pytest
 
 from kafka_etl_automation_spark import runtime
-from kafka_etl_automation_spark.operators import dedup
+from kafka_etl_automation_spark.operators import components
 
 from tests.conftest import spark_work
 
@@ -38,9 +38,9 @@ def _expected(pairs, ids):
 
 
 def _run(spark, monkeypatch, bound, pairs_df, ids_df, **kw):
-    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", bound)
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", bound)
     stats: dict = {}
-    out = dedup.connected_components(pairs_df, ids_df, stats=stats, **kw)
+    out = components.connected_components(pairs_df, ids_df, stats=stats, **kw)
     return sorted(tuple(r) for r in out.collect()), out.schema, stats
 
 
@@ -62,8 +62,7 @@ _GRAPHS = {
     "ids past 2**53": ([(BIG + 9, BIG + 7), (BIG + 7, BIG + 8)],
                        [BIG + 7, BIG + 8, BIG + 9]),
     # 0-12-11-...-1: the smallest id enters a chain of falling ids at its
-    # far end and moves one hop a round through the loop (12 hops stay
-    # inside max_iter; see the long chain below for the one-task path)
+    # far end (see the long chain below)
     "reversed-id chain": ([(0, 12)] + [(i + 1, i) for i in range(1, 12)],
                           range(13)),
 }
@@ -111,7 +110,7 @@ def test_path_follows_the_bound(spark, monkeypatch, caplog):
     pairs = [(1, 2), (2, 3), (3, 4)]
     pairs_df = spark.createDataFrame(pairs, "id_a long, id_b long")
     ids_df = spark.createDataFrame([(i,) for i in range(1, 6)], "id long")
-    with caplog.at_level(logging.INFO, logger=dedup.__name__):
+    with caplog.at_level(logging.INFO, logger=components.__name__):
         at, _, at_stats = _run(spark, monkeypatch, 3, pairs_df, ids_df)
         over, _, over_stats = _run(spark, monkeypatch, 2, pairs_df, ids_df)
     assert (at_stats["path"], over_stats["path"]) == ("one_task", "loop")
@@ -126,7 +125,7 @@ def test_path_follows_the_bound(spark, monkeypatch, caplog):
 def test_one_task_path_costs_only_the_pair_checkpoint(spark, monkeypatch):
     """Deciding costs the jobs of the pair checkpoint alone; the labelling
     is lazy and runs in one task of the caller's action."""
-    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", ONE_TASK)
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", ONE_TASK)
     pairs_df = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     ).repartition(3)
@@ -134,23 +133,32 @@ def test_one_task_path_costs_only_the_pair_checkpoint(spark, monkeypatch):
     checkpoint = spark_work(spark, lambda: pairs_df.localCheckpoint())
     built = []
     work = spark_work(
-        spark, lambda: built.append(dedup.connected_components(pairs_df, ids_df))
+        spark, lambda: built.append(components.connected_components(pairs_df, ids_df))
     )
     assert work["jobs"] == checkpoint["jobs"], (work, checkpoint)
     assert {r.cluster_id for r in built[0].collect()} == {0}
 
 
-def test_one_task_path_labels_a_long_reversed_id_chain(spark, monkeypatch):
+@pytest.mark.parametrize("bound", [ONE_TASK, LOOP], ids=["one_task", "loop"])
+def test_both_paths_label_a_long_reversed_id_chain(spark, monkeypatch, bound):
     """0-1000-999-...-1: hooking the roots carries 0 across the whole
-    chain in a few kernel rounds (hooking the nodes alone would take one
-    round per hop)."""
+    chain in a few rounds on either path, inside the default round bound
+    (hooking the nodes alone would take one round per hop). On the loop,
+    the result plans with an estimate that the rounds do not compound: a
+    checkpoint that kept its plan's estimate passed 256 bits by round 3."""
     n = 1000
     pairs = [(0, n)] + [(i + 1, i) for i in range(1, n)]
     pairs_df = spark.createDataFrame(pairs, "id_a long, id_b long")
     ids_df = spark.createDataFrame([(i,) for i in range(n + 1)], "id long")
-    out, _, stats = _run(spark, monkeypatch, ONE_TASK, pairs_df, ids_df)
-    assert stats["path"] == "one_task"
-    assert out == [(i, 0) for i in range(n + 1)]
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", bound)
+    stats: dict = {}
+    out = components.connected_components(pairs_df, ids_df, stats=stats)
+    assert sorted(tuple(r) for r in out.collect()) == [(i, 0) for i in range(n + 1)]
+    assert stats["path"] == ("one_task" if bound == ONE_TASK else "loop")
+    if bound == LOOP:
+        assert stats["iterations"] <= 3, stats
+        size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(str(size)).bit_length() < 256
 
 
 def test_default_bound_leaves_only_the_pair_checkpoint(spark):
@@ -164,7 +172,7 @@ def test_default_bound_leaves_only_the_pair_checkpoint(spark):
     )
     ids_df = spark.createDataFrame([(i,) for i in range(13)], "id long")
     stats: dict = {}
-    out = dedup.connected_components(pairs_df, ids_df, stats=stats)
+    out = components.connected_components(pairs_df, ids_df, stats=stats)
     after = jsc.getPersistentRDDs().size()
     assert stats["path"] == "one_task"
     assert after - before <= 1, (before, after)
@@ -181,3 +189,12 @@ def test_tripped_breaker_takes_the_loop(spark, monkeypatch):
     out, _, stats = _run(spark, monkeypatch, ONE_TASK, pairs_df, ids_df)
     assert (stats["path"], stats["edges"]) == ("loop", None)
     assert out == _expected(pairs, [1, 2, 3, 7, 8, 9])
+
+
+def test_a_failed_free_logs_a_warning(caplog):
+    """A checkpoint whose blocks cannot be freed (internal-API drift) is
+    left to driver GC with a WARNING naming the failure, not silently."""
+    with caplog.at_level(logging.WARNING, logger=components.__name__):
+        components._free_local_checkpoint(object())
+    [line] = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert line.startswith("could not free a local checkpoint (AttributeError(")

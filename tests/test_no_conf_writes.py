@@ -1,7 +1,8 @@
 """Operators and streaming code never write a session conf, and cache
 only through the runtime's bounded pools; operators never build an RDD to
-read its partition count; plans and tools start a memory sink only
-through ``lifecycle.run_bounded``.
+read its partition count, and checkpoint locally only in connected
+components; plans and tools start a memory sink only through
+``lifecycle.run_bounded``.
 
 A conf an operator sets outlives its call: every later query in the
 session plans with it, and a stateful stream fixes its state partitions
@@ -20,6 +21,13 @@ stages to build it. Any ``<x>.rdd.getNumPartitions()`` or
 Before ``partitioning.fan_out`` there were two, both in the old fan-out
 probe in ``operators/dedup.py``: ``df._jdf.rdd().getNumPartitions()``
 and its fallback ``df.rdd.getNumPartitions()``.
+
+Connected components owns the operators' local checkpoints: it frees
+each one once dead and plans its rounds with estimates that do not
+compound. Any ``.localCheckpoint(...)`` call under ``operators/`` outside
+``operators/components.py`` fails the walk. Before components had a
+module there were four, all its own, in ``operators/dedup.py``: the pair
+and edge checkpoints, round 1's labels and every later round's labels.
 
 A memory-sink run started by hand also picks its own stop rule, and a
 wait whose "not finished" answer is ignored reads a sink that is still
@@ -61,6 +69,10 @@ def _is_rdd_partition_probe(f: ast.Attribute) -> bool:
         and isinstance(rdd, ast.Attribute)
         and rdd.attr == "rdd"
     )
+
+
+def _is_local_checkpoint(f: ast.Attribute) -> bool:
+    return f.attr == "localCheckpoint"
 
 
 def _violations(path: Path, checks=(_is_conf_write, _is_unpooled_cache)) -> list[str]:
@@ -144,6 +156,25 @@ def test_the_walk_finds_an_rdd_partition_probe(tmp_path):
         "    jdf.queryExecution().analyzed().rdd().unpersist(True)\n"
     )
     found = _violations(src, (_is_rdd_partition_probe,))
+    assert [w.rsplit(":", 1)[1] for w in found] == ["2", "3"]
+
+
+def test_operators_checkpoint_locally_only_in_components():
+    files = sorted((PACKAGE / "operators").rglob("*.py"))
+    found = {f.name: _violations(f, (_is_local_checkpoint,)) for f in files}
+    assert found.pop("components.py")
+    assert [w for ws in found.values() for w in ws] == []
+
+
+def test_the_walk_finds_a_local_checkpoint(tmp_path):
+    src = tmp_path / "op.py"
+    src.write_text(
+        "def f(df):\n"
+        "    a = df.localCheckpoint()\n"
+        "    b = df.select('x').localCheckpoint(eager=False)\n"
+        "    return df.checkpoint(), a, b\n"
+    )
+    found = _violations(src, (_is_local_checkpoint,))
     assert [w.rsplit(":", 1)[1] for w in found] == ["2", "3"]
 
 

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark.operators import (
+    components,
     dedup,
     multimodal,
     partitioning,
@@ -131,7 +132,7 @@ def test_connected_components(spark):
     )
     ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12, 99)], "id long")
     out = {r.id: r.cluster_id for r in
-           dedup.connected_components(pairs, ids).collect()}
+           components.connected_components(pairs, ids).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
@@ -142,16 +143,16 @@ def test_connected_components_frees_superseded_checkpoints(spark, monkeypatch):
     O(iterations) checkpointed RDD blocks per call. After a call, at most
     the RETURNED labels frame's blocks may linger; the result must still
     be usable (its leaf is self-contained). Bound 0: the round loop."""
-    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", 0)
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     ids = spark.createDataFrame([(i,) for i in range(13)], "id long")
-    out = dedup.connected_components(pairs, ids)
+    out = components.connected_components(pairs, ids)
     after = jsc.getPersistentRDDs().size()
-    # a chain of diameter 12 takes several pointer-jump rounds; only the
+    # a chain of diameter 12 takes several rounds and jumps; only the
     # final labels frame may remain
     assert after - before <= 1, (before, after)
     # the survivor is the result's backing store — still fully usable
@@ -161,15 +162,17 @@ def test_connected_components_frees_superseded_checkpoints(spark, monkeypatch):
 def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     import pytest
 
-    # bound 0: the round loop, the path max_iter bounds
-    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
-    # chain of diameter 5 cannot converge in 1 iteration
+    # bound 0: the round loop, the path the round bound bounds
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "_CC_MAX_ROUNDS", 1)
+    # a chain of diameter 5 hooks in round 1 and needs round 2 to see
+    # that nothing hooks any more
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "id_a long, id_b long"
     )
     ids = spark.createDataFrame([(i,) for i in range(6)], "id long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, ids, max_iter=1)
+        components.connected_components(pairs, ids)
 
 
 def test_simhash_rejects_bad_banding(spark):
@@ -638,7 +641,7 @@ def test_minhash_candidate_scopes(spark):
             [(a, b) for a, b in sorted(pairs_set)] or [(None, None)],
             "id_a long, id_b long",
         ).dropna()
-        out = dedup.connected_components(pdf, ids, id_col="doc_id")
+        out = components.connected_components(pdf, ids, id_col="doc_id")
         return {(r.doc_id, r.cluster_id) for r in out.collect()}
 
     assert comps(star) == comps(allp)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from kafka_etl_automation_spark import runtime
 from kafka_etl_automation_spark.catalog import load_tables
-from kafka_etl_automation_spark.operators import dedup
+from kafka_etl_automation_spark.operators import components, dedup
 from kafka_etl_automation_spark.streaming import ingest
 
 from tests.conftest import SF_SMALL
@@ -101,29 +101,42 @@ def _spy_observed(monkeypatch) -> list:
 
 
 def test_connected_components_with_the_breaker_tripped(spark, gate, monkeypatch):
-    """With observation off for the application, every CC round takes the
-    limit(1) count fallback and the labels do not change. Bound 0: the
-    round loop in both calls."""
-    monkeypatch.setattr(dedup, "_CC_ONE_TASK_MAX_EDGES", 0)
+    """With observation off for the application, every flag of every CC
+    checkpoint falls back to a limit(1) count, and the labels, rounds and
+    jumps do not change. The graph needs both flags: the reversed-id chain
+    0-12-11-...-1 hooks in several rounds and its hooks chain, so it
+    jumps; a flag read as unset would stop the loop early with wrong
+    labels. Bound 0: the round loop in both calls."""
+    monkeypatch.setattr(components, "_CC_ONE_TASK_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
-        # chain 1..6 (several rounds), cycle 10-11-12
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (10, 11), (11, 12), (12, 10)],
+        [(0, 12)] + [(i + 1, i) for i in range(1, 12)] + [(20, 21), (21, 22), (22, 20)],
         "id_a long, id_b long",
     )
     ids = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4, 5, 6, 10, 11, 12, 99)], "id long"
+        [(i,) for i in list(range(13)) + [20, 21, 22, 99]], "id long"
     )
-    observed = sorted(dedup.connected_components(pairs, ids).collect())
+    stats: dict = {}
+    observed = sorted(components.connected_components(pairs, ids, stats=stats).collect())
     monkeypatch.setattr(
         runtime, "_NO_OBSERVATION", {spark.sparkContext.applicationId}
     )
     seen = _spy_observed(monkeypatch)
-    stats: dict = {}
-    fallback = sorted(dedup.connected_components(pairs, ids, stats=stats).collect())
+    counts: list = []
+    frame, count = type(pairs), type(pairs).count
+    monkeypatch.setattr(frame, "count", lambda df: counts.append(1) or count(df))
+    fallback_stats: dict = {}
+    fallback = sorted(
+        components.connected_components(pairs, ids, stats=fallback_stats).collect()
+    )
     assert fallback == observed
-    assert {r.cluster_id for r in fallback} == {1, 10, 99}
-    # one wait for the pair count, then one per round
-    assert len(seen) - 1 == stats["iterations"] >= 2 and not any(seen)
+    assert {r.cluster_id for r in fallback} == {0, 20, 99}
+    assert fallback_stats == {**stats, "edges": None}
+    assert stats["iterations"] >= 3 and stats["jumps"] >= 1
+    # one wait for the pair count, then one per checkpoint: a hook per
+    # round and each jump
+    assert len(seen) - 1 == stats["iterations"] + stats["jumps"] and not any(seen)
+    # one count per flag: two on a hook, one on a jump
+    assert len(counts) == 2 * stats["iterations"] + stats["jumps"]
 
 
 def test_file_ingest_with_the_breaker_tripped(spark, tmp_root, gate, monkeypatch):
