@@ -197,8 +197,10 @@ def _label_rounds(
     (:func:`_hook`), and while its ``moved`` flag is raised, one more
     checkpoint per pointer jump (:func:`_jump`); a round whose hook changed
     no label ends the loop. Every superseded checkpoint is freed as soon
-    as the next one is materialized. ``stats`` records ``iterations`` (the
-    rounds, the last one hooking nothing) and ``jumps``."""
+    as the next one is materialized, each exactly once (every free logs
+    Spark's lineage-truncated WARN); on an error the live one is freed
+    too. ``stats`` records ``iterations`` (the rounds, the last one
+    hooking nothing) and ``jumps``."""
     # Lazy checkpoint: round 1's job consumes every edge partition, so the
     # edge checkpoint completes inside that job (any skipped partition is
     # back-filled by Spark's checkpoint finalization); the pair rows are
@@ -211,6 +213,8 @@ def _label_rounds(
     # the label takes the wider of the id and pair types, as on one task
     wide = F.coalesce(F.col(id_col), F.lit(None).cast(edges.schema["u"].dataType))
     labels = ids.select(F.col(id_col).alias("u"), wide.alias("label"))
+    # ck is the one live checkpoint the loop still has to free: the pair
+    # rows until round 1 has read them, then the latest labels
     ck, jumps = raw, 0
     try:
         for rounds in range(1, _CC_MAX_ROUNDS + 1):
@@ -227,13 +231,14 @@ def _label_rounds(
         else:
             # silent non-convergence would split one real component into
             # several clusters and keep duplicates — fail loudly instead
-            _free_local_checkpoint(ck)
             raise RuntimeError(
                 f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
             )
+    except BaseException:
+        _free_local_checkpoint(ck)
+        raise
     finally:
         _free_local_checkpoint(edges)
-        _free_local_checkpoint(raw)
     if stats is not None:
         stats["iterations"], stats["jumps"] = rounds, jumps
     return labels.select("u", "label")

@@ -43,7 +43,7 @@ def _dot(a, b, dim: int | None = None):
     code — the 64-term chain generates a method past the JIT's
     huge-method limit and runs in the bytecode interpreter, so the
     corpus-wide assignment paths moved to the Arrow-vectorized left-fold
-    in ``_assign_scores`` (bit-identical, numpy C speed). ``dim`` unroll
+    in ``_nearest_cells`` (bit-identical, numpy C speed). ``dim`` unroll
     remains the right tool for ONE chain evaluated once per row (norm
     hoists, modest rerank volumes); the HOF fold remains for
     small-candidate shapes where plan compile cost dominates
@@ -82,6 +82,19 @@ def _norm(a, dim: int | None = None):
     )
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """``(query_id, neighbor_id, cosine, rank)``: each query's ``k`` best
+    rows of ``scored`` by rounded cosine, ties to the lowest neighbor id —
+    a unique order, so membership and rank are reproducible across
+    engines and partitionings."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -116,12 +129,7 @@ def cosine_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -233,108 +241,118 @@ def lsh_embedding_near_dup_pairs(
     )
 
 
-def _assign_scores(
-    df: DataFrame, cent: DataFrame, id_col: str, vec_col: str
+def _nearest_cells(
+    df: DataFrame, cent: DataFrame, id_col: str, vec_col: str, n: int
 ) -> DataFrame:
-    """Score every vector against every centroid: skinny
-    ``(id_col, cell, csim_raw)`` frame via an Arrow-vectorized numpy
-    left-fold.
+    """``(id_col, vec_col, scores, cell)``: each vector of ``df`` with one
+    of its ``n`` nearest cells of ``cent`` ``(cell, centroid)`` by round-6
+    cosine, ties to the lowest cell. For ``n == 1`` it is a narrow map of
+    ``df``: one row per vector, no aggregation and no join back to the
+    vectors; for ``n > 1``, ``min(n, cells)`` rows per vector.
 
-    The in-engine alternative (unrolled element_at chains over the
-    x n_cells broadcast join) generates a single method past the JVM
-    JIT's huge-method limit, so it executes in the bytecode interpreter —
-    the round-5 scale-proof measured the 960k-pair projection at 12s.
-    Here the fold runs as ``acc += M[:, i] * C[j, i]`` — vectorized over
-    rows, looped over index — so every row sees the exact IEEE op
-    sequence of the oracle's unrolled SQL fold (acc from 0.0, index
-    order, widen-then-multiply, norms multiplied before the one divide):
-    bit-identical csim values at numpy C speed. Rounding and the argmax
-    tiebreak stay in-engine so engine-side semantics (HALF_UP round,
-    max_by struct ordering) are never re-implemented in Python.
+    The scoring runs as an Arrow-vectorized numpy left-fold. The in-engine
+    alternative (unrolled element_at chains over the x n_cells broadcast
+    join) generates a single method past the JVM JIT's huge-method limit,
+    so it executes in the bytecode interpreter — the round-5 scale-proof
+    measured the 960k-pair projection at 12s. Here the fold runs as
+    ``acc += M[:, i] * C[:, i]`` — vectorized over rows and cells, looped
+    over index — so every score sees the exact IEEE op sequence of the
+    oracle's unrolled SQL fold (acc from 0.0, index order,
+    widen-then-multiply, norms multiplied before the one divide):
+    bit-identical values at numpy C speed. A vector or centroid with a
+    zero norm scores nothing (the engine's divide-by-zero gave NULL, and a
+    numpy NaN would outrank every double), so such a vector drops out and
+    such a centroid is never chosen. Each remaining vector is emitted with
+    ``scores``, its raw cosines against the remaining centroids in
+    ascending cell order (once per probe slot when ``n > 1``).
 
-    Centroid model state (n_cells x dim doubles) transits the driver —
-    the same contract as Spark MLlib's KMeans, which collects centers
-    every iteration; DATA rows never leave the executors, and the Arrow
-    output is ~24 bytes x N x n_cells."""
+    Rounding (HALF_UP) and the ranking stay in-engine, so engine semantics
+    are never re-implemented in Python, as unrolled ``round`` terms and no
+    higher-order function: ``array_position(r, array_max(r))`` is the
+    first (lowest-cell) maximum; for ``n > 1`` a descending
+    ``sort_array`` of ``(round, -position)`` structs gives each probe slot
+    its cell, with no Generate for a broadcast to sit over.
+
+    The centroids (n_cells x dim doubles) transit the driver — the same
+    contract as Spark MLlib's KMeans, which collects centers every
+    iteration; data rows never leave the executors."""
     import numpy as np
     import pandas as pd
 
-    # Arrow output schema mirrors the caller's id type (ADVICE r05: a
-    # hardcoded `long` broke string doc ids); everything else is fixed.
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, cell long, csim_raw double"
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    cols = (
+        f"{id_col} {types[id_col]}, {vec_col} {types[vec_col]}, "
+        "scores array<double>"
+    )
     rows = sorted(cent.collect(), key=lambda r: r[0])
-    if not rows:  # empty centroid set (empty corpus): no scores
-        return df.sparkSession.createDataFrame([], out_schema)
-    cells_np = np.array([r[0] for r in rows], dtype=np.int64)
-    c_mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    n_cells, dim_ = c_mat.shape
-    c_norm = np.zeros(n_cells)
-    for i in range(dim_):  # left-fold of squares, same order as _norm
+    # `or`: an empty centroid frame still gives a 2-D (0, 0) matrix
+    c_mat = np.array([list(r[1]) for r in rows] or np.zeros((0, 0)), dtype=np.float64)
+    dim = c_mat.shape[1]
+    c_norm = np.zeros(len(rows))
+    for i in range(dim):  # left-fold of squares, same order as _norm
         c_norm = c_norm + c_mat[:, i] * c_mat[:, i]
-    c_norm = np.sqrt(c_norm)
+    live = np.flatnonzero(c_norm != 0.0)
+    if len(live) == 0:  # no centroid (empty corpus) or only zero-norm ones
+        return df.sparkSession.createDataFrame([], cols + ", cell bigint")
+    cells = [int(rows[j][0]) for j in live]
+    c_mat, c_norm = c_mat[live], np.sqrt(c_norm[live])
+    reps = max(min(n, len(cells)), 0)
 
-    def assign(batches):
+    def score(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf[id_col].to_numpy()
             m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
             v_norm = np.zeros(len(m))
-            for i in range(dim_):
+            for i in range(dim):
                 v_norm = v_norm + m[:, i] * m[:, i]
             v_norm = np.sqrt(v_norm)
-            # Zero-norm rows/centroids: the in-engine path this replaced
-            # divided by zero -> NULL csim -> the row never won an argmax
-            # (ADVICE r05: numpy NaN would instead sort ABOVE every
-            # double in max_by ordering). Drop those score rows here so
-            # degenerate vectors drop out exactly as before.
-            valid = v_norm != 0.0
-            out_id, out_cell, out_sim = [], [], []
-            with np.errstate(divide="ignore", invalid="ignore"):
-                for j in range(n_cells):
-                    if c_norm[j] == 0.0:
-                        continue
-                    acc = np.zeros(len(m))
-                    for i in range(dim_):
-                        acc = acc + m[:, i] * c_mat[j, i]
-                    out_id.append(ids[valid])
-                    out_cell.append(np.full(int(valid.sum()), cells_np[j]))
-                    out_sim.append(
-                        (acc / (v_norm * c_norm[j]))[valid]
-                    )
-            if not out_id:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(out_id),
-                    "cell": np.concatenate(out_cell),
-                    "csim_raw": np.concatenate(out_sim),
-                }
+            keep = np.flatnonzero(v_norm != 0.0)
+            m, v_norm = m[keep], v_norm[keep]
+            acc = np.zeros((len(m), len(cells)))
+            for i in range(dim):
+                acc = acc + m[:, i : i + 1] * c_mat[:, i]
+            sims = acc / (v_norm[:, None] * c_norm)
+            out = pdf.iloc[np.repeat(keep, reps)].reset_index(drop=True)
+            # object dtype: pandas would unpack one-element score rows
+            out["scores"] = pd.Series(
+                list(np.repeat(sims, reps, axis=0)), dtype=object
             )
+            out["_slot"] = np.tile(np.arange(1, reps + 1, dtype=np.int32), len(keep))
+            yield out
 
-    return df.select(id_col, vec_col).mapInPandas(assign, out_schema)
+    r = [F.round(F.col("scores")[j], 6) for j in range(len(cells))]
+    if n == 1:
+        ranked = F.array(*r)
+        pos = F.array_position("_r", F.array_max("_r")).cast("int")
+    else:
+        ranked = F.sort_array(
+            F.array(
+                *[F.struct(x.alias("s"), F.lit(-j).alias("p")) for j, x in enumerate(r, 1)]
+            ),
+            asc=False,
+        )
+        pos = -F.element_at("_r", F.col("_slot"))["p"]
+    cell_ids = F.array(*[F.lit(c).cast("bigint") for c in cells])
+    return (
+        df.select(id_col, vec_col)
+        .mapInPandas(score, cols + ", _slot int")
+        .withColumn("_r", ranked)
+        .select(
+            id_col, vec_col, "scores", F.element_at(cell_ids, pos).alias("cell")
+        )
+    )
 
 
 def _lloyd_step(v: DataFrame, cent: DataFrame) -> DataFrame:
-    """One Lloyd iteration: Arrow-batched centroid assign (round-6 cosine
-    argmax, cell-id tiebreak) then element-wise mean through exact DECIMAL
-    sums — the deterministic building block shared by ``kmeans_centroids``
-    and ``kmeans_convergence``. ``cent`` is executed (n_cells rows) to
-    seed the assignment closure; see _assign_scores for why. The Arrow
-    fold reads the vector width from the centroid matrix."""
-    scored = _assign_scores(v, cent, "vid", "e").withColumn(
-        "csim", F.round(F.col("csim_raw"), 6)
-    )
-    # argmax via max_by (partial-aggregable, map-side combine) instead
-    # of a row_number window — no sort shuffle of the N x n_cells
-    # frame; tiebreak on lowest cell id matches the oracle's
-    # ORDER BY csim DESC, cell ASC
-    asg = scored.groupBy("vid").agg(
-        F.max_by("cell", F.struct(F.col("csim"), -F.col("cell"))).alias("cell")
-    )
+    """One Lloyd iteration over ``v`` ``(vid, e)``: nearest-cell
+    assignment (:func:`_nearest_cells`, a narrow map: no shuffle, no join)
+    then element-wise mean through exact DECIMAL sums — the deterministic
+    building block shared by ``kmeans_centroids`` and
+    ``kmeans_convergence``. ``cent`` is executed (n_cells rows) to seed the
+    assignment; the fold reads the vector width from the centroids."""
     return (
-        v.join(asg, "vid")
+        _nearest_cells(v, cent, "vid", "e", 1)
         .select("cell", F.posexplode("e").alias("pos", "val"))
         .groupBy("cell", "pos")
         .agg(
@@ -357,6 +375,27 @@ def _lloyd_step(v: DataFrame, cent: DataFrame) -> DataFrame:
             ).alias("ce")
         )
     )
+
+
+def _lloyd_inputs(
+    embeddings: DataFrame, n_cells: int, id_col: str, vec_col: str, train_mod: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(v, cent)`` for the Lloyd loop: the training vectors ``(vid, e)``
+    and the seed centroids ``(cell, ce)``, the first ``n_cells`` vectors by
+    id. The assignment multiplies CPU x n_cells per row and a small
+    parquet corpus scans narrow (round-5 scale-proof: 60k vectors = 4
+    tasks), so the vectors fan out to core count first (a guarded
+    pass-through on wide scans). The seed comes from the FULL set —
+    sampling must not shrink the seed block — and ``train_mod > 1`` trains
+    on the ``vid % train_mod == 0`` subset."""
+    full = partitioning.fan_out(embeddings).select(
+        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
+    )
+    cent = full.filter(F.col("vid") < n_cells).select(
+        F.col("vid").alias("cell"), F.col("e").alias("ce")
+    )
+    v = full.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else full
+    return v, cent
 
 
 def kmeans_convergence(
@@ -382,16 +421,7 @@ def kmeans_convergence(
     recomputed when the metric union runs."""
     from functools import reduce
 
-    # assignment multiplies CPU x n_cells per row; a small parquet corpus
-    # scans narrow (round-5 scale-proof: 60k vectors = 4 tasks), so fan
-    # out to core count first — guarded pass-through on wide scans
-    full = partitioning.fan_out(embeddings).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
-    )
-    cent = full.filter(F.col("vid") < n_cells).select(
-        F.col("vid").alias("cell"), F.col("e").alias("ce")
-    )
-    v = full.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else full
+    v, cent = _lloyd_inputs(embeddings, n_cells, id_col, vec_col, train_mod)
     sq_diff = F.zip_with("prev", "cur", lambda a, b: (a - b) * (a - b))
     # per-cell shift is rounded to 8 dp BEFORE aggregating: max commutes
     # with the monotone round, and the mean goes through an exact decimal
@@ -438,9 +468,10 @@ def kmeans_centroids(
     Spark MLlib's KMeans, which collects cluster centers every iteration;
     data rows never leave the executors:
       init    = first ``n_cells`` vectors by id (seeded, reproducible);
-      assign  = Arrow-vectorized left-fold scoring (_assign_scores;
-                bit-identical to the oracle's unrolled fold), round-6
-                cosine argmax with cell-id tiebreak in-engine;
+      assign  = nearest cell per vector (_nearest_cells: Arrow-vectorized
+                left-fold scoring, bit-identical to the oracle's unrolled
+                fold; round-6 cosine argmax with cell-id tiebreak
+                in-engine);
       update  = element-wise mean via exact DECIMAL sums (order-independent
                 across partitionings/engines), rounded to 8 dp.
     Every step is engine-reproducible, so an unrolled SQL oracle hashes
@@ -456,20 +487,11 @@ def kmeans_centroids(
     with sample representativeness, not corpus size. See PLANS.md
     (IVF cost anatomy) for measured numbers.
 
-    Scale: per iteration one broadcast join over the (sampled) vectors plus
-    one (cell, pos)-keyed aggregation of n_cells*dim rows — no shuffle of
-    the vectors themselves beyond the partial-agg combine.
+    Scale: per iteration one narrow assignment map over the (sampled)
+    vectors plus one (cell, pos)-keyed aggregation of n_cells*dim rows —
+    no shuffle of the vectors themselves beyond the partial-agg combine.
     """
-    # fan out before the x n_cells assignment stage (see kmeans_convergence)
-    full = partitioning.fan_out(embeddings).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("e")
-    )
-    # seed from the FULL set (sampling must not shrink the seed block),
-    # iterate on the sample
-    cent = full.filter(F.col("vid") < n_cells).select(
-        F.col("vid").alias("cell"), F.col("e").alias("ce")
-    )
-    v = full.filter(F.col("vid") % train_mod == 0) if train_mod > 1 else full
+    v, cent = _lloyd_inputs(embeddings, n_cells, id_col, vec_col, train_mod)
     for _ in range(iters):
         cent = _lloyd_step(v, cent)
     # n_cells rows; persisted because callers (ivf_topk) reference the
@@ -497,68 +519,42 @@ def ivf_topk(
     ``centroids`` is a (cell, cvec) frame — pass ``kmeans_centroids(...)``
     for real cluster centers (the credible-recall path); when omitted,
     centroids default to the first ``n_cells`` vectors by id (the trivial
-    deterministic seeding — same plan shape either way: the assignment join
-    is broadcast-centroid keyed). Scale: each vector is scored against
-    n_cells centroids once (broadcast), then the search join is keyed on
-    cell id — never a full cross product; recall < 1 by construction (probe
-    more cells to raise it)."""
+    deterministic seeding — same plan shape either way). Scale: each vector
+    is scored against the collected centroids once and carries its cell
+    out of that narrow map (:func:`_nearest_cells`), then the search join
+    is keyed on cell id — never a full cross product; recall < 1 by
+    construction (probe more cells to raise it)."""
     if centroids is None:
         centroids = embeddings.filter(F.col(id_col) < n_cells).select(
             F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")
         )
     centroids = centroids.select("cell", "cvec")
 
-    def nearest_cells(df: DataFrame, id_out: str, vec_out: str, n: int) -> DataFrame:
-        # skinny Arrow-batched scoring (see _assign_scores: bit-identical
-        # left-fold, no x n_cells row fan-out of the vectors themselves);
-        # round + argmax tiebreak stay in-engine
-        sc_ = _assign_scores(df, centroids, id_out, vec_out).withColumn(
-            "csim", F.round(F.col("csim_raw"), 6)
-        )
-        if n == 1:
-            # the hot path (every vector): max_by aggregation, partial
-            # combine, no sort shuffle
-            best = sc_.groupBy(id_out).agg(
-                F.max_by("cell", F.struct(F.col("csim"), -F.col("cell"))).alias(
-                    "cell"
-                )
-            )
-        else:
-            # the probe path (queries only, tiny): top-n ranking window
-            w = Window.partitionBy(id_out).orderBy(F.desc("csim"), F.asc("cell"))
-            best = (
-                sc_.withColumn("crank", F.row_number().over(w))
-                .filter(F.col("crank") <= n)
-                .select(id_out, "cell")
-            )
-        # re-attach the vector (plus its norm, reused by the rerank) via a
-        # keyed join — AQE broadcasts the skinny side when it fits
-        return df.withColumn("_vn", _norm(F.col(vec_out), dim)).join(
-            best, id_out
-        )
-
-    base = nearest_cells(
-        # every vector scores against n_cells centroids — fan a narrow
-        # scan out to core count first (guarded, pass-through when wide)
+    # every vector scores against n_cells centroids — fan a narrow scan out
+    # to core count first (guarded, pass-through when wide); each vector
+    # lives in exactly its nearest cell
+    base = _nearest_cells(
         partitioning.fan_out(
             embeddings.select(
                 F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("vec")
             )
         ),
+        centroids,
         "neighbor_id",
         "vec",
-        1,  # each vector lives in exactly its nearest cell
-    )
-    q = nearest_cells(
+        1,
+    ).select("neighbor_id", "vec", "cell", _norm(F.col("vec"), dim).alias("_vn"))
+    q = _nearest_cells(
         queries.select(
             F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
         ),
+        centroids,
         "query_id",
         "q_vec",
         n_probe,
-    )
+    ).select("query_id", "q_vec", "cell", _norm(F.col("q_vec"), dim).alias("_qn"))
     scored = (
-        base.join(q.withColumnRenamed("_vn", "_qn"), "cell")
+        base.join(q, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine",
@@ -569,12 +565,7 @@ def ivf_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_signatures(
@@ -689,9 +680,4 @@ def lsh_cosine_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)

@@ -441,7 +441,7 @@ def ext_lsh_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmeans_assign_cte(cent: str, extra_where: str = "", crank: str = "= 1") -> str:
     """One Lloyd assignment step as SQL: broadcast-style argmax of round-6
     cosine against centroid CTE ``cent``, cell-id tiebreak — mirrors
-    similarity.kmeans_centroids / ivf_topk.nearest_cells exactly."""
+    similarity._nearest_cells (k-means and IVF assignment) exactly."""
     return f"""(
   SELECT vec_id AS vid, e, cell FROM (
     SELECT v.vec_id, v.e, c.cell,

@@ -198,3 +198,39 @@ def test_a_failed_free_logs_a_warning(caplog):
         components._free_local_checkpoint(object())
     [line] = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
     assert line.startswith("could not free a local checkpoint (AttributeError(")
+
+
+@pytest.mark.parametrize("rounds", [components._CC_MAX_ROUNDS, 1], ids=["converges", "raises"])
+def test_loop_frees_each_checkpoint_once(spark, monkeypatch, rounds):
+    """On the loop every checkpoint is freed exactly once (each free logs
+    Spark's lineage-truncated WARN): the pair rows, the edges and every
+    superseded labels checkpoint, all but the labels behind the result;
+    when the loop raises, those labels too."""
+    freed, made = [], []
+    free, checkpoint = components._free_local_checkpoint, components._checkpoint
+
+    def counting_checkpoint(*args):
+        out = checkpoint(*args)
+        made.append(out[1])
+        return out
+
+    monkeypatch.setattr(
+        components, "_free_local_checkpoint", lambda df: (freed.append(df), free(df))
+    )
+    monkeypatch.setattr(components, "_checkpoint", counting_checkpoint)
+    monkeypatch.setattr(components, "_CC_MAX_ROUNDS", rounds)
+    # a chain of diameter 12: several rounds and jumps
+    pairs_df = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
+    ids_df = spark.createDataFrame([(i,) for i in range(13)], "id long")
+    if rounds == 1:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            _run(spark, monkeypatch, LOOP, pairs_df, ids_df)
+    else:
+        out, _, stats = _run(spark, monkeypatch, LOOP, pairs_df, ids_df)
+        assert out == [(i, 0) for i in range(13)]
+        assert len(made) == stats["iterations"] + stats["jumps"]
+    assert len({id(df) for df in freed}) == len(freed)  # none freed twice
+    # the pair rows and the edges, plus every labels checkpoint but the
+    # result's when the loop converges
+    assert len(freed) == 2 + len(made) - (rounds != 1)
+    assert all(any(df is m for df in freed) for m in made[:-1])

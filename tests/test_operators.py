@@ -1006,12 +1006,13 @@ def test_audio_windows_exact_values(spark):
     assert got == {(1, 0, 0, 3.0, 6), (1, 1, 4, 101.0, 104)}
 
 
-def test_assign_scores_bit_identical_to_unrolled_expression(spark):
-    """The Arrow-vectorized left-fold in similarity._assign_scores must be
+def test_nearest_cells_bit_identical_to_unrolled_expression(spark):
+    """The Arrow-vectorized left-fold in similarity._nearest_cells must be
     BIT-identical to the in-engine unrolled element_at chain it replaced
     (same IEEE op sequence: acc from 0.0 in index order, widen, norms
     multiplied before the one divide) — raw doubles compared with ==, no
-    tolerance, across a non-trivial partitioning."""
+    tolerance, across a non-trivial partitioning. Each vector comes out
+    once, carrying its own vector."""
     import random
 
     from pyspark.sql import functions as F
@@ -1030,10 +1031,9 @@ def test_assign_scores_bit_identical_to_unrolled_expression(spark):
         [(j, [random.uniform(-2, 2) for _ in range(dim)]) for j in range(4)],
         "cell long, ce array<double>",
     )
-    got = {
-        (r.vid, r.cell): r.csim_raw
-        for r in similarity._assign_scores(df, cent, "vid", "e").collect()
-    }
+    rows = similarity._nearest_cells(df, cent, "vid", "e", 1).collect()
+    assert sorted((r.vid, r.e) for r in rows) == vecs
+    got = {(r.vid, j): s for r in rows for j, s in enumerate(r.scores)}
     want_df = df.join(F.broadcast(cent)).select(
         "vid",
         "cell",
@@ -1050,24 +1050,24 @@ def test_assign_scores_bit_identical_to_unrolled_expression(spark):
     assert all(got[k] == want[k] for k in want)  # bitwise, no tolerance
 
 
-def test_assign_scores_empty_centroids(spark):
-    """An empty centroid frame (empty corpus) yields an empty score frame
-    with the contract schema instead of a numpy shape error."""
+def test_nearest_cells_empty_centroids(spark):
+    """An empty centroid frame (empty corpus) yields an empty frame with
+    the contract schema instead of a numpy shape error."""
     from kafka_etl_automation_spark.operators import similarity
 
     df = spark.createDataFrame([(1, [1.0, 2.0])], "vid long, e array<double>")
     cent = spark.createDataFrame([], "cell long, ce array<double>")
-    out = similarity._assign_scores(df, cent, "vid", "e")
+    out = similarity._nearest_cells(df, cent, "vid", "e", 1)
     assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["vid", "cell", "csim_raw"]
+    assert [f.name for f in out.schema.fields] == ["vid", "e", "scores", "cell"]
 
 
-def test_assign_scores_zero_norm_and_string_ids(spark):
-    """ADVICE r05 pair: (a) a zero-norm vector must DROP OUT of scoring
-    (the in-engine path's divide-by-zero yielded NULL csim, never a NaN
-    that would win max_by ordering); a zero-norm centroid likewise emits
-    no score rows. (b) the Arrow output schema must mirror the caller's
-    id type — string doc ids flow through unchanged."""
+def test_nearest_cells_zero_norm_and_string_ids(spark):
+    """ADVICE r05 pair: (a) a zero-norm vector must DROP OUT of the
+    assignment (the in-engine path's divide-by-zero yielded NULL csim,
+    never a NaN that would win the argmax); a zero-norm centroid likewise
+    gets no score and no vector. (b) the Arrow output schema must mirror
+    the caller's id type — string doc ids flow through unchanged."""
     from kafka_etl_automation_spark.operators import similarity
 
     df = spark.createDataFrame(
@@ -1077,13 +1077,73 @@ def test_assign_scores_zero_norm_and_string_ids(spark):
     cent = spark.createDataFrame(
         [(0, [1.0, 1.0]), (1, [0.0, 0.0])], "cell long, ce array<double>"
     )
-    out = similarity._assign_scores(df, cent, "vid", "e")
+    out = similarity._nearest_cells(df, cent, "vid", "e", 1)
     assert out.schema["vid"].dataType.simpleString() == "string"
     rows = out.collect()
-    got = {(r.vid, r.cell) for r in rows}
-    # only finite-norm vector x finite-norm centroid combinations remain
-    assert got == {("a", 0), ("b", 0)}
-    assert all(r.csim_raw == r.csim_raw for r in rows)  # no NaN survives
+    # only finite-norm vectors remain, scored against the one finite-norm
+    # centroid
+    assert {(r.vid, r.cell) for r in rows} == {("a", 0), ("b", 0)}
+    assert all(len(r.scores) == 1 and r.scores[0] == r.scores[0] for r in rows)
+
+
+@pytest.mark.parametrize("n", [1, 2])
+def test_nearest_cells_ties_go_to_the_lowest_cell(spark, n):
+    """Cells whose round-6 cosines tie rank by cell id, whatever their raw
+    cosines: against an in-engine brute force (every vector x centroid,
+    ROW_NUMBER over round-6 cosine DESC, cell ASC), for the argmax and for
+    a 2-probe. Cells 2, 4 and 6 tie at every vector below, and cell 4's
+    raw cosine beats cell 2's."""
+    from pyspark.sql import Window
+
+    from kafka_etl_automation_spark.operators import similarity
+
+    df = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [1.0, 1.0]), (13, [-1.0, 0.5])],
+        "vid long, e array<double>",
+    )
+    cent = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 1.0000001]), (4, [1.0, 0.9999999]),
+         (6, [1.0, 1.0]), (8, [-1.0, 0.0])],
+        "cell long, ce array<double>",
+    )
+    got = sorted(
+        (r.vid, r.cell) for r in similarity._nearest_cells(df, cent, "vid", "e", n).collect()
+    )
+    csim = F.round(
+        similarity._dot(F.col("e"), F.col("ce"), 2)
+        / (similarity._norm(F.col("e"), 2) * similarity._norm(F.col("ce"), 2)),
+        6,
+    )
+    w = Window.partitionBy("vid").orderBy(F.desc("csim"), F.asc("cell"))
+    want = sorted(
+        (r.vid, r.cell)
+        for r in df.join(F.broadcast(cent))
+        .withColumn("csim", csim)
+        .withColumn("crank", F.row_number().over(w))
+        .filter(F.col("crank") <= n)
+        .collect()
+    )
+    assert got == want
+    # the tie decides at least one row each way: a raw argmax would differ
+    assert (10, 2) in got and ((10, 4) in got) == (n == 2)
+
+
+def test_lloyd_step_holds_no_join(spark):
+    """The assignment is a narrow map that carries each vector to its
+    cell: one Lloyd step plans no join (and so no shuffle of the vectors
+    back to their assignment)."""
+    from kafka_etl_automation_spark.operators import similarity
+
+    v = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0]) for i in range(12)], "vid long, e array<double>"
+    )
+    cent = v.filter(F.col("vid") < 2).select(
+        F.col("vid").alias("cell"), F.col("e").alias("ce")
+    )
+    step = similarity._lloyd_step(v, cent)
+    plan = step._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert step.count() == 2
 
 
 def test_exact_sum_out_of_range_raises(spark):
